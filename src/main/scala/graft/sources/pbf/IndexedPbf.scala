@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
   * blobs that can contain relevant elements.
   *
   * Architecture (each reference idea re-expressed distributed):
-  *  - **index**: one cheap distributed job decodes only element ids per
-  *    blob into (type, min/max id) zone maps (indexed.rs:174-225 builds
-  *    the same ranges lazily). The index is ~56 bytes/blob — driver-held
-  *    and cached per path, like the reference's in-memory `Vec<BlobInfo>`.
+  *  - **index**: one distributed job decodes only element ids per blob
+  *    into (type, min/max id) zone maps (indexed.rs:174-225 builds the
+  *    same ranges lazily). It splits like every PBF read
+  *    ([[OsmPbf.planSplits]]): the 64MB `splitMb` default is a per-task
+  *    cap, and a small file fans out to ~2 tasks per core. The index is
+  *    ~56 bytes/blob — driver-held and cached per path, like the
+  *    reference's in-memory `Vec<BlobInfo>`.
   *  - **pass 1**: scan ONLY blobs whose zone map has ways
   *    (`ways_available() != No`, indexed.rs:275-278), with the way-type
   *    group pushdown; filter with the caller's predicate Column.
@@ -45,8 +48,7 @@ object IndexedPbf {
     * of every data blob. Equivalent of create_index + the lazily-recorded
     * id ranges (indexed.rs:145-172, 174-225), but paid up-front in one
     * parallel pass instead of piggybacked on the first query. */
-  def index(spark: SparkSession, path: String,
-            splitTargetBytes: Long = 64L << 20): Seq[ZoneMap] = {
+  def index(spark: SparkSession, path: String): Seq[ZoneMap] = {
     val fsPath = new Path(path)
     val status = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(fsPath)
@@ -57,7 +59,8 @@ object IndexedPbf {
     // generation(s) so a long-lived session can't accumulate dead indexes
     indexCache.keySet.removeIf(k => k._1 == path && k != key)
     val spans = OsmPbf.blobSpans(spark, path).filter(_.blobType == Blobs.TypeOsmData)
-    val groups = OsmPbf.groupSpans(spans, splitTargetBytes)
+    val groups = OsmPbf.planSplits(spans, OsmPbf.DefaultSplitMb.toLong << 20,
+      spark.sparkContext.defaultParallelism)
     val hconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val built = spark.sparkContext.parallelize(groups, math.max(groups.size, 1))

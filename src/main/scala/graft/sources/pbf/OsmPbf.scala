@@ -12,10 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  1. Driver enumerates blob spans with a header-only skip-scan
   *     ([[Blobs.enumerate]]) — cheap metadata pass, same as
   *     osmpbf/src/blob.rs:426-448 / indexed.rs:145-172.
-  *  2. Spans are grouped into tasks of ~`splitTargetBytes` compressed input
-  *     so task count scales with file size, not blob count. Each task is a
-  *     narrow partition: seek → read → inflate → decode → rows. No shuffle
-  *     anywhere — scan→project→write is one stage, like the reference.
+  *  2. Spans are grouped into tasks by [[planSplits]] — at most the
+  *     per-task cap of decoded input each (`splitMb` on the scan), and ~2
+  *     tasks per core for a small file — so task count scales with decode
+  *     work, not blob count. Each task is a narrow partition: seek → read
+  *     → inflate → decode → rows. No shuffle anywhere — scan→project→write
+  *     is one stage, like the reference.
   *  3. IO goes through the Hadoop FileSystem API, so `file:`, `hdfs:` and
   *     `s3a:` paths all work — the reference's local/S3 split
   *     (pbf.rs:24-49) for free, with ranged reads on object stores.
@@ -25,6 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * task spawn (pbf.rs:79).
   */
 object OsmPbf {
+
+  /** Default per-task cap on decoded input for PBF reads (`splitMb`). */
+  final val DefaultSplitMb = 64
 
   /** Driver-side plan: spans of every blob in the file. */
   def blobSpans(spark: SparkSession, path: String,
@@ -59,13 +64,14 @@ object OsmPbf {
     * ([[OsmPbfDataSource]]): the decoder emits Catalyst InternalRows
     * straight into the scan (no external-Row conversion layer) and the
     * connector adds column pruning + type-predicate pushdown.
-    * `splitTargetBytes` groups small blobs into one task (planet files
-    * have ~10k blobs of ~4-16MB; 64MB targets keep task count ~= a few
-    * thousand at planet scale — right-sized for 1000 executors without
-    * scheduler pressure).
+    * `splitTargetBytes` caps one task's decoded input: at planet scale
+    * (~10k blobs of ~4-16MB) the 64MB cap keeps task count ~= a few
+    * thousand, without scheduler pressure; a file too small to fill
+    * 2 tasks per core at the cap fans out to ~2 tasks per core instead
+    * ([[planSplits]]).
     */
   def read(spark: SparkSession, path: String,
-           splitTargetBytes: Long = 64L << 20): DataFrame = {
+           splitTargetBytes: Long = DefaultSplitMb.toLong << 20): DataFrame = {
     // the scan option is MB-granular with a 1MB floor — reject a value
     // the option cannot represent instead of silently reinterpreting it
     require(splitTargetBytes >= (1L << 20) && (splitTargetBytes & ((1L << 20) - 1)) == 0,
@@ -78,7 +84,7 @@ object OsmPbf {
   /** Typed view: same scan (pruning/pushdown included — the typed fields
     * Catalyst sees unused still prune), `Dataset[OsmElement]` on top. */
   def readTyped(spark: SparkSession, path: String,
-                splitTargetBytes: Long = 64L << 20): org.apache.spark.sql.Dataset[OsmElement] = {
+                splitTargetBytes: Long = DefaultSplitMb.toLong << 20): org.apache.spark.sql.Dataset[OsmElement] = {
     import spark.implicits._
     read(spark, path, splitTargetBytes).as[OsmElement]
   }
@@ -199,8 +205,8 @@ object OsmPbf {
     else Blobs.MaxBodyBytes.toLong
 
   /** Groups data-blob spans into ~`targetBytes` chunks of DECODED input so
-    * task count scales with decode work, not blob count. Shared by the
-    * DataSourceV2 scan planner and the transcode sink.
+    * task count scales with decode work, not blob count. The packing step
+    * of [[planSplits]].
     *
     * Each blob is weighted by its decoded payload size (`Blob.raw_size`,
     * captured during enumeration): compressed bytes under-measure decode
@@ -222,6 +228,22 @@ object OsmPbf {
       } else { groups.last += s; acc += weight(s) }
     }
     groups.map(_.toArray).toSeq
+  }
+
+  /** The split plan of every PBF read — the `osmpbf` scan (full and
+    * pre-planned span scans), the zone-map index build and the transcode.
+    * `capBytes` is the CEILING on one task's decoded input (its memory
+    * bound); a smaller input shrinks the split toward ~2 tasks per core,
+    * with a 1MB floor, so a modest file still uses the whole cluster
+    * instead of one task. The same rule as Spark's own file sources
+    * (`FilePartition.maxSplitBytes`). `parallelism` is the session's
+    * `defaultParallelism`.
+    */
+  def planSplits(spans: Seq[Blobs.BlobSpan], capBytes: Long,
+                 parallelism: Int): Seq[Array[Blobs.BlobSpan]] = {
+    val totalWeight = spans.iterator.map(spanWeight).sum
+    val autoTarget = math.max(1L << 20, totalWeight / (2L * math.max(parallelism, 1)))
+    groupSpans(spans, math.min(capBytes, autoTarget))
   }
 
   /** Estimate of parquet bytes/row from a sample of decoded rows: measure
@@ -320,13 +342,8 @@ object OsmPbf {
       .foreach(s => throw new PbfFormatException(
         s"unknown blob type '${s.blobType}' at offset ${s.offset}"))
     val dataSpans = allSpans.filter(_.blobType == Blobs.TypeOsmData)
-    // split target: the configured buffer size is the CAP (memory bound per
-    // task); small inputs auto-shrink toward ~2 waves per core so a modest
-    // file still uses the whole cluster instead of a handful of tasks
-    val totalWeight = dataSpans.iterator.map(spanWeight).sum
-    val autoTarget = math.max(1L << 20, totalWeight / (2L * math.max(sc.defaultParallelism, 1)))
-    val groups = groupSpans(dataSpans,
-      math.min(config.inputBufferSizeMb.toLong << 20, autoTarget))
+    // the configured buffer size is the per-task cap
+    val groups = planSplits(dataSpans, config.inputBufferSizeMb.toLong << 20, sc.defaultParallelism)
 
     val hc = new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)
     // parquet-mr codec-level knob; 1-22 like the reference (util.rs:100-104)

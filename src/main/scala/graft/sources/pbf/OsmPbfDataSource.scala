@@ -26,11 +26,14 @@ import scala.jdk.CollectionConverters._
   *    `type = / in (…)`): excluded element kinds skip whole primitive
   *    groups without decoding — the scan-level analog of the reference's
   *    known-empty blob skip (indexed.rs:275-300);
-  *  - clean split planning: one [[InputPartition]] per ~`splitMb` of
-  *    compressed blobs, so a planet file fans out to a few thousand tasks
-  *    regardless of blob count.
+  *  - clean split planning ([[OsmPbf.planSplits]]): each [[InputPartition]]
+  *    holds at most `splitMb` of decoded blobs, so a planet file fans out
+  *    to a few thousand tasks regardless of blob count, and a file too
+  *    small to fill 2 tasks per core at the cap fans out to ~2 tasks per
+  *    core instead of scanning as one task.
   *
-  * Options: `splitMb` (task target input size, default 64);
+  * Options: `splitMb` (per-task cap on decoded input in MB, an integer
+  * >= 1, default 64);
   * `wayLocations` (default false) — decode the optional LocationsOnWays
   * way lat/lon arrays (osmpbf/src/elements.rs:201-216,390-423) into a
   * trailing `node_locations: array<struct<lat,lon>>` column (empty array
@@ -61,11 +64,16 @@ class OsmPbfTable(properties: Map[String, String]) extends Table with SupportsRe
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new OsmPbfScanBuilder(path,
-      options.getOrDefault("splitMb", properties.getOrElse("splitMb", "64")).toInt,
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val rawSplitMb = options.getOrDefault("splitMb",
+      properties.getOrElse("splitMb", OsmPbf.DefaultSplitMb.toString))
+    val splitMb = rawSplitMb.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"osmpbf option splitMb must be an integer number of MB, got '$rawSplitMb'"))
+    require(splitMb >= 1, s"osmpbf option splitMb must be >= 1, got $splitMb")
+    new OsmPbfScanBuilder(path, splitMb,
       Option(options.getOrDefault("spans", properties.getOrElse("spans", null))),
       options.getBoolean("wayLocations", wayLocs))
+  }
 }
 
 class OsmPbfScanBuilder(path: String, splitMb: Int, spansOpt: Option[String] = None,
@@ -143,7 +151,7 @@ class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
             s"unknown blob type '${s.blobType}' at offset ${s.offset}"))
         allSpans.filter(_.blobType == Blobs.TypeOsmData)
     }
-    OsmPbf.groupSpans(spans, splitMb.toLong << 20)
+    OsmPbf.planSplits(spans, splitMb.toLong << 20, spark.sparkContext.defaultParallelism)
       .map(g => OsmPbfInputPartition(path, g): InputPartition).toArray
   }
 
