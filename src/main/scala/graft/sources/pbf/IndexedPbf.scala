@@ -1,7 +1,8 @@
 package graft.sources.pbf
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** PBF-native indexed query path — the Spark re-expression of the
@@ -23,10 +24,13 @@ import org.apache.spark.sql.functions._
   *    group pushdown; filter with the caller's predicate Column.
   *  - **pass 2**: the reference walks a driver-side BTreeSet of needed
   *    node ids against each blob's range (indexed.rs:303-310). The
-  *    distributed analog: map each needed ref to node blobs by binary
-  *    search over the broadcast zone maps (blob pruning), then an exact
-  *    semi-join (`id IN refs`) that Catalyst/AQE executes broadcast when
-  *    the ref set is small — no driver-side id set, so a non-selective
+  *    distributed analog is one job over the pass-1 ways: each task
+  *    binary-searches its ways' `nds.ref` against the broadcast node-blob
+  *    ranges and returns a bitset of the node-blob ordinals hit, and the
+  *    driver ORs the bitsets (blob pruning). An exact semi-join
+  *    (`id IN refs`), which Catalyst/AQE executes broadcast when the ref
+  *    set is small, then keeps only the needed nodes. The driver holds
+  *    one bit per node blob and never an id set, so a non-selective
   *    predicate can't OOM the driver at planet scale.
   */
 object IndexedPbf {
@@ -49,9 +53,9 @@ object IndexedPbf {
     * id ranges (indexed.rs:145-172, 174-225), but paid up-front in one
     * parallel pass instead of piggybacked on the first query. */
   def index(spark: SparkSession, path: String): Seq[ZoneMap] = {
+    val sc = spark.sparkContext
     val fsPath = new Path(path)
-    val status = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(fsPath)
+    val status = fsPath.getFileSystem(sc.hadoopConfiguration).getFileStatus(fsPath)
     val key = (path, status.getModificationTime, status.getLen)
     val cached = indexCache.get(key)
     if (cached != null) return cached
@@ -60,13 +64,12 @@ object IndexedPbf {
     indexCache.keySet.removeIf(k => k._1 == path && k != key)
     val spans = OsmPbf.blobSpans(spark, path).filter(_.blobType == Blobs.TypeOsmData)
     val groups = OsmPbf.planSplits(spans, OsmPbf.DefaultSplitMb.toLong << 20,
-      spark.sparkContext.defaultParallelism)
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val built = spark.sparkContext.parallelize(groups, math.max(groups.size, 1))
+      sc.defaultParallelism)
+    val hconf = OsmPbf.broadcastConf(sc, sc.hadoopConfiguration)
+    val built = try sc.parallelize(groups, math.max(groups.size, 1))
       .mapPartitions { it =>
         val fsPath = new Path(path)
-        val fs = fsPath.getFileSystem(hconf.value)
+        val fs = fsPath.getFileSystem(hconf.value.value)
         val in = fs.open(fsPath)
         val out = scala.collection.mutable.ArrayBuffer.empty[ZoneMap]
         try it.foreach(_.foreach { span =>
@@ -78,6 +81,7 @@ object IndexedPbf {
         }) finally in.close()
         out.iterator
       }.collect().sortBy(_.offset).toSeq
+    finally hconf.destroy()
     indexCache.put(key, built)
     built
   }
@@ -92,11 +96,52 @@ object IndexedPbf {
         spans.map(s => s"${s.offset}:${s.length}:${s.rawSize}").mkString(","))
       .load(path)
 
+  /** Node-id ranges of the node blobs, sorted by min id, that pass 2 maps
+    * refs onto (indexed.rs:88-106, 303-310). Bounded by the blob count. */
+  private[pbf] final case class NodeBlobRanges(mins: Array[Long], maxs: Array[Long]) {
+    // prefix-max of maxs: pmaxs(i) = max(maxs(0..i)). The left walk can
+    // stop exactly when pmaxs(i) < ref — no blob at or before i can contain
+    // ref — which is correct even for NESTED ranges ([0,1000] followed by
+    // [100,150]): stopping on the first non-overlapping maxs(i) alone would
+    // hide the wide earlier range.
+    private val pmaxs = maxs.scanLeft(Long.MinValue)(math.max).drop(1)
+
+    /** Sets the ordinal of every blob whose range holds one of `refs` (one
+      * way's `nds.ref`; null or empty sets nothing). */
+    def addHits(refs: ArrayData, hits: java.util.BitSet): Unit =
+      if (refs != null) {
+        var k = 0
+        while (k < refs.numElements()) {
+          val ref = refs.getLong(k)
+          // last blob with min <= ref, then walk left while any earlier
+          // blob can still reach ref (prefix max)
+          var lo = 0; var hi = mins.length - 1; var ub = -1
+          while (lo <= hi) {
+            val mid = (lo + hi) >>> 1
+            if (mins(mid) <= ref) { ub = mid; lo = mid + 1 } else hi = mid - 1
+          }
+          var i = ub
+          while (i >= 0 && pmaxs(i) >= ref) {
+            if (mins(i) <= ref && ref <= maxs(i)) hits.set(i)
+            i -= 1
+          }
+          k += 1
+        }
+      }
+  }
+
+  /** Prune accounting of the most recent [[readWaysAndDeps]] in this JVM:
+    * way-blobs scanned pass-1, node-blobs scanned pass-2, and the totals
+    * they were pruned from — consumed by `tools.IndexedDepthSoak` and the
+    * specs. Written on every call; a handful of longs. */
+  private[graft] val lastPrune =
+    new java.util.concurrent.atomic.AtomicReference[Map[String, Long]](Map.empty)
+
   /** `read_ways_and_deps`: DataFrame of the matching ways plus their
     * dependent nodes, in [[OsmSchema.schema]].
     *
-    * The pass-1 ways feed three consumers (the ref-set collect, the pass-2
-    * semi-join, the output union), so they are materialized ONCE via
+    * The pass-1 ways feed three consumers (the node-blob ordinal job, the
+    * pass-2 semi-join, the output union), so they are materialized ONCE via
     * `localCheckpoint`: unlike `Dataset.persist`, whose cache entry lives
     * in the session's CacheManager until explicitly unpersisted, a local
     * checkpoint's blocks are dropped by the ContextCleaner as soon as the
@@ -105,14 +150,6 @@ object IndexedPbf {
     * checkpoints are not executor-loss tolerant; losing one fails the job
     * and the caller re-runs — acceptable for a bounded pruned subset.
     */
-  /** Prune accounting of the most recent [[readWaysAndDeps]] in this JVM:
-    * way-blobs scanned pass-1, node-blobs scanned pass-2, and the totals
-    * they were pruned from — consumed by `tools.IndexedDepthSoak` (judge
-    * ask r16#6: the two-pass plan had only ever run at fixture scale).
-    * Written on every call; a handful of longs. */
-  private[graft] val lastPrune =
-    new java.util.concurrent.atomic.AtomicReference[Map[String, Long]](Map.empty)
-
   def readWaysAndDeps(spark: SparkSession, path: String, wayPredicate: Column): DataFrame = {
     val idx = index(spark, path)
 
@@ -125,51 +162,28 @@ object IndexedPbf {
 
     val refs = ways.select(explode(col("nds.ref")).as("ref")).distinct()
 
-    // Zone-map pruning (indexed.rs:88-106, 303-310): broadcast the sorted
-    // node ranges, binary-search each ref to its candidate blob(s), and
-    // collect only the needed blob ordinals (bounded by blob count).
+    // Zone-map pruning in one job: each task maps its ways' refs to the
+    // node blobs that can hold them; the driver ORs the per-task bitsets.
     val nodeBlobs = idx.filter(_.ids.hasNodes).sortBy(_.ids.nodeMin)
-    val mins = nodeBlobs.map(_.ids.nodeMin).toArray
-    val maxs = nodeBlobs.map(_.ids.nodeMax).toArray
-    // prefix-max of nodeMax: pmx(i) = max(maxs(0..i)). The left walk can
-    // stop exactly when pmx(i) < ref — no blob at or before i can contain
-    // ref — which is correct even for NESTED ranges ([0,1000] followed by
-    // [100,150]): stopping on the first non-overlapping mx(i) alone would
-    // hide the wide earlier range.
-    val pmaxs = maxs.scanLeft(Long.MinValue)(math.max).drop(1)
-    val bMins = spark.sparkContext.broadcast(mins)
-    val bMaxs = spark.sparkContext.broadcast(maxs)
-    val bPmax = spark.sparkContext.broadcast(pmaxs)
-    val neededOrdinals = refs.select(col("ref")).as(Encoders.scalaLong)
-      .mapPartitions { it =>
-        val mn = bMins.value; val mx = bMaxs.value; val pm = bPmax.value
-        val hit = new java.util.TreeSet[Int]()
-        it.foreach { ref =>
-          // last blob with min <= ref, then walk left while any earlier
-          // blob can still reach ref (prefix max)
-          var lo = 0; var hi = mn.length - 1; var ub = -1
-          while (lo <= hi) {
-            val mid = (lo + hi) >>> 1
-            if (mn(mid) <= ref) { ub = mid; lo = mid + 1 } else hi = mid - 1
-          }
-          var i = ub
-          while (i >= 0 && pm(i) >= ref) {
-            if (mn(i) <= ref && ref <= mx(i)) hit.add(i)
-            i -= 1
-          }
-        }
-        scala.jdk.CollectionConverters.IteratorHasAsScala(hit.iterator()).asScala
-      }(Encoders.scalaInt)
-      .distinct().collect().sorted
-    // the zone-map broadcasts are consumed ENTIRELY by the collect above —
-    // destroy deterministically rather than waiting for GC + ContextCleaner
+    val ranges = spark.sparkContext.broadcast(NodeBlobRanges(
+      nodeBlobs.map(_.ids.nodeMin).toArray, nodeBlobs.map(_.ids.nodeMax).toArray))
+    val needed = new java.util.BitSet(nodeBlobs.size)
+    // the ranges broadcast is consumed ENTIRELY by this collect — destroy
+    // it deterministically rather than waiting for GC + ContextCleaner
     // (the method's own no-session-lifetime-accumulation rationale; a
     // long-lived session issuing many queries would otherwise accumulate
     // dead broadcast blocks on the driver and executors)
-    Seq(bMins, bMaxs, bPmax).foreach(_.destroy())
+    try ways.select(col("nds.ref")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val r = ranges.value
+        val hits = new java.util.BitSet()
+        rows.foreach(row => r.addHits(row.getArray(0), hits))
+        Iterator.single(hits)
+      }.collect().foreach(needed.or)
+    finally ranges.destroy()
 
     // Pass 2: pruned node blobs, node groups only, exact id semi-join.
-    val nodeSpans = neededOrdinals.map(i => nodeBlobs(i).span).toSeq
+    val nodeSpans = needed.stream().toArray.toSeq.map(nodeBlobs(_).span)
     lastPrune.set(Map(
       "way_blobs_scanned" -> wayBlobs.size.toLong,
       "data_blobs_total" -> idx.size.toLong,

@@ -1,7 +1,11 @@
 package graft.sources.pbf
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 
 /** Spark-native OSM PBF source: `.osm.pbf` → DataFrame(OsmSchema.schema).
@@ -30,6 +34,16 @@ object OsmPbf {
 
   /** Default per-task cap on decoded input for PBF reads (`splitMb`). */
   final val DefaultSplitMb = 64
+
+  /** Ships a Hadoop conf to the tasks of a PBF read or write. A task
+    * closure that holds a [[SerializableConfiguration]] deserializes the
+    * whole conf (~1,000 properties, ~110 KB) again in every task; a
+    * broadcast is fetched and deserialized once per executor and read
+    * through `.value`, as Spark's own file sources do. The conf is copied
+    * first, so tasks read a snapshot taken now, in local mode too, rather
+    * than the session's live, mutable one. */
+  private[pbf] def broadcastConf(sc: SparkContext, conf: Configuration): Broadcast[SerializableConfiguration] =
+    sc.broadcast(new SerializableConfiguration(new Configuration(conf)))
 
   /** Driver-side plan: spans of every blob in the file. */
   def blobSpans(spark: SparkSession, path: String,
@@ -345,10 +359,9 @@ object OsmPbf {
     // the configured buffer size is the per-task cap
     val groups = planSplits(dataSpans, config.inputBufferSizeMb.toLong << 20, sc.defaultParallelism)
 
-    val hc = new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)
+    val hc = new Configuration(sc.hadoopConfiguration)
     // parquet-mr codec-level knob; 1-22 like the reference (util.rs:100-104)
     hc.setInt("parquet.compression.codec.zstd.level", math.max(config.compression, 1))
-    val hconf = new org.apache.spark.util.SerializableConfiguration(hc)
     val codec = if (config.compression == 0) CompressionCodecName.UNCOMPRESSED
       else CompressionCodecName.ZSTD
 
@@ -432,12 +445,13 @@ object OsmPbf {
     val maxRecords = config.maxRecordsPerFile
     val rowGroupBytes = config.rowGroupTargetMb.toLong << 20
     val rowGroupRows = config.maxRowGroupRows
+    val hconf = broadcastConf(sc, hc)
     try {
       // valid empty PBF (header-only): zero data blobs must commit empty
       // type= dirs and return zero counts, not crash parallelize(_, 0)
       val perTask = if (groups.isEmpty) Array.empty[(Array[Long], Seq[String])]
       else sc.parallelize(groups, groups.size).mapPartitions { groupIter =>
-        val conf = hconf.value
+        val conf = hconf.value.value
         val tc = org.apache.spark.TaskContext.get()
         val taskId = tc.partitionId()
         // attempt-unique file tag: no two attempts of a partition ever
@@ -694,6 +708,7 @@ object OsmPbf {
     } finally {
       running = false
       monitor.interrupt()
+      hconf.destroy()
       // inside a finally: a throwing callback would REPLACE the job's
       // real exception (e.g. the decode error) as the reported failure
       try onProgress(TranscodeProgress(elemAcc.value, byteAcc.value, (System.nanoTime() - t0) / 1e9))

@@ -3,6 +3,7 @@ package graft.sources.pbf
 import java.util
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -155,23 +156,26 @@ class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
       .map(g => OsmPbfInputPartition(path, g): InputPartition).toArray
   }
 
+  // the conf broadcast lives as long as the plan that holds this factory:
+  // the ContextCleaner drops it once the plan is unreachable, as for
+  // Spark's file sources
   override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val hconf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    OsmPbfReaderFactory(hconf, requiredSchema, typeSet, wayLocs)
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    OsmPbfReaderFactory(OsmPbf.broadcastConf(sc, sc.hadoopConfiguration),
+      requiredSchema, typeSet, wayLocs)
   }
 }
 
 case class OsmPbfInputPartition(path: String, spans: Array[Blobs.BlobSpan])
     extends InputPartition
 
-case class OsmPbfReaderFactory(hconf: SerializableConfiguration,
+case class OsmPbfReaderFactory(hconf: Broadcast[SerializableConfiguration],
                                requiredSchema: StructType,
                                typeSet: Set[String],
                                wayLocs: Boolean = false) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OsmPbfInputPartition]
-    new OsmPbfPartitionReader(p, hconf, requiredSchema, typeSet, wayLocs)
+    new OsmPbfPartitionReader(p, hconf.value, requiredSchema, typeSet, wayLocs)
   }
 }
 
