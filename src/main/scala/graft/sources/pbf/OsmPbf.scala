@@ -312,12 +312,15 @@ object OsmPbf {
     *    decodes its blobs exactly once and routes rows by type to up to 3
     *    parquet-mr writers it owns ([[DirectParquet.RotatingWriter]]). No
     *    shuffle, no dynamic-partition sort, no re-inflation per type.
-    *  - the decoder's InternalRows feed the parquet RecordConsumer
-    *    directly — no DataFrame-writer conversion layer (the round-1
-    *    throughput floor).
+    *  - the decoder's InternalRows feed the column buffers of
+    *    [[DirectParquet.ColumnarWriter]] directly — no DataFrame-writer
+    *    conversion layer (the round-1 throughput floor).
     *  - file rotation is byte-accurate from the writer's own size feedback
     *    (`--file-target-mb`, default 500 like util.rs:62-63), replacing the
-    *    sampled bytes/row heuristic.
+    *    sampled bytes/row heuristic. It applies within one task: each task
+    *    writes its own files, and a task's input is capped at
+    *    `inputBufferSizeMb` of decoded blobs, so files end far below the
+    *    target on inputs of any size.
     *  - the `type` column stays directory-only, exactly like the reference
     *    (osm_arrow.rs:52-54) — readers get it back via partition discovery.
     *  - PBF files sort nodes→ways→relations, so almost every task opens a

@@ -94,9 +94,12 @@ class OsmPbfScanBuilder(path: String, splitMb: Int, spansOpt: Option[String] = N
   }
 
   /** Accepts only `type = v` / `type IN (…)`; everything else stays with
-    * Spark. The accepted filter is also re-evaluated by Spark (we return
-    * it from pushedFilters for plan display but keep Spark's copy — group
-    * skip is a pruning optimization, not an exactness contract). */
+    * Spark. An accepted filter is NOT returned, so Spark does not
+    * re-evaluate it: the decoder skips every PrimitiveGroup of an
+    * unwanted type, and that skip alone makes the result exact, because a
+    * group holds elements of one type only. The match is case-sensitive
+    * like Spark's own `=` (`type = 'Node'` selects nothing).
+    * `pushedFilters` reports the accepted filters for plan display. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (accepted, rest) = filters.partition {
       case EqualTo("type", _: String) => true
