@@ -10,7 +10,7 @@
 # Usage: scripts/crossproc_gate.sh [roundTag] [baseRef]
 #   roundTag  suffix for the artifacts (default: rX)
 #   baseRef   git ref to diff against (default: the commit that last
-#             touched a LOCALCLUSTER_r*.json artifact)
+#             touched a LOCALCLUSTER_*.json artifact)
 #
 # Exit 0 with no runs when the guarded surface is unchanged; exit non-zero
 # if any proof fails. Record the outcome in COVERAGE.md each round.
@@ -28,7 +28,7 @@ GUARDED=(
 )
 
 TAG=${1:-rX}
-BASE=${2:-$(git log -n1 --format=%H -- 'LOCALCLUSTER_r*.json')}
+BASE=${2:-$(git log -n1 --format=%H -- 'LOCALCLUSTER_*.json')}
 
 if [ -z "$BASE" ]; then
   echo "[crossproc] no prior proof artifact commit found — running all proofs"

@@ -3,8 +3,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: prints the load-bearing physical-plan lines
   * (pushdown, joins, exchanges, codegen) for the queries whose SCALE
-  * behavior the engine stakes claims on. Args override the default list
-  * (see also tools/PlanAudit for ad-hoc use).
+  * behavior the engine stakes claims on. Args override the default list.
   */
 object Plans {
   def main(args: Array[String]): Unit = {

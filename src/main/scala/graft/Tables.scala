@@ -19,45 +19,55 @@ object Tables {
     * identical immutable inputs. First read of a path infers and caches;
     * later reads construct with the explicit schema, skipping inference
     * entirely. The cached schema is exactly what inference would return —
-    * plans are unchanged. Staleness contract: testdata files are immutable
-    * within a process lifetime (they are regenerated only between driver
-    * rounds, i.e. between JVMs).
+    * plans are unchanged.
     *
-    * CONF-SENSITIVITY: the key is the path only, but what inference
-    * returns depends on the session confs it ran under —
+    * Each entry is stamped with the path's data files (see [[stamp]]): a
+    * path rewritten in-process re-infers instead of silently reading with
+    * the stale schema, and its entry is replaced, so superseded schemas
+    * do not accumulate. The stamp is content-sensitive where the root's
+    * mtime is not: a directory mtime has 1 s granularity and can be set
+    * back, while a rewrite produces new part-file names.
+    *
+    * CONF-SENSITIVITY: the stamp covers the files only, but what
+    * inference returns depends on the session confs it ran under —
     * `spark.sql.parquet.inferTimestampNTZ.enabled` (NTZ vs session
     * timestamps) and `spark.sql.legacy.parquet.nanosAsLong` (ns columns
     * as Long vs hard error). A second in-process session with different
-    * values for those confs, or a tool that toggles them between reads
-    * of the same path, sees the FIRST session's schema. That is the
-    * contract this repo's single-session mains satisfy by construction;
-    * anything that deliberately varies those confs per-read (e.g.
-    * tools/EventsAB's cast-path A/B) must call [[clearSchemaCache]]
-    * around each variant or bypass [[Tables]] entirely.
+    * values for those confs, or a caller that toggles them between reads
+    * of the same unchanged path, sees the FIRST session's schema. This
+    * repo's single-session mains satisfy that by construction; a caller
+    * that varies those confs per read must bypass [[Tables]].
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long)], org.apache.spark.sql.types.StructType)]()
 
-  /** Test/tool hook: drop every cached inferred schema so the next read
-    * of each path re-infers under the CURRENT session confs. See the
-    * conf-sensitivity note on [[schemaCache]]. */
-  private[graft] def clearSchemaCache(): Unit = schemaCache.clear()
-
-  /** private[graft]: the replay stagers re-read the same immutable table
-    * paths every invocation and would otherwise re-infer per read.
-    * The cache key carries the root's (mtime, length) so the immutability
-    * assumption is ENFORCED, not just documented (r19 advisor): a path
-    * rewritten in-process (new part files → the dir's mtime changes)
-    * re-infers instead of silently reading with the stale schema. One
-    * stat() per read — noise next to the ~80-120ms inference it skips.
-    * (A nested rewrite that leaves the root dir's own mtime unchanged is
-    * out of contract — none of this repo's writers produce one.) */
-  private[graft] def cached(s: SparkSession, path: String): DataFrame = {
-    val f = new java.io.File(path)
-    val key = s"$path@${f.lastModified}:${f.length}"
-    val sch = schemaCache.computeIfAbsent(key, _ => s.read.parquet(path).schema)
-    s.read.schema(sch).parquet(path)
+  /** The sorted (relative name, length) list of the data files under
+    * `path` (the path itself when it is a file). Hidden and `_`-prefixed
+    * entries (`_SUCCESS`, `.crc`) are skipped, as Spark's listing does. */
+  private def stamp(path: String): Seq[(String, Long)] = {
+    val root = new java.io.File(path)
+    def walk(f: java.io.File, rel: String): Seq[(String, Long)] =
+      if (f.isDirectory)
+        Option(f.listFiles()).toSeq.flatten
+          .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+          .flatMap(c => walk(c, s"$rel/${c.getName}"))
+      else Seq(rel -> f.length)
+    walk(root, "").sorted
   }
+
+  /** The inferred schema of `path`, re-inferred only when its data files
+    * changed since the cached entry. */
+  private def schemaOf(s: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    val st = stamp(path)
+    schemaCache.compute(path, (_, prev) =>
+      if (prev != null && prev._1 == st) prev else (st, s.read.parquet(path).schema))._2
+  }
+
+  /** private[graft]: the replay stagers re-read the same table paths
+    * every invocation and would otherwise re-infer per read. One listing
+    * per read — noise next to the ~80-120ms inference it skips. */
+  private[graft] def cached(s: SparkSession, path: String): DataFrame =
+    s.read.schema(schemaOf(s, path)).parquet(path)
 
   def region(s: SparkSession, dir: String): DataFrame    = cached(s, s"$dir/region.parquet")
   def nation(s: SparkSession, dir: String): DataFrame    = cached(s, s"$dir/nation.parquet")
@@ -89,7 +99,7 @@ object Tables {
     *    wall-clock values to DuckDB's naive read under a UTC session).
     *    An explicit schema beats a `cast(ts as timestamp)` Project on the
     *    NTZ read: the cast path measured ~25-30% slower on the
-    *    events-table queries (round-8 A/B, EventsAB: a02 med 0.46s cast
+    *    events-table queries (round-8 A/B: a02 med 0.46s cast
     *    vs 0.36s native/explicit-schema) and was the real component of
     *    the round-7 a02/st05 solo regressions.
     */
@@ -119,7 +129,7 @@ object Tables {
     // demand it unconditionally, translate Spark's error into the
     // actionable contract when it does bite.
     val inferred =
-      try schemaCache.computeIfAbsent(path, p => s.read.parquet(p).schema)
+      try schemaOf(s, path)
       catch {
         case e: Throwable if {
           val m = String.valueOf(e.getMessage)

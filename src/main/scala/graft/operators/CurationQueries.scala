@@ -482,10 +482,8 @@ object CurationQueries {
     * shuffle + one source-window shuffle, total.
     */
   /** c16's dedup + quality-gate prefix (content-hash keepers → token
-    * gate), exposed so `tools.CurationSoak`'s stage witness measures THE
-    * SAME prefix the fused entry runs — an inline copy would silently
-    * drift if the hash choice or the >= 20 threshold ever changed. */
-  private[graft] def c16Keepers(docs: DataFrame): DataFrame =
+    * gate). */
+  private def c16Keepers(docs: DataFrame): DataFrame =
     docs.groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"),
         min_by(col("source"), col("doc_id")).as("source"),

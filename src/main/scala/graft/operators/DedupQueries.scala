@@ -62,7 +62,7 @@ object DedupQueries {
       // the generator's element struct. The obvious
       // `select(size($"sh"), explode($"sh"))` keeps a reference to the
       // array across the Generate, which then retains the full array on
-      // every exploded row — ContainAB measured that shape at ~20× the
+      // every exploded row — an A/B measured that shape at ~20× the
       // historical projection on a 10× corpus (19.0s vs 0.93s). This
       // shape measures within noise of the historical one.
       .select(col("doc_id"), explode(transform(col("sh"),
@@ -378,13 +378,6 @@ object DedupQueries {
     * BEFORE the sort so capped-away hot postings are never sorted at
     * all. */
   private val PackBase = 1L << 20
-
-  /** dev seam for tools/ContainAB. */
-  private[graft] def devInvertedPostings(sh: DataFrame, maxPosting: Option[Int]): DataFrame =
-    invertedPostings(sh, maxPosting)
-
-  /** dev seam for tools/ContainAB. */
-  private[graft] def devPairCounts(inv: DataFrame): DataFrame = pairCounts(inv)
 
   private def invertedPostings(sh: DataFrame, maxPosting: Option[Int]): DataFrame = {
     // Guarded pack: a doc with >= 2^20 distinct shingles or a negative
@@ -734,7 +727,7 @@ object DedupQueries {
     * a token's candidates are its ~C(len,≤2) variant buckets' occupants
     * — local neighborhoods, not whole length classes — so candidate
     * count grows ~linearly in vocabulary while d16's grows
-    * quadratically (probe-measured in SOAK_r10.json, FuzzyProbe).
+    * quadratically (probe-measured in SOAK_r10.json).
     * Variant generation is O(len²) rows per token through codegen'd
     * array ops; every shuffle keys on the variant string and the hot
     * (short) variants' buckets are bounded by the short-token

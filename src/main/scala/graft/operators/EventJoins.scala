@@ -58,13 +58,8 @@ object EventJoins {
     * Join fan-out is bounded by real bucket co-occupancy instead of the
     * per-user cartesian a raw inequality join plans (BroadcastNestedLoop).
     */
-  val a02_range_join: Q = (s, dir) => a02From(Tables.events(s, dir))
-
-  /** a02's plan from a caller-supplied events frame — the seam
-    * tools/EventsAB uses to run the SAME query over differently-staged
-    * reads (NTZ+cast vs explicit-schema vs UTC-typed file) without
-    * [[Tables.events]]' normalization choosing the read plan for it. */
-  private[graft] def a02From(ev: DataFrame): DataFrame = {
+  val a02_range_join: Q = (s, dir) => {
+    val ev = Tables.events(s, dir)
     val W = 86400000000L // 24h in micros
     // integer div for the bucket key (the Tables.events rule): floor of
     // a DOUBLE quotient is exact only while the quotient fits a double's

@@ -372,8 +372,8 @@ object Multimodal {
     * pins the full distributed pipeline against drift, and
     * MediaGoldenSpec recomputes + compares in `sbt test` so a legitimate
     * behavior change surfaces there first (regenerate via
-    * graft.tools.DumpQuery at sf0.01, then copy the part file over
-    * golden/<name>.parquet). */
+    * `SPARK_GRAFT_ONLY=<name> scripts/run.sh graft.Verify` at sf0.01,
+    * then copy the part file over golden/<name>.parquet). */
   val GoldenDir = "/root/repo/golden"
   val oracles: Map[String, String] = Map(
     "m02_media_features" ->

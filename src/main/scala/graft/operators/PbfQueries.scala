@@ -71,7 +71,7 @@ object PbfQueries {
       val out = oraclePath(key, pbf)
       if (!dumped.contains(out)) {
         // `synchronized` serializes threads in THIS JVM; the OS file lock
-        // serializes other processes (e.g. a dev DumpQuery run while a
+        // serializes other processes (e.g. a dev Verify run while a
         // Bench warmup runs p01). Under the lock: if a prior run already
         // completed this fingerprint (sentinel present), SKIP — the
         // content is fully determined by the path, so rewriting could
@@ -292,7 +292,7 @@ object PbfQueries {
     // ranges, and for mid-size unaligned boxes the capped cover
     // OVER-COVERS so much that a 5%-area cover still keeps ~98% of
     // envelope rows — measured in the round-9 crossover probe
-    // (tools/GateProbe: grid covers at 5/20/35% area all kept 98-100%
+    // (COVERAGE.md round 9: grid covers at 5/20/35% area all kept 98-100%
     // and the filter never beat OFF beyond noise; speedup_on 0.74-1.29x
     // across the whole mid-band). The range-cell ratio tracks realized
     // selectivity by construction — it counts exactly the keys the

@@ -173,7 +173,7 @@ object RelationalQueries {
     * Verify dumps concurrently on the parent session — q09 stays the
     * measured plain-window twin. Regime note: o_custkey cardinality
     * (~1.5k/sf0.01, ~15k/sf0.1) sits squarely in the heap operator's
-    * measured win region (TopKBench: faster below ~100k keys).
+    * measured win region (faster below ~100k keys, COVERAGE.md).
     */
   val q09b_window_topk_rewritten: Q = (s0, dir) => {
     val s = s0.newSession()
@@ -896,7 +896,7 @@ object RelationalQueries {
     s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
     // a third of the probe rows collapse onto ONE existing order key.
-    // Two demonstration-scale realities tools/SkewProbe measured the
+    // Two demonstration-scale realities a skew probe measured the
     // hard way (both are free at production scale): the probe side
     // needs MULTIPLE MAPPERS (a skewed reduce partition splits by
     // mapper-chunk ranges — a single-file single-row-group scan leaves

@@ -83,21 +83,24 @@ object ScaleQueries {
     // under the noop sink). Per key: map-side partial distinct on
     // (flag, key) collapses the scan to the distinct pairs, the exchange
     // carries only those, and the final 3-row agg computes BOTH the
-    // exact count (count over distinct pairs ≡ countDistinct; keys are
-    // filtered non-null to keep that identity data-independent) and the
-    // HLL estimate (duplicate-insensitive: identical sketch state and
-    // estimate over the deduped set). Output values are bit-identical.
+    // exact count (count of the non-null key over distinct pairs ≡
+    // countDistinct) and the HLL estimate (duplicate-insensitive:
+    // identical sketch state and estimate over the deduped set). Null
+    // keys stay in the pairs, so a flag whose keys are ALL null still
+    // has its row on each side (count 0, estimate 0) — the
+    // `GROUP BY l_returnflag` the oracle runs keeps such a flag too. The
+    // join is null-safe for the same reason: a null flag is a group.
     def side(key: String, approxName: String, exactName: String): DataFrame =
       Tables.lineitem(s, dir)
         .select(col("l_returnflag"), col(key))
-        .filter(col(key).isNotNull)
         .distinct()
         .groupBy(col("l_returnflag"))
         .agg(approx_count_distinct(col(key), 0.02).as(approxName),
-          count(lit(1)).as(exactName))
-    side("l_suppkey", "supp_approx", "n_supp_exact")
-      .join(side("l_partkey", "part_approx", "n_part_exact"), Seq("l_returnflag"))
-      .select(col("l_returnflag"), col("n_supp_exact"), col("n_part_exact"),
+          count(col(key)).as(exactName))
+    val supp = side("l_suppkey", "supp_approx", "n_supp_exact")
+    val part = side("l_partkey", "part_approx", "n_part_exact")
+    supp.join(part, supp("l_returnflag") <=> part("l_returnflag"))
+      .select(supp("l_returnflag"), col("n_supp_exact"), col("n_part_exact"),
         (abs(col("supp_approx") - col("n_supp_exact")) <= bound(col("n_supp_exact")))
           .as("supp_within_bound"),
         (abs(col("part_approx") - col("n_part_exact")) <= bound(col("n_part_exact")))

@@ -608,8 +608,7 @@ object SimilarityQueries {
   val s07c_hier_knn_recall_sampled: Q = (s, dir) =>
     knnGraphRecall(s, dir, ivfKnnGraphHier(s, dir), queryMod = 5L)
 
-  /** Recall audit body (public: the ScaleProbe soak drives the sampled
-    * form at 10×/30×). `queryMod` samples the QUERY side — truth ranks
+  /** Recall audit body. `queryMod` samples the QUERY side — truth ranks
     * and graph edges are audited only for vec_id ≡ 0 mod `queryMod`;
     * the candidate/neighbor side is always the full corpus, so sampling
     * changes which queries are audited, never any query's truth. */

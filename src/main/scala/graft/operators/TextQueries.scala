@@ -482,7 +482,7 @@ object TextQueries {
       .select(explode(toks).as("tok"))
     // localCheckpoint: uni feeds THREE consumers (c_a join, c_b join, the
     // U total) — without the cut each one re-runs the corpus-wide token
-    // explode + count (the d08 shared-subtree discipline; PlanAudit
+    // explode + count (the d08 shared-subtree discipline; the plan
     // showed three full scan+agg subtrees before the cut)
     val uni = tk.groupBy(col("tok")).agg(count(lit(1)).as("c")).localCheckpoint()
     val tot = uni.agg(sum(col("c")).as("u"))

@@ -32,7 +32,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * extension wiring needed.
   *
   * Measured crossover (30M rows, local[32], k=5, sort-based final — see
-  * `graft.tools.TopKBench`): at 1k keys the bounded heap wins ~1.5-2×
+  * COVERAGE.md): at 1k keys the bounded heap wins ~1.5-2×
   * (0.7-1.0s vs 1.3-1.5s — the partial stage drops >99% of shuffle
   * volume); at 100k+ keys the window formulation wins ~3× (pruning is
   * weak at ~9 rows/key/partition and its codegen'd radix sort out-runs

@@ -132,8 +132,8 @@ object IndexedPbf {
 
   /** Prune accounting of the most recent [[readWaysAndDeps]] in this JVM:
     * way-blobs scanned pass-1, node-blobs scanned pass-2, and the totals
-    * they were pruned from — consumed by `tools.IndexedDepthSoak` and the
-    * specs. Written on every call; a handful of longs. */
+    * they were pruned from — read by the specs. Written on every call; a
+    * handful of longs. */
   private[graft] val lastPrune =
     new java.util.concurrent.atomic.AtomicReference[Map[String, Long]](Map.empty)
 

@@ -56,41 +56,18 @@ object StreamReplay {
     resolveStateStore(
       sys.props.get("graft.stateStore").orElse(sys.env.get("GRAFT_STATE_STORE")))
 
-  /** A/B seam: `-Dgraft.replay.conf="k=v;k=v"` applies extra SQL confs to
-    * the replay's ISOLATED session — `newSession()` does not inherit a
-    * caller's runtime-set confs, so a measurement probe cannot inject a
-    * knob any other way without editing entry code. Gate/production runs
-    * never set it; the r18 st10 replanning A/B (tools.St10PlanAB) is the
-    * consumer. */
-  private[streaming] def applyReplayConfOverrides(s: SparkSession): Unit =
-    sys.props.get("graft.replay.conf").foreach { spec =>
-      spec.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"graft.replay.conf entry '$kv' is not k=v")
-        s.conf.set(kv.take(i), kv.drop(i + 1))
-      }
-    }
-
-  /** Replay-session shuffle/state partition count. Gate-scale default
-    * **4** (r20, measured): a replay micro-batch carries 10²–10⁴ rows,
-    * so the per-batch cost is dominated by the PER-PARTITION state-store
-    * commit envelope (store load/flush/checkpoint files × partitions ×
-    * batches), not by data parallelism — clean-window GateKnobAB runs
-    * (/tmp committed to OPTIMIZATION_r20.md §knobs): st03 3.83→2.74 s,
-    * st18 addBatch 3.47→2.64, st10 wall ~−40% at 4 vs the previous 8;
-    * 2–3 partitions measured within noise of 4 (curve flat below 4, and
-    * 4 keeps real parallelism in the batch). The previous 8 was itself a
-    * gate-scale scoping, not Spark's 200 default; this stays
-    * PARAMETERIZED, not a constant tuned to this box: deployments size
-    * it to state volume via `-Dgraft.replay.partitions` /
-    * `GRAFT_REPLAY_PARTITIONS`, and measurement probes can still
-    * override per-run through `graft.replay.conf` (applied last).
-    * Results are partition-count-invariant by design (min-owner rule,
-    * ordered outputs — the oracle gate re-verified under 4). */
-  private[streaming] def replayShufflePartitions: String =
-    sys.props.get("graft.replay.partitions")
-      .orElse(sys.env.get("GRAFT_REPLAY_PARTITIONS"))
-      .getOrElse("4")
+  /** Replay-session shuffle/state partition count, **4** (r20, measured):
+    * a replay micro-batch carries 10²–10⁴ rows, so the per-batch cost is
+    * dominated by the PER-PARTITION state-store commit envelope (store
+    * load/flush/checkpoint files × partitions × batches), not by data
+    * parallelism — clean-window A/B runs (OPTIMIZATION_r20.md §knobs,
+    * SOAK_r20_gateknobs.json): st03 3.83→2.74 s, st18 addBatch
+    * 3.47→2.64, st10 wall ~−40% at 4 vs the previous 8; 2–3 partitions
+    * measured within noise of 4 (curve flat below 4, and 4 keeps real
+    * parallelism in the batch). Results are partition-count-invariant by
+    * design (min-owner rule, ordered outputs — the oracle gate
+    * re-verified under 4). */
+  private val ReplayShufflePartitions = "4"
 
   /** Short provider name → provider class (None = keep Spark's default
     * HDFS-backed provider). Shared by the sys-prop path and the explicit
@@ -108,8 +85,8 @@ object StreamReplay {
     * itemization of the "streaming protocol cost" that has dominated the
     * bench sweep since r13 without a number (judge ask r16#5). Written by
     * [[replayDocs]]/[[replayRaw]] on every run (cost: a handful of
-    * nanoTime reads), consumed by `tools.ReplayFloorProbe`, which runs
-    * entries SOLO and snapshots this after each. Keys: harness phases
+    * nanoTime reads), consumed by [[graft.Bench]], which snapshots this
+    * around each solo entry run. Keys: harness phases
     * (stage/start/process/extract, plus the settle-poll loop's sleep and
     * sink-count components where one runs) and per-batch engine duration
     * sums from the query's own progress history (addBatch,
@@ -332,8 +309,6 @@ object StreamReplay {
                      stateStore: Option[String] = None,
                      parquetSinkDir: Option[String] = None,
                      foreachBatchFn: Option[(DataFrame, Long) => Unit] = None,
-                     progressSink: Option[scala.collection.mutable.Buffer[
-                       org.apache.spark.sql.streaming.StreamingQueryProgress]] = None,
                      multiScan: Boolean = false): Replayed = {
     val f0 = System.nanoTime() // floor itemization — see lastFloor
     require(chunks == 1 || stageCopies == 1,
@@ -345,26 +320,20 @@ object StreamReplay {
     // an isolated session (shared context, own SQLConf/catalog):
     // stateful streaming cost is dominated by per-partition state-store
     // commits (shuffle.partitions × batches), so the replay scopes a
-    // small partition count ([[replayShufflePartitions]]) — and a tmpfs
+    // small partition count ([[ReplayShufflePartitions]]) — and a tmpfs
     // scratch/checkpoint where available — to its own session state
     // instead of mutating the caller's conf under concurrently running
     // queries
     val s: SparkSession = outer.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions)
+    s.conf.set("spark.sql.shuffle.partitions", ReplayShufflePartitions)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // None = inherit the process-level override (-Dgraft.stateStore /
     // GRAFT_STATE_STORE); an explicit name resolves through the same
     // table (Some("hdfs") forces the default provider). No null
     // sentinel: an innocently-forwarded None must not silently disable
-    // the override a soak was launched under.
+    // the override a run was launched under.
     (stateStore.fold(stateStoreOverride)(n => resolveStateStore(Some(n))))
       .foreach(s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-    // LAST, in both replay paths, so a probe's override always wins —
-    // applying it before the provider resolution here would silently
-    // clobber a providerClass override on replayRaw-backed entries while
-    // honoring it on replayDocs-backed ones (two legs of one sweep
-    // silently running different experiments)
-    applyReplayConfOverrides(s)
     import s.implicits._
 
     // the one driver-side scalar: max real event time, via a distributed
@@ -372,7 +341,7 @@ object StreamReplay {
     // matching the old harness's maxOption.getOrElse(0L).
     // Computed ONLY when the tick protocol needs it (r20, guide §1.2
     // "don't compute things you throw away"): tick-less replays (st02/
-    // st05/st06/st08/st17 and the foreachBatch soaks) were paying a full
+    // st05/st06/st08/st17) were paying a full
     // events-table aggregate job per invocation for a scalar none of
     // their callers read — every `.maxTs` consumer in main and test code
     // runs with ticks=true (verified r20; new tick-less callers must not
@@ -412,7 +381,7 @@ object StreamReplay {
       // file-source schema instead DECLARES ts TimestampType, so the scan
       // surfaces raw micros as session-UTC timestamps directly — no
       // per-micro-batch cast Project (the cast path measured ~20-25%
-      // slower on st05; see Tables.events scaladoc / round-8 EventsAB)
+      // slower on st05; see the Tables.events scaladoc)
       val fileSchema = {
         val inferred = s.read.parquet(stagedFiles.head.toString).schema
         StructType(inferred.map {
@@ -485,11 +454,10 @@ object StreamReplay {
         IngestAudit.audit(ckpt, stage)
         if (!multiScan) reconcileStagedRows(s, query, ckpt, stage, fileSchema)
         val batches = Option(query.lastProgress).map(_.batchId + 1).getOrElse(0L)
+        val fProc = System.nanoTime()
         // recentProgress retains (by default) far more batches than any
         // replay here runs, so these sums cover the whole query's
         // history, not a window of it
-        progressSink.foreach(_ ++= query.recentProgress)
-        val fProc = System.nanoTime()
         val stateProgress = query.recentProgress
           .flatMap(p => Option(p.stateOperators).toSeq.flatten)
         val lateDropped = stateProgress.map(_.numRowsDroppedByWatermark).sum
@@ -745,23 +713,6 @@ object StreamReplay {
     * instead of intra-batch). Same oracle SQL as st07. */
   val st07b_session_multibatch: Q = (s, dir) => st07Shaped(s, dir, chunks = 8)
 
-  /** Round-8 state-depth soak hook: replay `dir`'s events table through
-    * [[EventStreams.sessionize]] (the deepest-state operator — one
-    * SessionState per user, event-time timeouts) in `chunks` event-time
-    * batches, capturing every micro-batch's StreamingQueryProgress so the
-    * soak can record state rows / store memory / per-batch latency under
-    * a chosen state store. Returns (emitted session rows, progress). */
-  private[graft] def soakSessionize(s: SparkSession, dir: String, chunks: Int,
-      stateStore: Option[String]):
-      (Long, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    val r = replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.sessionize(ds).toDF(), chunks = chunks,
-      stateStore = stateStore, progressSink = Some(buf))
-    (r.df.filter(col("user_id") >= 0).count(), buf.toSeq)
-  }
-
   private def st07Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
     replay(s, dir, OutputMode.Append(),
       ds => EventStreams.sessionize(ds).toDF(), chunks = chunks)
@@ -784,24 +735,6 @@ object StreamReplay {
   /** st13b: the same processor over 8 event-time chunks — state folds
     * and timer replacement genuinely cross batch boundaries. */
   val st13b_profile_tws_multibatch: Q = (s, dir) => st13Shaped(s, dir, chunks = 8)
-
-  /** State-depth soak hook for the transformWithState path (the st13
-    * twin of [[soakSessionize]]): replay `dir`'s events through
-    * [[EventStreams.runningProfile]] in `chunks` event-time batches,
-    * RocksDB pinned (TWS requires it), capturing every micro-batch's
-    * progress so the soak can record state rows / store memory / TIMER
-    * count per batch — the timer registry is the structure the old API
-    * doesn't have, and each batch here deletes + re-registers every
-    * active user's timer. */
-  private[graft] def soakProfile(s: SparkSession, dir: String, chunks: Int):
-      (Long, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    val r = replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.runningProfile(ds).toDF(), chunks = chunks,
-      stateStore = Some("rocksdb"), progressSink = Some(buf))
-    (r.df.filter(col("user_id") >= 0).count(), buf.toSeq)
-  }
 
   /** st14: `transformWithState` with TWO state variables (ListState +
     * ValueState) — per-user LAST-3 events kept in a ListState, merged
@@ -958,14 +891,11 @@ object StreamReplay {
     * RocksDB-only in Spark 4 (the st13 note). */
   private def replayDocs(outer: SparkSession, dir: String,
       transform: DataFrame => DataFrame, chunks: Int,
-      progressSink: Option[scala.collection.mutable.Buffer[
-        org.apache.spark.sql.streaming.StreamingQueryProgress]] = None,
       awaitRows: Option[Long] = None,
-      stateExtract: Option[(SparkSession, String) => DataFrame] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): DataFrame = {
+      stateExtract: Option[(SparkSession, String) => DataFrame] = None): DataFrame = {
     val f0 = System.nanoTime() // floor itemization — see lastFloor
     val s: SparkSession = outer.newSession()
-    // Partition count: [[replayShufflePartitions]] (r20 re-measure —
+    // Partition count: [[ReplayShufflePartitions]] (r20 re-measure —
     // the r17 "4 slightly worse" null was taken under commits dominated
     // by per-file chmod forks; with the fork-free FS the per-partition
     // commit envelope dominates and 4 wins ~20-25% on st18, knob
@@ -975,10 +905,9 @@ object StreamReplay {
     // one window, indistinguishable in the next); at 100 TB state sizes
     // changelog checkpointing is still the right production setting —
     // the null is about gate-scale replay cost.
-    s.conf.set("spark.sql.shuffle.partitions", replayShufflePartitions)
+    s.conf.set("spark.sql.shuffle.partitions", ReplayShufflePartitions)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    applyReplayConfOverrides(s)
     val base = graft.Scratch.tempDir("graftdocreplay")
     val stage = Files.createDirectory(base.resolve("in"))
     val ckpt = base.resolve("ckpt").toString
@@ -1009,7 +938,7 @@ object StreamReplay {
         .option("checkpointLocation", ckpt)
         .format("memory").queryName(sink)
       val fStage = System.nanoTime()
-      val query = trigger.fold(writer)(writer.trigger).start()
+      val query = writer.start()
       val fStart = System.nanoTime()
       var pollSleepNs = 0L
       var pollCountNs = 0L
@@ -1149,7 +1078,6 @@ object StreamReplay {
         if (settleSignalOut != 1.0 && settleSignalOut != 2.0)
           reconcileStagedRows(s, query, ckpt, stage, stagedSchema)
         val fProc = System.nanoTime()
-        progressSink.foreach(_ ++= query.recentProgress)
         val floorBatches = progressSums(query.recentProgress)
         val result = stateExtract match {
           case None => s.table(sink).localCheckpoint()
@@ -1186,115 +1114,6 @@ object StreamReplay {
       try org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       catch { case _: java.io.IOException => () }
     }
-  }
-
-  /** st17 soak hook: the CDC apply loop replayed over a generated events
-    * corpus with per-batch progress captured. NOTE what this soak is FOR:
-    * unlike the state-store soaks (flat batches expected), the plain-
-    * parquet snapshot apply REWRITES the whole target per batch — the
-    * honest expectation is per-batch wall growing with the accumulated
-    * target, and the measurement quantifies exactly the cost q38b's
-    * bucketed layout / a table format's compaction exists to remove.
-    * Returns (final target rows, progress). */
-  private[graft] def soakCdcApply(s: SparkSession, dir: String, chunks: Int):
-      (Long, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    val target = graft.Scratch.tempDir("graft-cdcsoak-target").toString
-    try {
-      replayRaw(s, dir, OutputMode.Append(),
-        ds => ds.toDF(), ticks = false, chunks = chunks,
-        foreachBatchFn = Some((b: DataFrame, id: Long) =>
-          EventStreams.applyChangeset(b, id, target)),
-        progressSink = Some(buf))
-      val n = EventStreams.latestVersion(target)
-        .map(p => s.read.parquet(p).count()).getOrElse(0L)
-      (n, buf.toSeq)
-    } finally {
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(target))
-      catch { case _: java.io.IOException => () }
-    }
-  }
-
-  /** st16 soak hook: the ingest gate replayed over a generated document
-    * corpus with per-batch progress captured — state rows here are
-    * (band, value) bucket owners (~4× the distinct-signature count),
-    * and the returned count is the number of FLAGGED documents. */
-  private[graft] def soakNearDup(s: SparkSession, dir: String, chunks: Int,
-      ttlMillis: Option[Long] = None, throttled: Boolean = false):
-      (Long, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    val gate: DataFrame => DataFrame = ttlMillis match {
-      case Some(ttl) => docs => DocStreams.nearDupFlagsTtl(docs, ttl)
-      case None => docs => DocStreams.nearDupFlags(docs)
-    }
-    // TTL'd leg: processing-time TWS never quiesces (see st16Shaped) —
-    // await the exact expected sink size instead of processAllAvailable
-    val awaitRows = ttlMillis.map(_ =>
-      DocStreams.expectedBandRows(graft.Tables.documents(s, dir)))
-    require(!throttled || ttlMillis.nonEmpty,
-      "throttled soak is the TTL'd-gate regime; set ttlMillis")
-    val trig =
-      if (throttled) ttlMillis.map(_ =>
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-      else None
-    val flags = replayDocs(s, dir, gate, chunks,
-      progressSink = Some(buf), awaitRows = awaitRows, trigger = trig)
-    (flags.filter(col("dup") === 1L).select(col("doc_id")).distinct().count(), buf.toSeq)
-  }
-
-  /** st19 soak hook: replay the ingest gate at depth, then TIME the
-    * statestore read of the settled checkpoint — the operational
-    * question a 100 TB gate debugger asks ("how long to inspect the
-    * owner state?") as a function of state size. Returns
-    * (reader row count, cold read seconds, warm read seconds, progress);
-    * the caller cross-checks the reader's row count against the store's
-    * own numRowsTotal — the reader must see exactly the committed
-    * state, no more, no less. */
-  private[graft] def soakStateRead(s: SparkSession, dir: String, chunks: Int):
-      (Long, Double, Double, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    var stateRows = 0L
-    var coldS = 0.0
-    var warmS = 0.0
-    replayDocs(s, dir, docs => DocStreams.nearDupFlags(docs), chunks,
-      progressSink = Some(buf),
-      stateExtract = Some((sp, ckpt) => {
-        val t0 = System.nanoTime()
-        stateRows = DocStreams.ownerState(sp, ckpt).count()
-        coldS = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        DocStreams.ownerState(sp, ckpt).count()
-        warmS = (System.nanoTime() - t1) / 1e9
-        DocStreams.ownerState(sp, ckpt).limit(1).localCheckpoint()
-      }))
-    (stateRows, coldS, warmS, buf.toSeq)
-  }
-
-  /** st14/st15 soak hooks (the [[soakProfile]] twins for the ListState
-    * and MapState processors): per batch the soak records state rows /
-    * store memory while every active user's list merges (st14) or map
-    * entries point-update (st15) under RocksDB. */
-  private[graft] def soakRecent(s: SparkSession, dir: String, chunks: Int):
-      (Long, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    val r = replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.recentEvents(ds).toDF(), chunks = chunks,
-      stateStore = Some("rocksdb"), progressSink = Some(buf))
-    (r.df.filter(col("user_id") >= 0).count(), buf.toSeq)
-  }
-
-  private[graft] def soakHistogram(s: SparkSession, dir: String, chunks: Int):
-      (Long, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    val r = replayRaw(s, dir, OutputMode.Append(),
-      ds => EventStreams.typeHistogram(ds).toDF(), chunks = chunks,
-      stateStore = Some("rocksdb"), progressSink = Some(buf))
-    (r.df.filter(col("user_id") >= 0).count(), buf.toSeq)
   }
 
   private def st13Shaped(s: SparkSession, dir: String, chunks: Int): DataFrame =
@@ -1483,15 +1302,12 @@ object StreamReplay {
   val st20_time_travel_read: Q = (s, dir) => {
     val K = 8L
     val asOf = 4L
-    val target = graft.Scratch.tempDir("graft-st20-target").toString
     // stage the projected events frame ONCE (r20, guide §1.2): the K
     // changeset filters below each re-scanned the full table and
     // re-derived unix_millis — 9 scans per entry invocation where the
     // checkpointed 3-column frame serves all of them (the min/max agg
-    // included). Same rows, same oracle; released in the finally.
-    val ev = graft.Checkpoints.stage(graft.Tables.events(s, dir)
-      .select(col("user_id"), col("value"), unix_millis(col("ts")).as("ms")))
-    try {
+    // included). Same rows, same oracle.
+    withStagedStore("graft-st20-target", eventsMs(s, dir))() { (target, ev) =>
       val mm = ev.agg(min(col("ms")), max(col("ms"))).head()
       require(!mm.isNullAt(0), "events table is empty — nothing to replay")
       val (mn, mx) = (mm.getLong(0), mm.getLong(1))
@@ -1505,10 +1321,6 @@ object StreamReplay {
       s.read.schema(EventStreams.SnapshotSchema).parquet(EventStreams.latestVersion(target, below = asOf + 1).get)
         .orderBy(col("user_id"))
         .localCheckpoint()
-    } finally {
-      graft.CacheOps.unpersistLocalCheckpoint(ev)
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(target))
-      catch { case _: java.io.IOException => () }
     }
   }
 
@@ -1529,13 +1341,15 @@ object StreamReplay {
     * how the batches sliced them — st17's oracle, reused verbatim. */
   val st21_cdc_apply_pruned: Q = (s, dir) => {
     val B = 8
-    val target = graft.Scratch.tempDir("graft-st21-target").toString
     val prefix = s"graft_st21_${sinkId.incrementAndGet()}" // per-run: concurrent same-entry runs must not collide in the shared catalog
     // staged once (the st20 move): 4 changeset filters + the hostile
     // retry all read the same 2-column projection
-    val ev = graft.Checkpoints.stage(
-      graft.Tables.events(s, dir).select(col("user_id"), col("value")))
-    try {
+    withStagedStore("graft-st21-target",
+        graft.Tables.events(s, dir).select(col("user_id"), col("value")))(
+        (0 until 4).foreach { i =>
+          s.sql(s"DROP TABLE IF EXISTS ${prefix}_v$i")
+          s.sql(s"DROP TABLE IF EXISTS ${prefix}_stage_v$i")
+        }) { (target, ev) =>
       (0 until 4).foreach { i =>
         EventStreams.applyChangesetBucketedPruned(
           ev.filter(expr(s"pmod(hash(user_id), $B) div 2") === i),
@@ -1549,14 +1363,6 @@ object StreamReplay {
       s.read.schema(EventStreams.SnapshotSchema).parquet(EventStreams.latestVersion(target).get)
         .orderBy(col("user_id"))
         .localCheckpoint()
-    } finally {
-      graft.CacheOps.unpersistLocalCheckpoint(ev)
-      (0 until 4).foreach { i =>
-        s.sql(s"DROP TABLE IF EXISTS ${prefix}_v$i")
-        s.sql(s"DROP TABLE IF EXISTS ${prefix}_stage_v$i")
-      }
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(target))
-      catch { case _: java.io.IOException => () }
     }
   }
 
@@ -1578,13 +1384,12 @@ object StreamReplay {
     * full-outer diffed in SQL — maintain-then-diff ≡ recompute-and-diff. */
   val st22_version_diff: Q = (s, dir) => {
     val K = 8L
-    val target = graft.Scratch.tempDir("graft-st22-target").toString
     val prefix = s"graft_st22_${sinkId.incrementAndGet()}"
     // staged once (the st20 move): one scan serves the min/max agg and
     // all 8 changeset filters
-    val ev = graft.Checkpoints.stage(graft.Tables.events(s, dir)
-      .select(col("user_id"), col("value"), unix_millis(col("ts")).as("ms")))
-    try {
+    withStagedStore("graft-st22-target", eventsMs(s, dir))(
+        (0L until K).foreach(i => s.sql(s"DROP TABLE IF EXISTS ${prefix}_v$i"))) {
+        (target, ev) =>
       val mm = ev.agg(min(col("ms")), max(col("ms"))).head()
       require(!mm.isNullAt(0), "events table is empty — nothing to replay")
       val (mn, mx) = (mm.getLong(0), mm.getLong(1))
@@ -1600,12 +1405,6 @@ object StreamReplay {
           tablePrefix = Some(prefix))
         .orderBy(col("user_id"))
         .localCheckpoint()
-    } finally {
-      graft.CacheOps.unpersistLocalCheckpoint(ev)
-      (0L until K).foreach(i =>
-        s.sql(s"DROP TABLE IF EXISTS ${prefix}_v$i"))
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(target))
-      catch { case _: java.io.IOException => () }
     }
   }
 
@@ -1628,13 +1427,12 @@ object StreamReplay {
     * the removed/NULL shape written directly in SQL. */
   val st23_cdc_delete: Q = (s, dir) => {
     val K = 4L
-    val target = graft.Scratch.tempDir("graft-st23-target").toString
     val prefix = s"graft_st23_${sinkId.incrementAndGet()}"
     // staged once (the st20 move): min/max agg, 4 changeset filters and
     // the tombstone projection all read the one checkpointed frame
-    val ev = graft.Checkpoints.stage(graft.Tables.events(s, dir)
-      .select(col("user_id"), col("value"), unix_millis(col("ts")).as("ms")))
-    try {
+    withStagedStore("graft-st23-target", eventsMs(s, dir))(
+        (0L to K).foreach(i => s.sql(s"DROP TABLE IF EXISTS ${prefix}_v$i"))) {
+        (target, ev) =>
       val mm = ev.agg(min(col("ms")), max(col("ms"))).head()
       require(!mm.isNullAt(0), "events table is empty — nothing to replay")
       val (mn, mx) = (mm.getLong(0), mm.getLong(1))
@@ -1654,10 +1452,30 @@ object StreamReplay {
           tablePrefix = Some(prefix))
         .orderBy(col("user_id"))
         .localCheckpoint()
+    }
+  }
+
+  /** The events table projected to the snapshot-store entries' columns,
+    * with `ts` as epoch millis. */
+  private def eventsMs(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.events(s, dir)
+      .select(col("user_id"), col("value"), unix_millis(col("ts")).as("ms"))
+
+  /** Runs `body` over a fresh scratch snapshot-store dir and the staged
+    * (checkpointed) `frame`, then unpersists the frame, runs `dropTables`
+    * and deletes the dir. Staging happens INSIDE the try: a frame that
+    * fails to stage (e.g. a missing events table) must not leak the dir
+    * or skip the table drops. */
+  private def withStagedStore[T](dirPrefix: String, frame: => DataFrame)(
+      dropTables: => Unit = ())(body: (String, DataFrame) => T): T = {
+    val target = graft.Scratch.tempDir(dirPrefix).toString
+    var staged: Option[DataFrame] = None
+    try {
+      staged = Some(graft.Checkpoints.stage(frame))
+      body(target, staged.get)
     } finally {
-      graft.CacheOps.unpersistLocalCheckpoint(ev)
-      (0L to K).foreach(i =>
-        s.sql(s"DROP TABLE IF EXISTS ${prefix}_v$i"))
+      staged.foreach(graft.CacheOps.unpersistLocalCheckpoint)
+      dropTables
       try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(target))
       catch { case _: java.io.IOException => () }
     }

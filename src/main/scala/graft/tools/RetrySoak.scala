@@ -34,7 +34,7 @@ object RetrySoak {
     val dir = graft.Scratch.tempDir("retrysoak").toString
     try {
       val pbf = s"$dir/big.osm.pbf"
-      // the Soak corpus shape: planet-like element mix
+      // planet-like element mix
       val n = PbfWriter.synthesize(pbf, blocks, nodesPerBlock = 20000,
         waysPerBlock = 2250, relationsPerBlock = 29)
       val out = s"$dir/out"

@@ -347,7 +347,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(zB.toDouble / envB < 0.05,
       s"filter keeps $zB of $envB envelope survivors — expected <5%")
 
-    // MID-BAND (the round-9 crossover probe's finding, tools/GateProbe):
+    // MID-BAND (the round-9 crossover probe's finding, COVERAGE.md):
     // a 4×4 grid of mid-size boxes covering 5% of the envelope BY AREA.
     // The 64-range capped cover over-covers such boxes so much that the
     // filter keeps nearly everything — the area ratio (~5%) would have

@@ -38,7 +38,8 @@ class MediaGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
     val f = fresh.collect().map(_.toSeq).toSeq
     val g = golden.collect().map(_.toSeq).toSeq
     assert(f === g, s"$name values drifted from golden/$name.parquet — " +
-      "if intentional, regenerate via graft.tools.DumpQuery at sf0.01")
+      "if intentional, regenerate via SPARK_GRAFT_ONLY=" + name +
+        " scripts/run.sh graft.Verify at sf0.01")
   }
 
   test("m02 media features match the checked-in golden")(check("m02_media_features"))

@@ -132,6 +132,25 @@ class SketchAccuracySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.getBoolean(2), s"x03 out of envelope: $r")
     }
   }
+  test("x01 keeps a return flag whose keys are all null, as GROUP BY does") {
+    // flag N has only null suppkeys, flag R only null partkeys: the
+    // oracle's GROUP BY l_returnflag reports each with a 0 distinct
+    // count on that key, so the entry must not drop them
+    val sp = spark; import sp.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("x01nullkeys").toString
+    Seq[(String, Option[Long], Option[Long])](
+      ("A", Some(1L), Some(10L)), ("A", Some(2L), Some(11L)), ("A", Some(2L), Some(10L)),
+      ("N", None, Some(20L)), ("N", None, Some(21L)),
+      ("R", Some(5L), None), ("R", Some(5L), None))
+      .toDF("l_returnflag", "l_suppkey", "l_partkey")
+      .write.parquet(s"$tmp/lineitem.parquet")
+    val got = ScaleQueries.x01_approx_distinct(spark, tmp).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4)))
+      .toSeq
+    assert(got === Seq(("A", 2L, 2L, true, true), ("N", 0L, 2L, true, true),
+      ("R", 1L, 0L, true, true)))
+  }
+
   test("x04: shard-merged HLL equals the whole-corpus sketch; bounds hold") {
     // merge associativity: union of per-shard sketches must estimate the
     // same cardinality as one sketch over the whole stream

@@ -361,4 +361,24 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("bucket_start", "event_type").collect().toSeq
     assert(after === before)
   }
+
+  test("st20-st23 leave no scratch store dir when the events table cannot be staged") {
+    // staging runs inside each entry's try: a missing events table must
+    // still delete the entry's snapshot-store dir (Scratch.tempDir puts
+    // it under /dev/shm when writable, else java.io.tmpdir)
+    val roots = Seq(new java.io.File("/dev/shm"), new java.io.File(System.getProperty("java.io.tmpdir")))
+    def scratch(prefix: String): Set[String] =
+      roots.flatMap(r => Option(r.listFiles()).toSeq.flatten)
+        .filter(_.getName.startsWith(prefix)).map(_.getPath).toSet
+    val dir = java.nio.file.Files.createTempDirectory("replayspec-noevents").toString
+    Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
+      "graft-st20-target" -> StreamReplay.st20_time_travel_read,
+      "graft-st21-target" -> StreamReplay.st21_cdc_apply_pruned,
+      "graft-st22-target" -> StreamReplay.st22_version_diff,
+      "graft-st23-target" -> StreamReplay.st23_cdc_delete).foreach { case (prefix, entry) =>
+      val before = scratch(prefix)
+      intercept[Exception](entry(spark, dir))
+      assert(scratch(prefix) -- before === Set.empty[String], s"$prefix dir leaked")
+    }
+  }
 }
