@@ -6,8 +6,8 @@ import java.nio.charset.{CharacterCodingException, StandardCharsets}
 /** Minimal hand-rolled protobuf wire-format reader.
   *
   * The offline build resolves no protobuf runtime, and the OSM PBF format
-  * (MIT-licensed public spec, mirrored at
-  * /root/reference/osmpbf/src/proto/{fileformat,osmformat}.proto) uses only
+  * (MIT-licensed public spec, osmpbf/src/proto/{fileformat,osmformat}.proto
+  * as cited in SURVEY.md §1.1 and §1.3) uses only
   * a handful of messages, so a cursor-based reader over the blob's byte
   * array is smaller and faster than a generic runtime: no message objects,
   * no reflection — the decoder pulls fields straight into primitive arrays.

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class OsmPbfDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
-  private val fixture = "/root/reference/osmpbf/tests/test.osm.pbf"
+  private val fixture = PbfFixtures.path("test.osm.pbf")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -67,7 +67,7 @@ class OsmPbfDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("wayLocations=true surfaces node_locations through the scan (read.rs:418-509)") {
-    val loc = "/root/reference/osmpbf/tests/loc_on_ways.osm.pbf"
+    val loc = PbfFixtures.path("loc_on_ways.osm.pbf")
     val df = spark.read.format("osmpbf").option("wayLocations", "true").load(loc)
     assert(df.schema === OsmSchema.schemaWithWayLocations)
 

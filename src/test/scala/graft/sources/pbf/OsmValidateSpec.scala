@@ -24,7 +24,7 @@ class OsmValidateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private lazy val df = OsmPbf.read(spark, "/root/reference/osmpbf/tests/test.osm.pbf").cache()
+  private lazy val df = OsmPbf.read(spark, PbfFixtures.path("test.osm.pbf")).cache()
 
   test("self-comparison reports zero violations on every check") {
     val rep = OsmValidate.report(df, df).collect()

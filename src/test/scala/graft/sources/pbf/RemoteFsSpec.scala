@@ -21,7 +21,7 @@ class MockObjectStoreFs extends RawLocalFileSystem {
 class RemoteFsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
-  private val fixture = "/root/reference/osmpbf/tests/test.osm.pbf"
+  private val fixture = PbfFixtures.path("test.osm.pbf")
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
