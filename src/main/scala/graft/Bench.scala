@@ -259,10 +259,8 @@ object Bench {
       }
       soloCpu(name) = soloCpu(name) :+ CpuStat.pct(c0, CpuStat.ticks())
       val floorAfter = graft.streaming.StreamReplay.lastFloor.get()
-      if (!(floorAfter eq floorBefore) && floorAfter.contains("settle_signal") &&
-          floorAfter("settle_signal") >= 0)
-        soloSettle(name) = floorAfter.view
-          .filterKeys(_.startsWith("settle_")).toMap
+      if (!(floorAfter eq floorBefore) && floorAfter.getOrElse("settle_signal", -1.0) >= 0)
+        soloSettle(name) = floorAfter
       sec
     }
     val ordered = benchQueries.toSeq.sortBy(_._1)

@@ -260,34 +260,6 @@ object OsmPbf {
     groupSpans(spans, math.min(capBytes, autoTarget))
   }
 
-  /** Estimate of parquet bytes/row from a sample of decoded rows: measure
-    * their UnsafeRow footprint and apply a conservative on-disk factor
-    * (columnar encoding + zstd typically lands well under in-memory row
-    * size). Used to turn the reference's byte-targeted file rotation
-    * (--file-target-mb, sink.rs:82-105) into `maxRecordsPerFile` — Spark's
-    * writer counts rows, not bytes (SURVEY.md §2.3 K4).
-    */
-  def estimateRowBytes(spark: SparkSession, path: String, sampleRows: Int = 10000): Double = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val span = blobSpans(spark, path, stopAt = _.blobType == Blobs.TypeOsmData)
-      .find(_.blobType == Blobs.TypeOsmData)
-      .getOrElse(throw new PbfFormatException(s"no data blobs in $path"))
-    val in = fs.open(p)
-    val rows = try {
-      in.seek(span.offset)
-      val buf = new Array[Byte](span.length)
-      in.readFully(buf)
-      BlockDecoder.decodeBlockInternal(Blobs.decode(buf), BlockDecoder.FullProjection)
-        .take(sampleRows).toSeq
-    } finally in.close()
-    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(OsmSchema.schema)
-    val memBytes = rows.map(r => proj(r).getSizeInBytes.toLong).sum
-    val onDiskFactor = 0.35 // columnar + zstd vs UnsafeRow, conservative
-    math.max(memBytes.toDouble / math.max(rows.size, 1) * onDiskFactor, 8.0)
-  }
-
   /** Progress snapshot surfaced by the transcode monitor (the reference's
     * 60s element-counter tick, pbf.rs:100-126 / util.rs:20). One final
     * event always fires at job end so short jobs still report. */

@@ -236,9 +236,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(h.requiredFeatures.toSet === Set("OsmSchema-V0.6", "DenseNodes"))
   }
 
-  test("file-target-mb derives maxRecordsPerFile from sampled row size") {
-    val est = OsmPbf.estimateRowBytes(spark, fixture)
-    assert(est >= 8.0 && est < 10000.0)
+  test("transcode with --file-target-mb 500 writes every element") {
     val out = java.nio.file.Files.createTempDirectory("osmft").toString
     OsmPbf.transcode(spark, PbfConfig(input = fixture, output = out, fileTargetMb = Some(500)))
     assert(spark.read.parquet(out).count() === 5)

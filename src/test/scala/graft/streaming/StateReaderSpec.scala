@@ -42,7 +42,19 @@ class StateReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A temp dir deleted in afterAll. */
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    dirs += d
+    d.toString
+  }
 
   private val dupText = "shared phrase alpha beta gamma delta epsilon"
   // batch 2 delivers doc 0 — LOWER than batch 1's doc 5 — so the shared
@@ -78,7 +90,7 @@ class StateReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
     val in = MemoryStream[(Long, String)]
     val docs = in.toDF().toDF("doc_id", "text")
     val name = s"statereader_${ids.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("statereader-ckpt").toString
+    val ckpt = tempDir("statereader-ckpt")
     val q = gate(docs).writeStream.format("memory").queryName(name)
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -164,7 +176,7 @@ class StateReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
       implicit val sql: org.apache.spark.sql.SQLContext = sp.sqlContext
       val in = MemoryStream[(Long, String)]
       val name = s"statereader_${ids.incrementAndGet()}"
-      val ckpt = java.nio.file.Files.createTempDirectory("statereader-exp").toString
+      val ckpt = tempDir("statereader-exp")
       val q = gate(in.toDF().toDF("doc_id", "text")).writeStream
         .format("memory").queryName(name)
         .option("checkpointLocation", ckpt).outputMode("append").start()

@@ -29,11 +29,23 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A temp dir deleted in afterAll. */
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    dirs += d
+    d.toString
+  }
 
   private def writeEvents(rows: Seq[(Long, Timestamp, Long, String, Double)]): String = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("replayspec").toString
+    val dir = tempDir("replayspec")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
@@ -163,14 +175,15 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, w0, 20L, "view", 1.0),
       (3L, w1, 10L, "click", 1.0)))
     def run(store: Option[String]) = (
-      StreamReplay.replayRaw(spark, dir, OutputMode.Complete(),
-          ds => EventStreams.cohortCounts(ds.filter(_.user_id >= 0L)),
+      StreamReplay.replayFiles(spark, dir, OutputMode.Complete(),
+          StreamReplay.Events(ds => EventStreams.cohortCounts(ds.filter(_.user_id >= 0L))),
           stateStore = store)
         .df.orderBy(col("cohort_week"), col("k")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq,
       {
-        val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-          ds => EventStreams.windowedCounts(ds.toDF()), stateStore = store)
+        val r = StreamReplay.replayFiles(spark, dir, OutputMode.Append(),
+          StreamReplay.Events(ds => EventStreams.windowedCounts(ds.toDF())),
+          stateStore = store)
         r.df.filter(col("bucket_start") <= timestamp_millis(lit(r.maxTs)))
           .select(unix_timestamp(col("bucket_start")), col("event_type"),
             col("n"), col("total_value"))
@@ -206,9 +219,9 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       (5L, ts("2026-01-01 10:00:00"), 10L, "purchase", 5.0),
       (6L, ts("2026-01-01 08:05:00"), 20L, "view", 1.0),
       (7L, ts("2026-01-01 09:30:00"), 20L, "view", 1.0)))
-    def sessions(chunks: Int): (Seq[(Long, Long, Double, Long)], Long) = {
-      val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-        ds => EventStreams.sessionize(ds).toDF(), chunks = chunks)
+    def sessions(staging: StreamReplay.Staging): (Seq[(Long, Long, Double, Long)], Long) = {
+      val r = StreamReplay.replayFiles(spark, dir, OutputMode.Append(),
+        StreamReplay.Events(ds => EventStreams.sessionize(ds).toDF()), staging)
       // time-ranged chunking must NEVER make a row watermark-late — the
       // invariant the multi-batch staging's hash-parity claim rests on
       assert(r.lateDropped === 0L,
@@ -218,8 +231,8 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2), x.getLong(3))).toSeq,
         r.batches)
     }
-    val (single, _) = sessions(1)
-    val (multi, batches) = sessions(4)
+    val (single, _) = sessions(StreamReplay.Whole)
+    val (multi, batches) = sessions(StreamReplay.Chunks(4))
     // at least one micro-batch per chunk file plus the two tick batches
     assert(batches >= 6, s"expected a genuinely multi-batch run, got $batches")
     assert(multi === single)
@@ -270,9 +283,11 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(org.apache.spark.sql.functions.min(col("ts")),
         org.apache.spark.sql.functions.max(col("ts"))).head()
     val spanMin = (mm.getTimestamp(1).getTime - mm.getTimestamp(0).getTime) / 60000L + 11L
-    val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-      ds => EventStreams.dedupeStream(ds.toDF(), watermark = s"$spanMin minutes"),
-      ticks = false, stageCopies = 2, copiesAsBatches = true)
+    val r = StreamReplay.replayFiles(spark, dir, OutputMode.Append(),
+      StreamReplay.Events(
+        ds => EventStreams.dedupeStream(ds.toDF(), watermark = s"$spanMin minutes"),
+        ticks = false),
+      StreamReplay.Copies(2, batchPerCopy = true))
     assert(r.batches >= 2, s"expected the copies in separate batches, got ${r.batches}")
     assert(r.dupDropped === 3L,
       "each of the 3 re-sent ids must be dropped by a cross-batch state hit")
@@ -284,7 +299,7 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("empty events table yields the zero-count row, not a crash") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("replayspec").toString
+    val dir = tempDir("replayspec")
     Seq.empty[(Long, Timestamp, Long, String, Double)]
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -298,7 +313,7 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions.{broadcast, col}
     import org.apache.spark.sql.streaming.OutputMode
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("replayspec").toString
+    val dir = tempDir("replayspec")
     // 40 events across 4 users / a wide time range (so the 4 ranged
     // chunks are non-degenerate); user 99 has no dimension row → inner
     // join drops it, the stream-static semantics under test
@@ -313,10 +328,12 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("c_custkey", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     val cust = graft.Tables.customer(spark, dir)
-    val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-      ds => ds.toDF().join(broadcast(cust), col("user_id") === col("c_custkey"))
-        .select(col("event_id"), col("c_mktsegment")),
-      ticks = false, chunks = 4)
+    val r = StreamReplay.replayFiles(spark, dir, OutputMode.Append(),
+      StreamReplay.Events(
+        ds => ds.toDF().join(broadcast(cust), col("user_id") === col("c_custkey"))
+          .select(col("event_id"), col("c_mktsegment")),
+        ticks = false),
+      StreamReplay.Chunks(4))
     assert(r.batches >= 4, s"expected one micro-batch per chunk, got ${r.batches}")
     assert(r.lateDropped === 0) // stateless join: nothing is ever late
     val got = r.df.orderBy(col("event_id")).collect()
@@ -336,10 +353,12 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       (i.toLong, ts(f"2024-01-${i % 20 + 1}%02d 0${i % 9 + 1}:30:00"),
         (i % 5).toLong, "view", 1.0 * i)
     })
-    val out = java.nio.file.Files.createTempDirectory("st09spec").toString
-    val r = StreamReplay.replayRaw(spark, dir, OutputMode.Append(),
-      ds => EventStreams.windowedCounts(ds.toDF()),
-      chunks = 4, parquetSinkDir = Some(out))
+    val out = tempDir("st09spec")
+    val r = StreamReplay.replayFiles(spark, dir, OutputMode.Append(),
+      StreamReplay.Events(ds => EventStreams.windowedCounts(ds.toDF())),
+      StreamReplay.Chunks(4),
+      foreachBatch = Some((b: org.apache.spark.sql.DataFrame, id: Long) =>
+        EventStreams.writeBatchIdempotent(b, id, out)))
     assert(r.batches >= 4)
     val once = spark.read.parquet(out)
     // watermark advances BETWEEN batches, so windows must have closed in
@@ -370,7 +389,7 @@ class StreamReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     def scratch(prefix: String): Set[String] =
       roots.flatMap(r => Option(r.listFiles()).toSeq.flatten)
         .filter(_.getName.startsWith(prefix)).map(_.getPath).toSet
-    val dir = java.nio.file.Files.createTempDirectory("replayspec-noevents").toString
+    val dir = tempDir("replayspec-noevents")
     Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)](
       "graft-st20-target" -> StreamReplay.st20_time_travel_read,
       "graft-st21-target" -> StreamReplay.st21_cdc_apply_pruned,

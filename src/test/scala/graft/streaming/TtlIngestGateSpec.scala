@@ -47,7 +47,19 @@ class TtlIngestGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A temp dir deleted in afterAll. */
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    dirs += d
+    d.toString
+  }
 
   /** ProcessingTime-mode TWS never quiesces (`shouldRunAnotherBatch` is
     * unconditionally true so TTL/timers can fire on empty batches), so
@@ -84,7 +96,7 @@ class TtlIngestGateSpec extends AnyFunSuite with BeforeAndAfterAll {
       case None => DocStreams.nearDupFlags(docs)
     }
     val name = s"ttlgate_${ids.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("ttlgate-ckpt").toString
+    val ckpt = tempDir("ttlgate-ckpt")
     val q = flags.writeStream.format("memory").queryName(name)
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -146,7 +158,7 @@ class TtlIngestGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val in = MemoryStream[(Long, String)]
     val docs = in.toDF().toDF("doc_id", "text")
     val name = s"ttlgate_${ids.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("ttlgate-ckpt").toString
+    val ckpt = tempDir("ttlgate-ckpt")
     val q = DocStreams.nearDupFlagsTtl(docs, 8000L)
       .writeStream.format("memory").queryName(name)
       .option("checkpointLocation", ckpt)
