@@ -32,7 +32,6 @@ exec java \
   -Duser.language=en -Duser.country=US \
   -Dspark.hadoop.fs.file.impl=graft.fs.FastLocalFileSystem \
   -Dspark.hadoop.fs.AbstractFileSystem.file.impl=graft.fs.FastLocalFs \
-  -Dspark.hadoop.mapreduce.fileoutputcommitter.algorithm.version=2 \
   -Xms$MEM -Xmx$MEM -XX:+AlwaysPreTouch -XX:+UseParallelGC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"

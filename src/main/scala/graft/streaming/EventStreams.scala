@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -723,18 +724,19 @@ object EventStreams {
       }
       .start()
 
-  /** STREAMING CDC APPLY — the exactly-once READ-MODIFY-WRITE sink
-    * (st17): each micro-batch folds into a queryable per-user profile
-    * TABLE via MERGE, the state-in-the-table pattern a pipeline uses
-    * when downstream consumers must query the maintained state directly
-    * (the Delta/Iceberg snapshot-apply loop, on plain parquet).
+  /** STREAMING CDC APPLY — the exactly-once READ-MODIFY-WRITE sink behind
+    * st17 and st20–st23: each batch folds into a queryable per-user
+    * profile TABLE, the state-in-the-table pattern a pipeline uses when
+    * downstream consumers must query the maintained state directly (the
+    * Delta/Iceberg snapshot-apply loop, on plain parquet).
     *
     * st09's partition overwrite is idempotent because each batch owns a
     * disjoint partition; a merge target is harder — every batch rewrites
-    * shared state, so a replayed batch would DOUBLE-apply. The protocol:
+    * shared state, so a replayed batch would DOUBLE-apply. The protocol
+    * ([[applyVersion]], one commit path for every layout and change):
     * versioned snapshot dirs `v{batchId}`, each derived from the latest
-    * committed version STRICTLY BELOW batchId, with parquet's `_SUCCESS`
-    * as the commit marker —
+    * committed version STRICTLY BELOW batchId, with `_SUCCESS` as the
+    * commit marker —
     *   - replayed committed batch (foreachBatch's at-least-once
     *     contract): `v{batchId}/_SUCCESS` exists → skip, keyed on
     *     batchId ALONE (the guard, not the payload, is the idempotence
@@ -744,369 +746,313 @@ object EventStreams {
     *   - lineage reads the PRIOR dir and writes a NEW dir — never a
     *     self-referential overwrite (the st09 localCheckpoint hazard,
     *     designed out instead of worked around).
-    * Money folds as integer cents (the q39/st13 discipline) so
-    * maintain ≡ recompute exactly, whatever the chunking. At 100 TB
-    * each version rewrite is O(target) on plain parquet — q38b's
-    * bucketed layout is what bounds the shuffle to the changeset, and a
-    * table format adds compaction; the exactly-once versioning protocol
-    * here is the part that transfers unchanged. */
-  def applyChangeset(batch: DataFrame, batchId: Long, targetDir: String): Unit = {
-    val s = batch.sparkSession
-    // the snapshot store rides the Hadoop FileSystem seam (the S2/
-    // transcode discipline), so the versioned dirs + commit markers work
-    // on `s3a:`/`hdfs:` exactly like the parquet data they guard
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val vDir = new org.apache.hadoop.fs.Path(target, s"v$batchId")
-    if (fs.exists(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")))
-      return // committed: skip
-    val chg = batch.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("dn"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("dc"))
-    val prior = latestVersion(targetDir, below = batchId) match {
-      case Some(p) => s.read.schema(SnapshotSchema).parquet(p)
-      case None => emptySnapshot(s)
-    }
-    mergedSnapshot(prior, chg)
-      .write.mode("overwrite").parquet(vDir.toString)
-    writeSuccessMarker(fs, vDir)
-  }
+    * The store rides the Hadoop FileSystem seam (the S2/transcode
+    * discipline), so the dirs + markers work on `s3a:`/`hdfs:` exactly
+    * like the parquet data they guard. */
+  sealed trait Layout
 
-  /** [[applyChangeset]] composed with q38b's bucketed layout — the
-    * O(target)-regime answer the plain apply's scaladoc prescribes: each
-    * version is a catalog table bucketed by `user_id`
-    * (`{tablePrefix}_v{batchId}`, path `targetDir/v{batchId}`, same
-    * `_SUCCESS` protocol), so the NEXT apply's full-outer merge reads the
-    * prior version as a bucketed scan that already satisfies the join
-    * distribution: no Exchange above the target side — only the
-    * (changeset-sized) delta shuffles, and it shuffles to the TARGET's
-    * partitioning (buckets), so the merged output lands partition=bucket
-    * and the bucketed write emits one file per bucket with no further
-    * shuffle. Per-apply shuffle is O(changeset); the O(target) parquet
-    * REWRITE remains — that residual is what a table format's compaction
-    * / partial-file rewrite removes, not anything a shuffle plan can.
-    * The catalog entries are session-scoped scratch (a fresh session
-    * re-registers by re-bucketing from the committed dir); the versioned
-    * dirs + markers on the FileSystem seam remain the durable truth.
+  /** Each version is a plain parquet dir: every apply's merge shuffles
+    * both sides and rewrites O(target). */
+  case object Plain extends Layout
+
+  /** q38b's bucketed layout, the O(target) regime's answer: each version
+    * is ALSO a catalog table `{tablePrefix}_v{batchId}` (path
+    * `targetDir/v{batchId}`) bucketed and sorted by `user_id`, so the next
+    * apply reads the prior as a bucketed scan that already satisfies the
+    * join distribution — no Exchange above the target side, only the
+    * (changeset-sized) delta shuffles, to the TARGET's partitioning, and
+    * the merged output lands partition ≡ bucket. The O(target) parquet
+    * REWRITE remains; removing it takes a table format's compaction /
+    * partial-file rewrite, or [[applyChangesetPruned]] for clustered
+    * changesets. The catalog entries are session-scoped scratch (a fresh
+    * session re-registers from the committed dir); the versioned dirs +
+    * markers remain the durable truth.
     *
-    * Layout safety: the bucket count is a PER-CALL parameter, so the
-    * recovery path must never declare a distribution the files don't
-    * have (a smaller on-disk count keeps every file's bucket id valid,
-    * and the Exchange-free sort-merge would then silently merge
-    * misaligned buckets). Each committed version therefore persists its
-    * bucket count as a `_BUCKETS` marker next to `_SUCCESS`; recovery
-    * re-registers from THAT (cross-checked against the bucket-file
-    * names) and fails loudly if the caller's parameter disagrees, if a
-    * same-named catalog entry points elsewhere or declares a different
-    * spec, or if the files don't carry bucket suffixes at all (a plain
-    * [[applyChangeset]] dir). A committed dir MISSING the marker (crash
-    * in the window between the parquet commit and the marker write, or
-    * a pre-marker legacy dir) degrades to a plain un-bucketed scan —
+    * Layout safety: the bucket count is a PER-CALL parameter, so recovery
+    * must never declare a distribution the files don't have (a smaller
+    * on-disk count keeps every file's bucket id valid, and the
+    * Exchange-free sort-merge would then silently merge misaligned
+    * buckets). Each committed version therefore persists its count as a
+    * `_BUCKETS` marker next to `_SUCCESS`; recovery re-registers from THAT
+    * (cross-checked against the bucket-file names) and fails loudly if
+    * the call's count disagrees, if a same-named catalog entry does not
+    * match the dir ([[catalogMismatch]]), or if the files carry no bucket
+    * suffixes (a plain dir). A committed dir MISSING the marker (a crash
+    * between the two markers, or a legacy dir) degrades to a plain scan —
     * one avoidable Exchange, never a silent bucket misalignment. */
-  def applyChangesetBucketed(batch: DataFrame, batchId: Long,
-      targetDir: String, tablePrefix: String, buckets: Int = 8): Unit = {
-    val s = batch.sparkSession
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val vDir = new org.apache.hadoop.fs.Path(target, s"v$batchId")
-    if (committedAndHealed(s, fs, vDir, buckets)) return
-    val chg = batch.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("dn"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("dc"))
-    val (prior, priorBucketed) =
-      priorSnapshotBucketed(s, fs, targetDir, batchId, tablePrefix, buckets)
-    // merge hint: at sf the tiny delta would broadcast, which demonstrates
-    // nothing at 100 TB where neither side does — q38b's discipline
-    val merged = mergedSnapshot(prior.hint("merge"), chg)
-    // Bucket-file ALIGNMENT (r13, probed): `bucketBy` inserts no exchange
-    // — it writes one file per (task, bucket-in-task). With a BUCKETED
-    // prior the SMJ adopts the table's HashPartitioning(user_id, buckets)
-    // and alignment is free (partition ≡ bucket, one file each — the
-    // zero-extra-Exchange plan the spec pins). On the OTHER regimes the
-    // input partitioning is arbitrary (a seed's changeset can even reach
-    // the writer range-partitioned when distinct-keys inference elides
-    // the aggregate exchange — measured: 32 tasks × 32 buckets = 1024
-    // files at the 1M-user seed), so those paths repartition explicitly
-    // by the exact bucket routing — an O(input) shuffle on paths that
-    // are already O(target) regimes, buying one-file-per-bucket layouts
-    // that keep scans, recovery validation, and the pruned apply's
-    // copy-forward ledger linear in BUCKETS, not in tasks × versions.
-    val aligned =
-      if (priorBucketed) merged
-      else merged.repartition(buckets, col("user_id"))
-    aligned
-      .write.bucketBy(buckets, "user_id").sortBy("user_id")
-      .option("path", vDir.toString).mode("overwrite")
-      .saveAsTable(s"${tablePrefix}_v$batchId")
-    writeSuccessMarker(fs, vDir)
-    // persist the layout next to the commit marker (see scaladoc): a
-    // crash in this narrow window leaves _SUCCESS without _BUCKETS,
-    // which recovery treats as unknown → plain scan, never misaligned
-    writeBucketCount(fs, vDir, buckets)
+  final case class Bucketed(tablePrefix: String, buckets: Int = 8) extends Layout {
+    private[streaming] def table(dirName: String): String = s"${tablePrefix}_$dirName"
   }
 
-  /** Resolve the prior snapshot STRICTLY BELOW `batchId` as a bucketed
-    * catalog table when the committed dir proves its layout — shared by
-    * every bucketed apply ([[applyChangesetBucketed]],
-    * [[applyDeletesBucketed]]). Catalog entries are session-scoped; the
-    * committed DIR is the durable truth, so a fresh session (recovery
-    * after restart) re-registers an external bucketed table over the
-    * existing bucket files — with the count read from the dir's own
-    * `_BUCKETS` marker, never the current call's parameter. Returns
-    * (frame, isBucketed); a dir without a trustworthy marker degrades to
-    * a plain scan (correctness over the Exchange saving), no prior to
-    * the empty snapshot. */
-  private def priorSnapshotBucketed(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, targetDir: String, batchId: Long,
-      tablePrefix: String, buckets: Int): (DataFrame, Boolean) =
-    latestVersion(targetDir, below = batchId) match {
-      case Some(p) =>
-        val pPath = new org.apache.hadoop.fs.Path(p)
-        readBucketCount(fs, pPath) match {
-          case Some(diskBuckets) =>
-            if (diskBuckets != buckets) throw new IllegalStateException(
-              s"applyChangesetBucketed: prior version $p was written with " +
-                s"$diskBuckets buckets but this call declares $buckets; " +
-                "refusing to register a layout the files don't have")
-            validateBucketFiles(fs, pPath, diskBuckets)
-            val vName = s"${tablePrefix}_${pPath.getName}"
-            if (s.catalog.tableExists(vName)) {
-              val ct = s.sessionState.catalog.getTableMetadata(
-                org.apache.spark.sql.catalyst.TableIdentifier(vName))
-              val catLoc = fs.makeQualified(
-                new org.apache.hadoop.fs.Path(ct.location))
-              val dirLoc = fs.makeQualified(pPath)
-              if (catLoc != dirLoc) throw new IllegalStateException(
-                s"applyChangesetBucketed: stale catalog entry $vName points " +
-                  s"at $catLoc, not the committed version dir $dirLoc; " +
-                  "DROP it before recovering")
-              if (!ct.bucketSpec.exists(b => b.numBuckets == diskBuckets &&
-                  b.bucketColumnNames == Seq("user_id") &&
-                  b.sortColumnNames == Seq("user_id")))
-                throw new IllegalStateException(
-                  s"applyChangesetBucketed: catalog entry $vName declares " +
-                    s"bucket spec ${ct.bucketSpec} but the files at $p carry " +
-                    s"$diskBuckets buckets by user_id sorted by user_id; " +
-                    "DROP it before recovering")
-              // schema must match what the fresh-registration path would
-              // CREATE: a same-location entry with divergent columns would
-              // otherwise be silently reused and mis-read the files
-              val expected = Seq("user_id" -> "bigint",
-                "n_events" -> "bigint", "cents" -> "bigint")
-              val actual = ct.schema.map(f =>
-                f.name -> f.dataType.simpleString)
-              if (actual != expected) throw new IllegalStateException(
-                s"applyChangesetBucketed: catalog entry $vName declares " +
-                  s"schema $actual, expected $expected; DROP it before " +
-                  "recovering")
-            } else
-              s.sql(s"""CREATE TABLE $vName (user_id BIGINT, n_events BIGINT,
-                cents BIGINT) USING PARQUET CLUSTERED BY (user_id)
-                SORTED BY (user_id) INTO $diskBuckets BUCKETS LOCATION '$p'""")
-            (s.table(vName), true)
-          case None =>
-            // unknown layout: correctness over the Exchange saving
-            (s.read.schema(SnapshotSchema).parquet(p), false)
-        }
-      case None => (emptySnapshot(s), false)
+  /** Upsert: fold a batch of (user_id, value) rows into the store as
+    * version `batchId` — the prior full-outer merged with the batch's
+    * per-user changeset. Money folds as integer cents (the q39/st13
+    * discipline) so maintain ≡ recompute exactly, whatever the
+    * chunking. */
+  def applyChangeset(batch: DataFrame, batchId: Long, targetDir: String,
+      layout: Layout = Plain): Unit =
+    applyVersion(batch.sparkSession, batchId, targetDir, layout) { prior =>
+      // the merge hint on the bucketed store only: at sf the tiny delta
+      // would broadcast, which demonstrates nothing at 100 TB where
+      // neither side does — q38b's discipline
+      mergedSnapshot(if (layout == Plain) prior else prior.hint("merge"),
+        changeset(batch))
     }
 
-  /** [[applyDeletes]] on the BUCKETED store — the zero-shuffle delete
-    * rewrite: the prior reads as its bucketed catalog table, the
-    * tombstone set broadcasts into a LEFT ANTI probe (which PRESERVES
-    * the child's partitioning — anti-join removes rows, it never moves
-    * them), so the surviving rows are still partition≡bucket and the
-    * bucketed write emits one file per bucket with NO Exchange anywhere
-    * in the plan (`VersionDiffSpec` pins it). Same `_SUCCESS`+`_BUCKETS`
-    * torn-write protocol as every bucketed apply; an unmarked prior
-    * degrades to a plain scan + explicit repartition, never a
-    * misaligned layout. At 100 TB this is the right-to-be-forgotten
-    * batch at its floor cost: one co-located scan + rewrite of the
-    * target, zero shuffle, tombstones broadcast. */
-  def applyDeletesBucketed(tombstones: DataFrame, batchId: Long,
-      targetDir: String, tablePrefix: String, buckets: Int = 8): Unit = {
-    val s = tombstones.sparkSession
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val vDir = new org.apache.hadoop.fs.Path(target, s"v$batchId")
-    if (committedAndHealed(s, fs, vDir, buckets)) return
-    val (prior, priorBucketed) =
-      priorSnapshotBucketed(s, fs, targetDir, batchId, tablePrefix, buckets)
-    val pruned = prior.join(
-      broadcast(tombstones.select(col("user_id")).distinct()),
-      Seq("user_id"), "left_anti")
-    val aligned =
-      if (priorBucketed) pruned
-      else pruned.repartition(buckets, col("user_id"))
-    aligned
-      .write.bucketBy(buckets, "user_id").sortBy("user_id")
-      .option("path", vDir.toString).mode("overwrite")
-      .saveAsTable(s"${tablePrefix}_v$batchId")
-    writeSuccessMarker(fs, vDir)
-    writeBucketCount(fs, vDir, buckets)
+  /** DELETE-BEARING APPLY — the right-to-be-forgotten batch: every
+    * `user_id` in `tombstones` is removed from version `batchId` by a
+    * LEFT ANTI join of the prior against the broadcast tombstone set. The
+    * prior never shuffles, and an anti-join removes rows without moving
+    * them, so on the bucketed layout the rewrite plans with NO Exchange
+    * at all (`VersionDiffSpec` pins it). The diff surface
+    * ([[versionDiff]]) reports the deletions as `removed` — the class an
+    * append-only merge can never produce. Deletes are HARD from
+    * `batchId` on; earlier versions still hold the rows (full erasure of
+    * history is [[pruneVersions]] of everything below the tombstone). At
+    * 100 TB the tombstone set is broadcast-sized by nature (deletion
+    * requests, not data). */
+  def applyDeletes(tombstones: DataFrame, batchId: Long, targetDir: String,
+      layout: Layout = Plain): Unit =
+    applyVersion(tombstones.sparkSession, batchId, targetDir, layout)(
+      _.join(broadcast(tombstones.select(col("user_id")).distinct()),
+        Seq("user_id"), "left_anti"))
+
+  /** The store's one commit path: skip a committed `v{batchId}`, derive
+    * `next(prior)` from the latest committed version strictly below it,
+    * write that as `v{batchId}`, then commit the markers.
+    *
+    * Bucket-file ALIGNMENT on the bucketed layout: `bucketBy` inserts no
+    * exchange — it writes one file per (task, bucket-in-task). A prior
+    * read as its bucketed table keeps partition ≡ bucket through `next`
+    * (the merge adopts the table's HashPartitioning, the anti-join never
+    * moves rows), so alignment is free. Any other prior arrives
+    * arbitrarily partitioned (measured: 32 tasks × 32 buckets = 1024
+    * files at the 1M-user seed), so it is repartitioned by the exact
+    * bucket routing — one file per bucket keeps scans, recovery
+    * validation and the pruned apply's copy-forward linear in buckets. */
+  private def applyVersion(s: SparkSession, batchId: Long, targetDir: String,
+      layout: Layout)(next: DataFrame => DataFrame): Unit = {
+    val fs = storeFs(s, targetDir)
+    val vDir = new Path(targetDir, s"v$batchId")
+    if (committedAndHealed(s, fs, vDir, layout)) return
+    val (prior, priorBucketed) = priorSnapshot(s, fs, targetDir, batchId, layout)
+    val out = next(prior)
+    layout match {
+      case Plain => writeVersion(out, vDir, None)
+      case b: Bucketed => writeVersion(
+        if (priorBucketed) out else out.repartition(b.buckets, col("user_id")),
+        vDir, Some(b.table(vDir.getName) -> b.buckets))
+    }
+    commitMarkers(fs, vDir, layout)
   }
 
-  /** [[applyChangesetBucketed]] with BUCKET-PRUNED reads and COPY-FORWARD
-    * of untouched bucket files — the skewed-changeset regime answer. The
-    * full bucketed apply already bounds the SHUFFLE to the changeset,
-    * but it re-reads and re-writes every bucket of the target per
-    * version; when a changeset clusters into a few buckets (a hot user
-    * range, a tenant, a backfill) that is almost all wasted work. This
-    * variant:
+  /** A batch of (user_id, value) rows as one changeset row per user: the
+    * event count `dn` and the integer cents `dc`. */
+  private def changeset(batch: DataFrame): DataFrame =
+    batch.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("dn"),
+        sum(floor(col("value") * 100 + 0.5).cast("long")).as("dc"))
+
+  /** The prior of version `batchId` — the latest committed version
+    * STRICTLY BELOW it, or the empty snapshot before the first commit —
+    * and whether it reads as a bucketed table. On the bucketed layout a
+    * prior whose `_BUCKETS` marker proves its layout reads as its catalog
+    * table, re-registered from the marker's count (never the call's) when
+    * a fresh session lost the entry; an unmarked prior degrades to a
+    * plain scan (correctness over the Exchange saving). */
+  private def priorSnapshot(s: SparkSession, fs: FileSystem,
+      targetDir: String, batchId: Long, layout: Layout): (DataFrame, Boolean) =
+    (latestVersion(targetDir, below = batchId), layout) match {
+      case (None, _) => (emptySnapshot(s), false)
+      case (Some(p), b: Bucketed) =>
+        val dir = new Path(p)
+        readBucketCount(fs, dir) match {
+          case Some(n) =>
+            if (n != b.buckets) throw new IllegalStateException(
+              s"snapshot store: prior version $p was written with $n " +
+                s"buckets but this call declares ${b.buckets}; refusing to " +
+                "register a layout the files don't have")
+            validateBucketFiles(fs, dir, n)
+            val name = b.table(dir.getName)
+            if (!s.catalog.tableExists(name)) registerVersion(s, name, dir, n)
+            else catalogMismatch(s, fs, name, dir, n).foreach(m =>
+              throw new IllegalStateException(
+                s"snapshot store: $m; DROP it before recovering"))
+            (s.table(name), true)
+          case None => (readSnapshot(s, p), false)
+        }
+      case (Some(p), Plain) => (readSnapshot(s, p), false)
+    }
+
+  /** Why the catalog entry `name` cannot stand for the committed version
+    * `dir` with `buckets` buckets, or None when it can: it must point at
+    * the dir, declare exactly that bucket spec on `user_id`, and declare
+    * [[SnapshotSchema]] — a same-location entry with a different modulus
+    * would place a merge's or diff's two sides by different hashes, and a
+    * divergent schema would silently misread the files. Recovery refuses
+    * a mismatch; [[versionDiff]] falls back to the plain dir read. */
+  private def catalogMismatch(s: SparkSession, fs: FileSystem, name: String,
+      dir: Path, buckets: Int): Option[String] = {
+    val ct = s.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(name))
+    val catLoc = fs.makeQualified(new Path(ct.location))
+    val dirLoc = fs.makeQualified(dir)
+    val expected = SnapshotSchema.map(f => f.name -> f.dataType.simpleString)
+    val actual = ct.schema.map(f => f.name -> f.dataType.simpleString)
+    if (catLoc != dirLoc)
+      Some(s"stale catalog entry $name points at $catLoc, not the committed " +
+        s"version dir $dirLoc")
+    else if (!ct.bucketSpec.exists(b => b.numBuckets == buckets &&
+        b.bucketColumnNames == Seq("user_id") && b.sortColumnNames == Seq("user_id")))
+      Some(s"catalog entry $name declares bucket spec ${ct.bucketSpec} but " +
+        s"the files at $dir carry $buckets buckets by user_id sorted by user_id")
+    else if (actual != expected)
+      Some(s"catalog entry $name declares schema $actual, expected $expected")
+    else None
+  }
+
+  /** Register the committed bucketed version `dir` as the catalog table
+    * `name`. */
+  private def registerVersion(s: SparkSession, name: String, dir: Path,
+      buckets: Int): Unit =
+    s.sql(s"""CREATE TABLE $name (user_id BIGINT, n_events BIGINT,
+      cents BIGINT) USING PARQUET CLUSTERED BY (user_id)
+      SORTED BY (user_id) INTO $buckets BUCKETS LOCATION '$dir'""")
+
+  /** The store's one write: `df` overwrites `dir`, as the bucketed
+    * catalog table `table` = (name, buckets) when given.
+    *
+    * Committer v2 (one rename per task file instead of two; measured -16%
+    * on st17's per-batch snapshot rewrites, SOAK_r20_gateknobs) is scoped
+    * to this writer and [[writeBatchIdempotent]]. Its caveat — task output
+    * visible before job commit — never reaches a reader of either: this
+    * store's readers see a version only through the `_SUCCESS` marker
+    * [[commitMarkers]] writes after the job, and the idempotent sink
+    * overwrites whole partitions on retry. Standard at-scale setting
+    * wherever renames are expensive (object stores); every other writer
+    * keeps the JVM's default algorithm. */
+  private def writeVersion(df: DataFrame, dir: Path,
+      table: Option[(String, Int)]): Unit = {
+    val w = df.write.format("parquet").mode("overwrite")
+      .option("path", dir.toString).option(CommitterAlgorithm, "2")
+    table match {
+      case Some((name, buckets)) =>
+        w.bucketBy(buckets, "user_id").sortBy("user_id").saveAsTable(name)
+      case None => w.save()
+    }
+  }
+
+  /** The Hadoop job key of the output committer's algorithm version. */
+  private val CommitterAlgorithm = "mapreduce.fileoutputcommitter.algorithm.version"
+
+  /** [[applyChangeset]] on the bucketed layout with BUCKET-PRUNED reads
+    * and COPY-FORWARD of untouched bucket files — the skewed-changeset
+    * regime answer. The full bucketed apply bounds the SHUFFLE to the
+    * changeset, but it re-reads and re-writes every bucket of the target
+    * per version; when a changeset clusters into a few buckets (a hot
+    * user range, a tenant, a backfill) that is almost all wasted work.
+    * This variant:
     *
     *  1. derives the TOUCHED bucket set from the changeset itself
     *     (`pmod(hash(user_id), buckets)` — the exact routing
     *     HashPartitioning uses, ≤ `buckets` driver-side values);
     *  2. reads ONLY the touched buckets' files from the prior version
     *     (file-level pruning via the bucket-id filename suffix — Spark's
-    *     own bucket pruning only fires on key-equality predicates, so
-    *     the span selection happens at the file list, which is exactly
-    *     what the suffix encodes);
+    *     own bucket pruning only fires on key-equality predicates);
     *  3. merges prior-touched ⟗ changeset and bucket-writes the result
     *     (only touched buckets get new files — every merged row hashes
     *     into one by construction);
     *  4. COPY-FORWARDS each untouched bucket file byte-for-byte through
     *     the FileSystem seam into the new version dir (no decode, no
-    *     shuffle, no re-encode; on an object store this maps to a
-    *     server-side copy), then commits `_SUCCESS` + `_BUCKETS` last —
-    *     the same torn-write protocol as every other apply.
+    *     shuffle, no re-encode; on an object store a server-side copy),
+    *     then commits the markers last — the same guard, markers and
+    *     registration as every other apply.
     *
     * Compute cost per apply drops from O(target) decode+encode to
-    * O(touched buckets) + O(untouched bytes) raw copy. MEASURED, both
-    * ways: SOAK_r13c (pre-fix) caught this path LOSING 6× to the full
-    * apply it was built to beat — a seed written before the
-    * repartition-alignment fix carried 32 files per bucket, copy-forward
-    * preserved the pathological layout forever (copies relay bytes, they
-    * never compact), and the then-sequential driver copy loop paid
-    * ~960 round-trips per apply. Two durable lessons are now code:
-    * (1) the copy relay runs on a bounded pool ([[copyAll]]), so cost is
-    * O(bytes/parallelism), not O(files) round-trips; (2) copy-forward
-    * inherits whatever layout the seed wrote, so the alignment
-    * discipline in [[applyChangesetBucketed]] is load-bearing for THIS
-    * path, not just a scan nicety; (3) the merge aligns its INPUTS to
-    * the bucket routing instead of repartitioning its output — one
-    * shuffle of the touched rows, not three. SOAK_r14 re-measures the
-    * regime with all three: mean apply 1.52 s vs the full apply's
-    * 1.38 s at 16M rows (the constant protocol cost — 4 catalog ops,
-    * the touched-set collect — still shows at small targets), and
-    * 2.97 s vs 5.42 s at 64M — past the crossover, the full apply's
-    * O(target) re-encode grows and this path's cost doesn't. Falls
-    * back to the full [[applyChangesetBucketed]] when there is no prior
-    * or the prior carries no trustworthy bucket marker — correctness
-    * first, pruning only on a proven layout. A prior whose marker
-    * carries a DIFFERENT count than `buckets` also delegates, and the
-    * full apply's layout validation then refuses LOUDLY — a
-    * mis-declared bucket parameter is a config error, not a degradable
-    * state. The residual O(target) BYTES on
-    * the copy path is the file-granularity floor an FS-level store has;
-    * removing it takes a manifest/table format (shared files across
-    * versions), which would also change retention — out of scope by the
-    * same adjudication as the plain apply's rewrite. */
-  def applyChangesetBucketedPruned(batch: DataFrame, batchId: Long,
-      targetDir: String, tablePrefix: String, buckets: Int = 8): Unit = {
+    * O(touched buckets) + O(untouched bytes) raw copy. Measured: SOAK_r14
+    * puts the mean apply at 1.52 s vs the full apply's 1.38 s at 16M rows
+    * (the constant protocol cost — 4 catalog ops, the touched-set
+    * collect — still shows at small targets), and 2.97 s vs 5.42 s at 64M.
+    * Copy-forward inherits whatever layout the seed wrote (copies relay
+    * bytes, they never compact — SOAK_r13c caught a 32-files-per-bucket
+    * seed losing 6×), so [[applyVersion]]'s alignment is load-bearing for
+    * this path. Falls back to the full apply when there is no prior or
+    * the prior carries no trustworthy bucket marker — pruning only on a
+    * proven layout; a prior whose marker carries a DIFFERENT count also
+    * falls back, and the full apply then refuses LOUDLY. The residual
+    * O(target) BYTES on the copy path is the file-granularity floor an
+    * FS-level store has; removing it takes a manifest/table format. */
+  def applyChangesetPruned(batch: DataFrame, batchId: Long,
+      targetDir: String, layout: Bucketed): Unit = {
     val s = batch.sparkSession
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val vDir = new org.apache.hadoop.fs.Path(target, s"v$batchId")
-    if (committedAndHealed(s, fs, vDir, buckets)) return
-    val stageName = s"${tablePrefix}_stage_v$batchId"
-    val stageDir = new org.apache.hadoop.fs.Path(target, s".stage_v$batchId")
+    val fs = storeFs(s, targetDir)
+    val vDir = new Path(targetDir, s"v$batchId")
+    if (committedAndHealed(s, fs, vDir, layout)) return
+    val buckets = layout.buckets
+    val stageName = layout.table(s"stage_v$batchId")
+    val stageDir = new Path(targetDir, s".stage_v$batchId")
     val priorDir = latestVersion(targetDir, below = batchId)
-    val priorBuckets = priorDir.flatMap(p =>
-      readBucketCount(fs, new org.apache.hadoop.fs.Path(p)))
-    if (priorDir.isEmpty || !priorBuckets.contains(buckets)) {
-      // no prior / unmarked / different layout: the full apply already
-      // handles every one of these correctly — pruning has nothing to
-      // prune (or nothing it can trust). A RETRY landing here after a
-      // crash between the stage write and its cleanup would otherwise
-      // leak the stage dir + catalog entry forever (the full apply knows
-      // nothing about them), so reap this batch's own stage leftovers
-      // before delegating.
+    if (!priorDir.exists(p => readBucketCount(fs, new Path(p)).contains(buckets))) {
+      // no prior / unmarked / different layout: the full apply handles
+      // every one of these correctly. A RETRY landing here after a crash
+      // between the stage write and its cleanup would otherwise leak the
+      // stage dir + catalog entry forever (the full apply knows nothing
+      // about them), so reap this batch's own stage leftovers first.
       fs.delete(stageDir, true)
       s.sql(s"DROP TABLE IF EXISTS $stageName")
-      applyChangesetBucketed(batch, batchId, targetDir, tablePrefix, buckets)
+      applyChangeset(batch, batchId, targetDir, layout)
       return
     }
-    val pPath = new org.apache.hadoop.fs.Path(priorDir.get)
     // one listing, validated, shared with the bucket routing below
-    val priorFiles = validateBucketFiles(fs, pPath, buckets)
+    val priorFiles = validateBucketFiles(fs, new Path(priorDir.get), buckets)
     // referenced twice (routing AND the merge): LAZY localCheckpoint —
-    // the blocks materialize DURING the touched-collect job below (no
-    // extra serial checkpoint job in front of it; the eager form was
-    // profiled at a flat ~0.4 s ahead of every apply), and unlike
-    // persist() a checkpoint can never silently RECOMPUTE: a lost block
-    // fails the job. That fail-loud property is load-bearing here — the
-    // committed version is assembled from BOTH the collected touched
-    // set and the merge over this frame; a cache-style recompute of a
-    // non-deterministic changeset (e.g. one built with limit()) could
-    // hash rows into buckets outside the collected set, and the stage
-    // write plus copy-forward would then commit DUPLICATE files for the
-    // same bucket — a silently corrupt store. Never trade this for a
-    // recomputable cache.
-    val chg = batch.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("dn"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("dc"))
-      .localCheckpoint(false)
+    // the blocks materialize during the touched-collect job (the eager
+    // form cost a flat ~0.4 s per apply), and unlike persist() a
+    // checkpoint can never silently RECOMPUTE: a lost block fails the
+    // job. That is load-bearing — the version is assembled from BOTH the
+    // collected touched set and the merge over this frame; a recompute
+    // of a non-deterministic changeset (e.g. one built with limit())
+    // could hash rows into buckets outside the collected set, and the
+    // copy-forward would then commit DUPLICATE files for one bucket.
+    val chg = changeset(batch).localCheckpoint(false)
     try {
-    val touched: Set[Int] = chg
-      .select(pmod(hash(col("user_id")), lit(buckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val byBucket: Map[Int, Seq[org.apache.hadoop.fs.Path]] =
-      priorFiles.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val touchedFiles = byBucket.filter(kv => touched.contains(kv._1))
-      .values.flatten.map(_.toString).toSeq
-    val priorTouched =
-      if (touchedFiles.isEmpty) emptySnapshot(s)
-      else s.read.schema(SnapshotSchema).parquet(touchedFiles: _*)
-    // stage the merged touched buckets as a bucketed write (rows can
-    // only hash into touched buckets, so only those get files), then
-    // assemble the version dir: new files + byte-copied untouched files
-    fs.delete(stageDir, true)
-    // alignment via the INPUTS, not the output: repartition both join
-    // sides to the exact bucket routing, so the SMJ adopts it (both
-    // children already satisfy the clustered distribution — no further
-    // Exchange), the merge output IS bucket-partitioned, and the
-    // bucketed write needs no post-merge shuffle. One shuffle of the
-    // touched rows total, where shuffling the OUTPUT cost three
-    // (profiled: ~0.3 s of the 1.2 s merge job at the 16M regime). The
-    // repartition origin is user-specified, so AQE neither coalesces
-    // nor re-splits it — partition ≡ bucket survives to the writer.
-    mergedSnapshot(
-      priorTouched.repartition(buckets, col("user_id")).hint("merge"),
-      chg.repartition(buckets, col("user_id")))
-      .write.bucketBy(buckets, "user_id").sortBy("user_id")
-      .option("path", stageDir.toString).mode("overwrite")
-      .saveAsTable(stageName)
-    fs.delete(vDir, true)
-    fs.mkdirs(vDir)
-    val staged = fs.listStatus(stageDir).toSeq.collect {
-      case st if st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".") => st.getPath
-    }
-    val forward = byBucket.filter(kv => !touched.contains(kv._1))
-      .values.flatten.toSeq
-    // the copy relay is raw bytes, no decode — but a DRIVER-SEQUENTIAL
-    // loop makes it O(files) in round-trips, which SOAK_r13c measured as
-    // the entire 6× regression when a misaligned seed left 32 files per
-    // bucket. Copies are independent, so run them on a bounded pool: on
-    // a real object store each is a server-side COPY request and the
-    // pool parallelism is pure win; on local FS it overlaps read/write
-    // syscalls across files.
-    copyAll(fs, s.sparkContext.hadoopConfiguration, vDir,
-      staged ++ forward)
-    s.sql(s"DROP TABLE IF EXISTS $stageName")
-    fs.delete(stageDir, true)
-    // commit protocol: data complete → _SUCCESS → _BUCKETS (a crash
-    // before _SUCCESS leaves a torn dir the next apply rewrites; between
-    // the two markers, the heal path recovers — same windows as the
-    // full apply)
-    writeSuccessMarker(fs, vDir)
-    writeBucketCount(fs, vDir, buckets)
-    val vName = s"${tablePrefix}_v$batchId"
-    s.sql(s"DROP TABLE IF EXISTS $vName")
-    s.sql(s"""CREATE TABLE $vName (user_id BIGINT, n_events BIGINT,
-      cents BIGINT) USING PARQUET CLUSTERED BY (user_id)
-      SORTED BY (user_id) INTO $buckets BUCKETS LOCATION '$vDir'""")
+      val touched: Set[Int] = chg
+        .select(pmod(hash(col("user_id")), lit(buckets)).as("b"))
+        .distinct().collect().map(_.getInt(0)).toSet
+      val (touchedFiles, forward) =
+        priorFiles.partition(f => touched.contains(f._1))
+      val priorTouched =
+        if (touchedFiles.isEmpty) emptySnapshot(s)
+        else s.read.schema(SnapshotSchema).parquet(touchedFiles.map(_._2.toString): _*)
+      fs.delete(stageDir, true)
+      // alignment via the INPUTS, not the output: both join sides are
+      // repartitioned to the exact bucket routing, so the SMJ adopts it,
+      // the merge output IS bucket-partitioned, and the bucketed write
+      // needs no post-merge shuffle — one shuffle of the touched rows
+      // where shuffling the output cost three. The repartition origin is
+      // user-specified, so AQE neither coalesces nor re-splits it.
+      writeVersion(
+        mergedSnapshot(
+          priorTouched.repartition(buckets, col("user_id")).hint("merge"),
+          chg.repartition(buckets, col("user_id"))),
+        stageDir, Some(stageName -> buckets))
+      fs.delete(vDir, true)
+      fs.mkdirs(vDir)
+      val staged = fs.listStatus(stageDir).toSeq.collect {
+        case st if st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".") => st.getPath
+      }
+      // a bounded pool, not a driver-sequential loop: O(files) round
+      // trips were SOAK_r13c's whole 6× regression; on an object store
+      // each copy is a server-side COPY request
+      copyAll(fs, s.sparkContext.hadoopConfiguration, vDir,
+        staged ++ forward.map(_._2))
+      s.sql(s"DROP TABLE IF EXISTS $stageName")
+      fs.delete(stageDir, true)
+      commitMarkers(fs, vDir, layout)
+      val vName = layout.table(vDir.getName)
+      s.sql(s"DROP TABLE IF EXISTS $vName")
+      registerVersion(s, vName, vDir, buckets)
     } finally graft.CacheOps.unpersistLocalCheckpoint(chg)
   }
 
@@ -1115,10 +1061,9 @@ object EventStreams {
     * fails the apply before `_SUCCESS` is written, so a partial relay is
     * a torn dir the next attempt rewrites — the copies need no ordering
     * or atomicity of their own. */
-  private def copyAll(fs: org.apache.hadoop.fs.FileSystem,
+  private def copyAll(fs: FileSystem,
       conf: org.apache.hadoop.conf.Configuration,
-      destDir: org.apache.hadoop.fs.Path,
-      srcs: Seq[org.apache.hadoop.fs.Path]): Unit = {
+      destDir: Path, srcs: Seq[Path]): Unit = {
     if (srcs.isEmpty) return
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(32, srcs.size))
@@ -1127,8 +1072,7 @@ object EventStreams {
         new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
             org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-              new org.apache.hadoop.fs.Path(destDir, src.getName), false,
-              conf)
+              new Path(destDir, src.getName), false, conf)
             ()
           }
         }
@@ -1141,50 +1085,59 @@ object EventStreams {
     } finally pool.shutdown()
   }
 
-  /** The bucket-count marker protocol for [[applyChangesetBucketed]]. */
+  /** The bucket-count marker of a committed bucketed version. */
   private val BucketsMarker = "_BUCKETS"
 
-  /** Write the `_SUCCESS` commit marker explicitly. Spark's committer
-    * only emits it when `mapreduce.fileoutputcommitter.marksuccessfuljobs`
-    * is true — its default, but a common object-store tuning turns it
-    * OFF, and this store's whole idempotence protocol keys on the
-    * marker: without it every apply would see no committed prior,
-    * derive from the empty snapshot, and silently reset the state each
-    * batch. Every apply writes it itself (idempotent if the committer
-    * already did), so the protocol carries no cluster-config dependency. */
-  private def writeSuccessMarker(fs: org.apache.hadoop.fs.FileSystem,
-      vDir: org.apache.hadoop.fs.Path): Unit =
-    fs.create(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS"), true).close()
+  private def storeFs(s: SparkSession, targetDir: String): FileSystem =
+    new Path(targetDir).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** The bucketed applies' shared committed-skip guard: true when
-    * v{batchId} is already committed (retry → skip), healing a missing
-    * `_BUCKETS` on the way — a crash in the narrow window between the
-    * parquet commit and writeBucketCount leaves `_SUCCESS` without
-    * `_BUCKETS`, which would otherwise cost every LATER apply this
-    * version's Exchange-free scan, permanently. The replayed batch is
-    * the one place that knows it just re-ran this version, so the heal
-    * is exact (from the data), never heuristic. ONE definition so the
-    * three applies' skip/heal protocol cannot silently diverge. */
-  private def committedAndHealed(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, vDir: org.apache.hadoop.fs.Path,
-      buckets: Int): Boolean =
-    if (fs.exists(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS"))) {
-      if (readBucketCount(fs, vDir).isEmpty)
-        healBucketMarker(s, fs, vDir, buckets)
+  private def isCommitted(fs: FileSystem, vDir: Path): Boolean =
+    fs.exists(new Path(vDir, "_SUCCESS"))
+
+  /** Commit `vDir`: `_SUCCESS`, then on the bucketed layout `_BUCKETS`. A
+    * crash between the two leaves `_SUCCESS` without `_BUCKETS`, which
+    * recovery treats as an unknown layout (plain scan, never misaligned)
+    * and the replayed batch heals ([[committedAndHealed]]). `_SUCCESS` is
+    * written explicitly: the committer emits it only when
+    * `mapreduce.fileoutputcommitter.marksuccessfuljobs` is true — its
+    * default, but a common object-store tuning turns it OFF, and without
+    * it every apply would see no committed prior and silently reset the
+    * state each batch. */
+  private def commitMarkers(fs: FileSystem, vDir: Path, layout: Layout): Unit = {
+    fs.create(new Path(vDir, "_SUCCESS"), true).close()
+    layout match {
+      case b: Bucketed => writeBucketCount(fs, vDir, b.buckets)
+      case Plain => ()
+    }
+  }
+
+  /** The committed-skip guard: true when `vDir` is already committed (a
+    * replay → skip). On the bucketed layout it heals a missing `_BUCKETS`
+    * on the way — the crash window [[commitMarkers]] names would
+    * otherwise cost every LATER apply this version's Exchange-free scan,
+    * permanently. The replayed batch is the one place that knows it just
+    * re-ran this version, so the heal is exact (from the data), never
+    * heuristic. */
+  private def committedAndHealed(s: SparkSession, fs: FileSystem,
+      vDir: Path, layout: Layout): Boolean =
+    isCommitted(fs, vDir) && {
+      layout match {
+        case b: Bucketed if readBucketCount(fs, vDir).isEmpty =>
+          healBucketMarker(s, fs, vDir, b.buckets)
+        case _ =>
+      }
       true
-    } else false
+    }
 
-  private def writeBucketCount(fs: org.apache.hadoop.fs.FileSystem,
-      vDir: org.apache.hadoop.fs.Path, buckets: Int): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(vDir, BucketsMarker), true)
+  private def writeBucketCount(fs: FileSystem, vDir: Path, buckets: Int): Unit = {
+    val out = fs.create(new Path(vDir, BucketsMarker), true)
     try out.write(buckets.toString.getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private[graft] def readBucketCount(fs: org.apache.hadoop.fs.FileSystem,
-      vDir: org.apache.hadoop.fs.Path): Option[Int] = {
-    val meta = new org.apache.hadoop.fs.Path(vDir, BucketsMarker)
+  private[graft] def readBucketCount(fs: FileSystem, vDir: Path): Option[Int] = {
+    val meta = new Path(vDir, BucketsMarker)
     if (!fs.exists(meta)) None
     else {
       val in = fs.open(meta)
@@ -1202,35 +1155,33 @@ object EventStreams {
     }
   }
 
-  /** Cross-check the `_BUCKETS` marker against the files it describes:
-    * every data file must carry Spark's `_NNNNN` bucket-id suffix
-    * (pattern of a bucketed write) with id < the declared count. Catches
-    * a stale/corrupt marker and plain-apply files alike — both would
-    * otherwise let a declared distribution diverge from the data.
-    * Returns the validated `(bucketId, path)` pairs from the SAME
-    * listing the checks ran on — callers that route by bucket (the
-    * pruned apply) must consume this list, not re-list: a file appearing
-    * between two listings (contract-violating concurrent writer) would
-    * otherwise dodge validation and surface as an opaque MatchError. */
   /** Canonical bucket-id extraction from a bucketed write's file name —
     * ONE core pattern; the anchored matcher and healBucketMarker's SQL
     * regexp_extract both derive from it, so they cannot drift. */
   private[graft] val BucketFileIdCore = "_(\\d{5})(?:\\.c\\d+)?\\."
   private[graft] val BucketFileId = (".*" + BucketFileIdCore + ".*").r
 
-  private def validateBucketFiles(fs: org.apache.hadoop.fs.FileSystem,
-      vDir: org.apache.hadoop.fs.Path,
-      buckets: Int): Seq[(Int, org.apache.hadoop.fs.Path)] =
+  /** Cross-check the `_BUCKETS` marker against the files it describes:
+    * every data file must carry Spark's `_NNNNN` bucket-id suffix with id
+    * < the declared count. Catches a stale/corrupt marker and plain-apply
+    * files alike — both would otherwise let a declared distribution
+    * diverge from the data. Returns the validated `(bucketId, path)`
+    * pairs from the SAME listing the checks ran on — callers that route
+    * by bucket (the pruned apply) must consume this list, not re-list: a
+    * file appearing between two listings would otherwise dodge
+    * validation. */
+  private def validateBucketFiles(fs: FileSystem, vDir: Path,
+      buckets: Int): Seq[(Int, Path)] =
     fs.listStatus(vDir).toSeq.flatMap { st =>
       val n = st.getPath.getName
       if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) n match {
         case BucketFileId(id) =>
           if (id.toInt >= buckets) throw new IllegalStateException(
-            s"applyChangesetBucketed: file $n carries bucket id $id >= the " +
+            s"snapshot store: file $n carries bucket id $id >= the " +
               s"declared $buckets buckets at $vDir — layout metadata is wrong")
           Some(id.toInt -> st.getPath)
         case _ => throw new IllegalStateException(
-          s"applyChangesetBucketed: data file $n at $vDir has no bucket-id " +
+          s"snapshot store: data file $n at $vDir has no bucket-id " +
             "suffix; the dir is not a bucketed write despite its marker")
       } else None
     }
@@ -1251,9 +1202,8 @@ object EventStreams {
     * Exchange, never a misalignment. The O(version) read happens only on
     * this one-shot heal path; NOT healing would cost an Exchange on
     * every subsequent apply instead. */
-  private[graft] def healBucketMarker(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      vDir: org.apache.hadoop.fs.Path, buckets: Int): Boolean = {
+  private[graft] def healBucketMarker(s: SparkSession, fs: FileSystem,
+      vDir: Path, buckets: Int): Boolean = {
     val dataFiles = fs.listStatus(vDir).filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
@@ -1287,31 +1237,24 @@ object EventStreams {
     * committed one is a superseded crash attempt by the protocol — its
     * batch must have completed for any later version to exist; a torn
     * dir ABOVE the latest committed version is an in-flight write and
-    * is never touched). `tablePrefix` also drops the pruned versions'
-    * session catalog entries (the bucketed layout's registrations).
-    * Returns the deleted version dir names. `keepLast` ≥ 1 always
-    * preserves the read path: `latestVersion` and the next apply's
-    * prior-derivation see exactly what they saw before the prune. */
+    * is never touched). On the bucketed layout it also drops the pruned
+    * versions' session catalog entries. Returns the deleted version dir
+    * names. `keepLast` ≥ 1 always preserves the read path:
+    * `latestVersion` and the next apply's prior-derivation see exactly
+    * what they saw before the prune. */
   def pruneVersions(s: SparkSession, targetDir: String, keepLast: Int = 2,
-      tablePrefix: Option[String] = None): Seq[String] = {
+      layout: Layout = Plain): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(target)) return Seq.empty
-    val versioned = fs.listStatus(target).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isDirectory && n.startsWith("v") && n.length > 1 &&
-        n.drop(1).forall(_.isDigit)
-    }
-    val committed = versioned.filter(st =>
-      fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(1).toLong).sorted
+    val fs = storeFs(s, targetDir)
+    val target = new Path(targetDir)
+    val versions = numberedDirs(fs, target, VersionDir)
+    val committed = versions.collect { case (id, p) if isCommitted(fs, p) => id }
     if (committed.isEmpty) return Seq.empty
-    val keep = committed.takeRight(keepLast).toSet
+    val keep = committed.sorted.takeRight(keepLast).toSet
     val latest = committed.max
-    val pruned = versioned.filter { st =>
-      val id = st.getPath.getName.drop(1).toLong
-      id < latest && !keep.contains(id)
+    def dropTable(dirName: String): Unit = layout match {
+      case b: Bucketed => s.sql(s"DROP TABLE IF EXISTS ${b.table(dirName)}")
+      case Plain =>
     }
     // stale pruned-apply staging: a crash between the stage write and
     // its cleanup leaks `.stage_vN` + its catalog entry if the retry
@@ -1319,21 +1262,13 @@ object EventStreams {
     // dir at N ≤ latest committed is stale by the protocol — batches are
     // sequential, so an IN-FLIGHT stage always carries an id above every
     // committed version; those are never touched.
-    fs.listStatus(target).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isDirectory && n.startsWith(".stage_v") &&
-        n.drop(8).forall(_.isDigit) && n.length > 8 &&
-        n.drop(8).toLong <= latest
-    }.foreach { st =>
-      fs.delete(st.getPath, true)
-      tablePrefix.foreach(p =>
-        s.sql(s"DROP TABLE IF EXISTS ${p}_stage_v${st.getPath.getName.drop(8)}"))
+    numberedDirs(fs, target, StageDir).foreach { case (id, p) =>
+      if (id <= latest) { fs.delete(p, true); dropTable(s"stage_v$id") }
     }
-    pruned.map { st =>
-      val name = st.getPath.getName
-      fs.delete(st.getPath, true)
-      tablePrefix.foreach(p => s.sql(s"DROP TABLE IF EXISTS ${p}_$name"))
-      name
+    versions.collect { case (id, p) if id < latest && !keep.contains(id) =>
+      fs.delete(p, true)
+      dropTable(p.getName)
+      p.getName
     }
   }
 
@@ -1350,11 +1285,11 @@ object EventStreams {
 
   /** The snapshot store's pinned on-disk schema — every version dir is
     * written with exactly these columns by [[mergedSnapshot]]'s select.
-    * Prior-version reads pass it explicitly: `spark.read.parquet` without
-    * a schema re-INFERS per read (driver-side listing + footer job,
+    * Version reads pass it explicitly: `spark.read.parquet` without a
+    * schema re-INFERS per read (driver-side listing + footer job,
     * ~80-120ms each — the Tables.schemaCache lesson), and the apply loop
     * reads a prior snapshot EVERY batch. */
-  private[streaming] val SnapshotSchema =
+  private val SnapshotSchema =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id",
         org.apache.spark.sql.types.LongType),
@@ -1368,6 +1303,35 @@ object EventStreams {
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       SnapshotSchema)
 
+  private def readSnapshot(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(SnapshotSchema).parquet(dir)
+
+  /** The store's state as of batch `asOf` — the latest committed version
+    * ≤ it (st20's time-travel read); by default the latest. */
+  def snapshotAt(s: SparkSession, targetDir: String,
+      asOf: Long = Long.MaxValue - 1): DataFrame =
+    readSnapshot(s, versionAsOf(targetDir, asOf))
+
+  private def versionAsOf(targetDir: String, asOf: Long): String =
+    latestVersion(targetDir, below = asOf + 1).getOrElse(
+      throw new IllegalArgumentException(
+        s"no committed version <= $asOf under $targetDir"))
+
+  private val VersionDir = "v(\\d+)".r
+  private val StageDir = "\\.stage_v(\\d+)".r
+
+  /** `(id, dir)` of every directory under `target` whose name matches
+    * `pattern` (one numeric group: the batch id). */
+  private def numberedDirs(fs: FileSystem, target: Path,
+      pattern: scala.util.matching.Regex): Seq[(Long, Path)] =
+    if (!fs.exists(target)) Seq.empty
+    else fs.listStatus(target).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case pattern(id) if st.isDirectory => Some(id.toLong -> st.getPath)
+        case _ => None
+      }
+    }
+
   /** Latest COMMITTED (`_SUCCESS`-marked) version dir under `targetDir`
     * with id strictly below `below`; None before the first commit.
     * Listing and marker probes go through the Hadoop FileSystem API
@@ -1375,56 +1339,14 @@ object EventStreams {
     * custom scheme registered there — `RemoteFsSpec`'s object-store
     * stand-in, or `s3a:` in production — is honored). */
   def latestVersion(targetDir: String, below: Long = Long.MaxValue): Option[String] = {
-    val target = new org.apache.hadoop.fs.Path(targetDir)
+    val target = new Path(targetDir)
     val hc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
     val fs = target.getFileSystem(hc)
-    val dirs =
-      if (fs.exists(target)) fs.listStatus(target).toSeq else Seq.empty
-    dirs.filter { st =>
-      val n = st.getPath.getName
-      st.isDirectory && n.startsWith("v") && n.length > 1 &&
-        n.drop(1).forall(_.isDigit) &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
-    }
-      .map(st => (st.getPath.getName.drop(1).toLong, st.getPath))
-      .filter(_._1 < below)
-      .sortBy(_._1).lastOption.map(_._2.toString)
-  }
-
-  /** DELETE-BEARING APPLY over the snapshot store — the
-    * right-to-be-forgotten batch: a tombstone changeset of `user_id`s
-    * whose state must be REMOVED from the maintained table, composed
-    * with the same versioned `_SUCCESS` protocol as [[applyChangeset]]
-    * (committed-batch skip keyed on batchId alone; torn write → same
-    * prior, byte-identical rewrite). The merge is a LEFT ANTI join of
-    * the prior snapshot against the broadcast tombstone set: the prior
-    * never shuffles, tombstoned keys drop in one scan, and the diff
-    * surface ([[versionDiff]]) reports them as `removed` — the class an
-    * append-only merge can never produce. Deletes are HARD (the row is
-    * gone from every version at-or-after the tombstone batch; earlier
-    * versions still hold it — full erasure of history is
-    * [[pruneVersions]] of everything below the tombstone). At 100 TB
-    * the tombstone set is broadcast-sized by nature (deletion requests,
-    * not data), so the apply is one scan + rewrite of the target —
-    * the same residual every non-delete apply already pays. */
-  def applyDeletes(tombstones: DataFrame, batchId: Long,
-      targetDir: String): Unit = {
-    val s = tombstones.sparkSession
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val vDir = new org.apache.hadoop.fs.Path(target, s"v$batchId")
-    if (fs.exists(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")))
-      return // committed: skip (batchId alone — the idempotence guard)
-    val prior = latestVersion(targetDir, below = batchId) match {
-      case Some(p) => s.read.schema(SnapshotSchema).parquet(p)
-      case None => emptySnapshot(s)
-    }
-    prior.join(broadcast(tombstones.select(col("user_id")).distinct()),
-        Seq("user_id"), "left_anti")
-      .write.mode("overwrite").parquet(vDir.toString)
-    writeSuccessMarker(fs, vDir)
+    numberedDirs(fs, target, VersionDir)
+      .filter { case (id, p) => id < below && isCommitted(fs, p) }
+      .maxByOption(_._1).map(_._2.toString)
   }
 
   /** VERSION DIFF over the snapshot store — "what changed between
@@ -1435,58 +1357,31 @@ object EventStreams {
     * state differs is emitted classified `added` / `removed` /
     * `changed` with both sides' values. Keys identical in both versions
     * are filtered out — the diff is changeset-sized, not store-sized.
-    * `removed` appears only under delete-bearing merges (the store's
-    * count/cents merge is append-only, so its diffs are add/change).
+    * `removed` appears only under [[applyDeletes]] (the count/cents
+    * merge is append-only, so its diffs are add/change).
     *
-    * With `tablePrefix` set the snapshots are read as their BUCKETED
-    * catalog tables ([[applyChangesetBucketed]]'s layout): both sides
-    * carry the same bucketing+sort on the join key, so the full-outer
-    * join is a zero-Exchange, zero-Sort SMJ — at 100 TB the diff costs
-    * one co-located scan of the two versions and shuffles NOTHING
-    * (the q37 property, applied to the store's own history). Without it
-    * (plain [[applyChangeset]] dirs) both snapshots shuffle once. */
+    * On the bucketed layout the snapshots are read as their BUCKETED
+    * catalog tables: both sides carry the same bucketing+sort on the
+    * join key, so the full-outer join is a zero-Exchange, zero-Sort SMJ —
+    * at 100 TB the diff costs one co-located scan of the two versions and
+    * shuffles NOTHING (the q37 property, applied to the store's own
+    * history). The catalog entry is only an optimization here (the
+    * committed dir is the data): an entry that fails [[catalogMismatch]]
+    * against the dir's own `_BUCKETS` marker — a fresh session, a stale
+    * entry, another store sharing the prefix — falls back to the plain
+    * dir read: same rows, one Exchange per side. On the plain layout both
+    * snapshots shuffle once. */
   def versionDiff(s: SparkSession, targetDir: String, fromV: Long, toV: Long,
-      tablePrefix: Option[String] = None): DataFrame = {
-    def snapshot(pin: Long): DataFrame = {
-      val dir = latestVersion(targetDir, below = pin + 1).getOrElse(
-        throw new IllegalArgumentException(
-          s"versionDiff: no committed version <= $pin under $targetDir"))
-      tablePrefix match {
-        // the catalog entry is only an OPTIMIZATION here (the committed
-        // dir is the data): use it only when it provably points at THIS
-        // dir with the expected bucket spec — a same-named entry from
-        // another store (two stores sharing a prefix, or a rebuilt
-        // store at a new path) must not silently redirect the diff.
-        // Anything else — fresh session, stale entry, foreign entry —
-        // falls back to the plain file read: same rows, one Exchange
-        // per side; the next apply's recovery path re-registers.
-        case Some(p) =>
-          val id = new org.apache.hadoop.fs.Path(dir).getName.drop(1)
-          val name = s"${p}_v$id"
-          val usable = s.catalog.tableExists(name) && {
-            val ct = s.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(name))
-            val fs = new org.apache.hadoop.fs.Path(dir)
-              .getFileSystem(s.sparkContext.hadoopConfiguration)
-            val dirP = new org.apache.hadoop.fs.Path(dir)
-            // location AND bucket count (vs the dir's own _BUCKETS
-            // marker) AND schema — a same-location entry declaring a
-            // different modulus would place the SMJ's two sides by
-            // different hashes and emit spurious added/removed pairs;
-            // a divergent schema would silently misread the files
-            fs.makeQualified(new org.apache.hadoop.fs.Path(ct.location)) ==
-              fs.makeQualified(dirP) &&
-              ct.bucketSpec.exists(b =>
-                readBucketCount(fs, dirP).contains(b.numBuckets) &&
-                  b.bucketColumnNames == Seq("user_id") &&
-                  b.sortColumnNames == Seq("user_id")) &&
-              ct.schema.map(f => f.name -> f.dataType.simpleString) ==
-                Seq("user_id" -> "bigint", "n_events" -> "bigint",
-                  "cents" -> "bigint")
-          }
-          if (usable) s.table(name) else s.read.schema(SnapshotSchema).parquet(dir)
-        case None => s.read.schema(SnapshotSchema).parquet(dir)
-      }
+      layout: Layout = Plain): DataFrame = {
+    def snapshot(pin: Long): DataFrame = layout match {
+      case b: Bucketed =>
+        val dir = new Path(versionAsOf(targetDir, pin))
+        val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+        val name = b.table(dir.getName)
+        if (s.catalog.tableExists(name) && readBucketCount(fs, dir).exists(n =>
+            catalogMismatch(s, fs, name, dir, n).isEmpty)) s.table(name)
+        else readSnapshot(s, dir.toString)
+      case Plain => snapshotAt(s, targetDir, pin)
     }
     val old = snapshot(fromV).select(col("user_id"),
       col("n_events").as("n_old"), col("cents").as("cents_old"))
@@ -1503,7 +1398,8 @@ object EventStreams {
   }
 
   /** The st09 foreachBatch body: overwrite exactly this batch's
-    * partition. Public so the idempotence property is directly
+    * partition, with committer v2 (see [[writeVersion]] for why that is
+    * safe here). Public so the idempotence property is directly
     * testable. */
   def writeBatchIdempotent(batch: DataFrame, batchId: Long, outDir: String): Unit =
     batch.withColumn("batch_id", lit(batchId))
@@ -1511,6 +1407,7 @@ object EventStreams {
       // writer-scoped: a session-conf set here would silently change
       // overwrite semantics for every other write in the application
       .option("partitionOverwriteMode", "dynamic")
+      .option(CommitterAlgorithm, "2")
       .partitionBy("batch_id")
       .parquet(outDir)
 

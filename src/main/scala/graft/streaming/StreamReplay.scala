@@ -1187,7 +1187,7 @@ object StreamReplay {
         .getOrElse(sys.error(s"no committed version under $target"))
       EventStreams.applyChangeset( // at-least-once retry, hostile payload
         graft.Tables.events(s, dir), lastId, target)
-      s.read.schema(EventStreams.SnapshotSchema).parquet(EventStreams.latestVersion(target).get)
+      EventStreams.snapshotAt(s, target)
         .orderBy(col("user_id"))
         .localCheckpoint()
     } finally {
@@ -1202,7 +1202,7 @@ object StreamReplay {
     * oracle can recompute exactly, unlike the sampled range boundaries
     * the streamed replay stages by) build versions v0..v7, then the
     * entry reads the snapshot AS OF batch 4 via
-    * [[EventStreams.latestVersion]]'s `below` parameter — the store's
+    * [[EventStreams.snapshotAt]] — the store's
     * versioned dirs make every historical state directly queryable, the
     * audit/debug read a deployment does after the fact ("what did the
     * profile table say before Tuesday's batch?"). Oracle = the per-user
@@ -1228,7 +1228,7 @@ object StreamReplay {
             .select(col("user_id"), col("value")),
           i, target)
       }
-      s.read.schema(EventStreams.SnapshotSchema).parquet(EventStreams.latestVersion(target, below = asOf + 1).get)
+      EventStreams.snapshotAt(s, target, asOf)
         .orderBy(col("user_id"))
         .localCheckpoint()
     }
@@ -1240,7 +1240,7 @@ object StreamReplay {
     * bucket-pair (`pmod(hash(user_id), 8) div 2`), so each batch is
     * maximally clustered: batch 0 seeds the store (fallback full
     * apply), batches 1–3 each touch exactly 2 of the 8 buckets and run
-    * [[EventStreams.applyChangesetBucketedPruned]]'s real pruning —
+    * [[EventStreams.applyChangesetPruned]]'s real pruning —
     * touched-bucket-only decode plus byte-copy-forward of the other 6
     * (CdcApplySpec pins the carried files byte-identical; the gate pins
     * the answer). The last batch is then re-delivered with a hostile
@@ -1252,6 +1252,7 @@ object StreamReplay {
   val st21_cdc_apply_pruned: Q = (s, dir) => {
     val B = 8
     val prefix = s"graft_st21_${sinkId.incrementAndGet()}" // per-run: concurrent same-entry runs must not collide in the shared catalog
+    val layout = EventStreams.Bucketed(prefix, B)
     // staged once (the st20 move): 4 changeset filters + the hostile
     // retry all read the same 2-column projection
     withStagedStore("graft-st21-target",
@@ -1261,16 +1262,16 @@ object StreamReplay {
           s.sql(s"DROP TABLE IF EXISTS ${prefix}_stage_v$i")
         }) { (target, ev) =>
       (0 until 4).foreach { i =>
-        EventStreams.applyChangesetBucketedPruned(
+        EventStreams.applyChangesetPruned(
           ev.filter(expr(s"pmod(hash(user_id), $B) div 2") === i),
-          i.toLong, target, prefix, buckets = B)
+          i.toLong, target, layout)
       }
       // hostile retry: same WRONG payload class as before (every row of
       // the table — the pruned apply consumes only user_id/value, so the
       // staged projection is observationally identical); the _SUCCESS
       // guard must skip on batchId alone
-      EventStreams.applyChangesetBucketedPruned(ev, 3L, target, prefix, buckets = B)
-      s.read.schema(EventStreams.SnapshotSchema).parquet(EventStreams.latestVersion(target).get)
+      EventStreams.applyChangesetPruned(ev, 3L, target, layout)
+      EventStreams.snapshotAt(s, target)
         .orderBy(col("user_id"))
         .localCheckpoint()
     }
@@ -1295,6 +1296,7 @@ object StreamReplay {
   val st22_version_diff: Q = (s, dir) => {
     val K = 8L
     val prefix = s"graft_st22_${sinkId.incrementAndGet()}"
+    val layout = EventStreams.Bucketed(prefix, 8)
     // staged once (the st20 move): one scan serves the min/max agg and
     // all 8 changeset filters
     withStagedStore("graft-st22-target", eventsMs(s, dir))(
@@ -1305,14 +1307,13 @@ object StreamReplay {
       val (mn, mx) = (mm.getLong(0), mm.getLong(1))
       val span = mx - mn + 1
       (0L until K).foreach { i =>
-        EventStreams.applyChangesetBucketed(
+        EventStreams.applyChangeset(
           ev.filter(greatest(pmod(col("user_id"), lit(K)),
               expr(s"((ms - $mn) * $K) div $span")) === i)
             .select(col("user_id"), col("value")),
-          i, target, prefix, buckets = 8)
+          i, target, layout)
       }
-      EventStreams.versionDiff(s, target, fromV = 3L, toV = 7L,
-          tablePrefix = Some(prefix))
+      EventStreams.versionDiff(s, target, fromV = 3L, toV = 7L, layout)
         .orderBy(col("user_id"))
         .localCheckpoint()
     }
@@ -1322,7 +1323,7 @@ object StreamReplay {
     * right-to-be-forgotten flow end-to-end ON THE BUCKETED STORE: four
     * event-time changesets build the per-user store (v0..v3 cover the
     * whole table), then a TOMBSTONE batch
-    * ([[EventStreams.applyDeletesBucketed]] — broadcast anti-join over
+    * ([[EventStreams.applyDeletes]] — broadcast anti-join over
     * the bucketed prior preserves partition≡bucket, so the delete
     * rewrite plans with ZERO Exchange and the diff below stays a
     * co-bucketed SMJ) removes every user with
@@ -1338,6 +1339,7 @@ object StreamReplay {
   val st23_cdc_delete: Q = (s, dir) => {
     val K = 4L
     val prefix = s"graft_st23_${sinkId.incrementAndGet()}"
+    val layout = EventStreams.Bucketed(prefix, 8)
     // staged once (the st20 move): min/max agg, 4 changeset filters and
     // the tombstone projection all read the one checkpointed frame
     withStagedStore("graft-st23-target", eventsMs(s, dir))(
@@ -1348,18 +1350,17 @@ object StreamReplay {
       val (mn, mx) = (mm.getLong(0), mm.getLong(1))
       val span = mx - mn + 1
       (0L until K).foreach { i =>
-        EventStreams.applyChangesetBucketed(
+        EventStreams.applyChangeset(
           ev.filter(expr(s"((ms - $mn) * $K) div $span") === i)
             .select(col("user_id"), col("value")),
-          i, target, prefix, buckets = 8)
+          i, target, layout)
       }
       val tomb = ev
         .select(col("user_id")).filter(col("user_id") % 10 === 3)
-      EventStreams.applyDeletesBucketed(tomb, K, target, prefix, buckets = 8)
-      EventStreams.applyDeletesBucketed( // hostile retry: must skip on batchId
-        tomb.limit(0), K, target, prefix, buckets = 8)
-      EventStreams.versionDiff(s, target, fromV = K - 1, toV = K,
-          tablePrefix = Some(prefix))
+      EventStreams.applyDeletes(tomb, K, target, layout)
+      EventStreams.applyDeletes( // hostile retry: must skip on batchId
+        tomb.limit(0), K, target, layout)
+      EventStreams.versionDiff(s, target, fromV = K - 1, toV = K, layout)
         .orderBy(col("user_id"))
         .localCheckpoint()
     }

@@ -25,17 +25,13 @@ import org.apache.spark.sql.functions._
   * replacement recorded, not assumed).
   *
   * Usage: SPARK_SCALA_VERSION=2.13 scripts/run.sh
-  *          graft.tools.ExecutorDeathProof [outJson] [blocks] [killAfterSec]
+  *          graft.tools.ExecutorDeathProof [outJson] [blocks]
   */
 object ExecutorDeathProof {
-
-  // PID probe + executor JDK17 module opens shared with LocalClusterProof
-  private def taskJvms(s: SparkSession): Seq[String] = LocalClusterProof.taskJvms(s)
 
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("EXECDEATH_r18.json")
     val blocks = if (args.length > 1) args(1).toInt else 900 // ~20M elements
-    val killAfterSec = if (args.length > 2) args(2).toDouble else 5.0
     require(sys.env.contains("SPARK_SCALA_VERSION"),
       "set SPARK_SCALA_VERSION=2.13 (see LocalClusterProof scaladoc)")
     val scratch = graft.Scratch.tempDir("execdeath").toString
@@ -80,23 +76,25 @@ object ExecutorDeathProof {
       require(s.sparkContext.getExecutorMemoryStatus.size >= 3,
         "local-cluster executors did not register within 120s " +
           s"(got ${s.sparkContext.getExecutorMemoryStatus.size - 1} of 2)")
-      val pidsBefore = taskJvms(s)
+      val jvmsBefore = LocalClusterProof.executorJvms(s)
+      val pidsBefore = jvmsBefore.map(_._2)
       require(pidsBefore.size >= 2, s"expected 2 executor JVMs, got $pidsBefore")
 
       // the victim: the lexicographically-last executor (deterministic pick)
-      val victim = pidsBefore.last
-      val victimPid = victim.takeWhile(_ != '@')
+      val (victimExec, victim) = jvmsBefore.last
 
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
       // in-flight witness: the proof's claim is a MID-FLIGHT death, so it
       // must be able to FAIL if the kill lands between tasks or after the
-      // job — active tasks are snapshotted at the kill instant and at
-      // least one task must end with an ExecutorLostFailure tied to an
-      // executor removed during the run (shared DeathWitness, so the
-      // attribution logic cannot drift between the two kill proofs)
-      val witness = new LocalClusterProof.DeathWitness
+      // job — the witness kills once a task of the run has ended while
+      // one runs on the victim, and at least one task must end with an
+      // ExecutorLostFailure tied to an executor removed during the run
+      // (shared DeathWitness, so the kill point and the attribution logic
+      // cannot drift between the two kill proofs)
+      val witness = new LocalClusterProof.DeathWitness(victimExec,
+        victim.takeWhile(_ != '@'))
       s.sparkContext.addSparkListener(witness.listener)
       val out = s"$scratch/out_killed"
       val t0 = System.nanoTime()
@@ -104,21 +102,13 @@ object ExecutorDeathProof {
         OsmPbf.transcode(s, PbfConfig(input = pbf, output = out,
           fileTargetMb = Some(16)))
       }
-      Thread.sleep((killAfterSec * 1000).toLong)
-      // distinguish "already failed" from "already finished" before the
-      // mid-flight assertion: a config error completing the future
-      // exceptionally at T+2s must surface AS that error, not as a
-      // misleading sizing diagnostic
-      fut.value.foreach {
-        case scala.util.Failure(e) => throw e
-        case scala.util.Success(_) => sys.error(
-          s"transcode finished before the ${killAfterSec}s kill point — " +
-            "raise blocks or lower killAfterSec so the death lands mid-flight")
-      }
-      val activeAtKill = witness.activeTasks.get()
-      new ProcessBuilder("kill", "-9", victimPid).start().waitFor()
-      println(s"[execdeath] killed executor JVM $victim at T+${killAfterSec}s " +
-        s"($activeAtKill tasks in flight)")
+      // a config error failing the transcode before the kill surfaces AS
+      // that error, not as a misleading sizing diagnostic
+      witness.awaitKill(fut)
+      val killAtSec = (witness.killNanos - t0) / 1e9
+      val activeAtKill = witness.activeAtKill
+      println(f"[execdeath] killed executor JVM $victim at T+$killAtSec%.2fs " +
+        s"(${witness.endedAtKill} tasks ended, $activeAtKill in flight)")
       val counts = Await.result(fut, 15.minutes)
       val wall = (System.nanoTime() - t0) / 1e9
       org.apache.spark.GraftListenerBus.drain(s.sparkContext)
@@ -133,21 +123,22 @@ object ExecutorDeathProof {
         s"no task ended with ExecutorLostFailure for a removed executor " +
           s"(active at kill: $activeAtKill, non-success ends: " +
           s"${witness.nonSuccessEnds.get()}, ${witness.summary}) — " +
-          "the death landed outside the job; adjust killAfterSec/blocks")
+          "the death landed outside the job; raise blocks")
 
       require(counts.values.sum == n, s"counts ${counts.values.sum} != $n")
       val (rows, hash) = LocalClusterProof.validateCommittedOutput(s, out, n, "killed")
       require(rows == truthRows && hash == truthHash,
         s"content diverged from the undisturbed run: ($rows,$hash) vs ($truthRows,$truthHash)")
 
-      val pidsAfter = taskJvms(s)
+      val pidsAfter = LocalClusterProof.taskJvms(s)
       require(!pidsAfter.contains(victim),
         s"victim $victim still serving tasks — the kill was a no-op")
       val relaunched = pidsAfter.exists(p => !pidsBefore.contains(p))
       s.stop()
 
       val json =
-        s"""{"elements":$n,"killed_executor":"$victim","kill_after_sec":$killAfterSec,""" +
+        s"""{"elements":$n,"killed_executor":"$victim",""" +
+          f""""kill_at_sec":$killAtSec%.2f,"tasks_ended_at_kill":${witness.endedAtKill},""" +
           s""""executors_before":${pidsBefore.map(p => s""""$p"""").mkString("[", ",", "]")},""" +
           s""""executors_after":${pidsAfter.map(p => s""""$p"""").mkString("[", ",", "]")},""" +
           s""""worker_relaunched_replacement":$relaunched,""" +

@@ -60,9 +60,14 @@ object LocalClusterProof {
   /** Distinct task-side JVM identities (pid@host), via a probe job wide
     * enough to hit every executor. Shared with [[ExecutorDeathProof]]. */
   private[tools] def taskJvms(s: SparkSession): Seq[String] =
+    executorJvms(s).map(_._2)
+
+  /** (executor id, pid@host) of every task-side JVM, sorted by JVM. */
+  private[tools] def executorJvms(s: SparkSession): Seq[(String, String)] =
     s.sparkContext.parallelize(1 to 64, 16)
-      .map(_ => java.lang.management.ManagementFactory.getRuntimeMXBean.getName)
-      .distinct().collect().sorted.toSeq
+      .map(_ => (org.apache.spark.SparkEnv.get.executorId,
+        java.lang.management.ManagementFactory.getRuntimeMXBean.getName))
+      .distinct().collect().toSeq.sortBy(_._2)
 
   /** Executor classpath for repo classes, shared by the proof tools —
     * derived from where THIS class was loaded from (so a relocated repo
@@ -99,23 +104,53 @@ object LocalClusterProof {
     * tracks in-flight tasks, non-success task ends, ExecutorLostFailure
     * ends, and ties the lost-failure executor ids to executors REMOVED
     * during the run — the intersection is the set a mid-flight kill
-    * assertion may rely on; a generic non-success end may not. */
-  private[tools] final class DeathWitness {
+    * assertion may rely on; a generic non-success end may not.
+    *
+    * It also owns the kill: its listener `kill -9`s the victim executor
+    * (`victimExecId`, JVM pid `victimPid`) once some task has ended while
+    * at least one is running on the victim — a kill point taken from the
+    * run itself, so neither a fast quiet host nor a slow loaded one can
+    * move it past the job's end. */
+  private[tools] final class DeathWitness(victimExecId: String, victimPid: String) {
     val activeTasks = new java.util.concurrent.atomic.AtomicLong(0)
     val nonSuccessEnds = new java.util.concurrent.atomic.AtomicLong(0)
     val executorLostEnds = new java.util.concurrent.atomic.AtomicLong(0)
+    private val endedTasks = new java.util.concurrent.atomic.AtomicLong(0)
+    private val activeOnVictim = new java.util.concurrent.atomic.AtomicLong(0)
     private val lostTaskExecIds =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     private val removedExecIds =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    private val killed = new java.util.concurrent.CountDownLatch(1)
+    /** System.nanoTime of the kill, and the task counts the listener saw
+      * at that instant. */
+    @volatile var killNanos = 0L
+    @volatile var endedAtKill = 0L
+    @volatile var activeAtKill = 0L
+    private def onVictim(info: org.apache.spark.scheduler.TaskInfo): Boolean =
+      info.executorId == victimExecId
+    // listener events arrive on one bus thread, so the kill fires once
+    private def maybeKill(): Unit =
+      if (killed.getCount > 0 && endedTasks.get() > 0 && activeOnVictim.get() > 0) {
+        endedAtKill = endedTasks.get()
+        activeAtKill = activeTasks.get()
+        new ProcessBuilder("kill", "-9", victimPid).start().waitFor()
+        killNanos = System.nanoTime()
+        killed.countDown()
+      }
     val listener: org.apache.spark.scheduler.SparkListener =
       new org.apache.spark.scheduler.SparkListener {
         override def onTaskStart(
-            t: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+            t: org.apache.spark.scheduler.SparkListenerTaskStart): Unit = {
           activeTasks.incrementAndGet()
+          if (onVictim(t.taskInfo)) activeOnVictim.incrementAndGet()
+          maybeKill()
+        }
         override def onTaskEnd(
             t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
           activeTasks.decrementAndGet()
+          if (onVictim(t.taskInfo)) activeOnVictim.decrementAndGet()
+          endedTasks.incrementAndGet()
           t.reason match {
             case org.apache.spark.Success => ()
             case e: org.apache.spark.ExecutorLostFailure =>
@@ -124,11 +159,22 @@ object LocalClusterProof {
               lostTaskExecIds.add(e.execId)
             case _ => nonSuccessEnds.incrementAndGet()
           }
+          maybeKill()
         }
         override def onExecutorRemoved(
             e: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit =
           removedExecIds.add(e.executorId)
       }
+    /** Block until the kill fired; fails if `job` ends first (with its
+      * own error, if it failed). */
+    def awaitKill(job: scala.concurrent.Future[_]): Unit =
+      while (!killed.await(20, java.util.concurrent.TimeUnit.MILLISECONDS))
+        job.value.foreach {
+          case scala.util.Failure(e) => throw e
+          case scala.util.Success(_) => sys.error(
+            "the job finished before any task ran on the victim after " +
+              "another had ended — raise blocks so the death lands mid-flight")
+        }
     def deathAttributedExecIds: Set[String] = {
       import scala.jdk.CollectionConverters._
       lostTaskExecIds.asScala.toSet intersect removedExecIds.asScala.toSet

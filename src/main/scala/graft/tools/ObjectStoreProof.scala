@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * gone from the post-run executor set.
   *
   * Usage: SPARK_SCALA_VERSION=2.13 scripts/run.sh
-  *          graft.tools.ObjectStoreProof [outJson] [blocks] [killAfterSec]
+  *          graft.tools.ObjectStoreProof [outJson] [blocks]
   */
 object ObjectStoreProof {
 
@@ -58,7 +58,6 @@ object ObjectStoreProof {
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("OBJSTORE_r19.json")
     val blocks = if (args.length > 1) args(1).toInt else 600 // ~13.4M elements
-    val killAfterSec = if (args.length > 2) args(2).toDouble else 4.0
     require(sys.env.contains("SPARK_SCALA_VERSION"),
       "set SPARK_SCALA_VERSION=2.13 (see LocalClusterProof scaladoc)")
     val scratch = graft.Scratch.tempDir("objproof").toString
@@ -128,31 +127,28 @@ object ObjectStoreProof {
              System.currentTimeMillis() < regDeadline) Thread.sleep(250)
       require(s.sparkContext.getExecutorMemoryStatus.size >= 3,
         "local-cluster executors did not register within 120s")
-      val pidsBefore = LocalClusterProof.taskJvms(s)
+      val jvmsBefore = LocalClusterProof.executorJvms(s)
+      val pidsBefore = jvmsBefore.map(_._2)
       require(pidsBefore.size >= 2, s"expected 2 executor JVMs, got $pidsBefore")
-      val victim = pidsBefore.last
-      val victimPid = victim.takeWhile(_ != '@')
+      val (victimExec, victim) = jvmsBefore.last
 
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
-      val witness = new LocalClusterProof.DeathWitness
+      val witness = new LocalClusterProof.DeathWitness(victimExec,
+        victim.takeWhile(_ != '@'))
       s.sparkContext.addSparkListener(witness.listener)
       val killedOut = s"grafts3://$scratch/out_killed"
+      val t0 = System.nanoTime()
       val fut = Future {
         OsmPbf.transcode(s, PbfConfig(input = pbf, output = killedOut,
           fileTargetMb = Some(16), commitMode = PbfConfig.CommitPointer))
       }
-      Thread.sleep((killAfterSec * 1000).toLong)
-      fut.value.foreach {
-        case scala.util.Failure(e) => throw e
-        case scala.util.Success(_) => sys.error(
-          s"transcode finished before the ${killAfterSec}s kill point — raise blocks")
-      }
-      val activeAtKill = witness.activeTasks.get()
-      new ProcessBuilder("kill", "-9", victimPid).start().waitFor()
-      println(s"[objstore] killed executor JVM $victim at T+${killAfterSec}s " +
-        s"($activeAtKill tasks in flight)")
+      witness.awaitKill(fut)
+      val killAtSec = (witness.killNanos - t0) / 1e9
+      val activeAtKill = witness.activeAtKill
+      println(f"[objstore] killed executor JVM $victim at T+$killAtSec%.2fs " +
+        s"(${witness.endedAtKill} tasks ended, $activeAtKill in flight)")
       val killedCounts = Await.result(fut, 15.minutes)
       org.apache.spark.GraftListenerBus.drain(s.sparkContext)
       s.sparkContext.removeSparkListener(witness.listener)
@@ -160,7 +156,7 @@ object ObjectStoreProof {
       require(deathEnds.nonEmpty,
         s"no task ended with ExecutorLostFailure for a removed executor " +
           s"(active at kill: $activeAtKill, ${witness.summary}) — " +
-          "adjust killAfterSec/blocks")
+          "raise blocks")
       require(killedCounts.values.sum == n,
         s"counts ${killedCounts.values.sum} != $n")
       val killRenames = HostileObjectStoreFs.renameCalls.get()
@@ -177,7 +173,8 @@ object ObjectStoreProof {
         s"""{"elements":$n,"store_model":"PUT-visible creates, rename=copy+delete (counted), via HostileObjectStoreFs scheme grafts3",""" +
           s""""commit_mode":"pointer","truth":"undisturbed local rename-mode run, order-invariant fingerprint",""" +
           s""""race_leg":{"injected":"partition 0 attempt 0 killed after durable generation files","rows":$raceRows,"hash":"$raceHash","renames":0,"match":true},""" +
-          s""""kill_leg":{"killed_executor":"$victim","kill_after_sec":$killAfterSec,"tasks_in_flight_at_kill":$activeAtKill,""" +
+          s""""kill_leg":{"killed_executor":"$victim",""" +
+          f""""kill_at_sec":$killAtSec%.2f,"tasks_ended_at_kill":${witness.endedAtKill},"tasks_in_flight_at_kill":$activeAtKill,""" +
           s""""death_attributed_exec_ids":${deathEnds.toSeq.sorted.map(i => s""""$i"""").mkString("[", ",", "]")},""" +
           s""""executors_before":${pidsBefore.map(p => s""""$p"""").mkString("[", ",", "]")},""" +
           s""""executors_after":${pidsAfter.map(p => s""""$p"""").mkString("[", ",", "]")},""" +

@@ -40,7 +40,19 @@ class RemoteFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A temp dir deleted in afterAll. */
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    dirs += d
+    d.toString
+  }
 
   test("bootstrap read + DSv2 scan work through a non-file Hadoop FS scheme") {
     val df = OsmPbf.read(spark, s"graftmock://$fixture")
@@ -54,7 +66,7 @@ class RemoteFsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("st17 CDC snapshot store works through the foreign scheme") {
     import org.apache.spark.sql.functions.col
     val target = "graftmock://" +
-      java.nio.file.Files.createTempDirectory("graftmockcdc").toString
+      tempDir("graftmockcdc")
     def batchDf(rows: Seq[(Long, Double)]) = {
       val s = spark; import s.implicits._
       rows.toDF("user_id", "value")
@@ -81,20 +93,20 @@ class RemoteFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions.col
     val E = graft.streaming.EventStreams
     val target = "graftmock://" +
-      java.nio.file.Files.createTempDirectory("graftmockbkt").toString
+      tempDir("graftmockbkt")
     val prefix = "graft_rfsbkt"
     def batchDf(rows: Seq[(Long, Double)]) = {
       val s = spark; import s.implicits._
       rows.toDF("user_id", "value")
     }
-    def readLatest() = spark.read.parquet(E.latestVersion(target).get)
+    def readLatest() = E.snapshotAt(spark, target)
       .orderBy(col("user_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    E.applyChangesetBucketed(batchDf(Seq((1L, 1.00), (2L, 2.50))), 0L,
-      target, prefix, buckets = 4)
+    E.applyChangeset(batchDf(Seq((1L, 1.00), (2L, 2.50))), 0L,
+      target, E.Bucketed(prefix, 4))
     // the bucketed write + its marker landed via the foreign FS
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$target/v0/_BUCKETS")))
     assert(E.readBucketCount(fs,
@@ -104,8 +116,8 @@ class RemoteFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // only truth — re-registration (marker read, bucket-file validation,
     // CREATE ... LOCATION 'graftmock://...') all through the scheme
     spark.sql(s"DROP TABLE IF EXISTS ${prefix}_v0")
-    E.applyChangesetBucketed(batchDf(Seq((1L, 0.49))), 1L,
-      target, prefix, buckets = 4)
+    E.applyChangeset(batchDf(Seq((1L, 0.49))), 1L,
+      target, E.Bucketed(prefix, 4))
     assert(readLatest() === Seq((1L, 2L, 149L), (2L, 1L, 250L)))
 
     // the makeQualified comparison against an EXISTING catalog entry:
@@ -115,16 +127,16 @@ class RemoteFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql(s"""CREATE TABLE ${prefix}_v1 (user_id BIGINT, n_events BIGINT,
       cents BIGINT) USING PARQUET CLUSTERED BY (user_id)
       SORTED BY (user_id) INTO 4 BUCKETS LOCATION '$target/v1'""")
-    E.applyChangesetBucketed(batchDf(Seq((3L, 10.0))), 2L,
-      target, prefix, buckets = 4)
+    E.applyChangeset(batchDf(Seq((3L, 10.0))), 2L,
+      target, E.Bucketed(prefix, 4))
     assert(readLatest() ===
       Seq((1L, 2L, 149L), (2L, 1L, 250L), (3L, 1L, 1000L)))
 
     // and the committed-skip heal: marker deleted through the foreign
     // FS, hostile replay of the committed batch re-derives + rewrites it
     assert(fs.delete(new org.apache.hadoop.fs.Path(s"$target/v2/_BUCKETS"), false))
-    E.applyChangesetBucketed(batchDf(Seq((9L, 999.0))), 2L,
-      target, prefix, buckets = 4)
+    E.applyChangeset(batchDf(Seq((9L, 999.0))), 2L,
+      target, E.Bucketed(prefix, 4))
     assert(E.readBucketCount(fs,
       new org.apache.hadoop.fs.Path(s"$target/v2")) === Some(4),
       "the heal path must work over the foreign scheme too")
@@ -133,7 +145,7 @@ class RemoteFsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("transcode reads AND writes through the foreign scheme") {
-    val out = java.nio.file.Files.createTempDirectory("graftmockout").toString
+    val out = tempDir("graftmockout")
     val counts = OsmPbf.transcode(spark, PbfConfig(
       input = s"graftmock://$fixture", output = s"graftmock://$out"))
     assert(counts.values.sum === 5L)

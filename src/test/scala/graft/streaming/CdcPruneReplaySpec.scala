@@ -43,10 +43,22 @@ class CdcPruneReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A temp dir deleted in afterAll. */
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    dirs += d
+    d.toString
+  }
 
   private def readLatest(target: String) =
-    spark.read.parquet(EventStreams.latestVersion(target).get)
+    EventStreams.snapshotAt(spark, target)
       .orderBy(col("user_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
 
@@ -78,13 +90,13 @@ class CdcPruneReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = sp.sqlContext
-    val target = java.nio.file.Files.createTempDirectory("cdcprunelive").toString
+    val target = tempDir("cdcprunelive")
     val pruneLog = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[String])]
     val in = MemoryStream[(Long, Double)]
     val q = in.toDF().toDF("user_id", "value")
       .writeStream
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cdcprunelive-ckpt").toString)
+        tempDir("cdcprunelive-ckpt"))
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         EventStreams.applyChangeset(b, id, target)
         if (id % 2 == 1) // retention in the SAME loop, every 2nd batch
@@ -127,7 +139,7 @@ class CdcPruneReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("crash mid-prune leaves a recoverable store; a re-run finishes the job") {
     val sp = spark
     import sp.implicits._
-    val target = java.nio.file.Files.createTempDirectory("cdcprunecrash").toString
+    val target = tempDir("cdcprunecrash")
     batches.take(4).zipWithIndex.foreach { case (b, i) =>
       EventStreams.applyChangeset(b.toDF("user_id", "value"), i.toLong, target)
     }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import EventStreams.Bucketed
+
 /** [[EventStreams.versionDiff]] — the audit read over the versioned
   * snapshot store: classification semantics, the unchanged-key filter,
   * the zero-Exchange plan over the bucketed layout, the fresh-session
@@ -27,7 +29,10 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warehouse))
+  }
 
   /** (user_id, value) changeset rows. */
   private def chg(rows: (Long, Double)*): DataFrame = {
@@ -38,12 +43,12 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def buildStore(prefix: String): String = {
     val target = java.nio.file.Files.createTempDirectory(s"vd-$prefix").toString
     // v0: users 1,2,3 — v1: user 2 again (changed) — v2: user 4 (added)
-    EventStreams.applyChangesetBucketed(
-      chg((1L, 1.00), (2L, 2.00), (3L, 3.00)), 0L, target, prefix, buckets = 4)
-    EventStreams.applyChangesetBucketed(
-      chg((2L, 0.50)), 1L, target, prefix, buckets = 4)
-    EventStreams.applyChangesetBucketed(
-      chg((4L, 4.00)), 2L, target, prefix, buckets = 4)
+    EventStreams.applyChangeset(
+      chg((1L, 1.00), (2L, 2.00), (3L, 3.00)), 0L, target, Bucketed(prefix, 4))
+    EventStreams.applyChangeset(
+      chg((2L, 0.50)), 1L, target, Bucketed(prefix, 4))
+    EventStreams.applyChangeset(
+      chg((4L, 4.00)), 2L, target, Bucketed(prefix, 4))
     target
   }
 
@@ -52,7 +57,7 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
     val target = buildStore(prefix)
     try {
       val d = EventStreams.versionDiff(spark, target, 0L, 2L,
-        tablePrefix = Some(prefix)).orderBy(col("user_id")).collect()
+        Bucketed(prefix, 4)).orderBy(col("user_id")).collect()
       // users 1 and 3 are identical at v0 and v2 → filtered out;
       // user 2: (1,200)→(2,250) changed; user 4: absent→(1,400) added
       assert(d.map(_.getLong(0)).toSeq === Seq(2L, 4L))
@@ -78,7 +83,7 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
     val target = buildStore(prefix)
     try {
       val d = EventStreams.versionDiff(spark, target, 0L, 2L,
-        tablePrefix = Some(prefix))
+        Bucketed(prefix, 4))
       d.collect() // materialize so AQE finalizes the plan
       val plan = d.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head
@@ -97,10 +102,10 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
     val target = buildStore(prefix)
     try {
       val before = EventStreams.versionDiff(spark, target, 0L, 2L,
-        tablePrefix = Some(prefix)).orderBy(col("user_id")).collect()
+        Bucketed(prefix, 4)).orderBy(col("user_id")).collect()
       (0 to 2).foreach(i => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_v$i"))
       val after = EventStreams.versionDiff(spark, target, 0L, 2L,
-        tablePrefix = Some(prefix)).orderBy(col("user_id")).collect()
+        Bucketed(prefix, 4)).orderBy(col("user_id")).collect()
       assert(after.map(_.toString).toSeq === before.map(_.toString).toSeq)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(target))
@@ -142,8 +147,8 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
     val target = buildStore(prefix)
     import spark.implicits._
     try {
-      EventStreams.applyDeletesBucketed(
-        Seq(2L).toDF("user_id"), 3L, target, prefix, buckets = 4)
+      EventStreams.applyDeletes(
+        Seq(2L).toDF("user_id"), 3L, target, Bucketed(prefix, 4))
       // semantics: user 2 gone from v3, others carried with merged state
       val v3 = spark.read.parquet(s"$target/v3")
         .orderBy(col("user_id")).collect()
@@ -162,16 +167,16 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fs.exists(new org.apache.hadoop.fs.Path(s"$target/v3/_BUCKETS")))
       // the diff over the delete version reports removed, co-bucketed
       val d = EventStreams.versionDiff(spark, target, 2L, 3L,
-        tablePrefix = Some(prefix)).collect()
+        Bucketed(prefix, 4)).collect()
       assert(d.length === 1 && d.head.getLong(0) === 2L &&
         d.head.getString(1) === "removed")
       // hostile retry: same batchId, a tombstone that would delete user 1
-      EventStreams.applyDeletesBucketed(
-        Seq(1L).toDF("user_id"), 3L, target, prefix, buckets = 4)
+      EventStreams.applyDeletes(
+        Seq(1L).toDF("user_id"), 3L, target, Bucketed(prefix, 4))
       assert(spark.read.parquet(s"$target/v3").count() === 3L)
       // and a later merge apply composes on top of the delete version
-      EventStreams.applyChangesetBucketed(
-        chg((2L, 9.00)), 4L, target, prefix, buckets = 4)
+      EventStreams.applyChangeset(
+        chg((2L, 9.00)), 4L, target, Bucketed(prefix, 4))
       val v4 = spark.read.parquet(s"$target/v4")
         .filter(col("user_id") === 2L).collect()
       assert(v4.length === 1 && v4.head.getLong(1) === 1L &&
@@ -188,19 +193,19 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
     val decoy = java.nio.file.Files.createTempDirectory("vd-decoy").toString
     try {
       val honest = EventStreams.versionDiff(spark, target, 0L, 2L,
-        tablePrefix = Some(prefix)).orderBy(col("user_id")).collect()
+        Bucketed(prefix, 4)).orderBy(col("user_id")).collect()
       // replace v2's entry with one pointing at a DIFFERENT store's dir
       // (two stores sharing a prefix / a rebuilt store at a new path) —
       // the diff must detect the location mismatch and read the
       // committed dir, not the decoy
-      EventStreams.applyChangesetBucketed(
-        chg((99L, 9.99)), 2L, decoy, "vd_t7_decoy", buckets = 4)
+      EventStreams.applyChangeset(
+        chg((99L, 9.99)), 2L, decoy, Bucketed("vd_t7_decoy", 4))
       spark.sql(s"DROP TABLE IF EXISTS ${prefix}_v2")
       spark.sql(s"""CREATE TABLE ${prefix}_v2 (user_id BIGINT,
         n_events BIGINT, cents BIGINT) USING PARQUET CLUSTERED BY (user_id)
         SORTED BY (user_id) INTO 4 BUCKETS LOCATION '$decoy/v2'""")
       val guarded = EventStreams.versionDiff(spark, target, 0L, 2L,
-        tablePrefix = Some(prefix)).orderBy(col("user_id")).collect()
+        Bucketed(prefix, 4)).orderBy(col("user_id")).collect()
       assert(guarded.map(_.toString).toSeq === honest.map(_.toString).toSeq)
     } finally {
       (0 to 2).foreach { i =>
@@ -217,7 +222,7 @@ class VersionDiffSpec extends AnyFunSuite with BeforeAndAfterAll {
     // below the first committed version can fail; commit v1 only and
     // pin the old side at 0
     val t2 = java.nio.file.Files.createTempDirectory("vd-empty").toString
-    EventStreams.applyChangesetBucketed(chg((1L, 1.0)), 1L, t2, "vd_t4b", 4)
+    EventStreams.applyChangeset(chg((1L, 1.0)), 1L, t2, Bucketed("vd_t4b", 4))
     try {
       val e = intercept[IllegalArgumentException] {
         EventStreams.versionDiff(spark, t2, 0L, 1L)
