@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
 
@@ -19,7 +20,7 @@ final case class OsmHeader(
     replicationBaseUrl: Option[String])
 
 /** Decodes OSM PBF payloads (the uncompressed output of [[Blobs.decode]])
-  * into Spark [[Row]]s of [[OsmSchema.schema]].
+  * into [[ColumnSink]] appends of the [[OsmSchema.schema]] fields.
   *
   * Semantics mirror the reference exactly:
   *  - coords: degrees = 1e-9 × (offset + granularity × raw)
@@ -34,13 +35,17 @@ final case class OsmHeader(
   *  - relation member roles with invalid UTF-8 → null role
   *    (sink.rs:251-260 `.role().ok()`)
   *  - node id is sint64 (zigzag), way/relation ids are int64 (plain)
+  *
+  * [[decode]] is the one emit path: each primitive group goes to the sink
+  * of its element kind. The transcode appends straight into its parquet
+  * leaves; [[rows]] builds the scan's rows from the same appends.
   */
 object BlockDecoder {
 
   /** Column-pruning projection for the scan (DataSourceV2
     * `SupportsPushDownRequiredColumns`): columns not required skip their
-    * decode-side allocation entirely — the Spark-native version of the
-    * reference's lazy decode (blob.rs:92-113). `types` prunes whole
+    * decode work entirely — the Spark-native version of the reference's
+    * lazy decode (blob.rs:92-113). `types` prunes whole
     * primitive groups when a `type = …` predicate is pushed down, the
     * analog of the reference's known-empty blob skip (indexed.rs:275-300).
     */
@@ -58,34 +63,51 @@ object BlockDecoder {
 
   val FullProjection: Projection = Projection()
 
-  /** PrimitiveBlock → element rows. Field order in the wire format puts
-    * granularity (17-20) after the groups (2), so we collect group spans
-    * first and decode them once the block-level scalars are known.
-    */
+  /** PrimitiveBlock → element rows. */
   def decodeBlock(payload: Array[Byte]): Iterator[Row] =
     decodeBlock(payload, FullProjection)
 
-  /** Row view of the decode — convenience for tests and library users;
-    * the scan path uses [[decodeBlockInternal]] (no conversion layer). */
+  /** Row view of the decode — convenience for tests and library users. */
   def decodeBlock(payload: Array[Byte], proj: Projection): Iterator[Row] = {
     val conv = CatalystTypeConverters.createToScalaConverter(OsmSchema.schemaFor(proj.wayLocs))
     decodeBlockInternal(payload, proj).map(r => conv(r).asInstanceOf[Row])
   }
 
-  /** PrimitiveBlock → InternalRows: decode writes Catalyst's own runtime
-    * formats (UTF8String, ArrayBasedMapData, epoch-micros) directly — no
-    * per-row converter between the decoder and the parquet writer, which
-    * is worth ~10x transcode throughput vs an external-Row path. */
+  /** PrimitiveBlock → InternalRows of the source schema (13 columns, 14
+    * with `wayLocs`), in Catalyst's own runtime formats (UTF8String,
+    * ArrayBasedMapData, epoch-micros). */
   def decodeBlockInternal(payload: Array[Byte], proj: Projection): Iterator[InternalRow] =
-    decodeBlockInternal(payload, proj, reuseDense = false)
+    rows(payload, proj, OsmSchema.schemaFor(proj.wayLocs))
 
-  /** `reuseDense = true` yields dense-node rows through ONE mutable
-    * `SpecificInternalRow` (primitive slots — no per-row allocation, no
-    * per-field boxing). ONLY safe when the caller consumes each row
-    * before requesting the next (the transcode's write loop); any
-    * consumer that buffers rows must use the allocating overload. */
-  def decodeBlockInternal(payload: Array[Byte], proj: Projection,
-                          reuseDense: Boolean): Iterator[InternalRow] = {
+  /** PrimitiveBlock → InternalRows holding `schema`'s columns (any of the
+    * source schema's, in any order), built one primitive group at a time;
+    * every row is an independent object. */
+  def rows(payload: Array[Byte], proj: Projection, schema: StructType): Iterator[InternalRow] = {
+    val b = parse(payload)
+    val out = new RowSink(schema)
+    b.groups.iterator.flatMap { g =>
+      out.rows = new ArrayBuffer[InternalRow]
+      emitGroup(g, b.ctx, proj, out)
+      out.rows.iterator
+    }
+  }
+
+  /** PrimitiveBlock → appends into `out`, group by group. Returns the
+    * number of elements emitted. */
+  def decode(payload: Array[Byte], proj: Projection, out: ColumnSinks): Int = {
+    val b = parse(payload)
+    out.block()
+    var n = 0
+    b.groups.foreach(g => n += emitGroup(g, b.ctx, proj, out))
+    n
+  }
+
+  private final class ParsedBlock(val ctx: BlockCtx, val groups: ArrayBuffer[ProtoReader])
+
+  /** Field order in the wire format puts granularity (17-20) after the
+    * groups (2), so the group spans are collected first and decoded once
+    * the block-level scalars are known. */
+  private def parse(payload: Array[Byte]): ParsedBlock = {
     val r = new ProtoReader(payload)
     var stringTable: Array[UTF8String] = Array.empty
     val groups = ArrayBuffer.empty[ProtoReader]
@@ -110,33 +132,13 @@ object BlockDecoder {
           }
       }
     }
-    val ctx = new BlockCtx(stringTable, granularity, latOffset, lonOffset, dateGranularity)
-    groups.iterator.flatMap(g => decodeGroup(g, ctx, proj, reuseDense))
+    new ParsedBlock(new BlockCtx(stringTable, granularity, latOffset, lonOffset, dateGranularity), groups)
   }
 
-  private val TypeNodeU = UTF8String.fromString(OsmSchema.TypeNode)
-  private val TypeWayU = UTF8String.fromString(OsmSchema.TypeWay)
-  private val TypeRelationU = UTF8String.fromString(OsmSchema.TypeRelation)
+  private val TypeU = Array(OsmSchema.TypeNode, OsmSchema.TypeWay, OsmSchema.TypeRelation)
+    .map(UTF8String.fromString)
   private val EmptyTags = new ArrayBasedMapData(new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array.empty[Any]))
   private val EmptyUser = UTF8String.fromString("")
-
-  @inline private def row13(id: Long, tags: Any, lat: Any, lon: Any, nds: Any,
-      members: Any, changeset: Any, tsMicros: Any, uid: Any, user: Any,
-      version: Any, visible: Any, tpe: UTF8String): InternalRow =
-    new GenericInternalRow(Array[Any](id, tags, lat, lon, nds, members,
-      changeset, tsMicros, uid, user, version, visible, tpe))
-
-  /** 13-col row, plus the trailing `node_locations` slot when the
-    * wayLocations projection is active (null for non-way rows). */
-  @inline private def mkRow(proj: Projection, id: Long, tags: Any, lat: Any,
-      lon: Any, nds: Any, members: Any, changeset: Any, tsMicros: Any,
-      uid: Any, user: Any, version: Any, visible: Any, tpe: UTF8String,
-      locs: Any): InternalRow =
-    if (!proj.wayLocs)
-      row13(id, tags, lat, lon, nds, members, changeset, tsMicros, uid, user,
-        version, visible, tpe)
-    else new GenericInternalRow(Array[Any](id, tags, lat, lon, nds, members,
-      changeset, tsMicros, uid, user, version, visible, tpe, locs))
 
   /** StringTable: repeated bytes s = 1. Invalid UTF-8 entries decode to
     * null so tag/role lookups can drop them like the reference (UTF8String
@@ -169,97 +171,77 @@ object BlockDecoder {
       if (idx >= 0 && idx < strings.length) strings(idx) else null
   }
 
-  /** Input-ordered tag map (ArrayBasedMapData preserves array order, like
-    * the reference's Arrow map builder); pairs whose key or value is
-    * invalid UTF-8 (null in the string table) are dropped. */
-  private def tags(keys: Array[Long], vals: Array[Long], ctx: BlockCtx): ArrayBasedMapData = {
+  /** Input-ordered tag pairs; pairs whose key or value is invalid UTF-8
+    * (null in the string table) are dropped. */
+  private def emitTags(keys: Array[Long], vals: Array[Long], ctx: BlockCtx, s: ColumnSink): Unit = {
     val n = math.min(keys.length, vals.length)
-    if (n == 0) return EmptyTags
-    val ks = new ArrayBuffer[Any](n)
-    val vs = new ArrayBuffer[Any](n)
     var i = 0
     while (i < n) {
-      val k = ctx.string(keys(i).toInt)
-      val v = ctx.string(vals(i).toInt)
-      if (k != null && v != null) { ks += k; vs += v }
+      val k = keys(i).toInt; val v = vals(i).toInt
+      val ks = ctx.string(k); val vs = ctx.string(v)
+      if (ks != null && vs != null) s.tag(k, ks, v, vs)
       i += 1
     }
-    new ArrayBasedMapData(new GenericArrayData(ks.toArray), new GenericArrayData(vs.toArray))
   }
 
   /** PrimitiveGroup: nodes=1, dense=2, ways=3, relations=4. Groups of a
     * type excluded by a pushed `type` predicate are skipped without decode.
-    *
-    * Sparse elements decode eagerly (they are <11% of a planet mix);
-    * dense-node groups return a LAZY iterator that decodes one node per
-    * `next()` — no intermediate row buffer for the 89% case, and the
-    * prerequisite for the reused-row transcode path. */
-  private def decodeGroup(r: ProtoReader, ctx: BlockCtx, proj: Projection,
-                          reuseDense: Boolean): Iterator[InternalRow] = {
-    val parts = ArrayBuffer.empty[AnyRef] // InternalRow | Iterator[InternalRow]
+    * Each element is parsed whole, then emitted, so a corrupt element
+    * fails before any of its appends. */
+  private def emitGroup(r: ProtoReader, ctx: BlockCtx, proj: Projection, out: ColumnSinks): Int = {
     val wantNode = proj.types(OsmSchema.TypeNode)
     val wantWay = proj.types(OsmSchema.TypeWay)
     val wantRel = proj.types(OsmSchema.TypeRelation)
+    var n = 0
     while (r.hasNext) {
       val tag = r.readTag()
       (tag: @annotation.switch) match {
-        case 0x0a => if (wantNode) parts += decodeNode(r.readMessage(), ctx, proj) else r.skip(2)
-        case 0x12 => if (wantNode) parts += decodeDense(r.readMessage(), ctx, proj, reuseDense) else r.skip(2)
-        case 0x1a => if (wantWay) parts += decodeWay(r.readMessage(), ctx, proj, reuseDense) else r.skip(2)
-        case 0x22 => if (wantRel) parts += decodeRelation(r.readMessage(), ctx, proj) else r.skip(2)
+        case 0x0a => if (wantNode) { emitNode(r.readMessage(), ctx, proj, out.sink(0)); n += 1 } else r.skip(2)
+        case 0x12 => if (wantNode) n += emitDense(r.readMessage(), ctx, proj, out.sink(0)) else r.skip(2)
+        case 0x1a => if (wantWay) { emitWay(r.readMessage(), ctx, proj, out.sink(1)); n += 1 } else r.skip(2)
+        case 0x22 => if (wantRel) { emitRelation(r.readMessage(), ctx, proj, out.sink(2)); n += 1 } else r.skip(2)
         case t => r.skip(t & 7)
       }
     }
-    parts.iterator.flatMap {
-      case it: Iterator[_] => it.asInstanceOf[Iterator[InternalRow]]
-      case row => Iterator.single(row.asInstanceOf[InternalRow])
-    }
+    n
   }
 
   /** Info message: version=1, timestamp=2, changeset=3, uid=4, user_sid=5,
-    * visible=6. Values surface as boxed-or-null per reference Option
-    * semantics; `userOrEmpty` applies the sparse-element "" fallback.
-    */
-  private final class SparseInfo {
-    var version: Integer = null
-    var timestampMs: java.lang.Long = null
-    var changeset: java.lang.Long = null
-    var uid: Integer = null
-    var userSid: Int = -1
-    var visible: Boolean = true
-
-    def user(ctx: BlockCtx): UTF8String =
-      if (userSid < 0) EmptyUser // absent → "" (sink.rs:183)
-      else { val s = ctx.string(userSid); if (s == null) EmptyUser else s }
-
-    /** epoch-micros (TimestampNTZ internal form) or null. */
-    def tsMicros: Any =
-      if (timestampMs == null) null else timestampMs.longValue() * 1000L
-  }
-
-  private def decodeInfo(r: ProtoReader, ctx: BlockCtx): SparseInfo = {
-    val info = new SparseInfo
-    while (r.hasNext) {
-      val tag = r.readTag()
+    * visible=6; the last message of the element wins. A sparse element
+    * always has user ("" when absent) and visible (default true); `m` is
+    * null when the element has no info or the projection skips it. */
+  private def emitInfo(m: ProtoReader, ctx: BlockCtx, s: ColumnSink): Unit = {
+    var has = 0
+    var version, uid, userSid = 0
+    var ts, changeset = 0L
+    var visible = true
+    if (m != null) while (m.hasNext) {
+      val tag = m.readTag()
       (tag >>> 3) match {
-        case 1 => info.version = r.readVarint().toInt
-        case 2 => info.timestampMs = ctx.millis(r.readVarint())
-        case 3 => info.changeset = r.readVarint()
-        case 4 => info.uid = r.readVarint().toInt
-        case 5 => info.userSid = r.readVarint().toInt
-        case 6 => info.visible = r.readVarint() != 0
-        case _ => r.skip(tag & 7)
+        case 1 => version = m.readVarint().toInt; has |= 1
+        case 2 => ts = ctx.millis(m.readVarint()); has |= 2
+        case 3 => changeset = m.readVarint(); has |= 4
+        case 4 => uid = m.readVarint().toInt; has |= 8
+        case 5 => userSid = m.readVarint().toInt; has |= 16
+        case 6 => visible = m.readVarint() != 0
+        case _ => m.skip(tag & 7)
       }
     }
-    info
+    if ((has & 1) != 0) s.version(version)
+    if ((has & 2) != 0) s.timestamp(ts * 1000L)
+    if ((has & 4) != 0) s.changeset(changeset)
+    if ((has & 8) != 0) s.uid(uid)
+    val user = if ((has & 16) != 0) ctx.string(userSid) else null
+    if (user == null) s.user(-1, EmptyUser) else s.user(userSid, user)
+    s.visible(visible)
   }
 
   /** Node: id=1 sint64, keys=2, vals=3, info=4, lat=8 sint64, lon=9 sint64. */
-  private def decodeNode(r: ProtoReader, ctx: BlockCtx, proj: Projection): InternalRow = {
+  private def emitNode(r: ProtoReader, ctx: BlockCtx, proj: Projection, s: ColumnSink): Unit = {
     var id = 0L
     var keys: Array[Long] = Array.empty
     var vals: Array[Long] = Array.empty
-    var info = new SparseInfo
+    var info: ProtoReader = null
     var lat = 0L
     var lon = 0L
     while (r.hasNext) {
@@ -268,28 +250,25 @@ object BlockDecoder {
         case 1 => id = r.readZigzag()
         case 2 => if (proj.tags) keys = appendVarints(keys, r, tag) else r.skip(tag & 7)
         case 3 => if (proj.tags) vals = appendVarints(vals, r, tag) else r.skip(tag & 7)
-        case 4 => if (proj.info) info = decodeInfo(r.readMessage(), ctx) else r.skip(2)
+        case 4 => if (proj.info) info = r.readMessage() else r.skip(2)
         case 8 => lat = r.readZigzag()
         case 9 => lon = r.readZigzag()
         case _ => r.skip(tag & 7)
       }
     }
-    mkRow(proj, id, if (proj.tags) tags(keys, vals, ctx) else null,
-      if (proj.coords) ctx.coord(ctx.latOffset, lat) else null,
-      if (proj.coords) ctx.coord(ctx.lonOffset, lon) else null,
-      null, null, info.changeset, info.tsMicros,
-      info.uid, info.user(ctx), info.version, Boolean.box(info.visible),
-      TypeNodeU, null)
+    s.id(id)
+    emitTags(keys, vals, ctx, s)
+    if (proj.coords) { s.lat(ctx.coord(ctx.latOffset, lat)); s.lon(ctx.coord(ctx.lonOffset, lon)) }
+    emitInfo(info, ctx, s)
+    s.end()
   }
 
   /** DenseNodes: id=1Δ, denseinfo=5, lat=8Δ, lon=9Δ, keys_vals=10.
     * The running-sum delta decode is inherently sequential per blob —
     * exactly why the parallelism unit is the blob (dense.rs:148-151).
-    * Field parse is eager (packed arrays); row production is LAZY — one
-    * node per `next()`, with all delta accumulators as iterator state.
+    * Field parse is eager (packed arrays); then one pass emits the nodes.
     */
-  private def decodeDense(r: ProtoReader, ctx: BlockCtx, proj: Projection,
-                          reuse: Boolean): Iterator[InternalRow] = {
+  private def emitDense(r: ProtoReader, ctx: BlockCtx, proj: Projection, s: ColumnSink): Int = {
     var ids: Array[Long] = Array.empty
     var lats: Array[Long] = Array.empty
     var lons: Array[Long] = Array.empty
@@ -300,35 +279,21 @@ object BlockDecoder {
       (tag >>> 3) match {
         case 1 => ids = appendZigzags(ids, r, tag)
         case 5 => if (proj.info) di = decodeDenseInfo(r.readMessage()) else r.skip(2)
-        // pruned coords skip the packed parse AND the per-row delta+double
-        // work below — the column-pruning claim the DSv2 scaladoc makes,
-        // now actually wired (proj.coords was a dead flag through r14)
+        // pruned coords skip the packed parse and the per-node delta and
+        // double work below
         case 8 => if (proj.coords) lats = appendZigzags(lats, r, tag) else r.skip(tag & 7)
         case 9 => if (proj.coords) lons = appendZigzags(lons, r, tag) else r.skip(tag & 7)
         case 10 => if (proj.tags) keysVals = appendVarints(keysVals, r, tag) else r.skip(tag & 7)
         case _ => r.skip(tag & 7)
       }
     }
-    new DenseRows(ids, lats, lons, keysVals, di, ctx, proj, reuse)
-  }
-
-  /** The dense-node hot loop as an iterator. With `reuse` every call to
-    * `next()` returns the SAME `SpecificInternalRow` refilled in place —
-    * primitive slots, so the 89%-of-planet path does zero per-row
-    * allocation and zero boxing for id/coords/info fields (the map object
-    * still allocates only for tagged nodes, ~1-10% of dense nodes). */
-  private final class DenseRows(ids: Array[Long], lats: Array[Long],
-      lons: Array[Long], keysVals: Array[Long], di: DenseInfoArrays,
-      ctx: BlockCtx, proj: Projection, reuse: Boolean)
-      extends Iterator[InternalRow] {
-    private[this] val n = ids.length
-    private[this] val width = if (proj.wayLocs) 14 else 13
+    val n = ids.length
     // ALL five delta arrays must cover every node — gating on version
     // alone let a corrupt payload with a full version array but a short
     // timestamp/changeset/uid/userSid array escape as an
     // ArrayIndexOutOfBounds from the accumulator reads (found by
     // DecodeFuzzSpec); visible is individually length-guarded at use
-    private[this] val hasInfo = di != null && di.version.length == n &&
+    val hasInfo = di != null && di.version.length == n &&
       di.timestamp.length == n && di.changeset.length == n &&
       di.uid.length == n && di.userSid.length == n
     // Dense-node coords are MANDATORY per the PBF spec: when coords are
@@ -341,80 +306,43 @@ object BlockDecoder {
         (lats.length != n || lons.length != n))
       throw new PbfFormatException(
         s"DenseNodes coord arrays mismatch ids: ids=$n lats=${lats.length} lons=${lons.length}")
-    private[this] val hasCoords = lats.length == n && lons.length == n
-    private[this] val target: InternalRow =
-      if (reuse) {
-        val t = new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(
-          OsmSchema.schemaFor(proj.wayLocs).fields.map(_.dataType).toIndexedSeq)
-        // constant across all dense rows
-        t.update(12, TypeNodeU)
-        t.setNullAt(4); t.setNullAt(5) // nds, members
-        if (width == 14) t.setNullAt(13)
-        t
-      } else null
-    private[this] var i = 0
-    private[this] var id = 0L; private[this] var lat = 0L; private[this] var lon = 0L
-    private[this] var ts = 0L; private[this] var cs = 0L
-    private[this] var uid = 0L; private[this] var usid = 0L
-    private[this] var kv = 0 // cursor into keys_vals
-    // reusable tag scratch (grown on demand, trimmed per node at emit)
-    private[this] var ks = new Array[Any](8)
-    private[this] var vs = new Array[Any](8)
-
-    override def hasNext: Boolean = i < n
-
-    override def next(): InternalRow = {
+    val hasCoords = lats.length == n && lons.length == n
+    var id, lat, lon, ts, cs, uid, usid = 0L
+    var kv = 0 // cursor into keys_vals
+    var i = 0
+    while (i < n) {
       id += ids(i)
-      if (hasCoords) { lat += lats(i); lon += lons(i) }
+      s.id(id)
       // 0-delimited (key,val) pairs for this node (dense.rs:153-163)
-      var nk = 0
       while (kv < keysVals.length && keysVals(kv) != 0L) {
-        val k = ctx.string(keysVals(kv).toInt)
-        val v = if (kv + 1 < keysVals.length) ctx.string(keysVals(kv + 1).toInt) else null
-        if (k != null && v != null) {
-          if (nk == ks.length) {
-            ks = java.util.Arrays.copyOf(ks.asInstanceOf[Array[AnyRef]], nk * 2).asInstanceOf[Array[Any]]
-            vs = java.util.Arrays.copyOf(vs.asInstanceOf[Array[AnyRef]], nk * 2).asInstanceOf[Array[Any]]
-          }
-          ks(nk) = k; vs(nk) = v; nk += 1
-        }
+        val k = keysVals(kv).toInt
+        val ks = ctx.string(k)
+        val v = if (kv + 1 < keysVals.length) keysVals(kv + 1).toInt else -1
+        val vs = ctx.string(v)
+        if (ks != null && vs != null) s.tag(k, ks, v, vs)
         kv += 2
       }
       if (kv < keysVals.length) kv += 1 // skip the 0 delimiter
-      val m = if (nk == 0) EmptyTags
-        else new ArrayBasedMapData(
-          new GenericArrayData(java.util.Arrays.copyOf(ks.asInstanceOf[Array[AnyRef]], nk)),
-          new GenericArrayData(java.util.Arrays.copyOf(vs.asInstanceOf[Array[AnyRef]], nk)))
-      val row: InternalRow =
-        if (reuse) target
-        else {
-          val g = new GenericInternalRow(width)
-          g.update(12, TypeNodeU)
-          g
-        }
-      row.setLong(0, id)
-      row.update(1, m)
       if (hasCoords) {
-        row.setDouble(2, ctx.coord(ctx.latOffset, lat))
-        row.setDouble(3, ctx.coord(ctx.lonOffset, lon))
-      } else { row.setNullAt(2); row.setNullAt(3) }
+        lat += lats(i); lon += lons(i)
+        s.lat(ctx.coord(ctx.latOffset, lat))
+        s.lon(ctx.coord(ctx.lonOffset, lon))
+      }
+      // no DenseInfo: every info column null, including user & visible
       if (hasInfo) {
         ts += di.timestamp(i); cs += di.changeset(i); uid += di.uid(i); usid += di.userSid(i)
-        val user = { val s = ctx.string(usid.toInt); if (s == null) EmptyUser else s }
-        row.setLong(6, cs)
-        row.setLong(7, ctx.millis(ts) * 1000L)
-        row.setInt(8, uid.toInt)
-        row.update(9, user)
-        row.setInt(10, di.version(i).toInt)
-        row.setBoolean(11, if (di.visible.length > i) di.visible(i) else true)
-      } else {
-        // no DenseInfo: every info column null, including user & visible
-        row.setNullAt(6); row.setNullAt(7); row.setNullAt(8)
-        row.setNullAt(9); row.setNullAt(10); row.setNullAt(11)
+        s.changeset(cs)
+        s.timestamp(ctx.millis(ts) * 1000L)
+        s.uid(uid.toInt)
+        val user = ctx.string(usid.toInt)
+        if (user == null) s.user(-1, EmptyUser) else s.user(usid.toInt, user)
+        s.version(di.version(i).toInt)
+        s.visible(if (di.visible.length > i) di.visible(i) else true)
       }
+      s.end()
       i += 1
-      row
     }
+    n
   }
 
   private final class DenseInfoArrays(
@@ -458,12 +386,11 @@ object BlockDecoder {
     * `wayLocs` is on. A way without the arrays yields an EMPTY array,
     * mirroring the reference library's empty iterator
     * (elements.rs:201-216). */
-  private def decodeWay(r: ProtoReader, ctx: BlockCtx, proj: Projection,
-                        reuse: Boolean = false): InternalRow = {
+  private def emitWay(r: ProtoReader, ctx: BlockCtx, proj: Projection, s: ColumnSink): Unit = {
     var id = 0L
     var keys: Array[Long] = Array.empty
     var vals: Array[Long] = Array.empty
-    var info = new SparseInfo
+    var info: ProtoReader = null
     var refs: Array[Long] = Array.empty
     var dlats: Array[Long] = Array.empty
     var dlons: Array[Long] = Array.empty
@@ -473,7 +400,7 @@ object BlockDecoder {
         case 1 => id = r.readVarint()
         case 2 => if (proj.tags) keys = appendVarints(keys, r, tag) else r.skip(tag & 7)
         case 3 => if (proj.tags) vals = appendVarints(vals, r, tag) else r.skip(tag & 7)
-        case 4 => if (proj.info) info = decodeInfo(r.readMessage(), ctx) else r.skip(2)
+        case 4 => if (proj.info) info = r.readMessage() else r.skip(2)
         case 8 => if (proj.nds) refs = appendZigzags(refs, r, tag) else r.skip(tag & 7)
         // lat/lon must accept BOTH encodings of a packed-declared field
         // (protobuf spec: parsers handle packed and expanded, repeats
@@ -486,89 +413,138 @@ object BlockDecoder {
         case _ => r.skip(tag & 7)
       }
     }
-    // delta decode refs (elements.rs:332-348) in place
-    var acc = 0L
-    var i = 0
-    while (i < refs.length) { acc += refs(i); refs(i) = acc; i += 1 }
-    // reuse (transcode): a primitive-long-backed struct-array view — no
-    // per-ref struct allocation/boxing; otherwise real independent structs
-    val nds: Any =
-      if (!proj.nds) null
-      else if (reuse) new RefStructArray(refs)
-      else {
-        val out = new Array[Any](refs.length)
-        var j = 0
-        while (j < refs.length) { out(j) = new GenericInternalRow(Array[Any](refs(j))); j += 1 }
-        new GenericArrayData(out)
-      }
-    var locs: Any = null
+    s.id(id)
+    emitTags(keys, vals, ctx, s)
+    if (proj.nds) {
+      // delta decode refs (elements.rs:332-348) in place
+      var acc = 0L
+      var i = 0
+      while (i < refs.length) { acc += refs(i); refs(i) = acc; i += 1 }
+      s.refs(refs, refs.length)
+    }
     if (proj.wayLocs) {
       // same running-sum + coordinate math as the node decode
       // (elements.rs:405-412: offset + granularity × cumulative, ×1e-9)
       val n = math.min(dlats.length, dlons.length)
-      val out = new Array[Any](n)
-      var clat = 0L
-      var clon = 0L
+      val lats = new Array[Double](n)
+      val lons = new Array[Double](n)
+      var clat, clon = 0L
       var j = 0
       while (j < n) {
-        clat += dlats(j)
-        clon += dlons(j)
-        out(j) = new GenericInternalRow(Array[Any](
-          ctx.coord(ctx.latOffset, clat), ctx.coord(ctx.lonOffset, clon)))
+        clat += dlats(j); clon += dlons(j)
+        lats(j) = ctx.coord(ctx.latOffset, clat)
+        lons(j) = ctx.coord(ctx.lonOffset, clon)
         j += 1
       }
-      locs = new GenericArrayData(out)
+      s.locations(lats, lons, n)
     }
-    mkRow(proj, id, if (proj.tags) tags(keys, vals, ctx) else null, null, null,
-      nds, null, info.changeset,
-      info.tsMicros, info.uid, info.user(ctx), info.version, Boolean.box(info.visible),
-      TypeWayU, locs)
+    emitInfo(info, ctx, s)
+    s.end()
   }
 
-  /** `array<struct<ref:long>>` view over a primitive long array with a
-    * REUSED per-element struct holder — the transcode-only representation
-    * of a way's `nds` (the write support reads elements strictly
-    * sequentially). `copy()` materializes real independent structs for
-    * any consumer that buffers. */
-  private final class RefStructArray(refs: Array[Long])
-      extends org.apache.spark.sql.catalyst.util.ArrayData {
-    private[this] val holder =
-      new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(
-        Seq[org.apache.spark.sql.types.DataType](org.apache.spark.sql.types.LongType))
-    override def numElements(): Int = refs.length
-    override def getStruct(ordinal: Int, numFields: Int): InternalRow = {
-      holder.setLong(0, refs(ordinal)); holder
+  /** Relation: id=1 int64, keys=2, vals=3, info=4, roles_sid=8, memids=9Δ,
+    * types=10. */
+  private def emitRelation(r: ProtoReader, ctx: BlockCtx, proj: Projection, s: ColumnSink): Unit = {
+    var id = 0L
+    var keys: Array[Long] = Array.empty
+    var vals: Array[Long] = Array.empty
+    var info: ProtoReader = null
+    var rolesSid: Array[Long] = Array.empty
+    var memids: Array[Long] = Array.empty
+    var types: Array[Long] = Array.empty
+    while (r.hasNext) {
+      val tag = r.readTag()
+      (tag >>> 3) match {
+        case 1 => id = r.readVarint()
+        case 2 => if (proj.tags) keys = appendVarints(keys, r, tag) else r.skip(tag & 7)
+        case 3 => if (proj.tags) vals = appendVarints(vals, r, tag) else r.skip(tag & 7)
+        case 4 => if (proj.info) info = r.readMessage() else r.skip(2)
+        case 8 => if (proj.members) rolesSid = appendVarints(rolesSid, r, tag) else r.skip(tag & 7)
+        case 9 => if (proj.members) memids = appendZigzags(memids, r, tag) else r.skip(tag & 7)
+        case 10 => if (proj.members) types = appendVarints(types, r, tag) else r.skip(tag & 7)
+        case _ => r.skip(tag & 7)
+      }
     }
-    override def copy(): org.apache.spark.sql.catalyst.util.ArrayData = {
-      val out = new Array[Any](refs.length)
+    s.id(id)
+    emitTags(keys, vals, ctx, s)
+    if (proj.members) {
+      s.members()
+      val n = math.min(memids.length, math.min(rolesSid.length, types.length))
+      var acc = 0L
       var i = 0
-      while (i < refs.length) { out(i) = new GenericInternalRow(Array[Any](refs(i))); i += 1 }
-      new GenericArrayData(out)
+      while (i < n) {
+        acc += memids(i)
+        val t = types(i).toInt
+        val role = rolesSid(i).toInt
+        // unknown member type and invalid role → null
+        s.member(if (t >= 0 && t < 3) TypeU(t) else null, acc, hasRef = true, role, ctx.string(role))
+        i += 1
+      }
     }
-    override def array: Array[Any] = copy().asInstanceOf[GenericArrayData].array
-    override def isNullAt(ordinal: Int): Boolean = false
-    override def setNullAt(ordinal: Int): Unit = unsupported()
-    override def update(ordinal: Int, value: Any): Unit = unsupported()
-    private def unsupported(): Nothing =
-      throw new UnsupportedOperationException("RefStructArray: struct elements only")
-    override def getBoolean(ordinal: Int): Boolean = unsupported()
-    override def getByte(ordinal: Int): Byte = unsupported()
-    override def getShort(ordinal: Int): Short = unsupported()
-    override def getInt(ordinal: Int): Int = unsupported()
-    override def getLong(ordinal: Int): Long = unsupported()
-    override def getFloat(ordinal: Int): Float = unsupported()
-    override def getDouble(ordinal: Int): Double = unsupported()
-    override def getDecimal(ordinal: Int, precision: Int, scale: Int): org.apache.spark.sql.types.Decimal = unsupported()
-    override def getUTF8String(ordinal: Int): UTF8String = unsupported()
-    override def getBinary(ordinal: Int): Array[Byte] = unsupported()
-    override def getInterval(ordinal: Int): org.apache.spark.unsafe.types.CalendarInterval = unsupported()
-    override def getVariant(ordinal: Int): org.apache.spark.unsafe.types.VariantVal = unsupported()
-    override def getGeography(ordinal: Int): org.apache.spark.unsafe.types.GeographyVal = unsupported()
-    override def getGeometry(ordinal: Int): org.apache.spark.unsafe.types.GeometryVal = unsupported()
-    override def getArray(ordinal: Int): org.apache.spark.sql.catalyst.util.ArrayData = unsupported()
-    override def getMap(ordinal: Int): org.apache.spark.sql.catalyst.util.MapData = unsupported()
-    override def get(ordinal: Int, dataType: org.apache.spark.sql.types.DataType): AnyRef =
-      getStruct(ordinal, 1)
+    emitInfo(info, ctx, s)
+    s.end()
+  }
+
+  /** Builds rows of `schema` from the appends, each field straight into
+    * its slot (a field the schema lacks is dropped), and collects them
+    * into `rows`; `type` comes from the sink the decoder picked. */
+  private final class RowSink(schema: StructType) extends ColumnSink with ColumnSinks {
+    var rows: ArrayBuffer[InternalRow] = _
+    private[this] def slot(name: String): Int = schema.fieldNames.indexOf(name)
+    private[this] val (sId, sTags, sLat, sLon, sNds, sMembers) =
+      (slot("id"), slot("tags"), slot("lat"), slot("lon"), slot("nds"), slot("members"))
+    private[this] val (sChangeset, sTimestamp, sUid, sUser, sVersion, sVisible) =
+      (slot("changeset"), slot("timestamp"), slot("uid"), slot("user"), slot("version"), slot("visible"))
+    private[this] val sType = slot("type")
+    private[this] val sLocs = slot(OsmSchema.NodeLocationsField.name)
+    private[this] var kind = 0
+    private[this] var row: Array[Any] = _
+    private[this] var keys, vals = new Array[AnyRef](8)
+    private[this] var nTags = 0
+    private[this] var nullTags = false
+    private[this] var mems: ArrayBuffer[Any] = _
+
+    override def block(): Unit = ()
+    override def sink(k: Int): ColumnSink = { kind = k; this }
+
+    @inline private def put(slot: Int, v: Any): Unit = if (slot >= 0) row(slot) = v
+
+    override def id(v: Long): Unit = { row = new Array[Any](schema.length); put(sId, v) }
+    override def tag(keySid: Int, key: UTF8String, valueSid: Int, value: UTF8String): Unit =
+      if (sTags >= 0) {
+        if (nTags == keys.length) {
+          keys = java.util.Arrays.copyOf(keys, nTags * 2); vals = java.util.Arrays.copyOf(vals, nTags * 2)
+        }
+        keys(nTags) = key; vals(nTags) = value; nTags += 1
+      }
+    override def noTags(): Unit = nullTags = true
+    override def lat(v: Double): Unit = put(sLat, v)
+    override def lon(v: Double): Unit = put(sLon, v)
+    override def refs(refs: Array[Long], n: Int): Unit = if (sNds >= 0)
+      put(sNds, new GenericArrayData(Array.tabulate[Any](n)(i => new GenericInternalRow(Array[Any](refs(i))))))
+    override def members(): Unit = mems = new ArrayBuffer[Any]
+    override def member(tpe: UTF8String, ref: Long, hasRef: Boolean, roleSid: Int, role: UTF8String): Unit =
+      mems += new GenericInternalRow(Array[Any](tpe, if (hasRef) ref else null, role))
+    override def changeset(v: Long): Unit = put(sChangeset, v)
+    override def timestamp(micros: Long): Unit = put(sTimestamp, micros)
+    override def uid(v: Int): Unit = put(sUid, v)
+    override def user(sid: Int, v: UTF8String): Unit = put(sUser, v)
+    override def version(v: Int): Unit = put(sVersion, v)
+    override def visible(v: Boolean): Unit = put(sVisible, v)
+    override def locations(lats: Array[Double], lons: Array[Double], n: Int): Unit =
+      put(sLocs, new GenericArrayData(Array.tabulate[Any](n)(i => new GenericInternalRow(Array[Any](lats(i), lons(i))))))
+
+    override def end(): Unit = {
+      put(sTags,
+        if (nullTags) null
+        else if (nTags == 0) EmptyTags
+        else new ArrayBasedMapData(new GenericArrayData(java.util.Arrays.copyOf(keys, nTags)),
+          new GenericArrayData(java.util.Arrays.copyOf(vals, nTags))))
+      if (mems != null) put(sMembers, new GenericArrayData(mems.toArray))
+      put(sType, TypeU(kind))
+      rows += new GenericInternalRow(row)
+      nTags = 0; nullTags = false; mems = null
+    }
   }
 
   /** Packed-declared sint64 field occurrence: wire 2 = packed payload,
@@ -593,48 +569,7 @@ object BlockDecoder {
       if (cur.isEmpty) nw else cur ++ nw
     } else cur :+ r.readVarint()
 
-  private val MemberTypes = Array(TypeNodeU, TypeWayU, TypeRelationU)
 
-  /** Relation: id=1 int64, keys=2, vals=3, info=4, roles_sid=8, memids=9Δ,
-    * types=10. */
-  private def decodeRelation(r: ProtoReader, ctx: BlockCtx, proj: Projection): InternalRow = {
-    var id = 0L
-    var keys: Array[Long] = Array.empty
-    var vals: Array[Long] = Array.empty
-    var info = new SparseInfo
-    var rolesSid: Array[Long] = Array.empty
-    var memids: Array[Long] = Array.empty
-    var types: Array[Long] = Array.empty
-    while (r.hasNext) {
-      val tag = r.readTag()
-      (tag >>> 3) match {
-        case 1 => id = r.readVarint()
-        case 2 => if (proj.tags) keys = appendVarints(keys, r, tag) else r.skip(tag & 7)
-        case 3 => if (proj.tags) vals = appendVarints(vals, r, tag) else r.skip(tag & 7)
-        case 4 => if (proj.info) info = decodeInfo(r.readMessage(), ctx) else r.skip(2)
-        case 8 => if (proj.members) rolesSid = appendVarints(rolesSid, r, tag) else r.skip(tag & 7)
-        case 9 => if (proj.members) memids = appendZigzags(memids, r, tag) else r.skip(tag & 7)
-        case 10 => if (proj.members) types = appendVarints(types, r, tag) else r.skip(tag & 7)
-        case _ => r.skip(tag & 7)
-      }
-    }
-    val n = math.min(memids.length, math.min(rolesSid.length, types.length))
-    val members = new Array[Any](n)
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += memids(i)
-      val t = types(i).toInt
-      val typeStr = if (t >= 0 && t < 3) MemberTypes(t) else null
-      // invalid role → null
-      members(i) = new GenericInternalRow(Array[Any](typeStr, acc, ctx.string(rolesSid(i).toInt)))
-      i += 1
-    }
-    mkRow(proj, id, if (proj.tags) tags(keys, vals, ctx) else null, null, null, null,
-      if (proj.members) new GenericArrayData(members) else null, info.changeset,
-      info.tsMicros, info.uid, info.user(ctx), info.version, Boolean.box(info.visible),
-      TypeRelationU, null)
-  }
 
   /** Per-blob min/max element ids — the zone map the reference's
     * IndexedReader records per blob (indexed.rs:36-44, 174-225).

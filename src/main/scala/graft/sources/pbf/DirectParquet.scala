@@ -24,6 +24,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.annotation.nowarn
 
@@ -33,13 +34,15 @@ import scala.annotation.nowarn
   * and encodes each column in one pass (osm-pbf-parquet/src/sink.rs:29-44,
   * 134-153). This is the Spark-side equivalent, in two steps:
   *
-  *  1. Buffer. `ColumnarWriter.write(row)` shreds the decoder's
-  *     `InternalRow` into the 15 leaf columns of the fixed OSM schema, with
-  *     hand-derived repetition/definition levels, and only APPENDS: each
-  *     leaf keeps its (rep, def) levels and its non-null values in
-  *     primitive arrays. No encoder runs per row. Spark's DataFrame writer
-  *     (UnsafeRow conversion, the round-1 ~4x writer floor) and parquet-mr's
-  *     `MessageColumnIO` record assembly are both bypassed.
+  *  1. Buffer. `ColumnarWriter` is a [[ColumnSink]]: the decoder appends
+  *     each element's fields straight into the 15 leaf columns of the
+  *     fixed OSM schema, with hand-derived repetition/definition levels,
+  *     and no row object in between. Each leaf keeps its (rep, def) levels
+  *     and its non-null values in primitive arrays; no encoder runs per
+  *     element. Spark's DataFrame writer (UnsafeRow conversion, the round-1
+  *     ~4x writer floor) and parquet-mr's `MessageColumnIO` record assembly
+  *     are both bypassed. `write(row)` feeds a Catalyst row through the
+  *     same appends.
   *  2. Drain. Whenever a size is needed (parquet-mr's page size check,
   *     the row-group size check, the rotation size probe, a flush), every
   *     leaf drains its buffer in one typed loop into the objects parquet-mr's
@@ -56,9 +59,9 @@ import scala.annotation.nowarn
   * as its oracle). Three encoder kernels write the same bytes as the
   * stock writers they replace. Through one [[ValuesWriterFactory]]: a
   * little-endian PLAIN writer into one `byte[]` for the dictionary-off
-  * INT64/DOUBLE leaves, and a binary dictionary writer that remembers each
-  * string-table array's dictionary id. In the leaves: a level writer that
-  * takes the buffered runs of equal levels whole.
+  * INT64/DOUBLE leaves, and a binary dictionary writer that remembers the
+  * dictionary id of each string-table index of the current block. In the
+  * leaves: a level writer that takes the buffered runs of equal levels whole.
   *
   * Schema layout matches what Spark's own parquet writer emits (standard
   * 3-level LIST / key_value MAP, TIMESTAMP(MICROS, isAdjustedToUTC=false)),
@@ -204,32 +207,39 @@ object DirectParquet {
   }
 
   /** `PlainBinaryDictionaryValuesWriter` that skips the content hash for
-    * arrays it has already seen. Its callers pass `Binary`s over whole,
-    * never-mutated arrays (the decoder's string-table entries); the first
-    * sight of an array takes the stock path, later ones reuse its id. The
-    * memo empties with the dictionary content (and, as a bound on what it
-    * pins, at 64k arrays), so dictionary ids, sizes and fallback decisions
-    * are the stock writer's. */
+    * string-table indices it has already seen in the current block. The
+    * leaf sets `sid` (-1: not a table string) before each `writeBytes`;
+    * the first sight of an index takes the stock path, later ones reuse
+    * its id from an `int[]`. The memo empties at each block (indices then
+    * name other strings) and with the dictionary content, so dictionary
+    * ids, sizes and fallback decisions are the stock writer's. */
   @nowarn("cat=deprecation") // PLAIN_DICTIONARY: the V1 dictionary encoding parquet-mr writes
   private final class MemoBinaryDictionaryWriter(maxDictionaryBytes: Int, allocator: ByteBufferAllocator)
       extends PlainBinaryDictionaryValuesWriter(maxDictionaryBytes,
         Encoding.PLAIN_DICTIONARY, Encoding.PLAIN_DICTIONARY, allocator) {
-    private[this] val memo = new java.util.IdentityHashMap[Array[Byte], Integer]
+    var sid = -1
+    private[this] var ids = new Array[Int](256) // dictionary id + 1 per index; 0 = unseen
+    private[this] var used = 0 // indices below this may be set
 
     override def writeBytes(v: Binary): Unit = {
-      val key = v.getBytesUnsafe
-      val id = memo.get(key)
-      if (id ne null) encodedValues.add(id)
+      val s = sid
+      if (s >= 0 && s < used && ids(s) != 0) encodedValues.add(ids(s) - 1)
       else {
+        val size = binaryDictionaryContent.size
         super.writeBytes(v)
-        if (memo.size >= (1 << 16)) memo.clear()
-        memo.put(key, binaryDictionaryContent.getInt(v))
+        if (s >= 0) {
+          if (s >= ids.length) ids = java.util.Arrays.copyOf(ids, math.max(s + 1, ids.length * 2))
+          ids(s) = 1 + (if (binaryDictionaryContent.size > size) size else binaryDictionaryContent.getInt(v))
+          used = math.max(used, s + 1)
+        }
       }
     }
 
+    def forget(): Unit = { java.util.Arrays.fill(ids, 0, used, 0); used = 0 }
+
     override protected def clearDictionaryContent(): Unit = {
       super.clearDictionaryContent()
-      memo.clear()
+      forget()
     }
   }
 
@@ -343,7 +353,7 @@ object DirectParquet {
     * statistics, page value and row counts). Levels are buffered as runs
     * of one (rep, def) pair, so a leaf that is null or flat for a stretch
     * of rows costs a compare and an increment per row. */
-  private abstract class Leaf(desc: ColumnDescriptor, pages: PageWriter) {
+  private abstract class Leaf(desc: ColumnDescriptor, pages: PageWriter, emptyDef: Int = 0) {
     private[this] val ptype = desc.getPrimitiveType
     private[this] val maxRep = desc.getMaxRepetitionLevel
     private[this] val maxDef = desc.getMaxDefinitionLevel
@@ -368,9 +378,16 @@ object DirectParquet {
     private[this] var pageRowCount = 0
     private[this] var written = 0L
 
+    /** Whether the open element has appended to this leaf, and the def
+      * level it gets if it ends without: 0 (null), or 1 for a map or list
+      * that is present but empty (see [[ColumnarWriter]]). */
+    var touched = false
+    var absentDef = emptyDef
+
     final def addNull(r: Int, d: Int): Unit = level(r, d)
 
     @inline protected[this] final def level(r: Int, d: Int): Unit = {
+      touched = true
       val code = (r << 2) | d
       if (code == lastCode) lastLen += 1
       else {
@@ -379,6 +396,15 @@ object DirectParquet {
         lastLen = 1
       }
     }
+
+    final def endElement(): Unit = {
+      if (!touched) level(0, absentDef)
+      touched = false
+      absentDef = emptyDef
+    }
+
+    /** A new block begins: string-table indices change meaning. */
+    def newBlock(): Unit = ()
 
     private def closeRun(): Unit = {
       if (runs == codes.length) {
@@ -530,23 +556,39 @@ object DirectParquet {
     }
   }
 
-  /** String leaf. Values are the rows' UTF8String byte arrays, held by
-    * reference until the drain: `getBytes` returns a string-table entry's
-    * own array and copies any other (sliced) string. */
-  private final class BinaryLeaf(desc: ColumnDescriptor, pages: PageWriter) extends Leaf(desc, pages) {
+  /** String leaf. Values are UTF8String byte arrays, held by reference
+    * until the drain (`getBytes` returns a string-table entry's own array
+    * and copies any other, sliced, string), each with its string-table
+    * index for the dictionary memo. */
+  private final class BinaryLeaf(desc: ColumnDescriptor, pages: PageWriter, emptyDef: Int = 0)
+      extends Leaf(desc, pages, emptyDef) {
     private[this] var vals = new Array[Array[Byte]](256)
+    private[this] var sids = new Array[Int](256)
+    private[this] val memo = data match {
+      case f: FallbackValuesWriter[_, _] => f.initialWriter match {
+        case m: MemoBinaryDictionaryWriter => m
+        case _ => null
+      }
+      case _ => null
+    }
 
-    def add(v: Array[Byte], r: Int, d: Int): Unit = {
+    def add(v: UTF8String, sid: Int, r: Int, d: Int): Unit = {
       level(r, d)
-      if (nv == vals.length) vals = java.util.Arrays.copyOf(vals, nv * 2)
-      vals(nv) = v
+      if (nv == vals.length) {
+        vals = java.util.Arrays.copyOf(vals, nv * 2); sids = java.util.Arrays.copyOf(sids, nv * 2)
+      }
+      vals(nv) = v.getBytes
+      sids(nv) = sid
       nv += 1
     }
+
+    override def newBlock(): Unit = if (memo ne null) memo.forget()
 
     protected[this] def drainValues(count: Int): Unit = {
       var i = 0
       while (i < count) {
         val b = Binary.fromConstantByteArray(vals(i))
+        if (memo ne null) memo.sid = sids(i)
         data.writeBytes(b)
         stats.updateStats(b)
         vals(i) = null
@@ -555,13 +597,12 @@ object DirectParquet {
     }
   }
 
-  /** One parquet file. `write(row)` shreds the decoder's 13-field
-    * `InternalRow` (field 12 `type` is skipped — the caller routes on it)
-    * into the 15 leaf columns of [[MessageSchema]] and appends to their
-    * buffers; the buffers drain into parquet-mr's encoders at every size
-    * check (see the object header). Strings are held by reference until
-    * the next drain and, in the dictionary memo, until the row group
-    * ends, so their byte arrays must not be mutated after `write`.
+  /** One parquet file, written through its [[ColumnSink]] appends: each
+    * append goes to its leaf columns of [[MessageSchema]], and `end` adds
+    * the levels of every field the element left null. The buffers drain
+    * into parquet-mr's encoders at every size check (see the object
+    * header). Strings are held by reference until the next drain, so
+    * their byte arrays must not be mutated after they are appended.
     *
     * Repetition/definition levels, hand-derived once from the fixed
     * schema (parquet's standard Dremel shredding):
@@ -580,7 +621,7 @@ object DirectParquet {
     */
   final class ColumnarWriter(path: Path, conf: Configuration,
       codec: CompressionCodecName, rowGroupBytes: Long,
-      rowGroupRows: Option[Int]) {
+      rowGroupRows: Option[Int]) extends ColumnSink {
 
     private val fw = new ParquetFileWriter(
       HadoopOutputFile.fromPath(path, conf), MessageSchema,
@@ -603,8 +644,8 @@ object DirectParquet {
     private final class Leaves(pages: ColumnChunkPageWriteStore) {
       private def page(i: Int) = pages.getPageWriter(descriptors.get(i))
       val id = new LongLeaf(descriptors.get(0), page(0))
-      val tagKey = new BinaryLeaf(descriptors.get(1), page(1))
-      val tagValue = new BinaryLeaf(descriptors.get(2), page(2))
+      val tagKey = new BinaryLeaf(descriptors.get(1), page(1), emptyDef = 1)
+      val tagValue = new BinaryLeaf(descriptors.get(2), page(2), emptyDef = 1)
       val lat = new DoubleLeaf(descriptors.get(3), page(3))
       val lon = new DoubleLeaf(descriptors.get(4), page(4))
       val ndRef = new LongLeaf(descriptors.get(5), page(5))
@@ -645,78 +686,60 @@ object DirectParquet {
     }
     newRowGroup()
 
-    def write(row: InternalRow): Unit = try {
+    /** Feeds one 13-field row through the appends (field 12, `type`, is
+      * the caller's routing). */
+    def write(row: InternalRow): Unit = ColumnSink.appendRow(row, this)
+
+    /** A new block begins: drain, then forget the string-index memo. */
+    def block(): Unit = { failed = true; drain(); leaves.all.foreach(_.newBlock()); failed = false }
+
+    // an element begun and not ended marks the writer failed: its
+    // encoders are then in an unknown state, and close() ends the file
+    // without flushing them
+    override def id(v: Long): Unit = { failed = true; leaves.id.add(v, 0, 0) }
+    override def tag(keySid: Int, key: UTF8String, valueSid: Int, value: UTF8String): Unit = {
       val g = leaves
-      g.id.add(row.getLong(0), 0, 0)
+      val r = if (g.tagKey.touched) 1 else 0
+      g.tagKey.add(key, keySid, r, 2)
+      if (value == null) g.tagValue.addNull(r, 2) else g.tagValue.add(value, valueSid, r, 3)
+    }
+    override def noTags(): Unit = { leaves.tagKey.absentDef = 0; leaves.tagValue.absentDef = 0 }
+    override def lat(v: Double): Unit = leaves.lat.add(v, 0, 1)
+    override def lon(v: Double): Unit = leaves.lon.add(v, 0, 1)
+    override def refs(refs: Array[Long], n: Int): Unit = {
+      if (n == 0) leaves.ndRef.addNull(0, 1)
+      var i = 0
+      while (i < n) { leaves.ndRef.add(refs(i), if (i == 0) 0 else 1, 2); i += 1 }
+    }
+    override def members(): Unit = {
+      val g = leaves
+      g.memberType.absentDef = 1; g.memberRef.absentDef = 1; g.memberRole.absentDef = 1
+    }
+    override def member(tpe: UTF8String, ref: Long, hasRef: Boolean, roleSid: Int, role: UTF8String): Unit = {
+      val g = leaves
+      val r = if (g.memberType.touched) 1 else 0
+      if (tpe == null) g.memberType.addNull(r, 2) else g.memberType.add(tpe, -1, r, 3)
+      if (hasRef) g.memberRef.add(ref, r, 3) else g.memberRef.addNull(r, 2)
+      if (role == null) g.memberRole.addNull(r, 2) else g.memberRole.add(role, roleSid, r, 3)
+    }
+    override def changeset(v: Long): Unit = leaves.changeset.add(v, 0, 1)
+    override def timestamp(micros: Long): Unit = leaves.timestamp.add(micros, 0, 1)
+    override def uid(v: Int): Unit = leaves.uid.add(v, 0, 1)
+    override def user(sid: Int, v: UTF8String): Unit = leaves.user.add(v, sid, 0, 1)
+    override def version(v: Int): Unit = leaves.version.add(v, 0, 1)
+    override def visible(v: Boolean): Unit = leaves.visible.add(v, 0, 1)
 
-      if (row.isNullAt(1)) { g.tagKey.addNull(0, 0); g.tagValue.addNull(0, 0) }
-      else {
-        val m = row.getMap(1)
-        val n = m.numElements()
-        if (n == 0) { g.tagKey.addNull(0, 1); g.tagValue.addNull(0, 1) }
-        else {
-          val keys = m.keyArray(); val vals = m.valueArray()
-          var i = 0
-          while (i < n) {
-            val r = if (i == 0) 0 else 1
-            g.tagKey.add(keys.getUTF8String(i).getBytes, r, 2)
-            if (vals.isNullAt(i)) g.tagValue.addNull(r, 2)
-            else g.tagValue.add(vals.getUTF8String(i).getBytes, r, 3)
-            i += 1
-          }
-        }
-      }
-
-      if (row.isNullAt(2)) g.lat.addNull(0, 0) else g.lat.add(row.getDouble(2), 0, 1)
-      if (row.isNullAt(3)) g.lon.addNull(0, 0) else g.lon.add(row.getDouble(3), 0, 1)
-
-      if (row.isNullAt(4)) g.ndRef.addNull(0, 0)
-      else {
-        val a = row.getArray(4)
-        val n = a.numElements()
-        if (n == 0) g.ndRef.addNull(0, 1)
-        else {
-          var i = 0
-          while (i < n) {
-            g.ndRef.add(a.getStruct(i, 1).getLong(0), if (i == 0) 0 else 1, 2)
-            i += 1
-          }
-        }
-      }
-
-      if (row.isNullAt(5)) {
-        g.memberType.addNull(0, 0); g.memberRef.addNull(0, 0); g.memberRole.addNull(0, 0)
-      } else {
-        val a = row.getArray(5)
-        val n = a.numElements()
-        if (n == 0) { g.memberType.addNull(0, 1); g.memberRef.addNull(0, 1); g.memberRole.addNull(0, 1) }
-        else {
-          var i = 0
-          while (i < n) {
-            val s = a.getStruct(i, 3)
-            val r = if (i == 0) 0 else 1
-            if (s.isNullAt(0)) g.memberType.addNull(r, 2) else g.memberType.add(s.getUTF8String(0).getBytes, r, 3)
-            if (s.isNullAt(1)) g.memberRef.addNull(r, 2) else g.memberRef.add(s.getLong(1), r, 3)
-            if (s.isNullAt(2)) g.memberRole.addNull(r, 2) else g.memberRole.add(s.getUTF8String(2).getBytes, r, 3)
-            i += 1
-          }
-        }
-      }
-
-      if (row.isNullAt(6)) g.changeset.addNull(0, 0) else g.changeset.add(row.getLong(6), 0, 1)
-      if (row.isNullAt(7)) g.timestamp.addNull(0, 0) else g.timestamp.add(row.getLong(7), 0, 1)
-      if (row.isNullAt(8)) g.uid.addNull(0, 0) else g.uid.add(row.getInt(8), 0, 1)
-      if (row.isNullAt(9)) g.user.addNull(0, 0) else g.user.add(row.getUTF8String(9).getBytes, 0, 1)
-      if (row.isNullAt(10)) g.version.addNull(0, 0) else g.version.add(row.getInt(10), 0, 1)
-      if (row.isNullAt(11)) g.visible.addNull(0, 0) else g.visible.add(row.getBoolean(11), 0, 1)
-
-      // ColumnWriteStoreBase.endRecord, then the row-group check, in the
-      // order the row-by-row writer ran them
+    /** Levels for the fields the element left out, then
+      * `ColumnWriteStoreBase.endRecord` and the row-group check, in the
+      * order the row-by-row writer ran them. */
+    override def end(): Unit = {
+      val all = leaves.all
+      var i = 0
+      while (i < all.length) { all(i).endElement(); i += 1 }
       rowsInGroup += 1
       if (rowsInGroup >= nextPageCheck) { drain(); pageSizeCheck() }
       if (rowsInGroup >= nextSizeCheck) { drain(); checkRowGroupSize() }
-    } catch {
-      case t: Throwable => failed = true; throw t
+      failed = false
     }
 
     private def drain(): Unit = {
@@ -833,7 +856,8 @@ object DirectParquet {
     * `outputDir/type=<t>/`, rotating files when the in-progress file
     * reaches `fileTargetBytes` (measured from the writer's actual buffered
     * + flushed size — the reference's own feedback loop, sink.rs:82-105)
-    * or `maxRecords`. */
+    * or `maxRecords`. A [[ColumnSink]]: appends go to the open file, and
+    * `id` opens the next one after a rotation. */
   final class RotatingWriter(
       typeDir: Path,
       conf: Configuration,
@@ -842,7 +866,7 @@ object DirectParquet {
       fileTargetBytes: Long,
       maxRecords: Long,
       rowGroupBytes: Long,
-      rowGroupRows: Option[Int]) {
+      rowGroupRows: Option[Int]) extends ColumnSink {
 
     /** Int-tag convenience for single-attempt callers (tools, specs). */
     def this(typeDir: Path, conf: Configuration, codec: CompressionCodecName,
@@ -876,9 +900,30 @@ object DirectParquet {
       recordsInFile = 0L
     }
 
-    def write(row: InternalRow): Unit = {
-      if (writer == null) openNext()
-      writer.write(row)
+    def write(row: InternalRow): Unit = ColumnSink.appendRow(row, this)
+
+    /** A new block begins (see [[ColumnarWriter.block]]). */
+    def block(): Unit = if (writer != null) writer.block()
+
+    override def id(v: Long): Unit = { if (writer == null) openNext(); writer.id(v) }
+    override def tag(keySid: Int, key: UTF8String, valueSid: Int, value: UTF8String): Unit =
+      writer.tag(keySid, key, valueSid, value)
+    override def noTags(): Unit = writer.noTags()
+    override def lat(v: Double): Unit = writer.lat(v)
+    override def lon(v: Double): Unit = writer.lon(v)
+    override def refs(refs: Array[Long], n: Int): Unit = writer.refs(refs, n)
+    override def members(): Unit = writer.members()
+    override def member(tpe: UTF8String, ref: Long, hasRef: Boolean, roleSid: Int, role: UTF8String): Unit =
+      writer.member(tpe, ref, hasRef, roleSid, role)
+    override def changeset(v: Long): Unit = writer.changeset(v)
+    override def timestamp(micros: Long): Unit = writer.timestamp(micros)
+    override def uid(v: Int): Unit = writer.uid(v)
+    override def user(sid: Int, v: UTF8String): Unit = writer.user(sid, v)
+    override def version(v: Int): Unit = writer.version(v)
+    override def visible(v: Boolean): Unit = writer.visible(v)
+
+    override def end(): Unit = {
+      writer.end()
       recordsInFile += 1
       _total += 1
       // getDataSize walks column buffers — sample it, don't call per row

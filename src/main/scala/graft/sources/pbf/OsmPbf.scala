@@ -262,15 +262,25 @@ object OsmPbf {
 
   /** Progress snapshot surfaced by the transcode monitor (the reference's
     * 60s element-counter tick, pbf.rs:100-126 / util.rs:20). One final
-    * event always fires at job end so short jobs still report. */
-  final case class TranscodeProgress(elements: Long, inputBytes: Long, seconds: Double)
+    * event always fires at job end so short jobs still report.
+    *
+    * The phase times are summed over the tasks that have finished: blob
+    * reads (`readS`), inflate (`inflateS`), the fused decode and parquet
+    * encode, file closes included (`decodeEncodeS`), and task thread CPU
+    * (`taskCpuS`). `commitS` is the driver's job commit, set on the final
+    * event of a successful run. */
+  final case class TranscodeProgress(elements: Long, inputBytes: Long, seconds: Double,
+      readS: Double = 0, inflateS: Double = 0, decodeEncodeS: Double = 0,
+      taskCpuS: Double = 0, commitS: Double = 0)
 
   private def defaultProgressLog(p: TranscodeProgress): Unit = {
     val e = if (p.elements >= 1000000000L) f"${p.elements / 1e9}%.2fB"
       else if (p.elements >= 1000000L) f"${p.elements / 1e6}%.2fM"
       else p.elements.toString
     System.err.println(f"[graft.transcode] processed $e elements " +
-      f"(${p.inputBytes >> 20} MB compressed input) in ${p.seconds}%.0f s")
+      f"(${p.inputBytes >> 20} MB compressed input) in ${p.seconds}%.0f s; task time: read " +
+      f"${p.readS}%.1f s, inflate ${p.inflateS}%.1f s, decode+encode ${p.decodeEncodeS}%.1f s, " +
+      f"cpu ${p.taskCpuS}%.1f s; commit ${p.commitS}%.1f s")
   }
 
   /** The reference's whole CLI pipeline (main.rs → pbf_driver → parquet):
@@ -281,12 +291,14 @@ object OsmPbf {
     * the reference's worker→sink-pool architecture (pbf.rs:51-98,
     * sink.rs:29-44):
     *  - ONE narrow job over blob-span groups: each task seeks, inflates and
-    *    decodes its blobs exactly once and routes rows by type to up to 3
-    *    parquet-mr writers it owns ([[DirectParquet.RotatingWriter]]). No
-    *    shuffle, no dynamic-partition sort, no re-inflation per type.
-    *  - the decoder's InternalRows feed the column buffers of
-    *    [[DirectParquet.ColumnarWriter]] directly — no DataFrame-writer
-    *    conversion layer (the round-1 throughput floor).
+    *    decodes its blobs exactly once into up to 3 parquet-mr writers it
+    *    owns ([[DirectParquet.RotatingWriter]]), one per element type,
+    *    picked per primitive group. No shuffle, no dynamic-partition sort,
+    *    no re-inflation per type.
+    *  - the decoder appends each element straight into the column buffers
+    *    of [[DirectParquet.ColumnarWriter]] through its [[ColumnSink]] — no
+    *    row object and no DataFrame-writer conversion layer (the round-1
+    *    throughput floor) in between.
     *  - file rotation is byte-accurate from the writer's own size feedback
     *    (`--file-target-mb`, default 500 like util.rs:62-63), replacing the
     *    sampled bytes/row heuristic. It applies within one task: each task
@@ -397,7 +409,14 @@ object OsmPbf {
 
     val elemAcc = sc.longAccumulator("graft.transcode.elements")
     val byteAcc = sc.longAccumulator("graft.transcode.inputBytes")
+    val readAcc = sc.longAccumulator("graft.transcode.readNanos")
+    val inflateAcc = sc.longAccumulator("graft.transcode.inflateNanos")
+    val codeAcc = sc.longAccumulator("graft.transcode.decodeEncodeNanos")
+    val cpuAcc = sc.longAccumulator("graft.transcode.taskCpuNanos")
+    var commitNs = 0L
     val t0 = System.nanoTime()
+    def progress() = TranscodeProgress(elemAcc.value, byteAcc.value, (System.nanoTime() - t0) / 1e9,
+      readAcc.value / 1e9, inflateAcc.value / 1e9, codeAcc.value / 1e9, cpuAcc.value / 1e9, commitNs / 1e9)
     @volatile var running = true
     val monitor = new Thread(() => {
       while (running) {
@@ -406,7 +425,7 @@ object OsmPbf {
         if (running)
           // a throwing callback must not kill the monitor mid-job (a
           // multi-hour transcode would silently stop reporting)
-          try onProgress(TranscodeProgress(elemAcc.value, byteAcc.value, (System.nanoTime() - t0) / 1e9))
+          try onProgress(progress())
           catch { case e: Exception =>
             System.err.println(s"[graft.transcode] progress callback failed: $e")
           }
@@ -434,44 +453,41 @@ object OsmPbf {
         val attemptTag = s"$taskId-a${tc.taskAttemptId()}"
         val fsPath = new Path(input)
         val fs = fsPath.getFileSystem(conf)
+        val cpu = java.lang.management.ManagementFactory.getThreadMXBean
+        val cpu0 = cpu.getCurrentThreadCpuTime
         val in = fs.open(fsPath)
-        val nodeU = org.apache.spark.unsafe.types.UTF8String.fromString(OsmSchema.TypeNode)
-        val wayU = org.apache.spark.unsafe.types.UTF8String.fromString(OsmSchema.TypeWay)
         val writers = new Array[DirectParquet.RotatingWriter](3)
-        def writerFor(i: Int, t: String): DirectParquet.RotatingWriter = {
-          if (writers(i) == null)
-            writers(i) = new DirectParquet.RotatingWriter(
-              new Path(s"$outRoot/$writeSub/type=$t"), conf, codec, attemptTag,
-              fileTargetBytes, maxRecords, rowGroupBytes, rowGroupRows)
-          writers(i)
+        // the decoder picks each primitive group's writer by element kind
+        // and appends straight into its column buffers
+        val sinks = new ColumnSinks {
+          def block(): Unit = writers.foreach(w => if (w != null) w.block())
+          def sink(kind: Int): ColumnSink = {
+            if (writers(kind) == null)
+              writers(kind) = new DirectParquet.RotatingWriter(
+                new Path(s"$outRoot/$writeSub/type=${types(kind)}"), conf, codec, attemptTag,
+                fileTargetBytes, maxRecords, rowGroupBytes, rowGroupRows)
+            writers(kind)
+          }
         }
+        var readNs, inflateNs, codeNs = 0L
         try {
-          var batched = 0L
           groupIter.foreach { group =>
             group.foreach { span =>
+              val t1 = System.nanoTime()
               in.seek(span.offset)
               val buf = new Array[Byte](span.length)
               in.readFully(buf)
               byteAcc.add(span.length)
-              // reuseDense: the write loop consumes each row before the
-              // next is produced, so dense-node rows arrive through one
-              // refilled SpecificInternalRow — no per-element row
-              // allocation or boxing on the 89%-of-planet path
-              BlockDecoder.decodeBlockInternal(Blobs.decode(buf), BlockDecoder.FullProjection,
-                  reuseDense = true)
-                .foreach { row =>
-                  val t = row.getUTF8String(12)
-                  val w =
-                    if (t.equals(nodeU)) writerFor(0, OsmSchema.TypeNode)
-                    else if (t.equals(wayU)) writerFor(1, OsmSchema.TypeWay)
-                    else writerFor(2, OsmSchema.TypeRelation)
-                  w.write(row)
-                  batched += 1
-                }
-              elemAcc.add(batched); batched = 0L
+              val t2 = System.nanoTime()
+              val payload = Blobs.decode(buf)
+              val t3 = System.nanoTime()
+              elemAcc.add(BlockDecoder.decode(payload, BlockDecoder.FullProjection, sinks))
+              codeNs += System.nanoTime() - t3
+              readNs += t2 - t1; inflateNs += t3 - t2
             }
           }
         } finally {
+          val t4 = System.nanoTime()
           // close EVERY resource even when an earlier close throws — a
           // first-writer flush failure (disk full) must not leak the
           // remaining writers' compressor buffers or the input stream on
@@ -484,6 +500,9 @@ object OsmPbf {
               if (closeErr == null) closeErr = t else closeErr.addSuppressed(t)
             }
           }
+          readAcc.add(readNs); inflateAcc.add(inflateNs)
+          codeAcc.add(codeNs + System.nanoTime() - t4) // the closes flush the last row groups
+          cpuAcc.add(cpu.getCurrentThreadCpuTime - cpu0)
           if (closeErr != null) throw closeErr
         }
         // TEST SEAM (retry-commit pin): attempt 0 of the named partition
@@ -503,6 +522,7 @@ object OsmPbf {
           writers.iterator.filter(_ != null).flatMap(w => w.fileNames.map(n =>
             s"${w.typeName}/$n")).toSeq))
       }.collect()
+      val tCommit = System.nanoTime()
       // job succeeded: publish EXACTLY the files the winning attempts
       // reported. Two hazards shape the protocol:
       //  - ZOMBIE attempts (executor presumed lost but still writing):
@@ -613,6 +633,7 @@ object OsmPbf {
             s"the superseded rename-mode root failed ($e) — the next " +
             "run's start GC sweeps it")
         }
+        commitNs = System.nanoTime() - tCommit
         return types.zipWithIndex.map { case (t, i) => t -> perTask.map(_._1(i)).sum }.toMap
       }
       val publish = new Path(staging, "_publish")
@@ -679,6 +700,7 @@ object OsmPbf {
       // protocol's grace discipline (GC at the NEXT run's start, either
       // mode) applies to it the same as to any superseded generation.
       // It is `_`-prefixed, so root parquet reads never see it.
+      commitNs = System.nanoTime() - tCommit
       types.zipWithIndex.map { case (t, i) => t -> perTask.map(_._1(i)).sum }.toMap
     } finally {
       running = false
@@ -686,7 +708,7 @@ object OsmPbf {
       hconf.destroy()
       // inside a finally: a throwing callback would REPLACE the job's
       // real exception (e.g. the decode error) as the reported failure
-      try onProgress(TranscodeProgress(elemAcc.value, byteAcc.value, (System.nanoTime() - t0) / 1e9))
+      try onProgress(progress())
       catch { case e: Exception =>
         System.err.println(s"[graft.transcode] final progress callback failed: $e")
       }

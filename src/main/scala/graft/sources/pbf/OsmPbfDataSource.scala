@@ -4,7 +4,7 @@ import java.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -20,9 +20,10 @@ import scala.jdk.CollectionConverters._
   * What Catalyst gets to do through this connector that the bootstrap
   * `OsmPbf.read` path can't:
   *  - **column pruning** (`SupportsPushDownRequiredColumns`): unneeded
-  *    columns skip their decode allocations — reading only `id, lat, lon`
-  *    never materializes tag maps or info (the reference's lazy-decode
-  *    idea, blob.rs:92-113, generalized per column);
+  *    columns skip their decode work, and rows hold only the required
+  *    columns — reading only `id, lat, lon` never materializes tag maps or
+  *    info (the reference's lazy-decode idea, blob.rs:92-113, generalized
+  *    per column);
   *  - **`type` predicate pushdown** (`SupportsPushDownFilters` on
   *    `type = / in (…)`): excluded element kinds skip whole primitive
   *    groups without decoding — the scan-level analog of the reference's
@@ -182,8 +183,8 @@ case class OsmPbfReaderFactory(hconf: Broadcast[SerializableConfiguration],
   }
 }
 
-/** Reads one span group: seek → read → decompress → decode → project to
-  * the pruned schema as InternalRows. */
+/** Reads one span group: seek → read → decompress → decode into rows of
+  * the pruned schema, built in its column order. */
 class OsmPbfPartitionReader(partition: OsmPbfInputPartition,
                             hconf: SerializableConfiguration,
                             requiredSchema: StructType,
@@ -201,13 +202,6 @@ class OsmPbfPartitionReader(partition: OsmPbfInputPartition,
     // column pruning composes: a wayLocations read that doesn't select
     // node_locations skips the lat/lon decode like any pruned column
     wayLocs = wayLocs && need.contains("node_locations"))
-  // decode emits rows of the ACTIVE source schema (13 or 14 cols)
-  private val sourceSchema = OsmSchema.schemaFor(proj.wayLocs)
-  // source-ordinal of each required column; identity when nothing is
-  // pruned (pruneColumns preserves source order, so equal length ⇒ identity)
-  private val ordinals = requiredSchema.fieldNames.map(sourceSchema.fieldIndex)
-  private val fullWidth = ordinals.length == sourceSchema.length
-  private val fieldTypes = ordinals.map(sourceSchema(_).dataType)
 
   private val fsPath = new Path(partition.path)
   private val fs = fsPath.getFileSystem(hconf.value)
@@ -217,17 +211,7 @@ class OsmPbfPartitionReader(partition: OsmPbfInputPartition,
     in.seek(span.offset)
     val buf = new Array[Byte](span.length)
     in.readFully(buf)
-    val decoded = BlockDecoder.decodeBlockInternal(Blobs.decode(buf), proj)
-    if (fullWidth) decoded
-    else decoded.map { row =>
-      val out = new Array[Any](ordinals.length)
-      var i = 0
-      while (i < ordinals.length) {
-        out(i) = row.get(ordinals(i), fieldTypes(i))
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-    }
+    BlockDecoder.rows(Blobs.decode(buf), proj, requiredSchema)
   }
 
   private var current: InternalRow = _

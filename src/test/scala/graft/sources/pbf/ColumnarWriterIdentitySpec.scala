@@ -10,8 +10,11 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +26,10 @@ import scala.jdk.CollectionConverters._
   * cuts, encodings, dictionaries, statistics and indexes. Fixture-free:
   * rows come from [[PbfWriter.synthesize]] corpora decoded the way the
   * transcode decodes them, from the writer fuzz spec's adversarial rows,
-  * and from a user column whose dictionary overflows mid-chunk.
+  * and from a user column whose dictionary overflows mid-chunk. The
+  * transcode's fused path (the decoder appending into the writer, with
+  * the dictionary memo keyed on string-table indices) must write the
+  * same bytes as the oracle fed the same elements as rows.
   */
 class ColumnarWriterIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -57,8 +63,8 @@ class ColumnarWriterIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
       rowGroupBytes: Long, rowGroupRows: Option[Int]) {
     val newPath = new Path(dir.resolve(s"$name.new.parquet").toString)
     val oraclePath = new Path(dir.resolve(s"$name.oracle.parquet").toString)
-    private val w = new DirectParquet.ColumnarWriter(newPath, conf, codec, rowGroupBytes, rowGroupRows)
-    private val o = new RowwiseOracleWriter(oraclePath, conf, codec, rowGroupBytes, rowGroupRows)
+    val w = new DirectParquet.ColumnarWriter(newPath, conf, codec, rowGroupBytes, rowGroupRows)
+    val o = new RowwiseOracleWriter(oraclePath, conf, codec, rowGroupBytes, rowGroupRows)
     private var rows = 0L
     def write(row: InternalRow): Unit = {
       w.write(row)
@@ -81,25 +87,78 @@ class ColumnarWriterIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     finally r.close()
   }
 
-  /** Decodes a synthesized corpus exactly as the transcode does (dense
-    * rows through one reused row) and routes each type to its own pair. */
-  private def transcodeBoth(tag: String, blocks: Int, nodesPerBlock: Int, waysPerBlock: Int,
-      relationsPerBlock: Int, codec: CompressionCodecName, rowGroupBytes: Long,
-      rowGroupRows: Option[Int]): Map[String, Pair] = {
+  private val types = Seq(OsmSchema.TypeNode, OsmSchema.TypeWay, OsmSchema.TypeRelation)
+
+  /** The inflated data blocks of a synthesized corpus. */
+  private def corpus(tag: String, blocks: Int, nodesPerBlock: Int, waysPerBlock: Int,
+      relationsPerBlock: Int): Seq[Array[Byte]] = {
     val pbf = dir.resolve(s"$tag.osm.pbf").toString
     PbfWriter.synthesize(pbf, blocks, nodesPerBlock, waysPerBlock, relationsPerBlock)
     val in = new FileInputStream(pbf)
     val spans = try Blobs.enumerate(in) finally in.close()
     val bytes = Files.readAllBytes(Paths.get(pbf))
-    val pairs = Seq(OsmSchema.TypeNode, OsmSchema.TypeWay, OsmSchema.TypeRelation)
-      .map(t => t -> new Pair(s"$tag-$t", codec, rowGroupBytes, rowGroupRows)).toMap
-    try spans.filter(_.blobType == Blobs.TypeOsmData).foreach { s =>
-      val body = java.util.Arrays.copyOfRange(bytes, s.offset.toInt, s.offset.toInt + s.length)
-      BlockDecoder.decodeBlockInternal(Blobs.decode(body), BlockDecoder.FullProjection,
-        reuseDense = true).foreach(row => pairs(row.getUTF8String(12).toString).write(row))
+    spans.filter(_.blobType == Blobs.TypeOsmData).map { s =>
+      Blobs.decode(java.util.Arrays.copyOfRange(bytes, s.offset.toInt, s.offset.toInt + s.length))
+    }
+  }
+
+  /** Decodes a synthesized corpus into rows and routes each type to its
+    * own pair. */
+  private def transcodeBoth(tag: String, blocks: Int, nodesPerBlock: Int, waysPerBlock: Int,
+      relationsPerBlock: Int, codec: CompressionCodecName, rowGroupBytes: Long,
+      rowGroupRows: Option[Int]): Map[String, Pair] = {
+    val pairs = types.map(t => t -> new Pair(s"$tag-$t", codec, rowGroupBytes, rowGroupRows)).toMap
+    try corpus(tag, blocks, nodesPerBlock, waysPerBlock, relationsPerBlock).foreach { b =>
+      BlockDecoder.decodeBlockInternal(b, BlockDecoder.FullProjection)
+        .foreach(row => pairs(row.getUTF8String(12).toString).write(row))
     } finally pairs.values.foreach(_.close())
     pairs
   }
+
+  /** The transcode's fused path: the decoder appends each block straight
+    * into the production writer of its element type, with a `block()` per
+    * block; the oracle gets the same corpus as rows. */
+  private def fusedBoth(tag: String, blocks: Int, nodesPerBlock: Int, waysPerBlock: Int,
+      relationsPerBlock: Int, codec: CompressionCodecName, rowGroupBytes: Long,
+      rowGroupRows: Option[Int]): Map[String, Pair] = {
+    val pairs = types.map(t => t -> new Pair(s"$tag-$t", codec, rowGroupBytes, rowGroupRows)).toMap
+    val sinks = new ColumnSinks {
+      def block(): Unit = pairs.values.foreach(_.w.block())
+      def sink(kind: Int): ColumnSink = pairs(types(kind)).w
+    }
+    try corpus(tag, blocks, nodesPerBlock, waysPerBlock, relationsPerBlock).foreach { b =>
+      BlockDecoder.decode(b, BlockDecoder.FullProjection, sinks)
+      BlockDecoder.decodeBlockInternal(b, BlockDecoder.FullProjection)
+        .foreach(row => pairs(row.getUTF8String(12).toString).o.write(row))
+    } finally pairs.values.foreach(_.close())
+    pairs
+  }
+
+  /** Nodes appended block by block the way the decoder appends them: each
+    * block is its string table and, per node, the table indices of its
+    * user and of one tag's key and value. The oracle gets the same nodes
+    * as rows. */
+  private def appendBoth(name: String, blocks: Seq[(Array[String], Seq[(Int, Int, Int)])],
+      rowGroupBytes: Long, rowGroupRows: Option[Int]): Pair = {
+    val p = new Pair(name, CompressionCodecName.ZSTD, rowGroupBytes, rowGroupRows)
+    val node = UTF8String.fromString(OsmSchema.TypeNode)
+    var id = 0L
+    try blocks.foreach { case (table, nodes) =>
+      val u = table.map(UTF8String.fromString)
+      p.w.block()
+      nodes.foreach { case (user, k, v) =>
+        p.w.id(id); p.w.tag(k, u(k), v, u(v)); p.w.lat(1.0); p.w.user(user, u(user)); p.w.end()
+        p.o.write(new GenericInternalRow(Array[Any](id,
+          new ArrayBasedMapData(new GenericArrayData(Array[Any](u(k))), new GenericArrayData(Array[Any](u(v)))),
+          1.0, null, null, null, null, null, null, u(user), null, null, node)))
+        id += 1
+      }
+    } finally p.close()
+    p
+  }
+
+  private def chunkEncodings(f: org.apache.parquet.hadoop.metadata.ParquetMetadata, column: String) =
+    f.getBlocks.asScala.map(_.getColumns.asScala.find(_.getPath.toDotString == column).get.getEncodings.asScala)
 
   test("synthesized nodes, ways and relations: identical bytes over many pages and row groups") {
     val pairs = transcodeBoth("synth", blocks = 24, nodesPerBlock = 8000, waysPerBlock = 2500,
@@ -223,5 +282,60 @@ class ColumnarWriterIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val pushed = read(pushdown = true)
     assert(pushed.size === 52345 - 31234 + 1)
     assert(pushed === read(pushdown = false))
+  }
+
+  test("the fused path: the decoder's appends and the oracle's rows give identical bytes") {
+    val synth = fusedBoth("fused-synth", blocks = 24, nodesPerBlock = 8000, waysPerBlock = 2500,
+      relationsPerBlock = 40, CompressionCodecName.ZSTD, rowGroupBytes = 3L << 20,
+      rowGroupRows = Some(50000))
+    synth.values.foreach(_.assertIdentical())
+    assert(footer(synth(OsmSchema.TypeNode).newPath)._1.getBlocks.size > 1)
+    val tiny = fusedBoth("fused-tiny", blocks = 3, nodesPerBlock = 3000, waysPerBlock = 200,
+      relationsPerBlock = 30, CompressionCodecName.UNCOMPRESSED, rowGroupBytes = 64L << 20,
+      rowGroupRows = Some(7))
+    tiny.values.foreach(_.assertIdentical())
+    assert(footer(tiny(OsmSchema.TypeRelation).newPath)._1.getBlocks.size === 90 / 7 + 1)
+  }
+
+  test("the fused path: a user dictionary past 1 MB, appended by string-table index, identical bytes") {
+    // the users of the row-fed case above, in blocks of 5000 nodes whose
+    // tables list each block's strings (reversed in odd blocks)
+    def user(i: Int): String = f"u$i%09d" + ("." * 90)
+    val users = (0 until 35000).map(i => if (i < 20000) user(i % 5000) else user(5000 + i))
+    val blocks = users.grouped(5000).zipWithIndex.map { case (us, b) =>
+      val table = ("k" +: us.distinct).toArray
+      val order = if (b % 2 == 1) table.indices.reverse.toArray else table.indices.toArray
+      val t = order.map(table)
+      val at = t.zipWithIndex.toMap
+      (t, us.map(x => (at(x), at("k"), at(x))))
+    }.toSeq
+    val p = appendBoth("fused-dict-overflow", blocks, 256L << 20, None)
+    p.assertIdentical()
+    val encodings = chunkEncodings(footer(p.newPath)._1, "user")
+    assert(encodings.size === 1)
+    assert(encodings.head.contains(Encoding.PLAIN_DICTIONARY) && encodings.head.contains(Encoding.PLAIN),
+      encodings)
+  }
+
+  test("the dictionary memo: indices that change strings between blocks, across row-group resets and PLAIN fallback") {
+    // a pool of 100-byte strings; block b's table is the pool from
+    // b * step on, so a string shared by two blocks sits at a different
+    // index in each, and an index names a different string in each
+    val pool = (0 until 15000).map(i => f"s$i%09d" + ("-" * 90))
+    def blocks(n: Int, perBlock: Int, tableSize: Int, step: Int) = (0 until n).map { b =>
+      val table = Array.tabulate(tableSize)(i => pool((i + b * step) % pool.size))
+      (table, (0 until perBlock).map(i => ((i * 13) % tableSize, i % 5, (i * 7 + b) % tableSize)))
+    }
+    // row groups of 7 rows: the dictionaries reset many times per block
+    val small = appendBoth("memo-tiny-groups", blocks(4, 300, 40, step = 17), 64L << 20, Some(7))
+    small.assertIdentical()
+    assert(footer(small.newPath)._1.getBlocks.size === 1200 / 7 + 1)
+    // five blocks per row group hold 13,000 distinct strings, which push
+    // the user dictionary past 1 MB: PLAIN fallback in every group
+    val big = appendBoth("memo-fallback", blocks(20, 3000, 3000, step = 2500), 256L << 20, Some(15000))
+    big.assertIdentical()
+    val users = chunkEncodings(footer(big.newPath)._1, "user")
+    assert(users.size === 4)
+    assert(users.forall(e => e.contains(Encoding.PLAIN) && e.contains(Encoding.PLAIN_DICTIONARY)), users)
   }
 }

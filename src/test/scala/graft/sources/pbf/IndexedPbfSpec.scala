@@ -26,7 +26,12 @@ class IndexedPbfSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    tmp.deleteAll()
+  }
 
   test("zone maps record per-type min/max ids (indexed.rs:174-225)") {
     val idx = IndexedPbf.index(spark, fixture)
@@ -51,7 +56,7 @@ class IndexedPbfSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("oracle over transcoded output: PBF-native result == post-transcode join") {
-    val out = java.nio.file.Files.createTempDirectory("idxoracle").toString
+    val out = tmp("idxoracle")
     OsmPbf.transcode(spark, PbfConfig(input = fixture, output = out))
     val t = spark.read.parquet(out)
     val ways = t.filter(col("type") === "way" && col("tags").getItem("building") === "yes")
@@ -69,7 +74,7 @@ class IndexedPbfSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pass-2 blob pruning: only node blobs whose id range is hit are scanned") {
     import PbfWriter._
-    val dir = java.nio.file.Files.createTempDirectory("idxprune").toString
+    val dir = tmp("idxprune")
     val pbf = s"$dir/pruned.osm.pbf"
     // 4 node blocks with disjoint id ranges + 1 way block; the way only
     // references ids in the FIRST block.
@@ -101,7 +106,7 @@ class IndexedPbfSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("nested/overlapping node-id ranges: the wide earlier blob is still found") {
     import PbfWriter._
-    val dir = java.nio.file.Files.createTempDirectory("idxnested").toString
+    val dir = tmp("idxnested")
     val pbf = s"$dir/nested.osm.pbf"
     // blob A spans [1..4000] (wide), blob B [1100..1149], blob C [2000..2049]:
     // sorted by nodeMin the ranges NEST — a left-walk that stops at the

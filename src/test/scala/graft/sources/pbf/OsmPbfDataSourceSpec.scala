@@ -1,6 +1,6 @@
 package graft.sources.pbf
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,7 +25,12 @@ class OsmPbfDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private lazy val dir = java.nio.file.Files.createTempDirectory("graft-dsv2-spec")
+
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 
   test("format(osmpbf) reads the unified schema") {
     val df = spark.read.format("osmpbf").load(fixture)
@@ -110,5 +115,31 @@ class OsmPbfDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // agree on the schema or the advertised column vanishes at analysis)
     assert(spark.read.format("osmpbf").option("WAYLOCATIONS", "true")
       .load(loc).schema === OsmSchema.schemaWithWayLocations)
+  }
+
+  test("every projection gives the full projection's rows, selected in Spark") {
+    val synth = dir.resolve("projections.osm.pbf").toString
+    PbfWriter.synthesize(synth, blocks = 3, nodesPerBlock = 400, waysPerBlock = 60, relationsPerBlock = 9)
+    for ((path, wayLocs) <- Seq((synth, false), (fixture, false),
+        (PbfFixtures.path("loc_on_ways.osm.pbf"), true))) {
+      def load() = spark.read.format("osmpbf").option("wayLocations", wayLocs.toString)
+        .option("splitMb", "1").load(path)
+      val full = load().collect().toSeq
+      val names = load().schema.fieldNames.toSeq
+      assert(full.nonEmpty && names === OsmSchema.schemaFor(wayLocs).fieldNames.toSeq)
+      def expected(cols: Seq[String], keep: Row => Boolean = _ => true): Seq[Row] =
+        full.filter(keep).map(r => Row.fromSeq(cols.map(c => r.get(names.indexOf(c)))))
+      names.foreach(c => assert(load().select(c).collect().toSeq === expected(Seq(c)), s"$path: $c"))
+      assert(load().select("lat", "id", "type").collect().toSeq === expected(Seq("lat", "id", "type")))
+      for (t <- Seq(OsmSchema.TypeNode, OsmSchema.TypeWay, OsmSchema.TypeRelation)) {
+        val byType = load().filter(col("type") === t)
+        assert(byType.collect().toSeq === expected(names, _.getAs[String]("type") == t), s"$path: $t")
+        assert(byType.select("id", "tags").collect().toSeq ===
+          expected(Seq("id", "tags"), _.getAs[String]("type") == t), s"$path: $t, pruned")
+      }
+      if (wayLocs)
+        assert(load().select("id", "node_locations").collect().toSeq ===
+          expected(Seq("id", "node_locations")))
+    }
   }
 }

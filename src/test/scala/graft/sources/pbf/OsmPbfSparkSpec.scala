@@ -28,7 +28,12 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    tmp.deleteAll()
+  }
 
   test("read produces the unified schema with 5 elements") {
     val df = OsmPbf.read(spark, fixture)
@@ -42,7 +47,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("transcode of a header-only PBF commits empty type dirs and zero counts") {
     // a valid file with ZERO data blobs (e.g. an extract of an empty
     // region) previously crashed parallelize(_, 0) instead of committing
-    val dir = java.nio.file.Files.createTempDirectory("graft-emptypbf").toString
+    val dir = tmp("graft-emptypbf")
     val pbf = s"$dir/empty.osm.pbf"
     PbfWriter.synthesize(pbf, blocks = 0, nodesPerBlock = 0)
     val out = s"$dir/out"
@@ -53,7 +58,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("transcode writes hive-partitioned parquet routed by type (K1/K6)") {
-    val out = java.nio.file.Files.createTempDirectory("osmparq").toString
+    val out = tmp("osmparq")
     val counts = OsmPbf.transcode(spark, PbfConfig(input = fixture, output = out, compression = 3))
     // A1 element counters ride the write jobs (Observation API)
     assert(counts === Map("node" -> 3L, "way" -> 1L, "relation" -> 1L))
@@ -70,7 +75,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("transcode round-trips every column exactly (direct parquet writer fidelity)") {
-    val out = java.nio.file.Files.createTempDirectory("osmfid").toString
+    val out = tmp("osmfid")
     OsmPbf.transcode(spark, PbfConfig(input = fixture, output = out))
     val cols = OsmSchema.schema.fieldNames
     val src = OsmPbf.read(spark, fixture).select(cols.head, cols.tail: _*)
@@ -82,7 +87,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("re-running transcode into the same output leaves no stale part files") {
-    val dir = java.nio.file.Files.createTempDirectory("osmrerun").toString
+    val dir = tmp("osmrerun")
     val big = s"$dir/big.osm.pbf"
     val small = s"$dir/small.osm.pbf"
     PbfWriter.synthesize(big, blocks = 8, nodesPerBlock = 2000)
@@ -96,7 +101,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("failed transcode leaves the previous good output untouched (staging swap)") {
-    val dir = java.nio.file.Files.createTempDirectory("osmstage").toString
+    val dir = tmp("osmstage")
     val good = s"$dir/good.osm.pbf"
     val n = PbfWriter.synthesize(good, blocks = 2, nodesPerBlock = 500)
     val out = s"$dir/out"
@@ -123,7 +128,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // files — silent duplicate rows. sink.rs:82-105's single-writer
     // rotation assumes this can't happen; Spark's retry semantics make it
     // routine, hence the attempt-manifest protocol under test.
-    val dir = java.nio.file.Files.createTempDirectory("osmretry").toString
+    val dir = tmp("osmretry")
     val pbf = s"$dir/in.osm.pbf"
     // big enough to split into several groups (decoded-weight target
     // floors at 1 MiB) so the retried partition's files coexist with
@@ -160,7 +165,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("transcode progress monitor fires periodic + final events (C4)") {
-    val dir = java.nio.file.Files.createTempDirectory("osmprog").toString
+    val dir = tmp("osmprog")
     val pbf = s"$dir/prog.osm.pbf"
     val n = PbfWriter.synthesize(pbf, blocks = 20, nodesPerBlock = 5000)
     val events = new java.util.concurrent.ConcurrentLinkedQueue[OsmPbf.TranscodeProgress]()
@@ -171,10 +176,14 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val last = events.asScala.last
     assert(last.elements === n)
     assert(last.inputBytes > 0L)
+    // phase counters: every phase ran, and the final event carries the commit
+    assert(last.readS > 0 && last.inflateS > 0 && last.decodeEncodeS > 0 && last.taskCpuS > 0)
+    assert(last.commitS > 0)
+    assert(last.decodeEncodeS + last.inflateS + last.readS < last.seconds * spark.sparkContext.defaultParallelism)
   }
 
   test("row-group sizing: --max-row-group-count bounds rows per row group") {
-    val dir = java.nio.file.Files.createTempDirectory("osmrg").toString
+    val dir = tmp("osmrg")
     val pbf = s"$dir/rg.osm.pbf"
     PbfWriter.synthesize(pbf, blocks = 1, nodesPerBlock = 1000)
     OsmPbf.transcode(spark, PbfConfig(input = pbf, output = s"$dir/out",
@@ -192,7 +201,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("file rotation by actual bytes (--file-target-mb feedback loop)") {
-    val dir = java.nio.file.Files.createTempDirectory("osmrot").toString
+    val dir = tmp("osmrot")
     val pbf = s"$dir/rot.osm.pbf"
     val n = PbfWriter.synthesize(pbf, blocks = 10, nodesPerBlock = 20000)
     OsmPbf.transcode(spark, PbfConfig(input = pbf, output = s"$dir/out",
@@ -237,7 +246,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("transcode with --file-target-mb 500 writes every element") {
-    val out = java.nio.file.Files.createTempDirectory("osmft").toString
+    val out = tmp("osmft")
     OsmPbf.transcode(spark, PbfConfig(input = fixture, output = out, fileTargetMb = Some(500)))
     assert(spark.read.parquet(out).count() === 5)
   }

@@ -1,13 +1,18 @@
 package graft.sources.pbf
 
 import java.io.{ByteArrayInputStream, DataOutputStream, FileOutputStream}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Error taxonomy (reference §2.7 C6): malformed inputs fail with typed
   * errors instead of silent corruption — caps from blob.rs:22-25, unknown
   * blob types from pbf.rs:85-87.
   */
-class PbfErrorSpec extends AnyFunSuite {
+class PbfErrorSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = tmp.deleteAll()
 
   test("oversized BlobHeader length is rejected (64KB cap)") {
     val bytes = Array[Byte](0x00, 0x11, 0x00, 0x00) // 0x110000 > 64K
@@ -39,7 +44,7 @@ class PbfErrorSpec extends AnyFunSuite {
   }
 
   test("unknown blob type fails the scan like the reference") {
-    val dir = java.nio.file.Files.createTempDirectory("pbferr").toString
+    val dir = tmp("pbferr")
     val path = s"$dir/bogus.osm.pbf"
     val payload = new PbfWriter.MessageBuilder
     payload.writeStringField(1, "junk")

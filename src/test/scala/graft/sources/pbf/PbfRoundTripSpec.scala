@@ -1,13 +1,18 @@
 package graft.sources.pbf
 
 import java.io.FileInputStream
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Encode → decode identity on generated corpora — the property-based
   * complement to the golden-fixture specs (delta chains, string tables,
   * keys_vals splitting, coordinate/timestamp scaling all round-trip).
   */
-class PbfRoundTripSpec extends AnyFunSuite {
+class PbfRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = tmp.deleteAll()
 
   private def decodeAll(path: String): Seq[org.apache.spark.sql.Row] = {
     val in = new FileInputStream(path)
@@ -22,7 +27,7 @@ class PbfRoundTripSpec extends AnyFunSuite {
   private def idx(name: String): Int = OsmSchema.schema.fieldIndex(name)
 
   test("non-default granularity, offsets and date granularity round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("pbfgran").toString
+    val dir = tmp("pbfgran")
     val path = s"$dir/gran.osm.pbf"
     // granularity 1000 nanodeg, offsets 5e9/-2e9 nanodeg, dates in 500ms units
     val nodes = Seq(
@@ -44,7 +49,7 @@ class PbfRoundTripSpec extends AnyFunSuite {
   }
 
   test("synthesized corpus round-trips exactly") {
-    val path = java.nio.file.Files.createTempDirectory("pbfrt").toString + "/synth.osm.pbf"
+    val path = tmp("pbfrt") + "/synth.osm.pbf"
     val expected = PbfWriter.synthesize(path, blocks = 5, nodesPerBlock = 1000)
     val rows = decodeAll(path)
     assert(rows.size.toLong === expected)
@@ -77,7 +82,7 @@ class PbfRoundTripSpec extends AnyFunSuite {
   }
 
   test("LocationsOnWays encode → decode round-trips to the nodes' own coordinates") {
-    val dir = java.nio.file.Files.createTempDirectory("pbfloc").toString
+    val dir = tmp("pbfloc")
     val path = s"$dir/loc.osm.pbf"
     def latOf(id: Long) = 52000000000L + id * 1000
     def lonOf(id: Long) = 11000000000L + id * 700
@@ -118,7 +123,7 @@ class PbfRoundTripSpec extends AnyFunSuite {
   }
 
   test("planet-mix corpus (ways + relations per block) round-trips exactly") {
-    val path = java.nio.file.Files.createTempDirectory("pbfmix").toString + "/mix.osm.pbf"
+    val path = tmp("pbfmix") + "/mix.osm.pbf"
     val expected = PbfWriter.synthesize(path, blocks = 3, nodesPerBlock = 890,
       waysPerBlock = 100, relationsPerBlock = 2)
     val rows = decodeAll(path)
