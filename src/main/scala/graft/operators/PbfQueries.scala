@@ -99,6 +99,14 @@ object PbfQueries {
       out
     }
 
+  /** A temp dir for one of the synthesized PBF inputs below, deleted at
+    * JVM shutdown: each is built once per JVM, on first use. */
+  private def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.Scratch.track(dir)
+    dir
+  }
+
   private def oraclePath(key: String, pbf: String): String =
     s"$OracleRoot/$key-${fingerprint(pbf)}"
   private lazy val p01Out = oraclePath("p01", pbfPath)
@@ -109,7 +117,7 @@ object PbfQueries {
     * node blobs. */
   private lazy val pbfPath: String = {
     import PbfWriter._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pbf-q").toString
+    val dir = tempDir("graft-pbf-q")
     val path = s"$dir/ways_deps.osm.pbf"
     def nodeBlock(base: Long): Array[Byte] = primitiveBlock(
       (0 until 500).map(i => DenseNode(base + i, 52000000000L + i * 1000,
@@ -136,7 +144,7 @@ object PbfQueries {
     * block granularity (100), so decode is exact in both paths. */
   private lazy val locPbfPath: String = {
     import PbfWriter._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pbf-loc").toString
+    val dir = tempDir("graft-pbf-loc")
     val path = s"$dir/loc_ways.osm.pbf"
     def latOf(id: Long) = 52000000000L + id * 1000
     def lonOf(id: Long) = 11000000000L + id * 700
@@ -207,7 +215,7 @@ object PbfQueries {
     * in both the PBF-native and transcoded paths. */
   private lazy val p04PbfPath: String = {
     import PbfWriter._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pbf-scatter").toString
+    val dir = tempDir("graft-pbf-scatter")
     val path = s"$dir/scatter.osm.pbf"
     var seed = 0x9E3779B97F4A7C15L
     def next(): Long = {

@@ -4,16 +4,13 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.bytes.{ByteBufferAllocator, BytesInput, BytesUtils, HeapByteBufferAllocator}
-import org.apache.parquet.column.page.PageWriter
+import org.apache.parquet.bytes.{BytesInput, BytesUtils, HeapByteBufferAllocator}
+import org.apache.parquet.column.page.{DictionaryPage, PageWriter}
 import org.apache.parquet.column.statistics.geospatial.GeospatialStatistics
 import org.apache.parquet.column.statistics.{SizeStatistics, Statistics}
 import org.apache.parquet.column.values.ValuesWriter
-import org.apache.parquet.column.values.bitpacking.Packer
-import org.apache.parquet.column.values.dictionary.DictionaryValuesWriter.PlainBinaryDictionaryValuesWriter
+import org.apache.parquet.column.values.bitpacking.{BytePacker, Packer}
 import org.apache.parquet.column.values.factory.{DefaultValuesWriterFactory, ValuesWriterFactory}
-import org.apache.parquet.column.values.fallback.FallbackValuesWriter
-import org.apache.parquet.column.values.plain.PlainValuesWriter
 import org.apache.parquet.column.{ColumnDescriptor, Encoding, ParquetProperties}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -56,12 +53,19 @@ import scala.annotation.nowarn
   * follow `ColumnWriteStoreBase.sizeCheck` at its own adaptive cadence, so
   * the files are byte-identical to parquet-mr's row-by-row
   * `ColumnWriteStoreV1` fed the same rows (the spec suite keeps that writer
-  * as its oracle). Three encoder kernels write the same bytes as the
-  * stock writers they replace. Through one [[ValuesWriterFactory]]: a
-  * little-endian PLAIN writer into one `byte[]` for the dictionary-off
-  * INT64/DOUBLE leaves, and a binary dictionary writer that remembers the
-  * dictionary id of each string-table index of the current block. In the
-  * leaves: a level writer that takes the buffered runs of equal levels whole.
+  * as its oracle). The encoders are this file's own kernels, writing the
+  * same bytes as the stock writers they replace; only BOOLEAN values and
+  * the max-level-0 (no-op) level writers are parquet-mr's. Through one
+  * [[ValuesWriterFactory]]: a little-endian PLAIN writer into one `byte[]`
+  * for the dictionary-off INT64/DOUBLE leaves, and one dictionary → PLAIN
+  * writer for the dictionary-on BINARY and INT32 leaves, in place of
+  * parquet-mr's `FallbackValuesWriter`. It takes a string it has seen at
+  * the same string-table index of the current block, or an int equal to
+  * the last, as the last id again, with no lookup, and encodes each page's
+  * ids once, run by run. In the leaves: one RLE/bit-packing kernel for the
+  * levels (and the dictionary ids) that takes runs of equal values whole,
+  * and binary page statistics that fold a string-table string once per
+  * page.
   *
   * Schema layout matches what Spark's own parquet writer emits (standard
   * 3-level LIST / key_value MAP, TIMESTAMP(MICROS, isAdjustedToUTC=false)),
@@ -136,10 +140,12 @@ object DirectParquet {
   private val WriterProps: ParquetProperties =
     writerPropsBuilder.withValuesWriterFactory(new KernelFactory).build()
 
-  /** parquet-mr's V1 values writers, except for two kernels that write the
+  /** parquet-mr's V1 values writers, except for kernels that write the
     * same bytes faster: [[LePlainWriter]] for dictionary-off INT64/DOUBLE
-    * leaves, and [[MemoBinaryDictionaryWriter]] (behind the stock
-    * dictionary → PLAIN fallback) for dictionary-on BINARY leaves. */
+    * leaves, and the owned dictionary → PLAIN writers
+    * ([[BinaryDictWriter]], [[IntDictWriter]]) for every dictionary-on
+    * BINARY and INT32 leaf, in place of parquet-mr's
+    * `FallbackValuesWriter` over its dictionary writer. */
   private final class KernelFactory extends ValuesWriterFactory {
     private[this] val stock = new DefaultValuesWriterFactory
     private[this] var props: ParquetProperties = _
@@ -151,19 +157,18 @@ object DirectParquet {
         case INT64 | DOUBLE if !props.isDictionaryEnabled(d) =>
           new LePlainWriter(props.getInitialSlabSize)
         case BINARY if props.isDictionaryEnabled(d) =>
-          new FallbackValuesWriter[MemoBinaryDictionaryWriter, PlainValuesWriter](
-            new MemoBinaryDictionaryWriter(props.getDictionaryPageSizeThreshold, props.getAllocator),
-            new PlainValuesWriter(props.getInitialSlabSize, props.getPageSizeThreshold,
-              props.getAllocator))
+          new BinaryDictWriter(props.getDictionaryPageSizeThreshold, props.getInitialSlabSize)
+        case INT32 if props.isDictionaryEnabled(d) =>
+          new IntDictWriter(props.getDictionaryPageSizeThreshold, props.getInitialSlabSize)
         case _ => stock.newValuesWriter(d)
       }
   }
 
-  /** PLAIN INT64/DOUBLE values, little-endian into one growable `byte[]`:
-    * the bytes `PlainValuesWriter` produces through its
-    * `LittleEndianDataOutputStream`, doubles via `doubleToLongBits` as
-    * there. The buffer is reused across pages; the page store copies each
-    * page's bytes before [[reset]]. */
+  /** PLAIN values, little-endian into one growable `byte[]`: the bytes
+    * `PlainValuesWriter` produces through its `LittleEndianDataOutputStream`
+    * (doubles via `doubleToLongBits`, a binary as its 4-byte length and
+    * its bytes). The buffer is reused across pages; the page store copies
+    * each page's bytes before [[reset]]. */
   private final class LePlainWriter(initialBytes: Int) extends ValuesWriter {
     private[this] var buf = new Array[Byte](math.max(initialBytes, 1024))
     private[this] var le = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
@@ -177,8 +182,16 @@ object DirectParquet {
       le = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
     }
 
+    override def writeInteger(v: Int): Unit = { reserve(4); le.putInt(pos, v); pos += 4 }
     override def writeLong(v: Long): Unit = { reserve(8); le.putLong(pos, v); pos += 8 }
     override def writeDouble(v: Double): Unit = writeLong(java.lang.Double.doubleToLongBits(v))
+
+    def writeBinary(b: Array[Byte]): Unit = {
+      reserve(4L + b.length)
+      le.putInt(pos, b.length)
+      System.arraycopy(b, 0, buf, pos + 4, b.length)
+      pos += 4 + b.length
+    }
 
     def writeLongs(a: Array[Long], n: Int): Unit = {
       reserve(8L * n)
@@ -206,56 +219,270 @@ object DirectParquet {
       s"$prefix PLAIN little-endian ${pos}/${buf.length} bytes"
   }
 
-  /** `PlainBinaryDictionaryValuesWriter` that skips the content hash for
-    * string-table indices it has already seen in the current block. The
-    * leaf sets `sid` (-1: not a table string) before each `writeBytes`;
-    * the first sight of an index takes the stock path, later ones reuse
-    * its id from an `int[]`. The memo empties at each block (indices then
-    * name other strings) and with the dictionary content, so dictionary
-    * ids, sizes and fallback decisions are the stock writer's. */
+  /** One dictionary-on leaf's values: dictionary-encoded until the
+    * dictionary passes its byte threshold, PLAIN for the rest of the row
+    * group after that. It writes the bytes of parquet-mr's
+    * `FallbackValuesWriter` over a `DictionaryValuesWriter` (with a
+    * `PlainValuesWriter` to fall back to), and keeps its contract:
+    *   - [[getBufferedSize]] is the raw PLAIN size of the page's values
+    *     (4 bytes per INT32, length + 4 per binary), dictionary-encoded or
+    *     not, since page cuts are made from it;
+    *   - the first page falls back when its encoded ids plus the
+    *     dictionary are not smaller than its raw size;
+    *   - a new dictionary entry that takes the dictionary past its byte
+    *     threshold (or past `Int.MaxValue - 1` entries) falls back, and
+    *     the page's ids so far are rewritten as PLAIN values;
+    *   - the dictionary page holds the entries the last dictionary page
+    *     used, and is written only if some page was dictionary-encoded;
+    *   - [[resetDictionary]] restores a fresh writer's state.
+    * Its own parts: the page's ids are one `int[]`, encoded at the page
+    * cut, once, by the run-aware [[HybridWriter]]; the dictionary is an
+    * open-addressing table of ids over the entries in id order. The fall-
+    * back check runs only when an entry is added, the one event that can
+    * change its answer. Subclasses own the entries and the typed write,
+    * with a memo in front of the table. */
   @nowarn("cat=deprecation") // PLAIN_DICTIONARY: the V1 dictionary encoding parquet-mr writes
-  private final class MemoBinaryDictionaryWriter(maxDictionaryBytes: Int, allocator: ByteBufferAllocator)
-      extends PlainBinaryDictionaryValuesWriter(maxDictionaryBytes,
-        Encoding.PLAIN_DICTIONARY, Encoding.PLAIN_DICTIONARY, allocator) {
-    var sid = -1
-    private[this] var ids = new Array[Int](256) // dictionary id + 1 per index; 0 = unseen
-    private[this] var used = 0 // indices below this may be set
+  private abstract class DictWriter(maxDictionaryBytes: Int, initialSlabBytes: Int) extends ValuesWriter {
+    protected[this] final val plain = new LePlainWriter(initialSlabBytes)
+    private[this] var ids = new Array[Int](256) // the page's dictionary ids
+    private[this] var nIds = 0
+    private[this] val idCodes = new HybridWriter(0, lengthPrefix = false)
+    protected[this] final var raw = 0L // the page's values as PLAIN bytes
+    protected[this] final var fellBack = false
+    private[this] var firstPage = true
+    private[this] var dictUsed = false // some page was dictionary-encoded
+    protected[this] final var dictBytes = 0L // the entries as PLAIN bytes
+    protected[this] final var dictSize = 0
+    private[this] var lastUsedSize = 0 // the dictionary at the last encoded page
+    private[this] var lastUsedBytes = 0
 
-    override def writeBytes(v: Binary): Unit = {
-      val s = sid
-      if (s >= 0 && s < used && ids(s) != 0) encodedValues.add(ids(s) - 1)
-      else {
-        val size = binaryDictionaryContent.size
-        super.writeBytes(v)
-        if (s >= 0) {
-          if (s >= ids.length) ids = java.util.Arrays.copyOf(ids, math.max(s + 1, ids.length * 2))
-          ids(s) = 1 + (if (binaryDictionaryContent.size > size) size else binaryDictionaryContent.getInt(v))
-          used = math.max(used, s + 1)
+    // the table: dictionary id + 1 per slot, 0 = empty; Fibonacci
+    // hashing picks the first slot, linear probing the rest
+    protected[this] final var table = new Array[Int](512)
+    protected[this] final var mask = 511
+    private[this] var shift = 32 - 9
+
+    @inline protected[this] final def slot(h: Int): Int = (h * 0x9e3779b9) >>> shift
+
+    /** Stores id `dictSize` in the empty slot `s`: the entry is in place
+      * and takes `entryBytes` as a PLAIN value. Grows the table at half
+      * load. */
+    protected[this] final def insert(s: Int, entryBytes: Long): Unit = {
+      table(s) = dictSize + 1
+      dictSize += 1
+      dictBytes += entryBytes
+      if (dictSize * 2 > mask) {
+        table = new Array[Int](table.length * 2)
+        mask = table.length - 1
+        shift -= 1
+        var id = 0
+        while (id < dictSize) {
+          var i = slot(hashOf(id))
+          while (table(i) != 0) i = (i + 1) & mask
+          table(i) = id + 1
+          id += 1
         }
       }
     }
 
-    def forget(): Unit = { java.util.Arrays.fill(ids, 0, used, 0); used = 0 }
+    protected[this] def hashOf(id: Int): Int
+    /** Writes entry `id` as a PLAIN value to `w`. */
+    protected[this] def writeEntry(w: LePlainWriter, id: Int): Unit
+    /** Drops the entries and every memo of an id. */
+    protected[this] def clearEntries(): Unit
 
-    override protected def clearDictionaryContent(): Unit = {
-      super.clearDictionaryContent()
-      forget()
+    /** Appends one dictionary id to the page. */
+    @inline protected[this] final def appendId(id: Int): Unit = {
+      if (nIds == ids.length) ids = java.util.Arrays.copyOf(ids, nIds * 2)
+      ids(nIds) = id
+      nIds += 1
+    }
+
+    /** An entry was just added (its id already appended): fall back if
+      * the dictionary is now too big. */
+    protected[this] final def added(): Unit =
+      if (dictBytes > maxDictionaryBytes || dictSize > Int.MaxValue - 1) fallBack()
+
+    private def fallBack(): Unit = {
+      fellBack = true
+      var i = 0
+      while (i < nIds) { writeEntry(plain, ids(i)); i += 1 }
+      nIds = 0
+      // no page used the dictionary: it is dropped, as parquet-mr drops it
+      if (lastUsedSize == 0) clearDictionary()
+    }
+
+    private def clearDictionary(): Unit = {
+      clearEntries()
+      java.util.Arrays.fill(table, 0)
+      dictSize = 0
+      dictBytes = 0
+    }
+
+    /** The page's ids: the id width in one byte, then the RLE/bit-packed
+      * ids. Records the dictionary this page used. */
+    private def encodeIds(): BytesInput = {
+      val width = BytesUtils.getWidthFromMaxInt(dictSize - 1)
+      idCodes.reset(width)
+      var i = 0
+      while (i < nIds) {
+        val v = ids(i)
+        var j = i + 1
+        while (j < nIds && ids(j) == v) j += 1
+        idCodes.writeRun(v, j - i)
+        i = j
+      }
+      lastUsedSize = dictSize
+      lastUsedBytes = Math.toIntExact(dictBytes)
+      BytesInput.concat(BytesInput.from(Array(width.toByte)), idCodes.getBytes)
+    }
+
+    override def getBufferedSize: Long = raw
+
+    override def getBytes: BytesInput = {
+      if (!fellBack) {
+        val bytes = encodeIds()
+        if (!firstPage || bytes.size + dictBytes < raw) return bytes
+        fallBack()
+      }
+      plain.getBytes
+    }
+
+    override def getEncoding: Encoding =
+      if (fellBack) Encoding.PLAIN else { dictUsed = true; Encoding.PLAIN_DICTIONARY }
+
+    override def reset(): Unit = {
+      raw = 0
+      firstPage = false
+      nIds = 0
+      plain.reset()
+    }
+
+    override def toDictPageAndClose: DictionaryPage =
+      if (!dictUsed || lastUsedSize == 0) null
+      else {
+        val w = new LePlainWriter(lastUsedBytes)
+        var id = 0
+        while (id < lastUsedSize) { writeEntry(w, id); id += 1 }
+        new DictionaryPage(w.getBytes, lastUsedSize, Encoding.PLAIN_DICTIONARY)
+      }
+
+    override def resetDictionary(): Unit = {
+      reset()
+      clearDictionary()
+      fellBack = false; firstPage = true; dictUsed = false
+      lastUsedSize = 0; lastUsedBytes = 0
+    }
+
+    override def close(): Unit = { plain.close(); ids = Array.emptyIntArray; nIds = 0 }
+    override def getAllocatedSize: Long = plain.getAllocatedSize + 4L * ids.length + dictBytes
+    override def memUsageString(prefix: String): String =
+      s"$prefix dictionary → PLAIN: $dictSize entries, $dictBytes bytes, fell back $fellBack"
+  }
+
+  /** The owned dictionary → PLAIN writer of a BINARY leaf. Entries are
+    * the appended byte arrays themselves (the leaf's strings are not
+    * mutated after they are appended). A memo of dictionary ids keyed on
+    * the string-table index of the current block sits in front of the
+    * table: the leaf passes each value's index (-1: not a table string),
+    * and a later sight of an index in the same block appends its id with
+    * no hash, no lookup and no fallback check, since it adds no entry. */
+  private final class BinaryDictWriter(maxDictionaryBytes: Int, initialSlabBytes: Int)
+      extends DictWriter(maxDictionaryBytes, initialSlabBytes) {
+    private[this] var entries = new Array[Array[Byte]](256)
+    private[this] var hashes = new Array[Int](256)
+    private[this] var memo = new Array[Int](256) // dictionary id + 1 per index; 0 = unseen
+    private[this] var memoUsed = 0 // indices below this may be set
+
+    def write(b: Array[Byte], sid: Int): Unit = {
+      raw += b.length + 4
+      if (fellBack) plain.writeBinary(b)
+      else if (sid >= 0 && sid < memoUsed && memo(sid) != 0) appendId(memo(sid) - 1)
+      else {
+        val h = java.util.Arrays.hashCode(b)
+        var s = slot(h)
+        var e = table(s)
+        while (e != 0 && !(hashes(e - 1) == h && java.util.Arrays.equals(entries(e - 1), b))) {
+          s = (s + 1) & mask; e = table(s)
+        }
+        val known = e - 1
+        val id = if (known >= 0) known else dictSize
+        appendId(id)
+        if (sid >= 0) {
+          if (sid >= memo.length) memo = java.util.Arrays.copyOf(memo, math.max(sid + 1, memo.length * 2))
+          memo(sid) = id + 1
+          if (sid >= memoUsed) memoUsed = sid + 1
+        }
+        if (known < 0) {
+          if (id == entries.length) {
+            entries = java.util.Arrays.copyOf(entries, id * 2); hashes = java.util.Arrays.copyOf(hashes, id * 2)
+          }
+          entries(id) = b
+          hashes(id) = h
+          insert(s, 4L + b.length)
+          added()
+        }
+      }
+    }
+
+    /** A new block begins: its string-table indices name other strings. */
+    def forget(): Unit = { java.util.Arrays.fill(memo, 0, memoUsed, 0); memoUsed = 0 }
+
+    protected[this] def hashOf(id: Int): Int = hashes(id)
+    protected[this] def writeEntry(w: LePlainWriter, id: Int): Unit = w.writeBinary(entries(id))
+    protected[this] def clearEntries(): Unit = {
+      entries = new Array[Array[Byte]](256); hashes = new Array[Int](256); forget()
     }
   }
 
-  /** Repetition or definition levels of a leaf whose max level is > 0:
-    * the bytes, sizes and encoding of parquet-mr's
-    * `RunLengthBitPackingHybridValuesWriter` (the RLE/bit-packing hybrid
-    * with a 4-byte length prefix, as V1 data pages store levels), with the
-    * encoder's state machine replayed value for value. [[writeRun]] takes
-    * a run of one level and, once the encoder is inside an RLE run, adds
-    * the rest of the run in one step, where the stock encoder takes one
-    * call per value. */
-  private final class LevelWriter(maxLevel: Int) extends ValuesWriter {
-    private[this] val bitWidth = BytesUtils.getWidthFromMaxInt(maxLevel)
-    require(bitWidth <= 8, s"level width $bitWidth")
-    private[this] val packer = Packer.LITTLE_ENDIAN.newBytePacker(bitWidth)
-    private[this] val packBuffer = new Array[Byte](bitWidth)
+  /** The owned dictionary → PLAIN writer of an INT32 leaf (uid, version).
+    * Those values come in runs (an editor's elements, one version), so a
+    * repeat of the last value appends the last id without a lookup. */
+  private final class IntDictWriter(maxDictionaryBytes: Int, initialSlabBytes: Int)
+      extends DictWriter(maxDictionaryBytes, initialSlabBytes) {
+    private[this] var entries = new Array[Int](256)
+    private[this] var lastValue = 0
+    private[this] var lastId = -1 // -1: no last value
+
+    override def writeInteger(v: Int): Unit = {
+      raw += 4
+      if (fellBack) plain.writeInteger(v)
+      else if (v == lastValue && lastId >= 0) appendId(lastId)
+      else {
+        var s = slot(v)
+        var e = table(s)
+        while (e != 0 && entries(e - 1) != v) { s = (s + 1) & mask; e = table(s) }
+        val known = e - 1
+        val id = if (known >= 0) known else dictSize
+        appendId(id)
+        lastValue = v
+        lastId = id
+        if (known < 0) {
+          if (id == entries.length) entries = java.util.Arrays.copyOf(entries, id * 2)
+          entries(id) = v
+          insert(s, 4L)
+          added()
+        }
+      }
+    }
+
+    protected[this] def hashOf(id: Int): Int = entries(id)
+    protected[this] def writeEntry(w: LePlainWriter, id: Int): Unit = w.writeInteger(entries(id))
+    protected[this] def clearEntries(): Unit = lastId = -1
+  }
+
+  /** parquet-mr's RLE/bit-packing hybrid (`RunLengthBitPackingHybridEncoder`)
+    * for widths 0 to 32, with the encoder's state machine replayed value
+    * for value. Levels use it with the 4-byte length prefix of V1 data
+    * pages, as `RunLengthBitPackingHybridValuesWriter` writes them;
+    * dictionary ids without, at the width their page sets. [[writeRun]]
+    * takes a run of one value and, once the encoder is inside an RLE run,
+    * adds the rest of the run in one step, where the stock encoder takes
+    * one call per value. */
+  private final class HybridWriter(initialWidth: Int, lengthPrefix: Boolean) extends ValuesWriter {
+    private[this] var bitWidth = 0
+    private[this] var valueBytes = 0 // bytes of an RLE run's value
+    private[this] var packer: BytePacker = _
     private[this] val buffered = new Array[Int](8)
     private[this] var out = new Array[Byte](256)
     private[this] var size = 0
@@ -265,6 +492,16 @@ object DirectParquet {
     private[this] var bitPackedGroups = 0
     private[this] var bitPackedHeader = -1
     private[this] var finished = false
+    reset(initialWidth)
+
+    /** Empties the encoder and sets the width of the next values. */
+    def reset(width: Int): Unit = {
+      require(width >= 0 && width <= 32, s"bit width $width")
+      bitWidth = width
+      valueBytes = (width + 7) / 8
+      packer = Packer.LITTLE_ENDIAN.newBytePacker(width)
+      reset()
+    }
 
     private def put(b: Int): Unit = {
       if (size == out.length) out = java.util.Arrays.copyOf(out, size * 2)
@@ -298,9 +535,9 @@ object DirectParquet {
     private def writeOrAppendBitPackedRun(): Unit = {
       if (bitPackedGroups >= 63) endPreviousBitPackedRun()
       if (bitPackedHeader == -1) { put(0); bitPackedHeader = size - 1 }
-      packer.pack8Values(buffered, 0, packBuffer, 0)
-      var i = 0
-      while (i < packBuffer.length) { put(packBuffer(i)); i += 1 }
+      if (size + bitWidth > out.length) out = java.util.Arrays.copyOf(out, math.max(out.length * 2, size + bitWidth))
+      packer.pack8Values(buffered, 0, out, size) // 8 values of bitWidth bits: bitWidth bytes
+      size += bitWidth
       numBuffered = 0
       repeatCount = 0
       bitPackedGroups += 1
@@ -314,16 +551,17 @@ object DirectParquet {
 
     private def writeRleRun(): Unit = {
       endPreviousBitPackedRun()
-      var h = repeatCount << 1 // unsigned varint header, then the value in one byte
+      var h = repeatCount << 1 // unsigned varint header, then the value, little-endian
       while ((h & ~0x7f) != 0) { put((h & 0x7f) | 0x80); h >>>= 7 }
       put(h)
-      put(previous & 0xff)
+      var i = 0
+      while (i < valueBytes) { put(previous >>> (8 * i)); i += 1 }
       repeatCount = 0
       numBuffered = 0
     }
 
     override def getBytes: BytesInput = {
-      if (finished) throw new ParquetEncodingException("level bytes taken twice without reset")
+      if (finished) throw new ParquetEncodingException("RLE bytes taken twice without reset")
       if (repeatCount >= 8) writeRleRun()
       else if (numBuffered > 0) {
         java.util.Arrays.fill(buffered, numBuffered, 8, 0)
@@ -331,7 +569,8 @@ object DirectParquet {
         endPreviousBitPackedRun()
       } else endPreviousBitPackedRun()
       finished = true
-      BytesInput.concat(BytesInput.fromInt(size), BytesInput.from(out, 0, size))
+      if (lengthPrefix) BytesInput.concat(BytesInput.fromInt(size), BytesInput.from(out, 0, size))
+      else BytesInput.from(out, 0, size)
     }
 
     override def getBufferedSize: Long = size
@@ -344,8 +583,13 @@ object DirectParquet {
 
     override def close(): Unit = { reset(); out = Array.emptyByteArray }
     override def getAllocatedSize: Long = out.length
-    override def memUsageString(prefix: String): String = s"$prefix RLE levels $size/${out.length} bytes"
+    override def memUsageString(prefix: String): String = s"$prefix RLE $size/${out.length} bytes"
   }
+
+  /** A repetition or definition level writer: RLE/bit-packed levels
+    * with the 4-byte length prefix of V1 data pages. */
+  private def levelWriter(maxLevel: Int): HybridWriter =
+    new HybridWriter(BytesUtils.getWidthFromMaxInt(maxLevel), lengthPrefix = true)
 
   /** One leaf column of the current row group: the levels and non-null
     * values buffered since the last drain, and the encoder state that
@@ -358,8 +602,8 @@ object DirectParquet {
     private[this] val maxRep = desc.getMaxRepetitionLevel
     private[this] val maxDef = desc.getMaxDefinitionLevel
     // max level 0: parquet-mr's no-op writer, and nothing to replay
-    private[this] val rle = if (maxRep > 0) new LevelWriter(maxRep) else null
-    private[this] val dle = if (maxDef > 0) new LevelWriter(maxDef) else null
+    private[this] val rle = if (maxRep > 0) levelWriter(maxRep) else null
+    private[this] val dle = if (maxDef > 0) levelWriter(maxDef) else null
     private[this] val rlw = if (rle ne null) rle else WriterProps.newRepetitionLevelWriter(desc)
     private[this] val dlw = if (dle ne null) dle else WriterProps.newDefinitionLevelWriter(desc)
     protected[this] val data: ValuesWriter = WriterProps.newValuesWriter(desc)
@@ -559,18 +803,18 @@ object DirectParquet {
   /** String leaf. Values are UTF8String byte arrays, held by reference
     * until the drain (`getBytes` returns a string-table entry's own array
     * and copies any other, sliced, string), each with its string-table
-    * index for the dictionary memo. */
+    * index for the dictionary memo. A string-table string is folded into
+    * the page statistics once per page: `folded` holds, per index, the
+    * epoch of its last fold, and the epoch moves on at every page cut and
+    * every block, when the page's statistics start over or the indices
+    * name other strings. */
   private final class BinaryLeaf(desc: ColumnDescriptor, pages: PageWriter, emptyDef: Int = 0)
       extends Leaf(desc, pages, emptyDef) {
     private[this] var vals = new Array[Array[Byte]](256)
     private[this] var sids = new Array[Int](256)
-    private[this] val memo = data match {
-      case f: FallbackValuesWriter[_, _] => f.initialWriter match {
-        case m: MemoBinaryDictionaryWriter => m
-        case _ => null
-      }
-      case _ => null
-    }
+    private[this] val dict = data match { case w: BinaryDictWriter => w; case _ => null }
+    private[this] var folded = new Array[Int](256)
+    private[this] var epoch = 1
 
     def add(v: UTF8String, sid: Int, r: Int, d: Int): Unit = {
       level(r, d)
@@ -582,15 +826,21 @@ object DirectParquet {
       nv += 1
     }
 
-    override def newBlock(): Unit = if (memo ne null) memo.forget()
+    override def newBlock(): Unit = { if (dict ne null) dict.forget(); epoch += 1 }
+
+    override def writePage(): Unit = { super.writePage(); epoch += 1 }
 
     protected[this] def drainValues(count: Int): Unit = {
       var i = 0
       while (i < count) {
-        val b = Binary.fromConstantByteArray(vals(i))
-        if (memo ne null) memo.sid = sids(i)
-        data.writeBytes(b)
-        stats.updateStats(b)
+        val b = vals(i)
+        val s = sids(i)
+        if (dict ne null) dict.write(b, s) else data.writeBytes(Binary.fromConstantByteArray(b))
+        if (s < 0) stats.updateStats(Binary.fromConstantByteArray(b))
+        else {
+          if (s >= folded.length) folded = java.util.Arrays.copyOf(folded, math.max(s + 1, folded.length * 2))
+          if (folded(s) != epoch) { stats.updateStats(Binary.fromConstantByteArray(b)); folded(s) = epoch }
+        }
         vals(i) = null
         i += 1
       }
@@ -600,7 +850,7 @@ object DirectParquet {
   /** One parquet file, written through its [[ColumnSink]] appends: each
     * append goes to its leaf columns of [[MessageSchema]], and `end` adds
     * the levels of every field the element left null. The buffers drain
-    * into parquet-mr's encoders at every size check (see the object
+    * into the encoders at every size check (see the object
     * header). Strings are held by reference until the next drain, so
     * their byte arrays must not be mutated after they are appended.
     *

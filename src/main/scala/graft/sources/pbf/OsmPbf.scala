@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.util.SerializableConfiguration
 
 
 /** Spark-native OSM PBF source: `.osm.pbf` → DataFrame(OsmSchema.schema).
@@ -36,14 +35,14 @@ object OsmPbf {
   final val DefaultSplitMb = 64
 
   /** Ships a Hadoop conf to the tasks of a PBF read or write. A task
-    * closure that holds a [[SerializableConfiguration]] deserializes the
-    * whole conf (~1,000 properties, ~110 KB) again in every task; a
-    * broadcast is fetched and deserialized once per executor and read
-    * through `.value`, as Spark's own file sources do. The conf is copied
-    * first, so tasks read a snapshot taken now, in local mode too, rather
-    * than the session's live, mutable one. */
-  private[pbf] def broadcastConf(sc: SparkContext, conf: Configuration): Broadcast[SerializableConfiguration] =
-    sc.broadcast(new SerializableConfiguration(new Configuration(conf)))
+    * closure that holds the conf deserializes it (~1,000 properties,
+    * ~110 KB) again in every task; a broadcast is fetched and
+    * deserialized once per executor and read through `.value`, as Spark's
+    * own file sources do. The broadcast is a [[ConfSnapshot]] of the conf
+    * as it is now, in local mode too, rather than the session's live,
+    * mutable one. */
+  private[pbf] def broadcastConf(sc: SparkContext, conf: Configuration): Broadcast[ConfSnapshot] =
+    sc.broadcast(new ConfSnapshot(conf))
 
   /** Driver-side plan: spans of every blob in the file. */
   def blobSpans(spark: SparkSession, path: String,
@@ -778,4 +777,34 @@ object PbfConfig {
   /** Object-store commit: write-once generation dir + `_CURRENT` pointer
     * PUT; zero renames (S3-safe). */
   val CommitPointer = "pointer"
+}
+
+/** A Hadoop conf's properties as one key/value array, for
+  * [[OsmPbf.broadcastConf]]. Spark's `SerializableConfiguration` ships a
+  * conf through `Configuration.write`, which also writes (gzipped) the
+  * list of sources of every key; this ships the keys and raw values
+  * alone. [[value]] is a `Configuration(false)` holding exactly those
+  * properties, as `SerializableConfiguration` rebuilds one: built once
+  * here, and once per deserialized copy, in `readObject`. */
+final class ConfSnapshot(conf: Configuration) extends Serializable {
+  private[this] val kv: Array[String] = {
+    val b = Array.newBuilder[String]
+    conf.iterator().forEachRemaining { e => b += e.getKey; b += e.getValue }
+    b.result()
+  }
+  @transient private[this] var conf0: Configuration = build()
+
+  def value: Configuration = conf0
+
+  private def build(): Configuration = {
+    val c = new Configuration(false)
+    var i = 0
+    while (i < kv.length) { c.set(kv(i), kv(i + 1)); i += 2 }
+    c
+  }
+
+  private def readObject(in: java.io.ObjectInputStream): Unit = {
+    in.defaultReadObject()
+    conf0 = build()
+  }
 }

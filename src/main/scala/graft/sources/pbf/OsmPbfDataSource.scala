@@ -11,7 +11,6 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -173,7 +172,7 @@ class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
 case class OsmPbfInputPartition(path: String, spans: Array[Blobs.BlobSpan])
     extends InputPartition
 
-case class OsmPbfReaderFactory(hconf: Broadcast[SerializableConfiguration],
+case class OsmPbfReaderFactory(hconf: Broadcast[ConfSnapshot],
                                requiredSchema: StructType,
                                typeSet: Set[String],
                                wayLocs: Boolean = false) extends PartitionReaderFactory {
@@ -186,7 +185,7 @@ case class OsmPbfReaderFactory(hconf: Broadcast[SerializableConfiguration],
 /** Reads one span group: seek → read → decompress → decode into rows of
   * the pruned schema, built in its column order. */
 class OsmPbfPartitionReader(partition: OsmPbfInputPartition,
-                            hconf: SerializableConfiguration,
+                            hconf: ConfSnapshot,
                             requiredSchema: StructType,
                             typeSet: Set[String],
                             wayLocs: Boolean = false) extends PartitionReader[InternalRow] {

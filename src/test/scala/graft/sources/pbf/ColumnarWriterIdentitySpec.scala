@@ -134,31 +134,56 @@ class ColumnarWriterIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     pairs
   }
 
+  /** A node of [[nodesBoth]]: the string-table indices of its user (-1:
+    * none) and of its tags' keys and values, and its uid and version. */
+  private final case class N(user: Int, tags: Seq[(Int, Int)] = Nil, uid: Option[Int] = None,
+      version: Option[Int] = None)
+
   /** Nodes appended block by block the way the decoder appends them: each
-    * block is its string table and, per node, the table indices of its
-    * user and of one tag's key and value. The oracle gets the same nodes
-    * as rows. */
-  private def appendBoth(name: String, blocks: Seq[(Array[String], Seq[(Int, Int, Int)])],
+    * block is its string table and its nodes, whose strings are indices
+    * into that table. The oracle gets the same nodes as rows. The
+    * production writer is asked for its size every 1024 rows, as
+    * `RotatingWriter` asks. */
+  private def nodesBoth(name: String, blocks: Seq[(Array[String], Seq[N])],
       rowGroupBytes: Long, rowGroupRows: Option[Int]): Pair = {
     val p = new Pair(name, CompressionCodecName.ZSTD, rowGroupBytes, rowGroupRows)
     val node = UTF8String.fromString(OsmSchema.TypeNode)
+    def boxed(v: Option[Int]): Any = v.fold[Any](null)(identity)
     var id = 0L
     try blocks.foreach { case (table, nodes) =>
       val u = table.map(UTF8String.fromString)
       p.w.block()
-      nodes.foreach { case (user, k, v) =>
-        p.w.id(id); p.w.tag(k, u(k), v, u(v)); p.w.lat(1.0); p.w.user(user, u(user)); p.w.end()
+      nodes.foreach { n =>
+        p.w.id(id)
+        n.tags.foreach { case (k, v) => p.w.tag(k, u(k), v, u(v)) }
+        p.w.lat(1.0)
+        n.uid.foreach(p.w.uid)
+        if (n.user >= 0) p.w.user(n.user, u(n.user))
+        n.version.foreach(p.w.version)
+        p.w.end()
         p.o.write(new GenericInternalRow(Array[Any](id,
-          new ArrayBasedMapData(new GenericArrayData(Array[Any](u(k))), new GenericArrayData(Array[Any](u(v)))),
-          1.0, null, null, null, null, null, null, u(user), null, null, node)))
+          new ArrayBasedMapData(new GenericArrayData(n.tags.map(t => u(t._1): Any).toArray),
+            new GenericArrayData(n.tags.map(t => u(t._2): Any).toArray)),
+          1.0, null, null, null, null, null, boxed(n.uid), if (n.user >= 0) u(n.user) else null,
+          boxed(n.version), null, node)))
         id += 1
+        if ((id & 0x3ff) == 0) p.w.getDataSize
       }
     } finally p.close()
     p
   }
 
+  /** [[nodesBoth]] for nodes of one user and one tag, as (user, key, value). */
+  private def appendBoth(name: String, blocks: Seq[(Array[String], Seq[(Int, Int, Int)])],
+      rowGroupBytes: Long, rowGroupRows: Option[Int]): Pair =
+    nodesBoth(name, blocks.map { case (t, ns) => (t, ns.map { case (user, k, v) => N(user, Seq(k -> v)) }) },
+      rowGroupBytes, rowGroupRows)
+
+  private def chunks(f: org.apache.parquet.hadoop.metadata.ParquetMetadata, column: String) =
+    f.getBlocks.asScala.map(_.getColumns.asScala.find(_.getPath.toDotString == column).get)
+
   private def chunkEncodings(f: org.apache.parquet.hadoop.metadata.ParquetMetadata, column: String) =
-    f.getBlocks.asScala.map(_.getColumns.asScala.find(_.getPath.toDotString == column).get.getEncodings.asScala)
+    chunks(f, column).map(_.getEncodings.asScala)
 
   test("synthesized nodes, ways and relations: identical bytes over many pages and row groups") {
     val pairs = transcodeBoth("synth", blocks = 24, nodesPerBlock = 8000, waysPerBlock = 2500,
@@ -337,5 +362,103 @@ class ColumnarWriterIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val users = chunkEncodings(footer(big.newPath)._1, "user")
     assert(users.size === 4)
     assert(users.forall(e => e.contains(Encoding.PLAIN) && e.contains(Encoding.PLAIN_DICTIONARY)), users)
+  }
+
+  private val Key = "tags.key_value.key"
+  private val Value = "tags.key_value.value"
+
+  test("the dictionary writer: a binary first page that does not compress is PLAIN, and so is the rest of its chunk") {
+    // 20,000 distinct users (a string per node) fill the first page: its
+    // ids plus its dictionary outweigh its PLAIN bytes. Two more blocks
+    // then repeat 100 of them, as memo hits on a fallen-back writer.
+    val distinct = (0 until 4).map { b =>
+      val table = "k" +: Array.tabulate(5000)(i => f"first-page-user-${b * 5000 + i}%08d")
+      (table, (1 to 5000).map(i => N(i, Seq(0 -> i))))
+    }
+    val repeats = (0 until 2).map { b =>
+      val table = "k" +: Array.tabulate(100)(i => f"first-page-user-${i * 7 + b}%08d")
+      (table, (0 until 5000).map(i => N(1 + i % 100, Seq(0 -> (1 + i % 100)))))
+    }
+    val p = nodesBoth("dict-first-page", distinct ++ repeats, 256L << 20, None)
+    p.assertIdentical()
+    val f = footer(p.newPath)._1
+    for (c <- Seq("user", Value); chunk <- chunks(f, c)) {
+      val e = chunk.getEncodings.asScala
+      assert(e.contains(Encoding.PLAIN) && !e.contains(Encoding.PLAIN_DICTIONARY), s"$c: $e")
+      assert(!chunk.hasDictionaryPage, c)
+    }
+    assert(chunkEncodings(f, Key).forall(_.contains(Encoding.PLAIN_DICTIONARY)))
+  }
+
+  test("the dictionary writer: a tag-value dictionary past 1 MB falls back mid-chunk, appended by string-table index") {
+    // four blocks of values from a pool of 50 (the first page ends at
+    // 20,000 rows), then six blocks of 200-byte values seen once each:
+    // past about 5,100 of them the dictionary is over 1 MB and the
+    // chunk's later pages are PLAIN
+    val pool = (0 until 50).map(i => f"pooled-$i%04d")
+    val blocks = (0 until 10).map { b =>
+      val values = if (b < 4) pool else (0 until 5000).map(i => f"v${b * 5000 + i}%09d" + ("=" * 190))
+      val table = (Array("k0", "k1", "k2") ++ values).toArray
+      (table, (0 until 5000).map(i => N(-1, Seq((i % 3) -> (3 + i % values.size)))))
+    }
+    val p = nodesBoth("dict-value-overflow", blocks, 256L << 20, None)
+    p.assertIdentical()
+    val f = footer(p.newPath)._1
+    val value = chunks(f, Value)
+    assert(value.size === 1)
+    val e = value.head.getEncodings.asScala
+    assert(e.contains(Encoding.PLAIN_DICTIONARY) && e.contains(Encoding.PLAIN), e)
+    assert(value.head.hasDictionaryPage)
+    assert(chunkEncodings(f, Key).forall(e => !e.contains(Encoding.PLAIN)))
+  }
+
+  test("the dictionary writer: an INT32 uid dictionary past 1 MB falls back mid-chunk; version keeps its dictionary") {
+    // 40,000 nodes of 50 uids in runs of 7, then 320,000 nodes whose uids
+    // are new in 7 of every 8 (runs of one or two): 262,145 uids take the
+    // dictionary past 1 MB
+    val uids = (0 until 40000).map(i => (i / 7) % 50) ++ (0 until 320000).map(i => 1000 + i * 7 / 8)
+    val blocks = uids.grouped(8000).map { g =>
+      (Array("k"), g.zipWithIndex.map { case (uid, i) => N(-1, uid = Some(uid), version = Some(1 + (i / 5) % 4)) })
+    }.toSeq
+    val p = nodesBoth("dict-uid-overflow", blocks, 256L << 20, None)
+    p.assertIdentical()
+    val f = footer(p.newPath)._1
+    val uid = chunks(f, "uid")
+    assert(uid.size === 1)
+    val e = uid.head.getEncodings.asScala
+    assert(e.contains(Encoding.PLAIN_DICTIONARY) && e.contains(Encoding.PLAIN), e)
+    assert(uid.head.hasDictionaryPage)
+    assert(chunkEncodings(f, "version").forall(e => !e.contains(Encoding.PLAIN)))
+  }
+
+  test("the dictionary writer: memo hits at the first row of a new page are in that page's statistics") {
+    // one 40,000-node block whose users and tag values cycle over five
+    // 100-byte strings: every page after the first opens with memo hits
+    // of strings the previous page already folded into its statistics
+    val table = Array("k") ++ (0 until 5).map(i => s"$i" * 100) ++ (0 until 5).map(i => s"value-$i")
+    val nodes = (0 until 40000).map(i => N(1 + i % 5, Seq(0 -> (6 + (i * 3) % 5))))
+    val p = nodesBoth("dict-memo-page-stats", Seq(table -> nodes), 256L << 20, None)
+    p.assertIdentical()
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(p.newPath, conf))
+    try {
+      val user = r.getRowGroups.get(0).getColumns.asScala.find(_.getPath.toDotString == "user").get
+      assert(r.readOffsetIndex(user).getPageCount > 2)
+      assert(r.readColumnIndex(user).getNullPages.asScala.forall(b => !b.booleanValue))
+    } finally r.close()
+  }
+
+  test("the dictionary writer: each row group starts a fresh dictionary, even inside one block") {
+    // one block spans three 10,000-row groups: the first group's 10,000
+    // distinct users make its first page PLAIN; the next groups cycle
+    // over 20 of those users, at the same string-table indices, and are
+    // dictionary-encoded from their own dictionaries
+    val table = Array.tabulate(10000)(i => f"group-user-$i%06d")
+    val nodes = (0 until 30000).map(i => N(if (i < 10000) i else (i * 37) % 20))
+    val p = nodesBoth("dict-row-group-reset", Seq(table -> nodes), 256L << 20, Some(10000))
+    p.assertIdentical()
+    val user = chunks(footer(p.newPath)._1, "user")
+    assert(user.size === 3)
+    assert(!user.head.getEncodings.contains(Encoding.PLAIN_DICTIONARY) && !user.head.hasDictionaryPage)
+    assert(user.tail.forall(c => !c.getEncodings.contains(Encoding.PLAIN) && c.hasDictionaryPage))
   }
 }

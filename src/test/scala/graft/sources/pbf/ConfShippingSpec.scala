@@ -1,13 +1,18 @@
 package graft.sources.pbf
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.SparkEnv
+import org.apache.spark.serializer.JavaSerializer
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The local file system under its own scheme, `pbftest:`. Registered on a
   * running session's Hadoop conf, it exists only for tasks that read that
@@ -97,5 +102,22 @@ class ConfShippingSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveS
     val read = spark.read.parquet(out).groupBy("type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(read === counts)
+  }
+
+  test("the conf snapshot round-trips through Spark's JavaSerializer with every key and value") {
+    // the transcode's conf: the session's, plus its zstd level
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.setInt("parquet.compression.codec.zstd.level", 3)
+    def pairs(c: Configuration): Map[String, String] =
+      c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val ser = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+    val bytes = ser.serialize(new ConfSnapshot(conf))
+    val size = bytes.limit()
+    val copy = ser.deserialize[ConfSnapshot](bytes).value
+    assert(pairs(copy) === pairs(conf))
+    assert(pairs(copy).size > 100)
+    assert(copy.get("parquet.compression.codec.zstd.level") === "3")
+    val stock = ser.serialize(new SerializableConfiguration(conf)).limit()
+    assert(size < stock, s"snapshot $size bytes, SerializableConfiguration $stock bytes")
   }
 }
