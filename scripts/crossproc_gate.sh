@@ -4,8 +4,10 @@
 # `sbt test` (multi-JVM launch cost, port sensitivity), but nothing used
 # to re-run them when the surfaces they guard moved. This script is the
 # RocksDB-refresh-style discipline: whenever the commit protocol, the
-# direct parquet sink, or the replay harness changes relative to the last
-# proof commit, re-drive all three proofs and write fresh round artifacts.
+# direct parquet sink, the PBF blob catalog and scan (whose catalog job
+# runs on executors while a pruned scan is planned), or the replay harness
+# changes relative to the last proof commit, re-drive all three proofs and
+# write fresh round artifacts.
 #
 # Usage: scripts/crossproc_gate.sh [roundTag] [baseRef]
 #   roundTag  suffix for the artifacts (default: rX)
@@ -20,6 +22,8 @@ cd "$(dirname "$0")/.."
 GUARDED=(
   src/main/scala/graft/sources/pbf/OsmPbf.scala
   src/main/scala/graft/sources/pbf/DirectParquet.scala
+  src/main/scala/graft/sources/pbf/IndexedPbf.scala
+  src/main/scala/graft/sources/pbf/OsmPbfDataSource.scala
   src/main/scala/graft/streaming/StreamReplay.scala
   src/main/scala/graft/tools/LocalClusterProof.scala
   src/main/scala/graft/tools/ExecutorDeathProof.scala

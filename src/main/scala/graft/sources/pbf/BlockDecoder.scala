@@ -106,8 +106,9 @@ object BlockDecoder {
 
   /** Field order in the wire format puts granularity (17-20) after the
     * groups (2), so the group spans are collected first and decoded once
-    * the block-level scalars are known. */
-  private def parse(payload: Array[Byte]): ParsedBlock = {
+    * the block-level scalars are known. `strings = false` skips the string
+    * table (the id-only pass reads no string). */
+  private def parse(payload: Array[Byte], strings: Boolean = true): ParsedBlock = {
     val r = new ProtoReader(payload)
     var stringTable: Array[UTF8String] = Array.empty
     val groups = ArrayBuffer.empty[ProtoReader]
@@ -118,7 +119,8 @@ object BlockDecoder {
     while (r.hasNext) {
       val tag = r.readTag()
       (tag: @annotation.switch) match {
-        case 0x0a => stringTable = decodeStringTable(r.readMessage()) // 1
+        case 0x0a => // 1
+          if (strings) stringTable = decodeStringTable(r.readMessage()) else r.skip(2)
         case 0x12 => groups += r.readMessage() // 2
         case _ =>
           val field = tag >>> 3
@@ -572,84 +574,114 @@ object BlockDecoder {
 
 
   /** Per-blob min/max element ids — the zone map the reference's
-    * IndexedReader records per blob (indexed.rs:36-44, 174-225).
-    * `min > max` means the type is absent from the blob. */
+    * IndexedReader records per blob (indexed.rs:36-44, 174-225) — and the
+    * box of the node coordinates, in the degrees the scan emits.
+    * `min > max` means the type (or, for the box, any node with
+    * coordinates) is absent from the blob. `badCoords` marks dense lat/lon
+    * arrays whose lengths do not match the ids: the scan fails on them
+    * (`emitDense`), so the box does not bound the blob and no lat/lon
+    * range may drop it. */
   final case class BlobIdRanges(
       nodeMin: Long, nodeMax: Long,
       wayMin: Long, wayMax: Long,
-      relMin: Long, relMax: Long) {
+      relMin: Long, relMax: Long,
+      latMin: Double, latMax: Double,
+      lonMin: Double, lonMax: Double,
+      badCoords: Boolean = false) {
     def hasNodes: Boolean = nodeMin <= nodeMax
     def hasWays: Boolean = wayMin <= wayMax
     def hasRelations: Boolean = relMin <= relMax
+    def hasCoords: Boolean = latMin <= latMax
   }
 
-  /** Id-only decode of a PrimitiveBlock: visits just the id field of every
-    * element (nodes field 1 sint64, dense field 1 packed-delta, way/rel
-    * field 1 int64) and skips everything else — building the zone map costs
-    * a fraction of a full decode (the reference builds its index while
-    * already decoding pass-1 blocks, indexed.rs:174-225; a pruned scan has
-    * to pay only this). */
+  /** Id-and-coordinate decode of a PrimitiveBlock: visits the id field of
+    * every element and the lat/lon fields of every node, and skips
+    * everything else — building the zone map costs a fraction of a full
+    * decode (the reference builds its index while already decoding pass-1
+    * blocks, indexed.rs:174-225; a pruned scan has to pay only this). The
+    * box folds the same `ctx.coord` doubles the scan emits, so it holds
+    * for any granularity and offset; dense nodes without lat/lon arrays
+    * (null coordinates in the scan) add nothing to it. */
   def idRanges(payload: Array[Byte]): BlobIdRanges = {
     var nodeMin = Long.MaxValue; var nodeMax = Long.MinValue
     var wayMin = Long.MaxValue; var wayMax = Long.MinValue
     var relMin = Long.MaxValue; var relMax = Long.MinValue
+    var latMin = Double.PositiveInfinity; var latMax = Double.NegativeInfinity
+    var lonMin = Double.PositiveInfinity; var lonMax = Double.NegativeInfinity
+    var badCoords = false
     @inline def see(id: Long, kind: Int): Unit = (kind: @annotation.switch) match {
       case 0 => if (id < nodeMin) nodeMin = id; if (id > nodeMax) nodeMax = id
       case 1 => if (id < wayMin) wayMin = id; if (id > wayMax) wayMax = id
       case 2 => if (id < relMin) relMin = id; if (id > relMax) relMax = id
     }
-    val r = new ProtoReader(payload)
-    while (r.hasNext) {
-      val tag = r.readTag()
-      if (tag == 0x12) { // PrimitiveGroup
-        val g = r.readMessage()
-        while (g.hasNext) {
-          val gt = g.readTag()
-          (gt: @annotation.switch) match {
-            case 0x0a => // Node: id = 1 sint64
-              val m = g.readMessage()
-              var done = false
-              while (m.hasNext && !done) {
-                val t = m.readTag()
-                if ((t >>> 3) == 1) { see(m.readZigzag(), 0); done = true }
-                else m.skip(t & 7)
-              }
-            case 0x12 => // DenseNodes: id = 1 packed sint64 delta
-              val m = g.readMessage()
-              // the delta accumulator persists across repeat occurrences of
-              // the packed field (occurrences concatenate per spec — a
-              // per-occurrence reset would restart the id chain at 0)
-              var acc = 0L
-              while (m.hasNext) {
-                val t = m.readTag()
-                if ((t >>> 3) == 1) {
-                  if ((t & 7) == 2)
-                    m.readPackedZigzag().foreach { d => acc += d; see(acc, 0) }
-                  else { acc += m.readZigzag(); see(acc, 0) }
-                } else m.skip(t & 7)
-              }
-            case 0x1a => // Way: id = 1 int64
-              val m = g.readMessage()
-              var done = false
-              while (m.hasNext && !done) {
-                val t = m.readTag()
-                if ((t >>> 3) == 1) { see(m.readVarint(), 1); done = true }
-                else m.skip(t & 7)
-              }
-            case 0x22 => // Relation: id = 1 int64
-              val m = g.readMessage()
-              var done = false
-              while (m.hasNext && !done) {
-                val t = m.readTag()
-                if ((t >>> 3) == 1) { see(m.readVarint(), 2); done = true }
-                else m.skip(t & 7)
-              }
-            case t => g.skip(t & 7)
-          }
-        }
-      } else r.skip(tag & 7)
+    val b = parse(payload, strings = false)
+    val ctx = b.ctx
+    @inline def seeCoord(rawLat: Long, rawLon: Long): Unit = {
+      val la = ctx.coord(ctx.latOffset, rawLat)
+      val lo = ctx.coord(ctx.lonOffset, rawLon)
+      if (la < latMin) latMin = la; if (la > latMax) latMax = la
+      if (lo < lonMin) lonMin = lo; if (lo > lonMax) lonMax = lo
     }
-    BlobIdRanges(nodeMin, nodeMax, wayMin, wayMax, relMin, relMax)
+    /** Id (field 1, int64) of a way or relation; the rest is skipped. */
+    def wayOrRelId(m: ProtoReader, kind: Int): Unit = {
+      var done = false
+      while (m.hasNext && !done) {
+        val t = m.readTag()
+        if ((t >>> 3) == 1) { see(m.readVarint(), kind); done = true }
+        else m.skip(t & 7)
+      }
+    }
+    b.groups.foreach { g =>
+      while (g.hasNext) {
+        val gt = g.readTag()
+        (gt: @annotation.switch) match {
+          case 0x0a => // Node: id = 1 sint64, lat = 8, lon = 9 (absent = 0, as emitted)
+            val m = g.readMessage()
+            var id, lat, lon = 0L
+            while (m.hasNext) {
+              val t = m.readTag()
+              (t >>> 3) match {
+                case 1 => id = m.readZigzag()
+                case 8 => lat = m.readZigzag()
+                case 9 => lon = m.readZigzag()
+                case _ => m.skip(t & 7)
+              }
+            }
+            see(id, 0)
+            seeCoord(lat, lon)
+          case 0x12 => // DenseNodes: id = 1, lat = 8, lon = 9, packed sint64 deltas
+            val m = g.readMessage()
+            // repeat occurrences of a packed field concatenate per spec,
+            // so the delta chains run over the whole arrays
+            var ids, lats, lons: Array[Long] = Array.empty
+            while (m.hasNext) {
+              val t = m.readTag()
+              (t >>> 3) match {
+                case 1 => ids = appendZigzags(ids, m, t)
+                case 8 => lats = appendZigzags(lats, m, t)
+                case 9 => lons = appendZigzags(lons, m, t)
+                case _ => m.skip(t & 7)
+              }
+            }
+            val n = ids.length
+            val coords = lats.length == n && lons.length == n
+            // both arrays absent: null coordinates, as the scan emits them
+            if (!coords && (lats.nonEmpty || lons.nonEmpty)) badCoords = true
+            var id, lat, lon = 0L
+            var i = 0
+            while (i < n) {
+              id += ids(i); see(id, 0)
+              if (coords) { lat += lats(i); lon += lons(i); seeCoord(lat, lon) }
+              i += 1
+            }
+          case 0x1a => wayOrRelId(g.readMessage(), 1) // Way
+          case 0x22 => wayOrRelId(g.readMessage(), 2) // Relation
+          case t => g.skip(t & 7)
+        }
+      }
+    }
+    BlobIdRanges(nodeMin, nodeMax, wayMin, wayMax, relMin, relMax,
+      latMin, latMax, lonMin, lonMax, badCoords)
   }
 
   /** HeaderBlock: bbox=1, required_features=4, optional_features=5,

@@ -4,24 +4,32 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 
-/** PBF-native indexed query path — the Spark re-expression of the
-  * reference's `IndexedReader.read_ways_and_deps` (osmpbf/src/indexed.rs:
-  * 145-222, 264-330): answer "ways matching P, plus their dependent nodes"
-  * directly over the PBF, without transcoding first, touching only the
-  * blobs that can contain relevant elements.
+/** The per-file blob catalog, and the PBF-native indexed query path built
+  * on it — the Spark re-expression of the reference's `IndexedReader`
+  * (osmpbf/src/indexed.rs:145-222, 264-330): answer a query directly over
+  * the PBF, without transcoding first, touching only the blobs that can
+  * contain relevant elements.
   *
   * Architecture (each reference idea re-expressed distributed):
-  *  - **index**: one distributed job decodes only element ids per blob
-  *    into (type, min/max id) zone maps (indexed.rs:174-225 builds the
-  *    same ranges lazily). It splits like every PBF read
+  *  - **catalog** ([[index]]): one distributed job decodes only element ids
+  *    and node coordinates per blob into a [[ZoneMap]]: per-type min/max
+  *    ids (indexed.rs:174-225 builds the same ranges lazily) and the
+  *    lat/lon box of the blob's nodes. It splits like every PBF read
   *    ([[OsmPbf.planSplits]]): the 64MB `splitMb` default is a per-task
-  *    cap, and a small file fans out to ~2 tasks per core. The index is
-  *    ~56 bytes/blob — driver-held and cached per path, like the
-  *    reference's in-memory `Vec<BlobInfo>`.
+  *    cap, and a small file fans out to ~2 tasks per core. The catalog is
+  *    ~100 bytes/blob, held in the planning JVM and cached per (path,
+  *    mtime, length), like the reference's in-memory `Vec<BlobInfo>`.
+  *    Two readers share it: the `osmpbf` scan, whose pushed `id` / `lat`
+  *    / `lon` comparisons, with its pushed `type`, drop blobs at planning
+  *    ([[Pushdown]], [[prune]]), and [[readWaysAndDeps]].
   *  - **pass 1**: scan ONLY blobs whose zone map has ways
   *    (`ways_available() != No`, indexed.rs:275-278), with the way-type
-  *    group pushdown; filter with the caller's predicate Column.
+  *    group pushdown; filter with the caller's predicate Column, whose
+  *    pushed `id` comparisons drop further way blobs in the scan. The way
+  *    blobs are listed here, not left to the scan, because a predicate
+  *    without a pushable range leaves the scan unpruned.
   *  - **pass 2**: the reference walks a driver-side BTreeSet of needed
   *    node ids against each blob's range (indexed.rs:303-310). The
   *    distributed analog is one job over the pass-1 ways: each task
@@ -35,8 +43,9 @@ import org.apache.spark.sql.functions._
   */
 object IndexedPbf {
 
-  /** Zone map for one data blob (indexed.rs:36-52). `rawSize` rides along
-    * so pruned scans keep the decoded-size task weighting. */
+  /** Zone map for one data blob (indexed.rs:36-52): its id ranges and node
+    * box. `rawSize` rides along so pruned scans keep the decoded-size task
+    * weighting. */
   final case class ZoneMap(offset: Long, length: Int, ids: BlockDecoder.BlobIdRanges,
                            rawSize: Int = -1) {
     def span: Blobs.BlobSpan =
@@ -44,21 +53,22 @@ object IndexedPbf {
   }
 
   // keyed by (path, mtime, length): a file replaced in place gets a fresh
-  // index instead of stale offsets/ranges pruning the wrong blobs
+  // catalog instead of stale offsets/ranges pruning the wrong blobs
   private val indexCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Seq[ZoneMap]]()
 
-  /** Builds (or returns the cached) blob index: distributed id-only decode
-    * of every data blob. Equivalent of create_index + the lazily-recorded
-    * id ranges (indexed.rs:145-172, 174-225), but paid up-front in one
-    * parallel pass instead of piggybacked on the first query. */
-  def index(spark: SparkSession, path: String): Seq[ZoneMap] = {
+  /** Builds (or returns the cached) blob catalog: distributed id-and-coord
+    * decode of every data blob. Equivalent of create_index + the
+    * lazily-recorded id ranges (indexed.rs:145-172, 174-225), but paid
+    * up-front in one parallel pass instead of piggybacked on the first
+    * query. `rebuild` replaces a cached catalog found stale. */
+  def index(spark: SparkSession, path: String, rebuild: Boolean = false): Seq[ZoneMap] = {
     val sc = spark.sparkContext
     val fsPath = new Path(path)
     val status = fsPath.getFileSystem(sc.hadoopConfiguration).getFileStatus(fsPath)
     val key = (path, status.getModificationTime, status.getLen)
     val cached = indexCache.get(key)
-    if (cached != null) return cached
+    if (cached != null && !rebuild) return cached
     // a replaced file gets a fresh entry — drop the unreachable old
     // generation(s) so a long-lived session can't accumulate dead indexes
     indexCache.keySet.removeIf(k => k._1 == path && k != key)
@@ -85,6 +95,77 @@ object IndexedPbf {
     indexCache.put(key, built)
     built
   }
+
+  /** What a scan's pushed filters let a blob hold: the wanted element
+    * types, and the `id` / `lat` / `lon` comparisons ([[prunable]]) that
+    * every row must meet. A lat/lon comparison rejects null, so under one
+    * only nodes with coordinates can pass. */
+  final case class Pushdown(types: Set[String], ranges: Seq[Filter]) {
+    private val (coordRanges, idRanges) = ranges.partition(f => operand(f)._1 != "id")
+
+    /** False only for a blob none of whose rows can pass. */
+    def keeps(z: ZoneMap): Boolean = {
+      val r = z.ids
+      def ids(lo: Long, hi: Long) = lo <= hi &&
+        idRanges.forall(f => meets(f, lo, hi, operand(f)._2.asInstanceOf[Long])(Ordering.Long))
+      def coords = r.badCoords || r.hasCoords && coordRanges.forall { f =>
+        val (attr, v) = operand(f)
+        val (lo, hi) = if (attr == "lat") (r.latMin, r.latMax) else (r.lonMin, r.lonMax)
+        meets(f, lo, hi, v.asInstanceOf[Double])(Ordering.Double.IeeeOrdering)
+      }
+      (types(OsmSchema.TypeNode) && ids(r.nodeMin, r.nodeMax) && (coordRanges.isEmpty || coords)) ||
+        (coordRanges.isEmpty &&
+          (types(OsmSchema.TypeWay) && ids(r.wayMin, r.wayMax) ||
+            types(OsmSchema.TypeRelation) && ids(r.relMin, r.relMax)))
+    }
+  }
+
+  private def operand(f: Filter): (String, Any) = f match {
+    case EqualTo(a, v) => (a, v)
+    case LessThan(a, v) => (a, v)
+    case LessThanOrEqual(a, v) => (a, v)
+    case GreaterThan(a, v) => (a, v)
+    case GreaterThanOrEqual(a, v) => (a, v)
+    case _ => (null, null)
+  }
+
+  /** A comparison the catalog can prune on: `=`, `<`, `<=`, `>`, `>=` of
+    * `id` with a Long, or of `lat` / `lon` with a non-NaN Double. Any
+    * other literal (null, NaN — which Spark ranks above every double — an
+    * Int, a decimal) never prunes. */
+  def prunable(f: Filter): Boolean = operand(f) match {
+    case ("id", _: Long) => true
+    case ("lat" | "lon", v: Double) => !v.isNaN
+    case _ => false
+  }
+
+  /** Whether some value in [lo, hi] passes the comparison `f` with `v`. */
+  private def meets[T](f: Filter, lo: T, hi: T, v: T)(o: Ordering[T]): Boolean = f match {
+    case _: EqualTo => o.lteq(lo, v) && o.lteq(v, hi)
+    case _: LessThan => o.lt(lo, v)
+    case _: LessThanOrEqual => o.lteq(lo, v)
+    case _: GreaterThan => o.gt(hi, v)
+    case _ => o.gteq(hi, v)
+  }
+
+  /** The spans of `spans` that may hold a row passing `p`, by the catalog
+    * of `path`. Only a scan with a pushed range prunes: it builds the
+    * catalog if none is cached, so a `type`-only scan plans the same blobs
+    * whatever ran before it. A span the catalog does not hold at the same
+    * offset and length means the file changed under an unchanged (mtime,
+    * length): the catalog is rebuilt once, and a span still unmatched is
+    * kept. */
+  def prune(spark: SparkSession, path: String, spans: Seq[Blobs.BlobSpan],
+            p: Pushdown): Seq[Blobs.BlobSpan] =
+    if (spans.isEmpty || p.ranges.isEmpty) spans
+    else {
+      def byOffset(c: Seq[ZoneMap]) = c.iterator.map(z => z.offset -> z).toMap
+      def holds(m: Map[Long, ZoneMap], s: Blobs.BlobSpan) = m.get(s.offset).exists(_.length == s.length)
+      val cached = byOffset(index(spark, path))
+      val catalog =
+        if (spans.forall(holds(cached, _))) cached else byOffset(index(spark, path, rebuild = true))
+      spans.filter(s => !holds(catalog, s) || p.keeps(catalog(s.offset)))
+    }
 
   /** Scan restricted to an explicit span subset (the pruned read): the
     * osmpbf DSv2 source accepts pre-planned spans so no re-enumeration or

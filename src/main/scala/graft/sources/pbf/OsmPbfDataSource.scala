@@ -7,6 +7,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types.StructType
@@ -27,6 +28,20 @@ import scala.jdk.CollectionConverters._
   *    `type = / in (…)`): excluded element kinds skip whole primitive
   *    groups without decoding — the scan-level analog of the reference's
   *    known-empty blob skip (indexed.rs:275-300);
+  *  - **zone-map blob pruning** on `id`, `lat` and `lon` comparisons
+  *    (`=`, `<`, `<=`, `>`, `>=`; [[IndexedPbf.prunable]]): the scan plans
+  *    only blobs whose [[IndexedPbf]] catalog entry has a wanted type and
+  *    an id range and node box that meet every pushed range, the
+  *    reference's per-blob id-range skip (indexed.rs:174-225, 275-310).
+  *    Spark still re-checks these comparisons on every row. Only a scan
+  *    with a pushed range prunes (a `type`-only scan plans every blob); its
+  *    first planning for a file version runs the catalog job, a pass over
+  *    the whole file, and later ones reuse the cached catalog. Pruning
+  *    trusts the file's (mtime, length) to name its version: a file
+  *    rewritten in place whose blob offsets or lengths moved gets a new
+  *    catalog, but one rewritten with the same mtime, length and blob
+  *    layout is pruned by the old catalog. The `blobsPlanned` /
+  *    `blobsPruned` scan metrics show the result in the SQL plan;
   *  - clean split planning ([[OsmPbf.planSplits]]): each [[InputPartition]]
   *    holds at most `splitMb` of decoded blobs, so a planet file fans out
   *    to a few thousand tasks regardless of blob count, and a file too
@@ -84,6 +99,7 @@ class OsmPbfScanBuilder(path: String, splitMb: Int, spansOpt: Option[String] = N
   private val sourceSchema: StructType = OsmSchema.schemaFor(wayLocs)
   private var requiredSchema: StructType = sourceSchema
   private var pushedTypeFilters: Array[Filter] = Array.empty
+  private var pushedRanges: Array[Filter] = Array.empty
   private var typeSet: Set[String] =
     Set(OsmSchema.TypeNode, OsmSchema.TypeWay, OsmSchema.TypeRelation)
 
@@ -93,13 +109,15 @@ class OsmPbfScanBuilder(path: String, splitMb: Int, spansOpt: Option[String] = N
     requiredSchema = StructType(sourceSchema.filter(f => names.contains(f.name)))
   }
 
-  /** Accepts only `type = v` / `type IN (…)`; everything else stays with
-    * Spark. An accepted filter is NOT returned, so Spark does not
-    * re-evaluate it: the decoder skips every PrimitiveGroup of an
+  /** Takes `type = v` / `type IN (…)` and does NOT return it, so Spark
+    * does not re-evaluate it: the decoder skips every PrimitiveGroup of an
     * unwanted type, and that skip alone makes the result exact, because a
     * group holds elements of one type only. The match is case-sensitive
-    * like Spark's own `=` (`type = 'Node'` selects nothing).
-    * `pushedFilters` reports the accepted filters for plan display. */
+    * like Spark's own `=` (`type = 'Node'` selects nothing). Takes the
+    * [[IndexedPbf.prunable]] `id` / `lat` / `lon` comparisons for blob
+    * pruning and returns them too: a kept blob holds rows that fail them.
+    * Everything else stays with Spark. `pushedFilters` reports both kinds
+    * for plan display. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (accepted, rest) = filters.partition {
       case EqualTo("type", _: String) => true
@@ -107,6 +125,7 @@ class OsmPbfScanBuilder(path: String, splitMb: Int, spansOpt: Option[String] = N
       case _ => false
     }
     pushedTypeFilters = accepted
+    pushedRanges = rest.filter(IndexedPbf.prunable)
     if (accepted.nonEmpty) {
       typeSet = accepted.map {
         case EqualTo(_, v: String) => Set(v)
@@ -117,20 +136,33 @@ class OsmPbfScanBuilder(path: String, splitMb: Int, spansOpt: Option[String] = N
     rest
   }
 
-  override def pushedFilters(): Array[Filter] = pushedTypeFilters
+  override def pushedFilters(): Array[Filter] = pushedTypeFilters ++ pushedRanges
 
   override def build(): Scan =
-    new OsmPbfScan(path, splitMb, requiredSchema, typeSet, spansOpt, wayLocs)
+    new OsmPbfScan(path, splitMb, requiredSchema,
+      IndexedPbf.Pushdown(typeSet, pushedRanges.toSeq), spansOpt, wayLocs)
 }
 
 class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
-                 typeSet: Set[String], spansOpt: Option[String] = None,
+                 pushdown: IndexedPbf.Pushdown, spansOpt: Option[String] = None,
                  wayLocs: Boolean = false) extends Scan with Batch {
+  private def typeSet = pushdown.types
+  // blob counts of the last planInputPartitions, reported to the plan
+  @volatile private var blobsPlanned, blobsPruned = 0L
+
   override def readSchema(): StructType = requiredSchema
   override def toBatch: Batch = this
   override def description(): String =
     s"osmpbf $path types=${typeSet.mkString(",")} cols=${requiredSchema.fieldNames.mkString(",")}" +
-      spansOpt.map(s => s" spans=${if (s.isEmpty) 0 else s.split(',').length}").getOrElse("")
+      spansOpt.map(s => s" spans=${if (s.isEmpty) 0 else s.split(',').length}").getOrElse("") +
+      (if (pushdown.ranges.isEmpty) "" else s" ranges=${pushdown.ranges.mkString(",")}")
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new BlobsPlannedMetric, new BlobsPrunedMetric)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = Array(
+    ScanCount(OsmPbfScan.BlobsPlanned, blobsPlanned),
+    ScanCount(OsmPbfScan.BlobsPruned, blobsPruned))
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = org.apache.spark.sql.SparkSession.active
@@ -155,7 +187,10 @@ class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
             s"unknown blob type '${s.blobType}' at offset ${s.offset}"))
         allSpans.filter(_.blobType == Blobs.TypeOsmData)
     }
-    OsmPbf.planSplits(spans, splitMb.toLong << 20, spark.sparkContext.defaultParallelism)
+    val kept = IndexedPbf.prune(spark, path, spans, pushdown)
+    blobsPlanned = kept.size
+    blobsPruned = spans.size - kept.size
+    OsmPbf.planSplits(kept, splitMb.toLong << 20, spark.sparkContext.defaultParallelism)
       .map(g => OsmPbfInputPartition(path, g): InputPartition).toArray
   }
 
@@ -168,6 +203,25 @@ class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
       requiredSchema, typeSet, wayLocs)
   }
 }
+
+object OsmPbfScan {
+  val BlobsPlanned = "blobsPlanned"
+  val BlobsPruned = "blobsPruned"
+}
+
+/** Data blobs the scan planned into its input partitions. */
+class BlobsPlannedMetric extends CustomSumMetric {
+  override def name(): String = OsmPbfScan.BlobsPlanned
+  override def description(): String = "blobs planned"
+}
+
+/** Data blobs the scan's zone-map pruning dropped before any read. */
+class BlobsPrunedMetric extends CustomSumMetric {
+  override def name(): String = OsmPbfScan.BlobsPruned
+  override def description(): String = "blobs pruned"
+}
+
+final case class ScanCount(name: String, value: Long) extends CustomTaskMetric
 
 case class OsmPbfInputPartition(path: String, spans: Array[Blobs.BlobSpan])
     extends InputPartition

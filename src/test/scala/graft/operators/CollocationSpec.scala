@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,11 +27,16 @@ class CollocationSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   private def stage(texts: Seq[String]): String = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("colloc").toString
+    val dir = tmp("colloc")
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")

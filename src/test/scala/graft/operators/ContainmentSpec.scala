@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,11 +22,16 @@ class ContainmentSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   private def run(docs: Seq[(Long, String)]): Seq[(Long, Long, Double)] = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("contain").toString
+    val dir = tmp("contain")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     DedupQueries.all("d14_containment")(spark, dir)
@@ -53,7 +59,7 @@ class ContainmentSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("d15 cap drops hot-shingle pair space; wide-enough cap is exact") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("containcap").toString
+    val dir = tmp("containcap")
     // five identical docs: one shingle with posting size 5 → 20 directed
     // pairs exactly; cap 4 removes the posting BEFORE the explode (zero
     // pairs), cap 5 keeps the listing identical to the uncapped d14

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,12 +24,17 @@ class FuzzyVocabSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   private def run(docs: Seq[(Long, String)],
       op: String = "d16_fuzzy_vocab"): Seq[(String, String, Int, Long, Long)] = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fuzzy").toString
+    val dir = tmp("fuzzy")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     DedupQueries.all(op)(spark, dir)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,11 +23,16 @@ class LexicalZipfSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   private def run(docs: Seq[(Long, String, String)]): Seq[(String, Long, Double, Option[Double])] = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zipf").toString
+    val dir = tmp("zipf")
     docs.toDF("doc_id", "text", "lang").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     TextQueries.all("t12_lexical_zipf")(spark, dir)

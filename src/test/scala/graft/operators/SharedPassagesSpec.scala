@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,11 +25,16 @@ class SharedPassagesSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   private def run(docs: Seq[(Long, String)]): Seq[(Long, Long, Long)] = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("passages").toString
+    val dir = tmp("passages")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     DedupQueries.all("d11_shared_passages")(spark, dir)
@@ -111,7 +117,7 @@ class SharedPassagesSpec extends AnyFunSuite with BeforeAndAfterAll {
       val tail = if (i <= 2) s"$i$shared" else s"${i}unique filler text for document number $i"
       (i, s"$boiler$i$tail")
     }
-    val dir = java.nio.file.Files.createTempDirectory("passages-cap").toString
+    val dir = tmp("passages-cap")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     // cap=8 drops the 9-doc boilerplate grams: only the real pair remains

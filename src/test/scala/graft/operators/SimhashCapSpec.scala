@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,11 +24,16 @@ class SimhashCapSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   private def run(docs: Seq[(Long, String)], cap: Int): Seq[(Int, Long)] = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("simhashcap").toString
+    val dir = tmp("simhashcap")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     DedupQueries.simhash64Capped(spark, dir, cap)
@@ -52,7 +58,7 @@ class SimhashCapSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(unc.find(_._1 == 0).map(_._2).contains(16L), s"got $unc")
     // the gate entry is the default-cap public call
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("simhashcap2").toString
+    val dir = tmp("simhashcap2")
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val viaGate = DedupQueries.all("d13_simhash64_capped")(spark, dir)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,7 +24,12 @@ class WeightedSampleSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  private val tmp = new TempDirs
+
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   /** The operator's key, recomputed from first principles. */
   private def priority(docId: Long, nChars: Long): Double = {
@@ -35,7 +41,7 @@ class WeightedSampleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def run(docs: Seq[(Long, String, Long)]): Seq[(String, Int, Long, Long, Double)] = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("wsample").toString
+    val dir = tmp("wsample")
     docs.toDF("doc_id", "source", "n_chars").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     CurationQueries.all("c15_weighted_sample")(spark, dir)

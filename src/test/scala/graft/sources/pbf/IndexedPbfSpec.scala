@@ -1,5 +1,6 @@
 package graft.sources.pbf
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll

@@ -1,5 +1,6 @@
 package graft.sources.pbf
 
+import graft.TempDirs
 import java.io.{ByteArrayInputStream, DataOutputStream, FileOutputStream}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
