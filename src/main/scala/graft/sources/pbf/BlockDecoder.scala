@@ -38,7 +38,9 @@ final case class OsmHeader(
   *
   * [[decode]] is the one emit path: each primitive group goes to the sink
   * of its element kind. The transcode appends straight into its parquet
-  * leaves; [[rows]] builds the scan's rows from the same appends.
+  * leaves; [[rows]] builds the scan's rows from the same appends, and
+  * [[idRanges]] folds the blob catalog's ranges from the appends of `id`,
+  * `lat` and `lon`.
   */
 object BlockDecoder {
 
@@ -83,7 +85,7 @@ object BlockDecoder {
     * source schema's, in any order), built one primitive group at a time;
     * every row is an independent object. */
   def rows(payload: Array[Byte], proj: Projection, schema: StructType): Iterator[InternalRow] = {
-    val b = parse(payload)
+    val b = parse(payload, proj)
     val out = new RowSink(schema)
     b.groups.iterator.flatMap { g =>
       out.rows = new ArrayBuffer[InternalRow]
@@ -95,7 +97,7 @@ object BlockDecoder {
   /** PrimitiveBlock → appends into `out`, group by group. Returns the
     * number of elements emitted. */
   def decode(payload: Array[Byte], proj: Projection, out: ColumnSinks): Int = {
-    val b = parse(payload)
+    val b = parse(payload, proj)
     out.block()
     var n = 0
     b.groups.foreach(g => n += emitGroup(g, b.ctx, proj, out))
@@ -106,9 +108,10 @@ object BlockDecoder {
 
   /** Field order in the wire format puts granularity (17-20) after the
     * groups (2), so the group spans are collected first and decoded once
-    * the block-level scalars are known. `strings = false` skips the string
-    * table (the id-only pass reads no string). */
-  private def parse(payload: Array[Byte], strings: Boolean = true): ParsedBlock = {
+    * the block-level scalars are known. A projection that reads no string
+    * column skips the string table, as it skips every pruned field. */
+  private def parse(payload: Array[Byte], proj: Projection): ParsedBlock = {
+    val strings = proj.tags || proj.info || proj.members
     val r = new ProtoReader(payload)
     var stringTable: Array[UTF8String] = Array.empty
     val groups = ArrayBuffer.empty[ProtoReader]
@@ -557,131 +560,85 @@ object BlockDecoder {
     * REPLACED on a repeat occurrence, silently dropping earlier values
     * from a spec-legal multi-occurrence writer. One helper pair now serves
     * every packed field (the common single-occurrence path pays one
-    * isEmpty check). */
+    * isEmpty check). Any other wire type is skipped as protobuf skips a
+    * field of the wrong type, exactly as a projection that prunes the
+    * field skips it, so every projection walks the same bytes. */
   private def appendZigzags(cur: Array[Long], r: ProtoReader, tag: Int): Array[Long] =
-    if ((tag & 7) == 2) {
-      val nw = r.readPackedZigzag()
-      if (cur.isEmpty) nw else cur ++ nw
-    } else cur :+ r.readZigzag()
+    (tag & 7) match {
+      case 2 => val nw = r.readPackedZigzag(); if (cur.isEmpty) nw else cur ++ nw
+      case 0 => cur :+ r.readZigzag()
+      case w => r.skip(w); cur
+    }
 
   /** int64/uint32 twin of [[appendZigzags]]. */
   private def appendVarints(cur: Array[Long], r: ProtoReader, tag: Int): Array[Long] =
-    if ((tag & 7) == 2) {
-      val nw = r.readPackedVarint()
-      if (cur.isEmpty) nw else cur ++ nw
-    } else cur :+ r.readVarint()
-
-
+    (tag & 7) match {
+      case 2 => val nw = r.readPackedVarint(); if (cur.isEmpty) nw else cur ++ nw
+      case 0 => cur :+ r.readVarint()
+      case w => r.skip(w); cur
+    }
 
   /** Per-blob min/max element ids — the zone map the reference's
     * IndexedReader records per blob (indexed.rs:36-44, 174-225) — and the
     * box of the node coordinates, in the degrees the scan emits.
     * `min > max` means the type (or, for the box, any node with
-    * coordinates) is absent from the blob. `badCoords` marks dense lat/lon
-    * arrays whose lengths do not match the ids: the scan fails on them
-    * (`emitDense`), so the box does not bound the blob and no lat/lon
-    * range may drop it. */
+    * coordinates) is absent from the blob. */
   final case class BlobIdRanges(
       nodeMin: Long, nodeMax: Long,
       wayMin: Long, wayMax: Long,
       relMin: Long, relMax: Long,
       latMin: Double, latMax: Double,
-      lonMin: Double, lonMax: Double,
-      badCoords: Boolean = false) {
+      lonMin: Double, lonMax: Double) {
     def hasNodes: Boolean = nodeMin <= nodeMax
     def hasWays: Boolean = wayMin <= wayMax
     def hasRelations: Boolean = relMin <= relMax
     def hasCoords: Boolean = latMin <= latMax
   }
 
-  /** Id-and-coordinate decode of a PrimitiveBlock: visits the id field of
-    * every element and the lat/lon fields of every node, and skips
-    * everything else — building the zone map costs a fraction of a full
-    * decode (the reference builds its index while already decoding pass-1
-    * blocks, indexed.rs:174-225; a pruned scan has to pay only this). The
-    * box folds the same `ctx.coord` doubles the scan emits, so it holds
-    * for any granularity and offset; dense nodes without lat/lon arrays
-    * (null coordinates in the scan) add nothing to it. */
+  private val IdsAndCoords = Projection(tags = false, nds = false, members = false, info = false)
+
+  /** The blob's [[BlobIdRanges]]: a [[decode]] of `id`, `lat` and `lon`
+    * into [[RangeSink]], so the ranges hold exactly the rows a scan
+    * emits, and the build fails where that scan fails. */
   def idRanges(payload: Array[Byte]): BlobIdRanges = {
-    var nodeMin = Long.MaxValue; var nodeMax = Long.MinValue
-    var wayMin = Long.MaxValue; var wayMax = Long.MinValue
-    var relMin = Long.MaxValue; var relMax = Long.MinValue
-    var latMin = Double.PositiveInfinity; var latMax = Double.NegativeInfinity
-    var lonMin = Double.PositiveInfinity; var lonMax = Double.NegativeInfinity
-    var badCoords = false
-    @inline def see(id: Long, kind: Int): Unit = (kind: @annotation.switch) match {
-      case 0 => if (id < nodeMin) nodeMin = id; if (id > nodeMax) nodeMax = id
-      case 1 => if (id < wayMin) wayMin = id; if (id > wayMax) wayMax = id
-      case 2 => if (id < relMin) relMin = id; if (id > relMax) relMax = id
+    val out = new RangeSink
+    decode(payload, IdsAndCoords, out)
+    out.ranges
+  }
+
+  /** Folds each kind's ids and the node coordinates into min/max;
+    * every other append is dropped. */
+  private final class RangeSink extends ColumnSink with ColumnSinks {
+    private[this] var kind = 0
+    private[this] var nodeMin, wayMin, relMin = Long.MaxValue
+    private[this] var nodeMax, wayMax, relMax = Long.MinValue
+    private[this] var latMin, lonMin = Double.PositiveInfinity
+    private[this] var latMax, lonMax = Double.NegativeInfinity
+
+    def ranges: BlobIdRanges = BlobIdRanges(nodeMin, nodeMax, wayMin, wayMax, relMin, relMax,
+      latMin, latMax, lonMin, lonMax)
+
+    override def block(): Unit = ()
+    override def sink(k: Int): ColumnSink = { kind = k; this }
+    override def id(v: Long): Unit = (kind: @annotation.switch) match {
+      case 0 => if (v < nodeMin) nodeMin = v; if (v > nodeMax) nodeMax = v
+      case 1 => if (v < wayMin) wayMin = v; if (v > wayMax) wayMax = v
+      case _ => if (v < relMin) relMin = v; if (v > relMax) relMax = v
     }
-    val b = parse(payload, strings = false)
-    val ctx = b.ctx
-    @inline def seeCoord(rawLat: Long, rawLon: Long): Unit = {
-      val la = ctx.coord(ctx.latOffset, rawLat)
-      val lo = ctx.coord(ctx.lonOffset, rawLon)
-      if (la < latMin) latMin = la; if (la > latMax) latMax = la
-      if (lo < lonMin) lonMin = lo; if (lo > lonMax) lonMax = lo
-    }
-    /** Id (field 1, int64) of a way or relation; the rest is skipped. */
-    def wayOrRelId(m: ProtoReader, kind: Int): Unit = {
-      var done = false
-      while (m.hasNext && !done) {
-        val t = m.readTag()
-        if ((t >>> 3) == 1) { see(m.readVarint(), kind); done = true }
-        else m.skip(t & 7)
-      }
-    }
-    b.groups.foreach { g =>
-      while (g.hasNext) {
-        val gt = g.readTag()
-        (gt: @annotation.switch) match {
-          case 0x0a => // Node: id = 1 sint64, lat = 8, lon = 9 (absent = 0, as emitted)
-            val m = g.readMessage()
-            var id, lat, lon = 0L
-            while (m.hasNext) {
-              val t = m.readTag()
-              (t >>> 3) match {
-                case 1 => id = m.readZigzag()
-                case 8 => lat = m.readZigzag()
-                case 9 => lon = m.readZigzag()
-                case _ => m.skip(t & 7)
-              }
-            }
-            see(id, 0)
-            seeCoord(lat, lon)
-          case 0x12 => // DenseNodes: id = 1, lat = 8, lon = 9, packed sint64 deltas
-            val m = g.readMessage()
-            // repeat occurrences of a packed field concatenate per spec,
-            // so the delta chains run over the whole arrays
-            var ids, lats, lons: Array[Long] = Array.empty
-            while (m.hasNext) {
-              val t = m.readTag()
-              (t >>> 3) match {
-                case 1 => ids = appendZigzags(ids, m, t)
-                case 8 => lats = appendZigzags(lats, m, t)
-                case 9 => lons = appendZigzags(lons, m, t)
-                case _ => m.skip(t & 7)
-              }
-            }
-            val n = ids.length
-            val coords = lats.length == n && lons.length == n
-            // both arrays absent: null coordinates, as the scan emits them
-            if (!coords && (lats.nonEmpty || lons.nonEmpty)) badCoords = true
-            var id, lat, lon = 0L
-            var i = 0
-            while (i < n) {
-              id += ids(i); see(id, 0)
-              if (coords) { lat += lats(i); lon += lons(i); seeCoord(lat, lon) }
-              i += 1
-            }
-          case 0x1a => wayOrRelId(g.readMessage(), 1) // Way
-          case 0x22 => wayOrRelId(g.readMessage(), 2) // Relation
-          case t => g.skip(t & 7)
-        }
-      }
-    }
-    BlobIdRanges(nodeMin, nodeMax, wayMin, wayMax, relMin, relMax,
-      latMin, latMax, lonMin, lonMax, badCoords)
+    override def lat(v: Double): Unit = { if (v < latMin) latMin = v; if (v > latMax) latMax = v }
+    override def lon(v: Double): Unit = { if (v < lonMin) lonMin = v; if (v > lonMax) lonMax = v }
+    override def tag(keySid: Int, key: UTF8String, valueSid: Int, value: UTF8String): Unit = ()
+    override def noTags(): Unit = ()
+    override def refs(refs: Array[Long], n: Int): Unit = ()
+    override def members(): Unit = ()
+    override def member(tpe: UTF8String, ref: Long, hasRef: Boolean, roleSid: Int, role: UTF8String): Unit = ()
+    override def changeset(v: Long): Unit = ()
+    override def timestamp(micros: Long): Unit = ()
+    override def uid(v: Int): Unit = ()
+    override def user(sid: Int, v: UTF8String): Unit = ()
+    override def version(v: Int): Unit = ()
+    override def visible(v: Boolean): Unit = ()
+    override def end(): Unit = ()
   }
 
   /** HeaderBlock: bbox=1, required_features=4, optional_features=5,

@@ -6,7 +6,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Typed appends of decoded elements into a column store, like the
   * reference's Arrow column builders (osm-pbf-parquet/src/sink.rs:181-278):
   * [[BlockDecoder.decode]] drives it, the transcode's parquet writer
-  * ([[DirectParquet.ColumnarWriter]]) and the scan's row builder consume it.
+  * ([[DirectParquet.ColumnarWriter]]), the scan's row builder and the blob
+  * catalog's range fold ([[BlockDecoder.idRanges]]) consume it.
   *
   * An element is `id`, any other appends, then `end`. A field with no
   * append is null, except `tags`: an empty map unless `noTags`. `members`

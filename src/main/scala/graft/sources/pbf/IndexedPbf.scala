@@ -13,10 +13,14 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
   * contain relevant elements.
   *
   * Architecture (each reference idea re-expressed distributed):
-  *  - **catalog** ([[index]]): one distributed job decodes only element ids
-  *    and node coordinates per blob into a [[ZoneMap]]: per-type min/max
-  *    ids (indexed.rs:174-225 builds the same ranges lazily) and the
-  *    lat/lon box of the blob's nodes. It splits like every PBF read
+  *  - **catalog** ([[index]]): one distributed job runs the scan's own
+  *    decoder ([[BlockDecoder.idRanges]]: `decode` of `id`, `lat` and
+  *    `lon` only) over every data blob into a [[ZoneMap]]: per-type
+  *    min/max ids (indexed.rs:174-225 records the same ranges from the
+  *    decode that reads the blob) and the lat/lon box of the blob's nodes.
+  *    So an entry bounds exactly the rows the scan emits, and a blob the
+  *    scan of those columns fails on fails the catalog build typed. It
+  *    splits like every PBF read
   *    ([[OsmPbf.planSplits]]): the 64MB `splitMb` default is a per-task
   *    cap, and a small file fans out to ~2 tasks per core. The catalog is
   *    ~100 bytes/blob, held in the planning JVM and cached per (path,
@@ -58,7 +62,8 @@ object IndexedPbf {
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Seq[ZoneMap]]()
 
   /** Builds (or returns the cached) blob catalog: distributed id-and-coord
-    * decode of every data blob. Equivalent of create_index + the
+    * decode of every data blob; an unknown blob type fails it typed
+    * ([[OsmPbf.dataSpans]]). Equivalent of create_index + the
     * lazily-recorded id ranges (indexed.rs:145-172, 174-225), but paid
     * up-front in one parallel pass instead of piggybacked on the first
     * query. `rebuild` replaces a cached catalog found stale. */
@@ -72,8 +77,7 @@ object IndexedPbf {
     // a replaced file gets a fresh entry — drop the unreachable old
     // generation(s) so a long-lived session can't accumulate dead indexes
     indexCache.keySet.removeIf(k => k._1 == path && k != key)
-    val spans = OsmPbf.blobSpans(spark, path).filter(_.blobType == Blobs.TypeOsmData)
-    val groups = OsmPbf.planSplits(spans, OsmPbf.DefaultSplitMb.toLong << 20,
+    val groups = OsmPbf.planSplits(OsmPbf.dataSpans(spark, path), OsmPbf.DefaultSplitMb.toLong << 20,
       sc.defaultParallelism)
     val hconf = OsmPbf.broadcastConf(sc, sc.hadoopConfiguration)
     val built = try sc.parallelize(groups, math.max(groups.size, 1))
@@ -108,7 +112,7 @@ object IndexedPbf {
       val r = z.ids
       def ids(lo: Long, hi: Long) = lo <= hi &&
         idRanges.forall(f => meets(f, lo, hi, operand(f)._2.asInstanceOf[Long])(Ordering.Long))
-      def coords = r.badCoords || r.hasCoords && coordRanges.forall { f =>
+      def coords = r.hasCoords && coordRanges.forall { f =>
         val (attr, v) = operand(f)
         val (lo, hi) = if (attr == "lat") (r.latMin, r.latMax) else (r.lonMin, r.lonMax)
         meets(f, lo, hi, v.asInstanceOf[Double])(Ordering.Double.IeeeOrdering)

@@ -54,6 +54,16 @@ object OsmPbf {
     finally in.close()
   }
 
+  /** Spans of the file's data blobs. A blob of a type other than OSMData
+    * and OSMHeader fails typed, like the reference's UnknownBlobType
+    * (pbf.rs:85-87), instead of being skipped. */
+  def dataSpans(spark: SparkSession, path: String): Seq[Blobs.BlobSpan] = {
+    val all = blobSpans(spark, path)
+    all.find(s => s.blobType != Blobs.TypeOsmData && s.blobType != Blobs.TypeOsmHeader)
+      .foreach(s => throw new PbfFormatException(s"unknown blob type '${s.blobType}' at offset ${s.offset}"))
+    all.filter(_.blobType == Blobs.TypeOsmData)
+  }
+
   /** File header metadata (bbox, features, replication info) — the
     * reference's S6 operator (osmpbf/src/block.rs:15-86). One blob read —
     * enumeration stops at the first OSMHeader instead of skip-scanning
@@ -336,14 +346,9 @@ object OsmPbf {
     require(!sc.getConf.getBoolean("spark.speculation", defaultValue = false),
       "transcode requires spark.speculation=false: duplicate speculative " +
         "attempts only duplicate decode work on this one-stage sink")
-    val allSpans = blobSpans(spark, config.input)
-    // unknown blob types fail typed, matching pbf.rs:85-87
-    allSpans.find(s => s.blobType != Blobs.TypeOsmData && s.blobType != Blobs.TypeOsmHeader)
-      .foreach(s => throw new PbfFormatException(
-        s"unknown blob type '${s.blobType}' at offset ${s.offset}"))
-    val dataSpans = allSpans.filter(_.blobType == Blobs.TypeOsmData)
     // the configured buffer size is the per-task cap
-    val groups = planSplits(dataSpans, config.inputBufferSizeMb.toLong << 20, sc.defaultParallelism)
+    val groups = planSplits(dataSpans(spark, config.input), config.inputBufferSizeMb.toLong << 20,
+      sc.defaultParallelism)
 
     val hc = new Configuration(sc.hadoopConfiguration)
     // parquet-mr codec-level knob; 1-22 like the reference (util.rs:100-104)

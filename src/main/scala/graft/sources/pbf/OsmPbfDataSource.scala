@@ -17,8 +17,8 @@ import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 connector: `spark.read.format("osmpbf").load(path)`.
   *
-  * What Catalyst gets to do through this connector that the bootstrap
-  * `OsmPbf.read` path can't:
+  * Every PBF read goes through this connector (`OsmPbf.read` sets its
+  * `splitMb` and loads it). What Catalyst gets to do through it:
   *  - **column pruning** (`SupportsPushDownRequiredColumns`): unneeded
   *    columns skip their decode work, and rows hold only the required
   *    columns — reading only `id, lat, lon` never materializes tag maps or
@@ -178,14 +178,7 @@ class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
             if (parts.length > 2) parts(2).toInt else -1)
         }
       case Some(_) => Seq.empty
-      case None =>
-        val allSpans = OsmPbf.blobSpans(spark, path)
-        // unknown blob types are an error, not a skip — matching the
-        // reference's UnknownBlobType failure (pbf.rs:85-87)
-        allSpans.find(s => s.blobType != Blobs.TypeOsmData && s.blobType != Blobs.TypeOsmHeader)
-          .foreach(s => throw new PbfFormatException(
-            s"unknown blob type '${s.blobType}' at offset ${s.offset}"))
-        allSpans.filter(_.blobType == Blobs.TypeOsmData)
+      case None => OsmPbf.dataSpans(spark, path)
     }
     val kept = IndexedPbf.prune(spark, path, spans, pushdown)
     blobsPlanned = kept.size

@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * re-inferred, whatever its root directory's mtime says. */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
+  private val tmp = new TempDirs
+
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")
@@ -20,10 +22,13 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   test("a rewritten table re-infers its schema even with the root mtime set back") {
-    val dir = java.nio.file.Files.createTempDirectory("tablesspec").toString
+    val dir = tmp("tablesspec")
     val path = s"$dir/region.parquet"
     spark.range(3).selectExpr("id AS r_regionkey").coalesce(1).write.parquet(path)
     assert(Tables.region(spark, dir).columns.toSeq === Seq("r_regionkey"))

@@ -1,11 +1,14 @@
 package graft.functions
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val tmp = new TempDirs
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -19,7 +22,10 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   test("graft_dot matches the HOF composition bit-for-bit") {
     val sp = spark; import sp.implicits._
@@ -79,7 +85,7 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(d.collect().head.getDouble(0) === 32.0)
     val sp = spark; import sp.implicits._
     // parquet-backed so ConvertToLocalRelation can't fold the projection
-    val dir = java.nio.file.Files.createTempDirectory("vec").toString
+    val dir = tmp("vec")
     (1 to 100).map(i => (i, Array.fill(8)(i.toDouble), Array.fill(8)(2.0)))
       .toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
     val big = spark.read.parquet(dir)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
@@ -13,6 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * pin moved here when the pre-filter became selectivity-gated). */
 class ZRangeContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
+  private val tmp = new TempDirs
+
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -24,7 +27,10 @@ class ZRangeContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   private def boundsLit(bounds: Seq[Long]) =
     Literal.create(bounds.toArray, ArrayType(LongType, containsNull = false))
@@ -133,9 +139,9 @@ class ZRangeContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // round-trip through parquet: over a LocalRelation the optimizer
     // pushes the predicate into the relation and evaluates it at
     // planning time (ConvertToLocalRelation) — no executed plan to pin
-    val tmp = java.nio.file.Files.createTempDirectory("zrange-spec").toString
-    pts.toDF("id", "lat", "lon").write.mode("overwrite").parquet(tmp)
-    val df = sp.read.parquet(tmp)
+    val out = tmp("zrange-spec")
+    pts.toDF("id", "lat", "lon").write.mode("overwrite").parquet(out)
+    val df = sp.read.parquet(out)
       .select(col("id"), col("lat"), col("lon"),
         ZOrder.mortonKey(col("lat"), col("lon"), bits).as("z"))
     val filtered = df.filter(ZRangeContains.zInRanges(sp, col("z"), zranges))

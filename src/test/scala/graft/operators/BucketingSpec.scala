@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -13,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val warehouse = java.nio.file.Files.createTempDirectory("wh").toString
+  private val tmp = new TempDirs
+
+  private val warehouse = tmp("wh")
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -28,7 +31,10 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   test("join of co-bucketed tables has no Exchange") {
     val dir = "/root/testdata/sf0.001"

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IncrementalAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
+  private val tmp = new TempDirs
+
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -23,11 +26,14 @@ class IncrementalAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   test("deltas apply per action; fully-deleted groups drop out") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivm").toString
+    val dir = tmp("ivm")
     // key 1: plain keep (A, 10.00) — key 7: update to 105.00 (A)
     // key 11: kept AND re-inserted (B, 50.00 twice)
     // key 13: delete — its whole group X must vanish

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * when a candidate hides its (dis)similarity in the tail dims.
   */
 class MatryoshkaSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val tmp = new TempDirs
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -22,7 +25,10 @@ class MatryoshkaSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   /** dim-64 vector with the given (1-based index → value) entries. */
   private def vec(entries: (Int, Double)*): Array[Float] = {
@@ -33,7 +39,7 @@ class MatryoshkaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def run(vs: Seq[(Long, Array[Float])]): Map[Long, (Long, Double)] = {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mrl").toString
+    val dir = tmp("mrl")
     vs.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     SimilarityQueries.all("e03_matryoshka_recall")(spark, dir)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.TempDirs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -18,6 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SketchAccuracySpec extends AnyFunSuite with BeforeAndAfterAll {
 
+  private val tmp = new TempDirs
+
   private val dir = "/root/testdata/sf0.01"
 
   private lazy val spark: SparkSession = {
@@ -32,7 +35,10 @@ class SketchAccuracySpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   test("x01: approx_count_distinct within ±5% of the exact distinct counts") {
     // rsd is set to 0.02 in the entry; HLL++'s error is a standard
@@ -137,14 +143,14 @@ class SketchAccuracySpec extends AnyFunSuite with BeforeAndAfterAll {
     // oracle's GROUP BY l_returnflag reports each with a 0 distinct
     // count on that key, so the entry must not drop them
     val sp = spark; import sp.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("x01nullkeys").toString
+    val sf = tmp("x01nullkeys")
     Seq[(String, Option[Long], Option[Long])](
       ("A", Some(1L), Some(10L)), ("A", Some(2L), Some(11L)), ("A", Some(2L), Some(10L)),
       ("N", None, Some(20L)), ("N", None, Some(21L)),
       ("R", Some(5L), None), ("R", Some(5L), None))
       .toDF("l_returnflag", "l_suppkey", "l_partkey")
-      .write.parquet(s"$tmp/lineitem.parquet")
-    val got = ScaleQueries.x01_approx_distinct(spark, tmp).collect()
+      .write.parquet(s"$sf/lineitem.parquet")
+    val got = ScaleQueries.x01_approx_distinct(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4)))
       .toSeq
     assert(got === Seq(("A", 2L, 2L, true, true), ("N", 0L, 2L, true, true),

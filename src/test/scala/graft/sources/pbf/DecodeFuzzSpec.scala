@@ -13,17 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Seeded and deterministic.
   */
 class DecodeFuzzSpec extends AnyFunSuite {
-
-  private def validPayload(): Array[Byte] = {
-    import PbfWriter._
-    primitiveBlock(
-      (0 until 200).map(i => DenseNode(1000L + i, 52000000000L + i * 1000,
-        11000000000L + i * 700, if (i % 7 == 0) Seq("k" -> s"v$i") else Nil,
-        1, 1049522828000L + i, 10L, 17, "u")),
-      ways = Seq(WayData(900001L, (1000L to 1015L), Seq("highway" -> "x"))),
-      relations = Seq(RelationData(800001L,
-        Seq((1000L, 0, "outer"), (900001L, 1, "")), Seq("type" -> "mp"))))
-  }
+  import DecodeFuzzSpec._
 
   private def assertTotal(payload: Array[Byte], what: String): Unit =
     try {
@@ -38,14 +28,7 @@ class DecodeFuzzSpec extends AnyFunSuite {
     }
 
   test("single-byte corruptions: decode is total (rows or PbfFormatException)") {
-    val base = validPayload()
-    val rnd = new scala.util.Random(1234)
-    (1 to 1500).foreach { i =>
-      val b = base.clone()
-      val at = rnd.nextInt(b.length)
-      b(at) = (b(at) ^ (1 << rnd.nextInt(8))).toByte
-      assertTotal(b, s"trial $i (flip at $at)")
-    }
+    singleByteFlips().foreach { case (what, b) => assertTotal(b, what) }
   }
 
   test("truncations and random suffixes: decode is total") {
@@ -176,5 +159,32 @@ class DecodeFuzzSpec extends AnyFunSuite {
       }
     }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+}
+
+object DecodeFuzzSpec {
+
+  def validPayload(): Array[Byte] = {
+    import PbfWriter._
+    primitiveBlock(
+      (0 until 200).map(i => DenseNode(1000L + i, 52000000000L + i * 1000,
+        11000000000L + i * 700, if (i % 7 == 0) Seq("k" -> s"v$i") else Nil,
+        1, 1049522828000L + i, 10L, 17, "u")),
+      ways = Seq(WayData(900001L, (1000L to 1015L), Seq("highway" -> "x"))),
+      relations = Seq(RelationData(800001L,
+        Seq((1000L, 0, "outer"), (900001L, 1, "")), Seq("type" -> "mp"))))
+  }
+
+  /** 1,500 seeded copies of [[validPayload]], each with one bit flipped,
+    * with a label naming the trial and the byte. */
+  def singleByteFlips(): Iterator[(String, Array[Byte])] = {
+    val base = validPayload()
+    val rnd = new scala.util.Random(1234)
+    Iterator.range(1, 1501).map { i =>
+      val b = base.clone()
+      val at = rnd.nextInt(b.length)
+      b(at) = (b(at) ^ (1 << rnd.nextInt(8))).toByte
+      (s"trial $i (flip at $at)", b)
+    }
   }
 }

@@ -61,10 +61,13 @@ class PbfErrorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      val e = intercept[Exception](OsmPbf.read(spark, path).count())
-      def hasPbfCause(t: Throwable): Boolean =
-        t != null && (t.isInstanceOf[PbfFormatException] || hasPbfCause(t.getCause))
+    def hasPbfCause(t: Throwable): Boolean =
+      t != null && (t.isInstanceOf[PbfFormatException] || hasPbfCause(t.getCause))
+    try Seq[() => Long](
+      () => OsmPbf.read(spark, path).count(),
+      () => IndexedPbf.readWaysAndDeps(spark, path, org.apache.spark.sql.functions.lit(true)).count()
+    ).foreach { run =>
+      val e = intercept[Exception](run())
       assert(hasPbfCause(e) || e.getMessage.contains("unknown blob type"))
     } finally spark.stop()
   }

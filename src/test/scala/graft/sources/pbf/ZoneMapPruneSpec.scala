@@ -152,9 +152,73 @@ class ZoneMapPruneSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveS
     path
   }
 
+  /** A way whose message carries field 1 twice: protobuf keeps the last. */
+  private lazy val repeatedWayId: String = {
+    import PbfWriter.MessageBuilder
+    val way = new MessageBuilder().writeVarintField(1, 5L).writeVarintField(1, 900L)
+    val block = new MessageBuilder()
+      .writeMessageField(1, new MessageBuilder().writeBytesField(1, Array.emptyByteArray))
+      .writeMessageField(2, new MessageBuilder().writeMessageField(3, way))
+      .result()
+    val path = s"${tmp("zoneprune")}/repeatedid.osm.pbf"
+    PbfWriter.writeFile(path, Seq(block))
+    path
+  }
+
+  private val goldens = Seq("test.osm.pbf", "test_nozlib.osm.pbf", "test_nozlib_nodense.osm.pbf",
+    "deleted_nodes.osh.pbf", "loc_on_ways.osm.pbf").map(PbfFixtures.path)
+
+  /** The inflated payloads of `path`'s data blobs. */
+  private def payloads(path: String): Seq[Array[Byte]] = {
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    Blobs.enumerate(new java.io.ByteArrayInputStream(bytes)).filter(_.blobType == Blobs.TypeOsmData)
+      .map(s => Blobs.decode(java.util.Arrays.copyOfRange(bytes, s.offset.toInt, s.offset.toInt + s.length)))
+  }
+
+  /** The min/max fold over the rows of the full decode: ids per type, and
+    * the box over the non-null lat and lon. */
+  private def foldRows(payload: Array[Byte]): BlockDecoder.BlobIdRanges = {
+    val rows = BlockDecoder.decodeBlock(payload).toSeq
+    def ids(t: String) = {
+      val v = rows.filter(_.getAs[String]("type") == t).map(_.getAs[Long]("id"))
+      (v.foldLeft(Long.MaxValue)(math.min), v.foldLeft(Long.MinValue)(math.max))
+    }
+    def box(c: String) = {
+      val v = rows.filter(r => !r.isNullAt(r.fieldIndex(c))).map(_.getAs[Double](c))
+      (v.foldLeft(Double.PositiveInfinity)(math.min), v.foldLeft(Double.NegativeInfinity)(math.max))
+    }
+    val ((n0, n1), (w0, w1), (r0, r1)) = (ids("node"), ids("way"), ids("relation"))
+    val ((la0, la1), (lo0, lo1)) = (box("lat"), box("lon"))
+    BlockDecoder.BlobIdRanges(n0, n1, w0, w1, r0, r1, la0, la1, lo0, lo1)
+  }
+
+  /** A way (id 5) whose refs field has the fixed32 wire type. Its four
+    * bytes, read as varints instead, are a ref 0 and an id 938. */
+  private val fixedWireRefs: Array[Byte] = {
+    import PbfWriter.MessageBuilder
+    val way = new MessageBuilder().writeVarintField(1, 5L).writeTag(8, 5)
+      .writeVarint(0L).writeVarint(1L << 3).writeVarint(938L)
+    new MessageBuilder()
+      .writeMessageField(1, new MessageBuilder().writeBytesField(1, Array.emptyByteArray))
+      .writeMessageField(2, new MessageBuilder().writeMessageField(3, way))
+      .result()
+  }
+
+  test("every blob's catalog entry is the min/max fold of its decoded rows") {
+    for (f <- goldens ++ Seq(synth, mixed, repeatedWayId); p <- payloads(f))
+      assert(BlockDecoder.idRanges(p) === foldRows(p), f)
+    assert(BlockDecoder.idRanges(fixedWireRefs) === foldRows(fixedWireRefs))
+    // corrupt payloads that still decode
+    var decoded = 0
+    DecodeFuzzSpec.singleByteFlips().foreach { case (what, b) =>
+      val folded = try Some(foldRows(b)) catch { case _: PbfFormatException => None }
+      folded.foreach { r => decoded += 1; assert(BlockDecoder.idRanges(b) === r, what) }
+    }
+    assert(decoded > 0)
+  }
+
   test("comparisons on every blob's min and max id and coordinate: the golden PBFs") {
-    Seq("test.osm.pbf", "test_nozlib.osm.pbf", "test_nozlib_nodense.osm.pbf",
-      "deleted_nodes.osh.pbf", "loc_on_ways.osm.pbf").foreach(f => checkBounds(PbfFixtures.path(f)))
+    goldens.foreach(checkBounds)
   }
 
   test("comparisons on every blob's min and max id and coordinate: synthesized files") {
@@ -257,6 +321,13 @@ class ZoneMapPruneSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveS
     assert(blobs(ways) === ((1L, 2L)))
   }
 
+  test("a way that carries its id twice is kept by a filter on the last id") {
+    val all = unpruned(repeatedWayId)
+    assert(all.collect().map(_.getAs[Long]("id")).toSeq === Seq(900L))
+    assert(check(repeatedWayId, all, col("id") === 900L) === ((1L, 0L)))
+    assert(check(repeatedWayId, all, col("id") === 5L) === ((0L, 1L)))
+  }
+
   test("a type-only scan plans every blob, with or without a catalog") {
     val path = s"${tmp("zoneprune")}/typeonly.osm.pbf"
     java.nio.file.Files.copy(java.nio.file.Paths.get(mixed), java.nio.file.Paths.get(path))
@@ -271,8 +342,8 @@ class ZoneMapPruneSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveS
 
   test("dense lat/lon arrays that do not match the ids fail a lat/lon-filtered scan") {
     import PbfWriter.MessageBuilder
-    // 4 ids, 3 lats/lons: the scan fails on the block, so no lat/lon
-    // range may drop it as a blob without coordinates
+    // 4 ids, 3 lats/lons: a scan of lat or lon fails on the block, and so
+    // does the catalog, which decodes them
     val dense = new MessageBuilder()
       .writePackedZigzag(1, Seq.fill(4)(1L))
       .writePackedZigzag(8, Seq.fill(3)(1000L))
@@ -283,11 +354,12 @@ class ZoneMapPruneSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveS
       .result()
     val path = s"${tmp("zoneprune")}/badcoords.osm.pbf"
     PbfWriter.writeFile(path, Seq(bad))
-    assert(IndexedPbf.index(spark, path).head.ids.badCoords)
+    def typed(t: Throwable): Boolean =
+      t != null && (t.isInstanceOf[PbfFormatException] || typed(t.getCause))
+    val built = intercept[Exception](IndexedPbf.index(spark, path))
+    assert(typed(built), built)
     def failsTyped(df: DataFrame): Unit = {
       val e = intercept[Exception](df.collect())
-      def typed(t: Throwable): Boolean =
-        t != null && (t.isInstanceOf[PbfFormatException] || typed(t.getCause))
       assert(typed(e), e)
     }
     failsTyped(scan(path).filter(col("lat") > 50.0))

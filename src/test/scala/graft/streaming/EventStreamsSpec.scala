@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.TempDirs
 import java.sql.Timestamp
 
 import org.apache.spark.sql.SparkSession
@@ -10,6 +11,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 class EventStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val tmp = new TempDirs
 
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -23,7 +26,10 @@ class EventStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    spark.stop()
+    tmp.deleteAll()
+  }
 
   private def ts(hour: Int, minute: Int): Timestamp =
     Timestamp.valueOf(f"2026-01-01 $hour%02d:$minute%02d:00")
@@ -165,7 +171,7 @@ class EventStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("file-stream wiring over parquet events") {
     val sp = spark; import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("events-stream").toString
+    val dir = tmp("events-stream")
     Seq(
       EventStreams.Event(1, ts(1, 5), 10, "click", 1.0),
       EventStreams.Event(2, ts(1, 10), 11, "click", 3.0),
@@ -403,7 +409,7 @@ class EventStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("exactly-once parquet sink: batch replay is idempotent") {
     val sp = spark; import sp.implicits._
-    val out = java.nio.file.Files.createTempDirectory("eo-sink").toString + "/out"
+    val out = tmp("eo-sink") + "/out"
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val b1 = Seq((3L, "c")).toDF("id", "v")
     EventStreams.writeBatchIdempotent(b0, 0L, out)
@@ -422,7 +428,7 @@ class EventStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("exactly-once sink end-to-end over a memory stream") {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("eo-stream").toString
+    val base = tmp("eo-stream")
     val input = MemoryStream[EventStreams.Event]
     val q = EventStreams.exactlyOnceParquetSink(
       EventStreams.dedupeStream(input.toDF()), s"$base/out", s"$base/ckpt")
