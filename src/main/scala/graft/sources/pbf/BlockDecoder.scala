@@ -38,9 +38,9 @@ final case class OsmHeader(
   *
   * [[decode]] is the one emit path: each primitive group goes to the sink
   * of its element kind. The transcode appends straight into its parquet
-  * leaves; [[rows]] builds the scan's rows from the same appends, and
-  * [[idRanges]] folds the blob catalog's ranges from the appends of `id`,
-  * `lat` and `lon`.
+  * leaves; [[rows]] is a [[decode]] of the whole block into the scan's
+  * rows, and [[idRanges]] folds the blob catalog's ranges from the appends
+  * of `id`, `lat` and `lon`.
   */
 object BlockDecoder {
 
@@ -82,35 +82,22 @@ object BlockDecoder {
     rows(payload, proj, OsmSchema.schemaFor(proj.wayLocs))
 
   /** PrimitiveBlock → InternalRows holding `schema`'s columns (any of the
-    * source schema's, in any order), built one primitive group at a time;
-    * every row is an independent object. */
+    * source schema's, in any order): a [[decode]] of the whole block into
+    * a buffer of rows; every row is an independent object. */
   def rows(payload: Array[Byte], proj: Projection, schema: StructType): Iterator[InternalRow] = {
-    val b = parse(payload, proj)
     val out = new RowSink(schema)
-    b.groups.iterator.flatMap { g =>
-      out.rows = new ArrayBuffer[InternalRow]
-      emitGroup(g, b.ctx, proj, out)
-      out.rows.iterator
-    }
+    decode(payload, proj, out)
+    out.rows.iterator
   }
 
   /** PrimitiveBlock → appends into `out`, group by group. Returns the
-    * number of elements emitted. */
-  def decode(payload: Array[Byte], proj: Projection, out: ColumnSinks): Int = {
-    val b = parse(payload, proj)
-    out.block()
-    var n = 0
-    b.groups.foreach(g => n += emitGroup(g, b.ctx, proj, out))
-    n
-  }
-
-  private final class ParsedBlock(val ctx: BlockCtx, val groups: ArrayBuffer[ProtoReader])
-
-  /** Field order in the wire format puts granularity (17-20) after the
+    * number of elements emitted.
+    *
+    * Field order in the wire format puts granularity (17-20) after the
     * groups (2), so the group spans are collected first and decoded once
     * the block-level scalars are known. A projection that reads no string
     * column skips the string table, as it skips every pruned field. */
-  private def parse(payload: Array[Byte], proj: Projection): ParsedBlock = {
+  def decode(payload: Array[Byte], proj: Projection, out: ColumnSinks): Int = {
     val strings = proj.tags || proj.info || proj.members
     val r = new ProtoReader(payload)
     var stringTable: Array[UTF8String] = Array.empty
@@ -137,7 +124,11 @@ object BlockDecoder {
           }
       }
     }
-    new ParsedBlock(new BlockCtx(stringTable, granularity, latOffset, lonOffset, dateGranularity), groups)
+    val ctx = new BlockCtx(stringTable, granularity, latOffset, lonOffset, dateGranularity)
+    out.block()
+    var n = 0
+    groups.foreach(g => n += emitGroup(g, ctx, proj, out))
+    n
   }
 
   private val TypeU = Array(OsmSchema.TypeNode, OsmSchema.TypeWay, OsmSchema.TypeRelation)
@@ -494,7 +485,7 @@ object BlockDecoder {
     * its slot (a field the schema lacks is dropped), and collects them
     * into `rows`; `type` comes from the sink the decoder picked. */
   private final class RowSink(schema: StructType) extends ColumnSink with ColumnSinks {
-    var rows: ArrayBuffer[InternalRow] = _
+    val rows = new ArrayBuffer[InternalRow]
     private[this] def slot(name: String): Int = schema.fieldNames.indexOf(name)
     private[this] val (sId, sTags, sLat, sLon, sNds, sMembers) =
       (slot("id"), slot("tags"), slot("lat"), slot("lon"), slot("nds"), slot("members"))

@@ -38,8 +38,8 @@ import scala.annotation.nowarn
   *     and its non-null values in primitive arrays; no encoder runs per
   *     element. Spark's DataFrame writer (UnsafeRow conversion, the round-1
   *     ~4x writer floor) and parquet-mr's `MessageColumnIO` record assembly
-  *     are both bypassed. `write(row)` feeds a Catalyst row through the
-  *     same appends.
+  *     are both bypassed. `RotatingWriter.write(row)` feeds a Catalyst row
+  *     through the same appends.
   *  2. Drain. Whenever a size is needed (parquet-mr's page size check,
   *     the row-group size check, the rotation size probe, a flush), every
   *     leaf drains its buffer in one typed loop into the objects parquet-mr's
@@ -935,10 +935,6 @@ object DirectParquet {
       nextSizeCheck = rowGroupRows.fold(100L)(c => math.min(100L, c.toLong))
     }
     newRowGroup()
-
-    /** Feeds one 13-field row through the appends (field 12, `type`, is
-      * the caller's routing). */
-    def write(row: InternalRow): Unit = ColumnSink.appendRow(row, this)
 
     /** A new block begins: drain, then forget the string-index memo. */
     def block(): Unit = { failed = true; drain(); leaves.all.foreach(_.newBlock()); failed = false }

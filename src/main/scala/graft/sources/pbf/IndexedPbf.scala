@@ -20,11 +20,11 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
   *    decode that reads the blob) and the lat/lon box of the blob's nodes.
   *    So an entry bounds exactly the rows the scan emits, and a blob the
   *    scan of those columns fails on fails the catalog build typed. It
-  *    splits like every PBF read
-  *    ([[OsmPbf.planSplits]]): the 64MB `splitMb` default is a per-task
-  *    cap, and a small file fans out to ~2 tasks per core. The catalog is
-  *    ~100 bytes/blob, held in the planning JVM and cached per (path,
-  *    mtime, length), like the reference's in-memory `Vec<BlobInfo>`.
+  *    splits like the scan ([[OsmPbf.planSplits]]): [[OsmPbf.DefaultSplitMb]]
+  *    is a per-task cap, and a small file fans out to ~2 tasks per core.
+  *    It runs on [[OsmPbf.runSpanGroups]], as the transcode does. The
+  *    catalog is ~100 bytes/blob, held in the planning JVM and cached per
+  *    (path, mtime, length), like the reference's in-memory `Vec<BlobInfo>`.
   *    Two readers share it: the `osmpbf` scan, whose pushed `id` / `lat`
   *    / `lon` comparisons, with its pushed `type`, drop blobs at planning
   *    ([[Pushdown]], [[prune]]), and [[readWaysAndDeps]].
@@ -79,23 +79,9 @@ object IndexedPbf {
     indexCache.keySet.removeIf(k => k._1 == path && k != key)
     val groups = OsmPbf.planSplits(OsmPbf.dataSpans(spark, path), OsmPbf.DefaultSplitMb.toLong << 20,
       sc.defaultParallelism)
-    val hconf = OsmPbf.broadcastConf(sc, sc.hadoopConfiguration)
-    val built = try sc.parallelize(groups, math.max(groups.size, 1))
-      .mapPartitions { it =>
-        val fsPath = new Path(path)
-        val fs = fsPath.getFileSystem(hconf.value.value)
-        val in = fs.open(fsPath)
-        val out = scala.collection.mutable.ArrayBuffer.empty[ZoneMap]
-        try it.foreach(_.foreach { span =>
-          in.seek(span.offset)
-          val buf = new Array[Byte](span.length)
-          in.readFully(buf)
-          out += ZoneMap(span.offset, span.length,
-            BlockDecoder.idRanges(Blobs.decode(buf)), span.rawSize)
-        }) finally in.close()
-        out.iterator
-      }.collect().sortBy(_.offset).toSeq
-    finally hconf.destroy()
+    val built = OsmPbf.runSpanGroups(sc, sc.hadoopConfiguration, path, groups) { (_, in, group) =>
+      group.map(s => ZoneMap(s.offset, s.length, BlockDecoder.idRanges(in.read(s)), s.rawSize))
+    }.flatten.sortBy(_.offset).toSeq
     indexCache.put(key, built)
     built
   }

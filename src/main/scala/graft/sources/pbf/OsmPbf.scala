@@ -6,6 +6,8 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.reflect.ClassTag
+import scala.util.Using
 
 /** Spark-native OSM PBF source: `.osm.pbf` → DataFrame(OsmSchema.schema).
   *
@@ -15,11 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  1. Driver enumerates blob spans with a header-only skip-scan
   *     ([[Blobs.enumerate]]) — cheap metadata pass, same as
   *     osmpbf/src/blob.rs:426-448 / indexed.rs:145-172.
-  *  2. Spans are grouped into tasks by [[planSplits]] — at most the
-  *     per-task cap of decoded input each (`splitMb` on the scan), and ~2
-  *     tasks per core for a small file — so task count scales with decode
-  *     work, not blob count. Each task is a narrow partition: seek → read
-  *     → inflate → decode → rows. No shuffle anywhere — scan→project→write
+  *  2. Spans are grouped into tasks by [[planSplits]] — at most a per-task
+  *     cap of decoded input each ([[DefaultSplitMb]] for the scan and the
+  *     catalog, `inputBufferSizeMb` for the transcode), and ~2 tasks per
+  *     core for a small file — so task count scales with decode work, not
+  *     blob count. Each task is a narrow partition: seek → read → inflate
+  *     ([[SpanReader]]) → decode. No shuffle anywhere — scan→project→write
   *     is one stage, like the reference.
   *  3. IO goes through the Hadoop FileSystem API, so `file:`, `hdfs:` and
   *     `s3a:` paths all work — the reference's local/S3 split
@@ -31,7 +34,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object OsmPbf {
 
-  /** Default per-task cap on decoded input for PBF reads (`splitMb`). */
+  /** Per-task cap on decoded input, in MB, of the `osmpbf` scan and of the
+    * catalog job ([[IndexedPbf.index]]). */
   final val DefaultSplitMb = 64
 
   /** Ships a Hadoop conf to the tasks of a PBF read or write. A task
@@ -44,15 +48,27 @@ object OsmPbf {
   private[pbf] def broadcastConf(sc: SparkContext, conf: Configuration): Broadcast[ConfSnapshot] =
     sc.broadcast(new ConfSnapshot(conf))
 
+  /** Runs `task` on the cluster once per span group of the file at `path`
+    * and collects the results in group order; an empty plan runs no job.
+    * Each task gets the broadcast `conf` and its own [[SpanReader]], which
+    * is closed even when `task` throws. */
+  private[pbf] def runSpanGroups[T: ClassTag](sc: SparkContext, conf: Configuration, path: String,
+      groups: Seq[Array[Blobs.BlobSpan]])(
+      task: (Configuration, SpanReader, Array[Blobs.BlobSpan]) => T): Array[T] =
+    if (groups.isEmpty) Array.empty[T]
+    else {
+      val hconf = broadcastConf(sc, conf)
+      try sc.parallelize(groups, groups.size).map { group =>
+        val c = hconf.value.value
+        Using.resource(new SpanReader(path, c))(task(c, _, group))
+      }.collect()
+      finally hconf.destroy()
+    }
+
   /** Driver-side plan: spans of every blob in the file. */
   def blobSpans(spark: SparkSession, path: String,
-                stopAt: Blobs.BlobSpan => Boolean = _ => false): Seq[Blobs.BlobSpan] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try Blobs.enumerate(in, stopAt)
-    finally in.close()
-  }
+                stopAt: Blobs.BlobSpan => Boolean = _ => false): Seq[Blobs.BlobSpan] =
+    Using.resource(new SpanReader(path, spark.sparkContext.hadoopConfiguration))(_.spans(stopAt))
 
   /** Spans of the file's data blobs. A blob of a type other than OSMData
     * and OSMHeader fails typed, like the reference's UnknownBlobType
@@ -68,48 +84,25 @@ object OsmPbf {
     * reference's S6 operator (osmpbf/src/block.rs:15-86). One blob read —
     * enumeration stops at the first OSMHeader instead of skip-scanning
     * every blob header in the file. */
-  def header(spark: SparkSession, path: String): Option[OsmHeader] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    blobSpans(spark, path, stopAt = _.blobType == Blobs.TypeOsmHeader)
-      .find(_.blobType == Blobs.TypeOsmHeader).map { span =>
-      val in = fs.open(p)
-      try {
-        in.seek(span.offset)
-        val buf = new Array[Byte](span.length)
-        in.readFully(buf)
-        BlockDecoder.decodeHeader(Blobs.decode(buf))
-      } finally in.close()
+  def header(spark: SparkSession, path: String): Option[OsmHeader] =
+    Using.resource(new SpanReader(path, spark.sparkContext.hadoopConfiguration)) { in =>
+      in.spans(_.blobType == Blobs.TypeOsmHeader).find(_.blobType == Blobs.TypeOsmHeader)
+        .map(span => BlockDecoder.decodeHeader(in.read(span)))
     }
-  }
 
   /** Full scan → DataFrame via the DataSourceV2 connector
     * ([[OsmPbfDataSource]]): the decoder emits Catalyst InternalRows
     * straight into the scan (no external-Row conversion layer) and the
     * connector adds column pruning + type-predicate pushdown.
-    * `splitTargetBytes` caps one task's decoded input: at planet scale
-    * (~10k blobs of ~4-16MB) the 64MB cap keeps task count ~= a few
-    * thousand, without scheduler pressure; a file too small to fill
-    * 2 tasks per core at the cap fans out to ~2 tasks per core instead
-    * ([[planSplits]]).
     */
-  def read(spark: SparkSession, path: String,
-           splitTargetBytes: Long = DefaultSplitMb.toLong << 20): DataFrame = {
-    // the scan option is MB-granular with a 1MB floor — reject a value
-    // the option cannot represent instead of silently reinterpreting it
-    require(splitTargetBytes >= (1L << 20) && (splitTargetBytes & ((1L << 20) - 1)) == 0,
-      s"splitTargetBytes must be a whole number of MB >= 1MB, got $splitTargetBytes")
-    spark.read.format("osmpbf")
-      .option("splitMb", (splitTargetBytes >> 20).toString)
-      .load(path)
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("osmpbf").load(path)
 
   /** Typed view: same scan (pruning/pushdown included — the typed fields
     * Catalyst sees unused still prune), `Dataset[OsmElement]` on top. */
-  def readTyped(spark: SparkSession, path: String,
-                splitTargetBytes: Long = DefaultSplitMb.toLong << 20): org.apache.spark.sql.Dataset[OsmElement] = {
+  def readTyped(spark: SparkSession, path: String): org.apache.spark.sql.Dataset[OsmElement] = {
     import spark.implicits._
-    read(spark, path, splitTargetBytes).as[OsmElement]
+    read(spark, path).as[OsmElement]
   }
 
   /** The generation the `_CURRENT` pointer names, if a pointer-committed
@@ -443,23 +436,17 @@ object OsmPbf {
     val maxRecords = config.maxRecordsPerFile
     val rowGroupBytes = config.rowGroupTargetMb.toLong << 20
     val rowGroupRows = config.maxRowGroupRows
-    val hconf = broadcastConf(sc, hc)
     try {
-      // valid empty PBF (header-only): zero data blobs must commit empty
-      // type= dirs and return zero counts, not crash parallelize(_, 0)
-      val perTask = if (groups.isEmpty) Array.empty[(Array[Long], Seq[String])]
-      else sc.parallelize(groups, groups.size).mapPartitions { groupIter =>
-        val conf = hconf.value.value
+      // valid empty PBF (header-only): zero data blobs run no job, commit
+      // empty type= dirs and return zero counts
+      val perTask = runSpanGroups(sc, hc, input, groups) { (conf, in, group) =>
         val tc = org.apache.spark.TaskContext.get()
         val taskId = tc.partitionId()
         // attempt-unique file tag: no two attempts of a partition ever
         // share a staging filename (see the commit-protocol note above)
         val attemptTag = s"$taskId-a${tc.taskAttemptId()}"
-        val fsPath = new Path(input)
-        val fs = fsPath.getFileSystem(conf)
         val cpu = java.lang.management.ManagementFactory.getThreadMXBean
         val cpu0 = cpu.getCurrentThreadCpuTime
-        val in = fs.open(fsPath)
         val writers = new Array[DirectParquet.RotatingWriter](3)
         // the decoder picks each primitive group's writer by element kind
         // and appends straight into its column buffers
@@ -473,38 +460,26 @@ object OsmPbf {
             writers(kind)
           }
         }
-        var readNs, inflateNs, codeNs = 0L
-        try {
-          groupIter.foreach { group =>
-            group.foreach { span =>
-              val t1 = System.nanoTime()
-              in.seek(span.offset)
-              val buf = new Array[Byte](span.length)
-              in.readFully(buf)
-              byteAcc.add(span.length)
-              val t2 = System.nanoTime()
-              val payload = Blobs.decode(buf)
-              val t3 = System.nanoTime()
-              elemAcc.add(BlockDecoder.decode(payload, BlockDecoder.FullProjection, sinks))
-              codeNs += System.nanoTime() - t3
-              readNs += t2 - t1; inflateNs += t3 - t2
-            }
-          }
+        var codeNs = 0L
+        try group.foreach { span =>
+          val payload = in.read(span)
+          val t = System.nanoTime()
+          elemAcc.add(BlockDecoder.decode(payload, BlockDecoder.FullProjection, sinks))
+          codeNs += System.nanoTime() - t
         } finally {
           val t4 = System.nanoTime()
-          // close EVERY resource even when an earlier close throws — a
+          // close EVERY writer even when an earlier close throws — a
           // first-writer flush failure (disk full) must not leak the
-          // remaining writers' compressor buffers or the input stream on
-          // a long-lived executor that will retry this task
+          // remaining writers' compressor buffers on a long-lived executor
+          // that will retry this task
           var closeErr: Throwable = null
-          (writers.iterator.filter(_ != null).map(w => () => w.close()) ++
-            Iterator(() => in.close())).foreach { c =>
-            try c()
+          writers.iterator.filter(_ != null).foreach { w =>
+            try w.close()
             catch { case t: Throwable =>
               if (closeErr == null) closeErr = t else closeErr.addSuppressed(t)
             }
           }
-          readAcc.add(readNs); inflateAcc.add(inflateNs)
+          byteAcc.add(in.compressedBytes); readAcc.add(in.readNs); inflateAcc.add(in.inflateNs)
           codeAcc.add(codeNs + System.nanoTime() - t4) // the closes flush the last row groups
           cpuAcc.add(cpu.getCurrentThreadCpuTime - cpu0)
           if (closeErr != null) throw closeErr
@@ -519,13 +494,13 @@ object OsmPbf {
             tc.attemptNumber() == 0)
           throw new RuntimeException(
             s"graft.test: injected post-write failure, partition $taskId attempt 0")
-        Iterator.single((Array(
+        (Array(
           if (writers(0) != null) writers(0).total else 0L,
           if (writers(1) != null) writers(1).total else 0L,
           if (writers(2) != null) writers(2).total else 0L),
           writers.iterator.filter(_ != null).flatMap(w => w.fileNames.map(n =>
-            s"${w.typeName}/$n")).toSeq))
-      }.collect()
+            s"${w.typeName}/$n")).toSeq)
+      }
       val tCommit = System.nanoTime()
       // job succeeded: publish EXACTLY the files the winning attempts
       // reported. Two hazards shape the protocol:
@@ -709,7 +684,6 @@ object OsmPbf {
     } finally {
       running = false
       monitor.interrupt()
-      hconf.destroy()
       // inside a finally: a throwing callback would REPLACE the job's
       // real exception (e.g. the decode error) as the reported failure
       try onProgress(progress())

@@ -2,7 +2,6 @@ package graft.sources.pbf
 
 import java.util
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -17,8 +16,8 @@ import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 connector: `spark.read.format("osmpbf").load(path)`.
   *
-  * Every PBF read goes through this connector (`OsmPbf.read` sets its
-  * `splitMb` and loads it). What Catalyst gets to do through it:
+  * Every PBF read goes through this connector (`OsmPbf.read` loads it).
+  * What Catalyst gets to do through it:
   *  - **column pruning** (`SupportsPushDownRequiredColumns`): unneeded
   *    columns skip their decode work, and rows hold only the required
   *    columns — reading only `id, lat, lon` never materializes tag maps or
@@ -43,17 +42,18 @@ import scala.jdk.CollectionConverters._
   *    layout is pruned by the old catalog. The `blobsPlanned` /
   *    `blobsPruned` scan metrics show the result in the SQL plan;
   *  - clean split planning ([[OsmPbf.planSplits]]): each [[InputPartition]]
-  *    holds at most `splitMb` of decoded blobs, so a planet file fans out
-  *    to a few thousand tasks regardless of blob count, and a file too
-  *    small to fill 2 tasks per core at the cap fans out to ~2 tasks per
-  *    core instead of scanning as one task.
+  *    holds at most [[OsmPbf.DefaultSplitMb]] of decoded blobs, so a planet
+  *    file fans out to a few thousand tasks regardless of blob count, and
+  *    a file too small to fill 2 tasks per core at the cap fans out to ~2
+  *    tasks per core instead of scanning as one task.
   *
-  * Options: `splitMb` (per-task cap on decoded input in MB, an integer
-  * >= 1, default 64);
-  * `wayLocations` (default false) — decode the optional LocationsOnWays
-  * way lat/lon arrays (osmpbf/src/elements.rs:201-216,390-423) into a
-  * trailing `node_locations: array<struct<lat,lon>>` column (empty array
-  * for ways in files without the feature, null for nodes/relations).
+  * Options: `wayLocations` (default false) — decode the optional
+  * LocationsOnWays way lat/lon arrays (osmpbf/src/elements.rs:201-216,
+  * 390-423) into a trailing `node_locations: array<struct<lat,lon>>` column
+  * (empty array for ways in files without the feature, null for
+  * nodes/relations); `spans`, set by [[IndexedPbf.readSpans]] — the
+  * blobs to scan as `offset:length:rawSize` triples, instead of every
+  * data blob of the file.
   */
 class OsmPbfDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "osmpbf"
@@ -80,19 +80,13 @@ class OsmPbfTable(properties: Map[String, String]) extends Table with SupportsRe
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val rawSplitMb = options.getOrDefault("splitMb",
-      properties.getOrElse("splitMb", OsmPbf.DefaultSplitMb.toString))
-    val splitMb = rawSplitMb.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"osmpbf option splitMb must be an integer number of MB, got '$rawSplitMb'"))
-    require(splitMb >= 1, s"osmpbf option splitMb must be >= 1, got $splitMb")
-    new OsmPbfScanBuilder(path, splitMb,
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new OsmPbfScanBuilder(path,
       Option(options.getOrDefault("spans", properties.getOrElse("spans", null))),
       options.getBoolean("wayLocations", wayLocs))
-  }
 }
 
-class OsmPbfScanBuilder(path: String, splitMb: Int, spansOpt: Option[String] = None,
+class OsmPbfScanBuilder(path: String, spansOpt: Option[String] = None,
                         wayLocs: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
@@ -139,11 +133,11 @@ class OsmPbfScanBuilder(path: String, splitMb: Int, spansOpt: Option[String] = N
   override def pushedFilters(): Array[Filter] = pushedTypeFilters ++ pushedRanges
 
   override def build(): Scan =
-    new OsmPbfScan(path, splitMb, requiredSchema,
+    new OsmPbfScan(path, requiredSchema,
       IndexedPbf.Pushdown(typeSet, pushedRanges.toSeq), spansOpt, wayLocs)
 }
 
-class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
+class OsmPbfScan(path: String, requiredSchema: StructType,
                  pushdown: IndexedPbf.Pushdown, spansOpt: Option[String] = None,
                  wayLocs: Boolean = false) extends Scan with Batch {
   private def typeSet = pushdown.types
@@ -170,12 +164,11 @@ class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
     // pruning): skip enumeration entirely, scan only what the caller chose.
     val spans = spansOpt match {
       case Some(enc) if enc.nonEmpty =>
-        // "offset:length[:rawSize]" — rawSize keeps decoded-size task
-        // weighting on pruned scans; absent (legacy 2-part) = unknown
+        // "offset:length:rawSize" — rawSize keeps decoded-size task
+        // weighting on pruned scans
         enc.split(',').toSeq.map { s =>
           val parts = s.split(':')
-          Blobs.BlobSpan(parts(0).toLong, parts(1).toInt, Blobs.TypeOsmData,
-            if (parts.length > 2) parts(2).toInt else -1)
+          Blobs.BlobSpan(parts(0).toLong, parts(1).toInt, Blobs.TypeOsmData, parts(2).toInt)
         }
       case Some(_) => Seq.empty
       case None => OsmPbf.dataSpans(spark, path)
@@ -183,7 +176,7 @@ class OsmPbfScan(path: String, splitMb: Int, requiredSchema: StructType,
     val kept = IndexedPbf.prune(spark, path, spans, pushdown)
     blobsPlanned = kept.size
     blobsPruned = spans.size - kept.size
-    OsmPbf.planSplits(kept, splitMb.toLong << 20, spark.sparkContext.defaultParallelism)
+    OsmPbf.planSplits(kept, OsmPbf.DefaultSplitMb.toLong << 20, spark.sparkContext.defaultParallelism)
       .map(g => OsmPbfInputPartition(path, g): InputPartition).toArray
   }
 
@@ -229,8 +222,8 @@ case class OsmPbfReaderFactory(hconf: Broadcast[ConfSnapshot],
   }
 }
 
-/** Reads one span group: seek → read → decompress → decode into rows of
-  * the pruned schema, built in its column order. */
+/** Reads one span group: seek → read → inflate ([[SpanReader]]) → decode
+  * into rows of the pruned schema, built in its column order. */
 class OsmPbfPartitionReader(partition: OsmPbfInputPartition,
                             hconf: ConfSnapshot,
                             requiredSchema: StructType,
@@ -249,16 +242,10 @@ class OsmPbfPartitionReader(partition: OsmPbfInputPartition,
     // node_locations skips the lat/lon decode like any pruned column
     wayLocs = wayLocs && need.contains("node_locations"))
 
-  private val fsPath = new Path(partition.path)
-  private val fs = fsPath.getFileSystem(hconf.value)
-  private val in = fs.open(fsPath)
+  private val in = new SpanReader(partition.path, hconf.value)
 
-  private val rows: Iterator[InternalRow] = partition.spans.iterator.flatMap { span =>
-    in.seek(span.offset)
-    val buf = new Array[Byte](span.length)
-    in.readFully(buf)
-    BlockDecoder.rows(Blobs.decode(buf), proj, requiredSchema)
-  }
+  private val rows: Iterator[InternalRow] =
+    partition.spans.iterator.flatMap(span => BlockDecoder.rows(in.read(span), proj, requiredSchema))
 
   private var current: InternalRow = _
   override def next(): Boolean =

@@ -1,7 +1,6 @@
 package graft.sources.pbf
 
-import java.nio.ByteBuffer
-import java.nio.charset.{CharacterCodingException, StandardCharsets}
+import java.nio.charset.StandardCharsets
 
 /** Minimal hand-rolled protobuf wire-format reader.
   *
@@ -117,16 +116,6 @@ final class ProtoReader(val buf: Array[Byte], var pos: Int, val end: Int) {
     s
   }
 
-  /** Reads a length-delimited field as strictly-validated UTF-8, or null on
-    * invalid bytes — callers replicate the reference's silent drop of
-    * invalid tag pairs (osmpbf/src/block.rs:439-456). */
-  def readStringStrict(): String = {
-    val len = readLen()
-    val s = ProtoReader.strictUtf8(buf, pos, len)
-    pos += len
-    s
-  }
-
   /** Counts the varints in buf[pos, stop): one cache-hot byte scan for
     * terminator bytes (high bit clear). Lets the packed readers allocate
     * EXACTLY once — profiling showed the previous ArrayBuilder's geometric
@@ -163,14 +152,5 @@ final class ProtoReader(val buf: Array[Byte], var pos: Int, val end: Int) {
     while (pos < stop && n < out.length) { out(n) = readZigzag(); n += 1 }
     pos = stop
     out
-  }
-}
-
-object ProtoReader {
-  /** Strict UTF-8 decode; null if the bytes are not valid UTF-8. */
-  def strictUtf8(bytes: Array[Byte], off: Int, len: Int): String = {
-    try StandardCharsets.UTF_8.newDecoder()
-      .decode(ByteBuffer.wrap(bytes, off, len)).toString
-    catch { case _: CharacterCodingException => null }
   }
 }

@@ -67,7 +67,7 @@ class ColumnarWriterIdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val o = new RowwiseOracleWriter(oraclePath, conf, codec, rowGroupBytes, rowGroupRows)
     private var rows = 0L
     def write(row: InternalRow): Unit = {
-      w.write(row)
+      ColumnSink.appendRow(row, w)
       o.write(row)
       rows += 1
       if ((rows & 0x3ff) == 0) w.getDataSize

@@ -122,8 +122,7 @@ class OsmPbfDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     PbfWriter.synthesize(synth, blocks = 3, nodesPerBlock = 400, waysPerBlock = 60, relationsPerBlock = 9)
     for ((path, wayLocs) <- Seq((synth, false), (fixture, false),
         (PbfFixtures.path("loc_on_ways.osm.pbf"), true))) {
-      def load() = spark.read.format("osmpbf").option("wayLocations", wayLocs.toString)
-        .option("splitMb", "1").load(path)
+      def load() = spark.read.format("osmpbf").option("wayLocations", wayLocs.toString).load(path)
       val full = load().collect().toSeq
       val names = load().schema.fieldNames.toSeq
       assert(full.nonEmpty && names === OsmSchema.schemaFor(wayLocs).fieldNames.toSeq)

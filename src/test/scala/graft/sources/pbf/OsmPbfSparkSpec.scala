@@ -176,7 +176,7 @@ class OsmPbfSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     import scala.jdk.CollectionConverters._
     val last = events.asScala.last
     assert(last.elements === n)
-    assert(last.inputBytes > 0L)
+    assert(last.inputBytes === OsmPbf.dataSpans(spark, pbf).map(_.length.toLong).sum)
     // phase counters: every phase ran, and the final event carries the commit
     assert(last.readS > 0 && last.inflateS > 0 && last.decodeEncodeS > 0 && last.taskCpuS > 0)
     assert(last.commitS > 0)

@@ -45,11 +45,6 @@ class ProtoReaderSpec extends AnyFunSuite {
     assert(new ProtoReader(Array[Byte](3)).readZigzag() === -2L)
   }
 
-  test("strict UTF-8 decode returns null on invalid bytes") {
-    assert(ProtoReader.strictUtf8(Array[Byte](0x41, 0x42), 0, 2) === "AB")
-    assert(ProtoReader.strictUtf8(Array[Byte](0xff.toByte, 0xfe.toByte), 0, 2) === null)
-  }
-
   test("packed varint and message framing") {
     val payload = varintBytes(1) ++ varintBytes(128) ++ varintBytes(5)
     val framed = varintBytes(payload.length.toLong) ++ payload

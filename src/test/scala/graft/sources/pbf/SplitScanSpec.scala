@@ -12,7 +12,7 @@ import org.scalatest.time.{Seconds, Span}
 
 /** The scan paths that [[OsmPbf.planSplits]] sizes, end to end over a
   * corpus written by [[PbfWriter.synthesize]]: a file far below the 64MB
-  * `splitMb` cap must still fan out to several tasks on `local[4]` and
+  * [[OsmPbf.DefaultSplitMb]] cap must still fan out to several tasks on `local[4]` and
   * return exactly what the generator's id scheme implies.
   */
 class SplitScanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
@@ -120,15 +120,5 @@ class SplitScanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
         .flatMap(sc.statusTracker.getStageInfo(_))
       assert(stages.size === 1 && stages.head.numTasks > 1)
     }
-  }
-
-  test("splitMb must be an integer >= 1") {
-    Seq("abc", "0", "-1").foreach { v =>
-      val e = intercept[IllegalArgumentException](
-        spark.read.format("osmpbf").option("splitMb", v).load(path).count())
-      assert(e.getMessage.contains("splitMb"), e.getMessage)
-    }
-    assert(spark.read.format("osmpbf").option("splitMb", "1").load(path)
-      .filter(col("type") === "relation").count() === Blocks.toLong * RelsPerBlock)
   }
 }

@@ -54,7 +54,7 @@ class WriterFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     val file = new Path(s"$dir/part-fuzz.parquet")
     val w = new DirectParquet.ColumnarWriter(file, new Configuration(),
       CompressionCodecName.ZSTD, rowGroupBytes = 1L << 20, rowGroupRows = Some(1000))
-    try internal.foreach(w.write) finally w.close()
+    try internal.foreach(ColumnSink.appendRow(_, w)) finally w.close()
     // read back WITHOUT the type column (the writer skips field 12 — the
     // transcode routes it into the hive directory); explicit select pins
     // the 12-col positional order the comparison uses

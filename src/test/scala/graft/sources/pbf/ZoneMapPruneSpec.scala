@@ -286,7 +286,7 @@ class ZoneMapPruneSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveS
       assert(check(synth, all, pred) === ((total, 0L)), pred)
     }
     def plan(filters: Array[sources.Filter]): (Array[sources.Filter], Array[sources.Filter], Long) = {
-      val b = new OsmPbfScanBuilder(synth, 64)
+      val b = new OsmPbfScanBuilder(synth)
       val rest = b.pushFilters(filters)
       val scan = b.build()
       scan.toBatch.planInputPartitions()
