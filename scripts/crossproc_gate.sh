@@ -10,9 +10,11 @@
 # write fresh round artifacts.
 #
 # Usage: scripts/crossproc_gate.sh [roundTag] [baseRef]
-#   roundTag  suffix for the artifacts (default: rX)
+#   roundTag  suffix for the artifacts (default: rX), written to
+#             artifacts/crossproc/
 #   baseRef   git ref to diff against (default: the commit that last
-#             touched a LOCALCLUSTER_*.json artifact)
+#             touched a LOCALCLUSTER_*.json artifact, there or at the
+#             repository root, where earlier rounds wrote them)
 #
 # Exit 0 with no runs when the guarded surface is unchanged; exit non-zero
 # if any proof fails. Record the outcome in COVERAGE.md each round.
@@ -32,7 +34,8 @@ GUARDED=(
 )
 
 TAG=${1:-rX}
-BASE=${2:-$(git log -n1 --format=%H -- 'LOCALCLUSTER_*.json')}
+OUT=artifacts/crossproc
+BASE=${2:-$(git log -n1 --format=%H -- "$OUT/LOCALCLUSTER_*.json" 'LOCALCLUSTER_*.json')}
 
 if [ -z "$BASE" ]; then
   echo "[crossproc] no prior proof artifact commit found — running all proofs"
@@ -45,7 +48,8 @@ else
 fi
 
 export SPARK_SCALA_VERSION=2.13
-scripts/run.sh graft.tools.LocalClusterProof "LOCALCLUSTER_${TAG}.json"
-scripts/run.sh graft.tools.ExecutorDeathProof "EXECDEATH_${TAG}.json"
-scripts/run.sh graft.tools.ObjectStoreProof "OBJSTORE_${TAG}.json"
-echo "[crossproc] all proofs green: LOCALCLUSTER_${TAG}.json EXECDEATH_${TAG}.json OBJSTORE_${TAG}.json"
+mkdir -p "$OUT"
+scripts/run.sh graft.tools.LocalClusterProof "$OUT/LOCALCLUSTER_${TAG}.json"
+scripts/run.sh graft.tools.ExecutorDeathProof "$OUT/EXECDEATH_${TAG}.json"
+scripts/run.sh graft.tools.ObjectStoreProof "$OUT/OBJSTORE_${TAG}.json"
+echo "[crossproc] all proofs green: $OUT/{LOCALCLUSTER,EXECDEATH,OBJSTORE}_${TAG}.json"

@@ -142,9 +142,8 @@ object ZRangeContains {
     * a Column-building side effect silently overwrote any same-named user
     * function (and wrote to the registry concurrently from Verify's
     * thread pool). SQL callers still get the name via [[register]] /
-    * GraftExtensions. The `spark` parameter stays for source
-    * compatibility; it is no longer touched. */
-  def zInRanges(spark: SparkSession, zkey: Column, ranges: Seq[(Long, Long)]): Column = {
+    * GraftExtensions. */
+  def zInRanges(zkey: Column, ranges: Seq[(Long, Long)]): Column = {
     val norm = ZOrder.unionRanges(ranges)
     if (norm.isEmpty) lit(false)
     else org.apache.spark.sql.GraftBridge.column(ZRangeContains(

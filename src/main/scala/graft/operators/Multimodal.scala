@@ -293,7 +293,6 @@ object Multimodal {
     * ever mixes container-derived fallback values with decoded ones.
     */
   val m02_media_features: (SparkSession, String) => DataFrame = (s, dir) => {
-    import s.implicits._
     // corruptSample plants image/{png,bmp};undecoded groups in the gated
     // output — every 67th id, hitting both the even (PNG) and odd (BMP)
     // container populations
@@ -323,7 +322,6 @@ object Multimodal {
     * (remove it and the golden breaks), and I20's codec-free recompute
     * re-derives those spans from the format-mandated GIF header bytes. */
   val m03_frame_sample: (SparkSession, String) => DataFrame = (s, dir) => {
-    import s.implicits._
     val media = corruptSample(
       documentsAsMedia(s, dir).unionByName(gifsFromDocs(s, dir)), 67L)
     sampleFrames(media, 4)
@@ -341,7 +339,6 @@ object Multimodal {
     * numbers) and partitioning-invariant (integer sums only).
     */
   val m04_audio_features: (SparkSession, String) => DataFrame = (s, dir) => {
-    import s.implicits._
     // corruptSample plants the audio/wav;undecoded group in the gated
     // output (same convention as m02's image legs)
     val media = corruptSample(

@@ -318,7 +318,7 @@ object PbfQueries {
       .select(col("id"), col("lat"), col("lon"),
         ZOrder.mortonKey(col("lat"), col("lon"), bits).as("zkey"))
     val pts = if (useZFilter)
-      envPts.filter(graft.functions.ZRangeContains.zInRanges(spark, col("zkey"), zranges))
+      envPts.filter(graft.functions.ZRangeContains.zInRanges(col("zkey"), zranges))
     else envPts
     pts
       .withColumn("depth", explode(array(depths.map(lit(_)): _*)))

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** Optimizer rule (the `injectOptimizerRule` tier of the extension stack,
   * next to the `injectFunction` expressions and the `injectPlannerStrategy`

@@ -39,8 +39,9 @@ final case class OsmHeader(
   * [[decode]] is the one emit path: each primitive group goes to the sink
   * of its element kind. The transcode appends straight into its parquet
   * leaves; [[rows]] is a [[decode]] of the whole block into the scan's
-  * rows, and [[idRanges]] folds the blob catalog's ranges from the appends
-  * of `id`, `lat` and `lon`.
+  * rows, [[rowsWithIds]] the same through an id filter (the node read of
+  * [[IndexedPbf.readWaysAndDeps]]), and [[idRanges]] folds the blob
+  * catalog's ranges from the appends of `id`, `lat` and `lon`.
   */
 object BlockDecoder {
 
@@ -87,6 +88,15 @@ object BlockDecoder {
   def rows(payload: Array[Byte], proj: Projection, schema: StructType): Iterator[InternalRow] = {
     val out = new RowSink(schema)
     decode(payload, proj, out)
+    out.rows.iterator
+  }
+
+  /** [[rows]] of only the elements whose `id` is in `ids` (sorted
+    * ascending): any other element builds no row. */
+  def rowsWithIds(payload: Array[Byte], proj: Projection, schema: StructType,
+                  ids: Array[Long]): Iterator[InternalRow] = {
+    val out = new RowSink(schema)
+    decode(payload, proj, new IdFilterSink(ids, out))
     out.rows.iterator
   }
 
@@ -541,6 +551,38 @@ object BlockDecoder {
       rows += new GenericInternalRow(row)
       nTags = 0; nullTags = false; mems = null
     }
+  }
+
+  /** Passes an element's appends on to `out` only when its `id`, its first
+    * append, is in `ids` (sorted ascending). */
+  private final class IdFilterSink(ids: Array[Long], out: ColumnSinks) extends ColumnSink with ColumnSinks {
+    private[this] var s: ColumnSink = _
+    private[this] var keep = false
+
+    override def block(): Unit = out.block()
+    override def sink(k: Int): ColumnSink = { s = out.sink(k); this }
+    override def id(v: Long): Unit = {
+      keep = java.util.Arrays.binarySearch(ids, v) >= 0
+      if (keep) s.id(v)
+    }
+    override def tag(keySid: Int, key: UTF8String, valueSid: Int, value: UTF8String): Unit =
+      if (keep) s.tag(keySid, key, valueSid, value)
+    override def noTags(): Unit = if (keep) s.noTags()
+    override def lat(v: Double): Unit = if (keep) s.lat(v)
+    override def lon(v: Double): Unit = if (keep) s.lon(v)
+    override def refs(refs: Array[Long], n: Int): Unit = if (keep) s.refs(refs, n)
+    override def members(): Unit = if (keep) s.members()
+    override def member(tpe: UTF8String, ref: Long, hasRef: Boolean, roleSid: Int, role: UTF8String): Unit =
+      if (keep) s.member(tpe, ref, hasRef, roleSid, role)
+    override def changeset(v: Long): Unit = if (keep) s.changeset(v)
+    override def timestamp(micros: Long): Unit = if (keep) s.timestamp(micros)
+    override def uid(v: Int): Unit = if (keep) s.uid(v)
+    override def user(sid: Int, v: UTF8String): Unit = if (keep) s.user(sid, v)
+    override def version(v: Int): Unit = if (keep) s.version(v)
+    override def visible(v: Boolean): Unit = if (keep) s.visible(v)
+    override def locations(lats: Array[Double], lons: Array[Double], n: Int): Unit =
+      if (keep) s.locations(lats, lons, n)
+    override def end(): Unit = if (keep) s.end()
   }
 
   /** Packed-declared sint64 field occurrence: wire 2 = packed payload,

@@ -1,7 +1,10 @@
 package graft.sources.pbf
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
@@ -28,22 +31,28 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
   *    Two readers share it: the `osmpbf` scan, whose pushed `id` / `lat`
   *    / `lon` comparisons, with its pushed `type`, drop blobs at planning
   *    ([[Pushdown]], [[prune]]), and [[readWaysAndDeps]].
-  *  - **pass 1**: scan ONLY blobs whose zone map has ways
-  *    (`ways_available() != No`, indexed.rs:275-278), with the way-type
-  *    group pushdown; filter with the caller's predicate Column, whose
-  *    pushed `id` comparisons drop further way blobs in the scan. The way
-  *    blobs are listed here, not left to the scan, because a predicate
-  *    without a pushable range leaves the scan unpruned.
-  *  - **pass 2**: the reference walks a driver-side BTreeSet of needed
-  *    node ids against each blob's range (indexed.rs:303-310). The
-  *    distributed analog is one job over the pass-1 ways: each task
-  *    binary-searches its ways' `nds.ref` against the broadcast node-blob
-  *    ranges and returns a bitset of the node-blob ordinals hit, and the
-  *    driver ORs the bitsets (blob pruning). An exact semi-join
-  *    (`id IN refs`), which Catalyst/AQE executes broadcast when the ref
-  *    set is small, then keeps only the needed nodes. The driver holds
-  *    one bit per node blob and never an id set, so a non-selective
-  *    predicate can't OOM the driver at planet scale.
+  *  - **pass 1** (the call's one job): scan ONLY blobs whose zone map has
+  *    ways (`ways_available() != No`, indexed.rs:275-278), with the
+  *    way-type group pushdown; filter with the caller's predicate Column,
+  *    whose pushed `id` comparisons drop further way blobs in the scan.
+  *    The way blobs are listed here, not left to the scan, because a
+  *    predicate without a pushable range leaves the scan unpruned. The
+  *    matching ways are checkpointed, and the same tasks binary-search
+  *    their `nds.ref` against the broadcast node-blob ranges and return a
+  *    bitset of the node-blob ordinals hit; the driver ORs them (blob
+  *    pruning — the reference walks a driver-side BTreeSet of needed ids
+  *    against each blob's range, indexed.rs:303-310).
+  *  - **pass 2** (run by the first action, in its one job): the needed
+  *    node blobs are split into groups as a scan of them would be
+  *    ([[OsmPbf.planSplits]]). Each way's refs are keyed by the group(s)
+  *    whose blob ranges hold them, deduplicated per task, and shuffled to
+  *    one partition per group: the only shuffle, and it moves refs, never
+  *    node rows. Each group's task reads its blobs and decodes their nodes
+  *    through an id filter ([[BlockDecoder.rowsWithIds]]), so only the
+  *    referenced nodes become rows — an exact semi-join without a join.
+  *    The driver holds one bit per node blob and the group plan, never an
+  *    id set, so a non-selective predicate can't OOM the driver at planet
+  *    scale.
   */
 object IndexedPbf {
 
@@ -167,8 +176,8 @@ object IndexedPbf {
         spans.map(s => s"${s.offset}:${s.length}:${s.rawSize}").mkString(","))
       .load(path)
 
-  /** Node-id ranges of the node blobs, sorted by min id, that pass 2 maps
-    * refs onto (indexed.rs:88-106, 303-310). Bounded by the blob count. */
+  /** Node-id ranges of node blobs, sorted by min id, that refs map onto
+    * (indexed.rs:88-106, 303-310). Bounded by the blob count. */
   private[pbf] final case class NodeBlobRanges(mins: Array[Long], maxs: Array[Long]) {
     // prefix-max of maxs: pmaxs(i) = max(maxs(0..i)). The left walk can
     // stop exactly when pmaxs(i) < ref — no blob at or before i can contain
@@ -177,29 +186,92 @@ object IndexedPbf {
     // hide the wide earlier range.
     private val pmaxs = maxs.scanLeft(Long.MinValue)(math.max).drop(1)
 
-    /** Sets the ordinal of every blob whose range holds one of `refs` (one
-      * way's `nds.ref`; null or empty sets nothing). */
+    /** Calls `f` with the ordinal of every blob whose range holds `ref`,
+      * highest ordinal first. */
+    def foreachHit(ref: Long)(f: Int => Unit): Unit = {
+      // last blob with min <= ref, then walk left while any earlier
+      // blob can still reach ref (prefix max)
+      var lo = 0; var hi = mins.length - 1; var ub = -1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        if (mins(mid) <= ref) { ub = mid; lo = mid + 1 } else hi = mid - 1
+      }
+      var i = ub
+      while (i >= 0 && pmaxs(i) >= ref) {
+        if (mins(i) <= ref && ref <= maxs(i)) f(i)
+        i -= 1
+      }
+    }
+
+    /** Sets the ordinal of every blob whose range holds one of `refs` (an
+      * array of longs; null or empty sets nothing). */
     def addHits(refs: ArrayData, hits: java.util.BitSet): Unit =
       if (refs != null) {
         var k = 0
-        while (k < refs.numElements()) {
-          val ref = refs.getLong(k)
-          // last blob with min <= ref, then walk left while any earlier
-          // blob can still reach ref (prefix max)
-          var lo = 0; var hi = mins.length - 1; var ub = -1
-          while (lo <= hi) {
-            val mid = (lo + hi) >>> 1
-            if (mins(mid) <= ref) { ub = mid; lo = mid + 1 } else hi = mid - 1
-          }
-          var i = ub
-          while (i >= 0 && pmaxs(i) >= ref) {
-            if (mins(i) <= ref && ref <= maxs(i)) hits.set(i)
-            i -= 1
-          }
-          k += 1
-        }
+        while (k < refs.numElements()) { foreachHit(refs.getLong(k))(hits.set(_)); k += 1 }
       }
   }
+
+  private[pbf] object NodeBlobRanges {
+    def of(blobs: Seq[ZoneMap]): NodeBlobRanges =
+      NodeBlobRanges(blobs.map(_.ids.nodeMin).toArray, blobs.map(_.ids.nodeMax).toArray)
+  }
+
+  private val Nds = OsmSchema.schema.fieldIndex("nds")
+
+  /** Calls `f` with each `nds.ref` of a way row; a null `nds` has none. */
+  private def foreachRef(way: InternalRow)(f: Long => Unit): Unit =
+    if (!way.isNullAt(Nds)) {
+      val nds = way.getArray(Nds)
+      var k = 0
+      while (k < nds.numElements()) { f(nds.getStruct(k, 1).getLong(0)); k += 1 }
+    }
+
+  /** Sorts `a` in place and returns its distinct values. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    var i = 0
+    while (i < a.length) {
+      if (n == 0 || a(n - 1) != a(i)) { a(n) = a(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(a, n)
+  }
+
+  /** The group plan of pass 2: the needed node blobs' ranges in min-id
+    * order, the group each of them is read by, and each group's spans. */
+  private[pbf] final case class NodeGroups(ranges: NodeBlobRanges, groupOf: Array[Int],
+                                           groups: Array[Array[Blobs.BlobSpan]]) {
+
+    /** The (group, ref) keys of some way rows: each `nds.ref` is keyed by
+      * every group that reads a blob whose range holds it. Deduplicated, in
+      * group then ref order. */
+    def keys(ways: Iterator[InternalRow]): Iterator[(Int, Long)] = {
+      val refs = Array.fill(groups.length)(new scala.collection.mutable.ArrayBuilder.ofLong)
+      ways.foreach(way => foreachRef(way) { ref =>
+        // hits come highest ordinal first and groups are runs of ordinals,
+        // so a ref's repeated group is always the previous one
+        var last = -1
+        ranges.foreachHit(ref) { i =>
+          if (groupOf(i) != last) { last = groupOf(i); refs(last) += ref }
+        }
+      })
+      refs.iterator.zipWithIndex.flatMap { case (b, g) => sortedDistinct(b.result()).iterator.map(g -> _) }
+    }
+  }
+
+  private[pbf] object NodeGroups {
+    /** Groups `blobs` (sorted by min id) as [[OsmPbf.planSplits]] splits a
+      * scan of them. */
+    def plan(blobs: Seq[ZoneMap], parallelism: Int): NodeGroups = {
+      val groups = OsmPbf.planSplits(blobs.map(_.span), OsmPbf.DefaultSplitMb.toLong << 20, parallelism)
+      NodeGroups(NodeBlobRanges.of(blobs),
+        groups.zipWithIndex.flatMap { case (g, i) => Seq.fill(g.length)(i) }.toArray, groups.toArray)
+    }
+  }
+
+  private val NodeRows = BlockDecoder.Projection(types = Set(OsmSchema.TypeNode))
 
   /** Prune accounting of the most recent [[readWaysAndDeps]] in this JVM:
     * way-blobs scanned pass-1, node-blobs scanned pass-2, and the totals
@@ -209,65 +281,74 @@ object IndexedPbf {
     new java.util.concurrent.atomic.AtomicReference[Map[String, Long]](Map.empty)
 
   /** `read_ways_and_deps`: DataFrame of the matching ways plus their
-    * dependent nodes, in [[OsmSchema.schema]].
+    * dependent nodes, in [[OsmSchema.schema]]. The call runs pass 1; the
+    * first action runs pass 2 (see the object's header).
     *
-    * The pass-1 ways feed three consumers (the node-blob ordinal job, the
-    * pass-2 semi-join, the output union), so they are materialized ONCE via
-    * `localCheckpoint`: unlike `Dataset.persist`, whose cache entry lives
-    * in the session's CacheManager until explicitly unpersisted, a local
+    * The pass-1 ways feed the pass-2 keys and the output, so
+    * they are materialized ONCE via `localCheckpoint`: a local
     * checkpoint's blocks are dropped by the ContextCleaner as soon as the
     * returned DataFrame becomes unreachable — repeated calls don't
-    * accumulate session-lifetime cache. Tradeoff (documented): local
-    * checkpoints are not executor-loss tolerant; losing one fails the job
-    * and the caller re-runs — acceptable for a bounded pruned subset.
+    * accumulate session-lifetime cache, as a `Dataset.persist` would.
+    * Tradeoff (documented): local checkpoints are not executor-loss
+    * tolerant; losing one fails the job and the caller re-runs —
+    * acceptable for a bounded pruned subset.
     */
   def readWaysAndDeps(spark: SparkSession, path: String, wayPredicate: Column): DataFrame = {
+    val sc = spark.sparkContext
     val idx = index(spark, path)
 
-    // Pass 1: way-bearing blobs only (indexed.rs:275-278), way groups only.
+    // Pass 1: way-bearing blobs only (indexed.rs:275-278), way groups
+    // only; its tasks also map their ways' refs onto node blobs.
     val wayBlobs = idx.filter(_.ids.hasWays).map(_.span)
     val ways = readSpans(spark, path, wayBlobs)
       .filter(col("type") === OsmSchema.TypeWay)
       .filter(wayPredicate)
-      .localCheckpoint(eager = true)
-
-    val refs = ways.select(explode(col("nds.ref")).as("ref")).distinct()
-
-    // Zone-map pruning in one job: each task maps its ways' refs to the
-    // node blobs that can hold them; the driver ORs the per-task bitsets.
+      .queryExecution.toRdd.map(_.copy()).localCheckpoint()
     val nodeBlobs = idx.filter(_.ids.hasNodes).sortBy(_.ids.nodeMin)
-    val ranges = spark.sparkContext.broadcast(NodeBlobRanges(
-      nodeBlobs.map(_.ids.nodeMin).toArray, nodeBlobs.map(_.ids.nodeMax).toArray))
+    val ranges = sc.broadcast(NodeBlobRanges.of(nodeBlobs))
     val needed = new java.util.BitSet(nodeBlobs.size)
-    // the ranges broadcast is consumed ENTIRELY by this collect — destroy
-    // it deterministically rather than waiting for GC + ContextCleaner
-    // (the method's own no-session-lifetime-accumulation rationale; a
-    // long-lived session issuing many queries would otherwise accumulate
-    // dead broadcast blocks on the driver and executors)
-    try ways.select(col("nds.ref")).queryExecution.toRdd
-      .mapPartitions { rows =>
-        val r = ranges.value
-        val hits = new java.util.BitSet()
-        rows.foreach(row => r.addHits(row.getArray(0), hits))
-        Iterator.single(hits)
-      }.collect().foreach(needed.or)
+    // the job that fills the checkpoint returns each task's hits; the
+    // ranges are not needed after it, so the broadcast goes at once
+    // rather than with the next GC
+    try sc.runJob(ways, (rows: Iterator[InternalRow]) => {
+      val r = ranges.value
+      val hits = new java.util.BitSet()
+      rows.foreach(foreachRef(_)(r.foreachHit(_)(hits.set(_))))
+      hits
+    }).foreach(needed.or)
     finally ranges.destroy()
 
-    // Pass 2: pruned node blobs, node groups only, exact id semi-join.
-    val nodeSpans = needed.stream().toArray.toSeq.map(nodeBlobs(_).span)
+    val neededBlobs = needed.stream().toArray.toSeq.map(nodeBlobs(_))
     lastPrune.set(Map(
       "way_blobs_scanned" -> wayBlobs.size.toLong,
       "data_blobs_total" -> idx.size.toLong,
-      "node_blobs_scanned" -> nodeSpans.size.toLong,
+      "node_blobs_scanned" -> neededBlobs.size.toLong,
       "node_blobs_total" -> nodeBlobs.size.toLong))
     val nodes =
-      if (nodeSpans.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], OsmSchema.schema)
-      else
-        readSpans(spark, path, nodeSpans)
-          .filter(col("type") === OsmSchema.TypeNode)
-          .join(refs, col("id") === col("ref"), "left_semi")
+      if (neededBlobs.isEmpty) sc.emptyRDD[InternalRow]
+      else readNodes(sc, path, ways, NodeGroups.plan(neededBlobs, sc.defaultParallelism))
+    GraftBridge.internalCreateDataFrame(spark, ways.union(nodes), OsmSchema.schema)
+  }
 
-    ways.unionByName(nodes)
+  /** Pass 2: the nodes of the groups' blobs whose ids the ways reference,
+    * as one shuffle of the (group, ref) keys and one task per group. */
+  private def readNodes(sc: SparkContext, path: String, ways: RDD[InternalRow],
+                        plan: NodeGroups): RDD[InternalRow] = {
+    val p = sc.broadcast(plan)
+    val hconf = OsmPbf.broadcastConf(sc, sc.hadoopConfiguration)
+    // an Int key k in [0, n) goes to partition k: one partition per group
+    new ShuffledRDD[Int, Long, Long](ways.mapPartitions(rows => p.value.keys(rows)),
+        new HashPartitioner(plan.groups.length))
+      .mapPartitionsWithIndex { (g, keyed) =>
+        val refs = sortedDistinct(keyed.map(_._2).toArray)
+        val in = new SpanReader(path, hconf.value.value)
+        val ctx = TaskContext.get()
+        ctx.addTaskCompletionListener[Unit] { _ =>
+          GraftBridge.addBytesRead(ctx, in.compressedBytes)
+          in.close()
+        }
+        p.value.groups(g).iterator.flatMap(s =>
+          BlockDecoder.rowsWithIds(in.read(s), NodeRows, OsmSchema.schema, refs))
+      }
   }
 }

@@ -312,7 +312,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
         ZOrder.bboxRanges(a, b, c, d, bits) })
       val env = df.filter(col("lat").between(laLo, laHi) && col("lon").between(loLo, loHi))
       val envN = env.count()
-      val zN = env.filter(ZRangeContains.zInRanges(sp, col("z"), zr)).count()
+      val zN = env.filter(ZRangeContains.zInRanges(col("z"), zr)).count()
       val envCells = ZOrder.envelopeCells(laLo, laHi, loLo, loHi, bits)
       val rangeCells = zr.map(r => r._2 - r._1 + 1).sum
       val boxCells = boxes.map { case (a, b, c, d) =>

@@ -77,7 +77,7 @@ class ZRangeContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // checkInputDataTypes' disjointness check at analysis time
     val messy = Seq((30L, 40L), (1L, 10L), (5L, 15L), (16L, 20L))
     val df = Seq(0L, 1L, 12L, 15L, 16L, 20L, 21L, 29L, 30L, 40L, 41L).toDF("z")
-    val kept = df.filter(ZRangeContains.zInRanges(sp, col("z"), messy))
+    val kept = df.filter(ZRangeContains.zInRanges(col("z"), messy))
       .collect().map(_.getLong(0)).toSet
     // union = [1,20] ∪ [30,40]
     assert(kept === Set(1L, 12L, 15L, 16L, 20L, 30L, 40L))
@@ -107,7 +107,7 @@ class ZRangeContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // codegen: a DataFrame filter (whole-stage codegen → doGenCode)
       val gen = keys.zipWithIndex.map { case (z, i) => (i.toLong, z) }
         .toDF("i", "z")
-        .filter(ZRangeContains.zInRanges(sp, col("z"), ranges))
+        .filter(ZRangeContains.zInRanges(col("z"), ranges))
         .collect().map(_.getLong(0)).toSet
       keys.zipWithIndex.foreach { case (z, i) =>
         assert(interpreted(i) === gen.contains(i.toLong),
@@ -144,7 +144,7 @@ class ZRangeContainsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = sp.read.parquet(out)
       .select(col("id"), col("lat"), col("lon"),
         ZOrder.mortonKey(col("lat"), col("lon"), bits).as("z"))
-    val filtered = df.filter(ZRangeContains.zInRanges(sp, col("z"), zranges))
+    val filtered = df.filter(ZRangeContains.zInRanges(col("z"), zranges))
     val plan = filtered.queryExecution.executedPlan
     assert(plan.toString.contains("graft_z_in_ranges"), plan.toString.take(2000))
     assert(plan.find(

@@ -92,17 +92,28 @@ class IndexedPbfSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(idx.count(_.ids.hasWays) === 1)
 
     val df = IndexedPbf.readWaysAndDeps(spark, pbf, col("tags").getItem("highway") === "primary")
-    val rows = df.select("id", "type").collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    assert(rows === Seq((900001L, "way"), (1005L, "node"), (1006L, "node")).sorted)
-
-    // the pruned scan plan must touch only 1 of the 4 node blobs: assert via
-    // the scan description (spans=<count of pruned blobs>)
-    val scans = df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan.description()
+    // pass 2 must touch only 1 of the 4 node blobs: its tasks are the ones
+    // that read the refs shuffle, and they read exactly that blob's bytes
+    val sc = spark.sparkContext
+    val pass2Reads = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.shuffleReadMetrics.recordsRead > 0)
+          pass2Reads.add(e.taskMetrics.inputMetrics.bytesRead)
     }
-    val nodeScan = scans.find(d => d.contains("spans=1"))
-    assert(nodeScan.isDefined, s"expected a single-span pruned node scan, got: $scans")
+    sc.addSparkListener(listener)
+    val rows =
+      try df.select("id", "type").collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+      finally {
+        org.apache.spark.GraftListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(rows === Seq((900001L, "way"), (1005L, "node"), (1006L, "node")).sorted)
+    assert(IndexedPbf.lastPrune.get()("node_blobs_scanned") === 1L)
+    val hit = idx.filter(z => z.ids.hasNodes && z.ids.nodeMin <= 1005L && 1005L <= z.ids.nodeMax)
+    assert(hit.size === 1)
+    import scala.jdk.CollectionConverters._
+    assert(pass2Reads.asScala.toSeq === Seq(hit.head.length.toLong))
   }
 
   test("nested/overlapping node-id ranges: the wide earlier blob is still found") {

@@ -1,5 +1,6 @@
 package graft.sources.pbf
 
+import org.apache.spark.rdd.UnionRDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -58,13 +59,9 @@ class SplitScanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     df.groupBy("type").agg(count(lit(1)), sum("id")).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-  /** Input partitions of every PBF scan in the plan: DSv2 scans, and the
-    * locally checkpointed pass-1 scan of `readWaysAndDeps`. */
+  /** Input partitions of every DSv2 PBF scan in the plan. */
   private def scanPartitions(df: DataFrame): Seq[Int] =
-    collect(df.queryExecution.executedPlan) {
-      case s: BatchScanExec => s.inputPartitions.size
-      case r: RDDScanExec => r.rdd.getNumPartitions
-    }
+    collect(df.queryExecution.executedPlan) { case s: BatchScanExec => s.inputPartitions.size }
 
   test("the corpus is far below the 64MB cap") {
     val spans = OsmPbf.blobSpans(spark, path).filter(_.blobType == Blobs.TypeOsmData)
@@ -97,9 +94,11 @@ class SplitScanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     assert(countsAndSums(df) === Map(
       "way" -> (half.toLong * WaysPerBlock, idSum(1000000000L, half.toLong * WaysPerBlock)),
       "node" -> (half * 800L, nodeSum)))
-    val parts = scanPartitions(df)
-    assert(parts.nonEmpty && parts.forall(_ > 1), parts)
-    assert(collect(df.queryExecution.executedPlan) { case s: BatchScanExec => s }.nonEmpty)
+    // the returned rows are the union of the pass-1 checkpoint and the
+    // pass-2 groups
+    val passes = collect(df.queryExecution.executedPlan) { case r: RDDScanExec => r.rdd }
+      .flatMap { case u: UnionRDD[_] => u.rdds.map(_.getNumPartitions) }
+    assert(passes.size === 2 && passes.forall(_ > 1), passes)
     // zone-map pruning counts blobs, so how the scans are split cannot move them
     assert(IndexedPbf.lastPrune.get() === Map(
       "way_blobs_scanned" -> Blocks.toLong, "data_blobs_total" -> Blocks.toLong,
